@@ -1,6 +1,6 @@
 """Extraction benchmark: one seeded workload per run, Spark at local[N].
 
-    python3 perfbench/run.py --workload small_pages --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload heavy_pages --seed 1 --seconds 20 --trace 0
 
 Run from the repository root.  The last line of stdout is one JSON object
 (``correct``, ``attempted``, ``failed``, ``metrics``).  ``--trace 0``
@@ -35,6 +35,7 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
 CPUS = min(4, os.cpu_count() or 1)
 SETUPS = 3  # setup_s is the median of this many build + first-query rounds
+MIN_PASSES = 3  # timed passes, however long they take
 # run_extraction checkpointing for crawl_archives: one wave; each wave adds
 # a fixed ~2.4 s of writes and reads on this 4-core host, which the
 # commit_overhead probe reports
@@ -83,6 +84,7 @@ class Bench:
         self.w = W.WORKLOADS[args.workload]
         self.spark = None
         self.pass_no = 0
+        self.last_out = None
         self.down = False
 
     # -- Spark -----------------------------------------------------------
@@ -211,8 +213,7 @@ class Bench:
         the in-process kernel.  small_pages and heavy_pages run an untimed
         pass for this, which also keeps the first full pass out of the
         steady state; crawl_archives reads back the last timed pass's
-        tables, and the median of its timed passes leaves out its first,
-        slow pipeline run."""
+        tables (its first, slow pipeline run is a warm-up pass)."""
         with self.t.span("spark.extract.checked_pass"):
             if self.w.name == "crawl_archives":
                 out = self.last_out
@@ -244,14 +245,26 @@ class Bench:
 
     # -- measurement -----------------------------------------------------
 
+    def _discard_output(self) -> None:
+        """Keep only the last crawl pass's tables."""
+        if self.last_out is not None:
+            with self.t.span("bench.discard_output"):
+                shutil.rmtree(self.last_out)
+            self.last_out = None
+
+    def warm_pass(self, n_docs: int) -> None:
+        self._discard_output()
+        with self.t.span("spark.extract.warm_pass"):
+            n = self.one_pass(self.docs_src)
+        if n != n_docs:
+            self.problems.append(f"a warm-up pass returned {n} rows for {n_docs} documents")
+
     def timed_pass(self, passes: list, n_docs: int, stage_stats: bool) -> None:
         """One timed full pass: wall, process-tree CPU and output count.
         Traced runs alternate: odd passes record no inner spans, and the
         difference is the tracing overhead."""
         untraced = stage_stats and len(passes) % 2 == 1
-        if passes and self.w.name == "crawl_archives":
-            with self.t.span("bench.discard_output"):
-                shutil.rmtree(self.last_out)  # keep only the last pass's tables
+        self._discard_output()
         before = self._last_stage() if stage_stats else None
         cpu0 = P.tree_cpu_s()
         t0 = time.perf_counter()
@@ -319,19 +332,21 @@ class Bench:
 
         trace = bool(args.trace)
         with P.WorkerRssSampler() as rss:
-            # The host's speed drifts on a scale of tens of seconds, so the
-            # timed passes are spread over the run: one in each session,
-            # then more in the last until --seconds of passes are timed.
+            # Only steady-state passes are timed.  The first full pass in
+            # a session is 25-40% slower, and the JVM keeps compiling for
+            # several passes after it, so all setups come first, then the
+            # untimed checked pass and warm-up passes, then the timed
+            # passes back to back in the last session.
             setups, passes = [], []
             for i in range(SETUPS):
                 if i:
                     self.stop()
                 setups.append(self.setup(warm))
-                if i == 0 and not crawl:
-                    # the first full pass is the slow one: check it, untimed
-                    problems, failed = self.check(want)
-                self.timed_pass(passes, n_docs, trace)
-            while sum(p["wall_s"] for p in passes) < args.seconds:
+            if not crawl:
+                problems, failed = self.check(want)
+            for _ in range(self.w.warm_passes):
+                self.warm_pass(n_docs)
+            while len(passes) < MIN_PASSES or sum(p["wall_s"] for p in passes) < args.seconds:
                 self.timed_pass(passes, n_docs, trace)
             if crawl:
                 problems, failed = self.check(want)
