@@ -6,7 +6,7 @@ Prints ONE JSON line:
 
 Env:
   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS    local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS    local[] parallelism (default: the host's core count)
   BENCH_QUERIES       comma-list to restrict (default: all)
   BENCH_REPLICATE     headline-corpus fan-out (default 8: sf0.1 → 40k docs,
                       enough compute that the headline measures the engine,
@@ -67,8 +67,10 @@ def _busy() -> None:
 
 
 def main() -> None:
+    from go_readability_spark.spark.session import build_session, default_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     only = {q for q in os.environ.get("BENCH_QUERIES", "").split(",") if q}
     probe_before = host_probe_s()
     probe_par_before = host_probe_parallel_s(cpus)
@@ -76,7 +78,6 @@ def main() -> None:
     import __spark_entry__ as e
     from go_readability_spark.spark.corpus import synthesize_documents
     from go_readability_spark.spark.extract import route_and_extract
-    from go_readability_spark.spark.session import build_session
 
     spark = build_session(cpus=cpus, app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")

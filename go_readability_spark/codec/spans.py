@@ -288,12 +288,6 @@ def spans_to_html(spans: list[Span]) -> str:
     return "".join(s.text for s in sorted(spans, key=lambda s: s.offset))
 
 
-def rows_to_html(rows) -> str:
-    """Same as spans_to_html but over plain dict/Row-like records."""
-    ordered = sorted(rows, key=lambda r: r["offset"] if isinstance(r, dict) else r.offset)
-    return "".join((r["text"] if isinstance(r, dict) else r.text) or "" for r in ordered)
-
-
 def _open_tag_repr(n: Node) -> str:
     attrs = sorted((name, value) for name, value in n.attributes)
     inner = "".join(f' {name}="{value}"' for name, value in attrs)

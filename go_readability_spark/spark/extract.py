@@ -16,6 +16,8 @@ Scale notes (10^12-doc design point, SURVEY.md §4.2):
   upstream partitioning (mega-docs cluster by crawl host in real corpora).
 - Oversized docs degrade to ``status='too_large'`` rows via
   ``max_elems_to_parse`` instead of stalling a task (readability.go:2176-2181).
+- Each Python worker is set up once (``worker.prepare_worker``), not once per
+  task: no per-task zip directory re-reads, no GC rescans of the import heap.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from ..codec.spans import html_fragment_to_normalized_spans
 from ..kernel.options import Options
 from ..kernel.readability import parse_document
 from .schema import ARTICLES_SCHEMA
+from .worker import prepare_worker
 
 DEFAULT_URI = "http://fakehost/test/page.html"
 
@@ -78,9 +81,15 @@ def extract_one(
     result, _article, status = parse_document(html or "", uri or DEFAULT_URI, options)
     if result is None:
         return {"doc_id": doc_id, "status": status, "error": None, **_EMPTY}
-    out_spans = [
-        s.as_row() for s in html_fragment_to_normalized_spans(result.html_content)
-    ]
+    try:
+        out_spans = [
+            s.as_row() for s in html_fragment_to_normalized_spans(result.html_content)
+        ]
+    except Exception as exc:
+        # e.g. a custom serializer returning a non-string: one error row,
+        # never a failed Spark task
+        error = f"{type(exc).__name__}: {str(exc)[:200]}"
+        return {"doc_id": doc_id, "status": "parse_error", "error": error, **_EMPTY}
     return {
         "doc_id": doc_id,
         "spans": out_spans,
@@ -107,6 +116,7 @@ def _batch_extractor(
     cols = [f.name for f in ARTICLES_SCHEMA.fields]
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_worker()
         out: list[dict] = []
         out_sz = 0
         for pdf in batches:
@@ -159,16 +169,6 @@ def extract_articles(
     return df.select(*cols).mapInPandas(
         _batch_extractor(opts, emit_every, prescreen=prescreen),
         schema=ARTICLES_SCHEMA,
-    )
-
-
-def with_doc_bytes(df: DataFrame) -> DataFrame:
-    """JVM-side document size (for skew routing / metrics) — no Python."""
-    return df.withColumn(
-        "doc_bytes",
-        F.expr(
-            "aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 0L))"
-        ),
     )
 
 

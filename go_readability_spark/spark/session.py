@@ -15,13 +15,20 @@ from pyspark.sql import SparkSession
 ARROW_MAX_RECORDS = 64
 
 
+def default_cpus() -> int:
+    """``local[N]`` parallelism: ``SPARK_GRAFT_CPUS``, else the host's core
+    count.  More Python workers than cores only multiplies the cost each
+    worker pays on its first task."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def build_session(
     cpus: int | None = None,
     app_name: str = "go_readability_spark",
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     return (

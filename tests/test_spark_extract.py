@@ -6,14 +6,18 @@ import os
 
 import pytest
 
-from go_readability_spark.codec.spans import html_fragment_to_normalized_spans
-from go_readability_spark.spark.corpus import FIXTURES_DIR, fixture_documents
+from go_readability_spark.codec.spans import html_fragment_to_normalized_spans, html_to_spans
+from go_readability_spark.kernel.options import Options
+from go_readability_spark.spark.corpus import FIXTURES_DIR, fixture_documents, synth_html
 from go_readability_spark.spark.extract import (
+    _batch_extractor,
+    _doc_bytes_expr,
     extract_articles,
+    extract_one,
     route_and_extract,
-    with_doc_bytes,
     with_doc_stats,
 )
+from go_readability_spark.spark.schema import ARTICLES_SCHEMA, DOCUMENTS_SCHEMA
 
 # A diverse probe subset (full 119-fixture parity is covered Spark-free by
 # test_golden.py; here we verify the Spark boundary preserves it).
@@ -73,9 +77,23 @@ def test_emit_chunking_preserves_rows(spark):
     assert small == big == 10
 
 
-def test_with_doc_bytes_matches_python(spark):
-    docs = fixture_documents(spark).limit(5)
-    rows = with_doc_bytes(docs).collect()
+def _synth_pages(n):
+    words = " ".join(f"word{i}" for i in range(120))
+    return [(f"synth-{i}", synth_html(i, words, "en", "src")) for i in range(n)]
+
+
+def _synth_documents(spark, n):
+    """n article-shaped pages as a DOCUMENTS_SCHEMA frame, encoded on the driver."""
+    rows = [
+        {"doc_id": d, "uri": None, "spans": [s.as_row() for s in html_to_spans(html)]}
+        for d, html in _synth_pages(n)
+    ]
+    return spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+
+
+def test_doc_bytes_expr_matches_python(spark):
+    docs = _synth_documents(spark, 5)
+    rows = docs.withColumn("doc_bytes", _doc_bytes_expr()).collect()
     for r in rows:
         assert r.doc_bytes == sum(len(s.text or "") for s in r.spans)
 
@@ -101,9 +119,9 @@ def test_partial_doc_stats_are_reused_not_recomputed(spark):
     contract) must keep that column — route_and_extract computes only the
     missing doc_tags, so the fused two-stat aggregate (named_struct) never
     appears in the plan and results are unchanged."""
-    docs = fixture_documents(spark).limit(6)
+    docs = _synth_documents(spark, 6)
     base = {r.doc_id: (r.status, r.length) for r in route_and_extract(docs).collect()}
-    pre = with_doc_bytes(docs)
+    pre = docs.withColumn("doc_bytes", _doc_bytes_expr())
     routed_df = route_and_extract(pre, mega_doc_bytes=50_000)
     plan = routed_df._jdf.queryExecution().executedPlan().toString()
     assert "named_struct" not in plan  # fused recompute path not taken
@@ -224,3 +242,76 @@ def test_prescreen_gates_through_readerable(spark):
     # the golden corpus contains deliberately non-readerable fixtures, so
     # the gate must actually fire
     assert n_skipped > 0
+
+
+def _poison_options():
+    # a serializer that returns no string: the output-span codec raises
+    return Options(serializer=lambda node: None)
+
+
+def test_output_codec_failure_is_one_error_row():
+    (doc_id, html), = _synth_pages(1)
+    assert extract_one(doc_id, html, None, Options())["status"] == "ok"
+    row = extract_one(doc_id, html, None, _poison_options())
+    assert row["status"] == "parse_error"
+    assert row["error"].startswith("TypeError: ")
+    assert row["spans"] is None and row["title"] is None
+
+
+def test_output_codec_failure_through_spark(spark):
+    rows = extract_articles(_synth_documents(spark, 1), _poison_options()).collect()
+    assert len(rows) == 1
+    assert rows[0].status == "parse_error"
+    assert rows[0].error.startswith("TypeError: ")
+
+
+def test_reused_worker_skips_zip_rereads(spark):
+    """A Python worker that already ran an extraction task re-reads no zip
+    directory when Spark sets up its next task.  The probe wraps the
+    worker's ``zipimport._read_directory`` with a counter on its first
+    task and reports, on each later task in the same worker, the reads
+    since the previous task ended: Spark's per-task
+    ``importlib.invalidate_caches()`` happens in between."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    extract = _batch_extractor(Options(classes_to_preserve=["page", "caption"]), 64)
+
+    def probed(batches):
+        import os
+        import zipimport
+
+        read_directory = zipimport._read_directory
+        primed = hasattr(read_directory, "calls")
+        if not primed:
+            def read_directory(archive, _stock=zipimport._read_directory):
+                read_directory.calls += 1
+                return _stock(archive)
+
+            read_directory.calls = 0
+            zipimport._read_directory = read_directory
+        reads = read_directory.calls
+        for out in extract(batches):
+            yield out.assign(pid=os.getpid(), primed=primed, zip_reads=reads)
+        read_directory.calls = 0
+
+    schema = T.StructType(
+        ARTICLES_SCHEMA.fields
+        + [
+            T.StructField("pid", T.LongType()),
+            T.StructField("primed", T.BooleanType()),
+            T.StructField("zip_reads", T.LongType()),
+        ]
+    )
+    pages = spark.createDataFrame(pd.DataFrame(_synth_pages(2), columns=["doc_id", "html"]))
+    job = pages.coalesce(1).mapInPandas(probed, schema).select("status", "pid", "primed", "zip_reads")
+    tasks = []
+    # Spark hands a task to any idle worker, so run one-task jobs until
+    # one lands on a worker an earlier job already primed
+    while len(tasks) < 2 or not tasks[-1][1]:
+        assert len(tasks) < 12, tasks
+        rows = job.collect()
+        assert [r.status for r in rows] == ["ok", "ok"]
+        assert len({(r.pid, r.primed, r.zip_reads) for r in rows}) == 1  # one task
+        tasks.append((rows[0].pid, rows[0].primed, rows[0].zip_reads))
+    assert tasks[-1][2] == 0, tasks
