@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..codec.spans import html_to_spans
 from .schema import DOCUMENTS_SCHEMA
-from .worker import prepare_worker
+from . import worker  # noqa: F401  (sets up a Python worker on import)
 
 FIXTURES_DIR = "/root/reference/testdata/test-pages"
 FIXTURE_URI = "http://fakehost/test/page.html"
@@ -139,7 +139,6 @@ def synth_html(doc_id: int, text: str, lang: str, source: str) -> str:
 
 
 def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
     for pdf in batches:
         out = []
         has_rep = "rep" in pdf.columns
@@ -203,7 +202,6 @@ def synthesize_documents(
 
 
 def _ingest_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
     for pdf in batches:
         out = []
         has_uri = "uri" in pdf.columns
@@ -241,7 +239,6 @@ def _pdf_batches(real_extract):
     extract = real_extract or (lambda payload: pdf_to_text_lines(payload))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
         for pdf in batches:
             out = []
             has_uri = "uri" in pdf.columns
@@ -302,7 +299,6 @@ WARC_CHUNK_RECORDS = 64
 
 
 def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    prepare_worker()
     from ..codec.warc import warc_html_pages
 
     cols = ["doc_id", "uri", "spans"]

@@ -31,7 +31,7 @@ from ..codec.spans import html_fragment_to_normalized_spans
 from ..kernel.options import Options
 from ..kernel.readability import parse_document
 from .schema import ARTICLES_SCHEMA
-from .worker import prepare_worker
+from . import worker  # noqa: F401  (sets up a Python worker on import)
 
 DEFAULT_URI = "http://fakehost/test/page.html"
 
@@ -116,7 +116,6 @@ def _batch_extractor(
     cols = [f.name for f in ARTICLES_SCHEMA.fields]
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
         out: list[dict] = []
         out_sz = 0
         for pdf in batches:

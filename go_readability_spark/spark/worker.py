@@ -2,7 +2,16 @@
 
 Spark reuses a Python worker for many tasks.  ``prepare_worker`` removes
 two costs that otherwise recur in every task (measured on a 4-core host,
-local[4], the perfbench heavy_pages documents):
+local[4], the perfbench heavy_pages documents).  It runs when this module
+is imported inside a Spark task: ``spark/extract.py`` and
+``spark/corpus.py`` import it, and a worker imports them while it
+unpickles the first extraction or ingest function it runs (cloudpickle
+pickles a module-level function by reference, also when a closure names
+it, and unpickling it imports its module).  By then pyspark, pandas,
+pyarrow and the kernel are imported.  A closure pickled by value that
+names no engine global (the textops folds) imports neither, so a worker
+that only ever runs such closures stays unprepared.  Imported anywhere
+else (the driver, a test process) it changes nothing.
 
 - **Zip directory re-reads.**  Before each task,
   ``pyspark.worker_util.setup_spark_files`` calls
@@ -19,9 +28,11 @@ local[4], the perfbench heavy_pages documents):
   collection triggered while a 50-300 KB page's DOM is built rescanned
   them.  ``gc.freeze()`` moves that heap into the permanent generation,
   which collections skip: kernel CPU over the 8 pages fell 3.34 -> 2.62 s
-  in-process (GC pauses 1.08 -> 0.72 s).  Freeze once per process, never
-  per task: a later freeze would pin that task's cyclic garbage for the
-  life of the worker.  Disabling GC per document instead raised the
+  in-process (GC pauses 1.08 -> 0.72 s), and heavy_pages
+  ``cpu_s_per_kdoc`` 586 -> 513 against the stat-gated hook alone (lower
+  in 21 of 22 alternating pairs).  Freeze once per process, never per
+  task: a later freeze would pin that task's cyclic garbage for the life
+  of the worker.  Disabling GC per document instead raised the
   tracemalloc peak of a retry-heavy link farm from 84 to 128 MB.
 """
 
@@ -32,6 +43,8 @@ import os
 import sys
 import zipimport
 
+from pyspark import TaskContext
+
 EAGER_ZIP_REREAD = sys.version_info < (3, 13)
 
 _prepared = False
@@ -41,12 +54,10 @@ _zip_reads: dict[str, tuple[tuple[int, int, int], dict]] = {}
 
 
 def prepare_worker() -> None:
-    """Set up the current Python worker process for engine tasks; every
-    call after the first in the same process returns at once.  Call it
-    first in each function Spark runs in a worker, before the first batch
-    is pulled."""
+    """Set up the current Python worker process for engine tasks.  A no-op
+    outside a Spark task and on every call after the first in a process."""
     global _prepared
-    if _prepared:
+    if _prepared or TaskContext.get() is None:
         return
     _prepared = True
     if EAGER_ZIP_REREAD:
@@ -70,3 +81,6 @@ def _invalidate_if_changed(self: zipimport.zipimporter) -> None:
         return
     _stock_invalidate(self)
     _zip_reads[self.archive] = (sig, self._files)
+
+
+prepare_worker()

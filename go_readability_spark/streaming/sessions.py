@@ -21,8 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from ..spark.worker import prepare_worker
-
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 SESSION_SCHEMA = T.StructType(
@@ -51,7 +49,6 @@ def _make_sessionizer(idle_timeout_ms: int):
             pdfs: Iterator[pd.DataFrame],
             state: GroupState,
         ) -> Iterator[pd.DataFrame]:
-        prepare_worker()
         (user_id,) = key
         closed: list[tuple[int, int, int, str]] = []
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..spark.worker import prepare_worker
 from ._persist import scratch_persist, spread_small
 
 SHINGLE_K = 3          # words per shingle
@@ -710,7 +709,6 @@ def simhash_docs(documents: DataFrame) -> DataFrame:
     hexc = SIMHASH_HEX_CHARS
 
     def fold(batches):
-        prepare_worker()
         import hashlib
         from collections import Counter
 

@@ -19,8 +19,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..spark.worker import prepare_worker
-
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -91,7 +89,6 @@ def decode_media_features(media: DataFrame, real_decode=None) -> DataFrame:
         decode = _fake_decode
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
@@ -175,7 +172,6 @@ def resize_media(media: DataFrame, max_dim: int = 256, real_resize=None) -> Data
     resize = real_resize or _fake_resize
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
@@ -212,7 +208,6 @@ def sample_frames(
     frames_of = real_frames or _fake_frames
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prepare_worker()
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):

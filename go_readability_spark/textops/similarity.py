@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..spark.worker import prepare_worker
 from ._persist import scratch_persist
 
 N_QUERIES = 8       # vec_id < N_QUERIES form the query set
@@ -243,7 +242,6 @@ def lsh_signatures(
     weights = (1 << np.arange(n_p, dtype=np.int64)).astype(np.int64)
 
     def batches(it):
-        prepare_worker()
         for pdf in it:
             if not len(pdf):
                 out = {"vec_id": pdf["vec_id"], "sig": []}
@@ -448,7 +446,6 @@ def embedding_near_dup_pairs(
             yield np.concatenate(ia_parts), np.concatenate(ib_parts)
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        prepare_worker()
         empty = pd.DataFrame(
             {
                 "vec_a": pd.Series([], dtype="int64"),

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..spark.worker import prepare_worker
 from ._persist import scratch_persist, spread_small
 from .dedup import WS_RX
 
@@ -284,7 +283,6 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
     from pyspark.sql import types as T
 
     def fold(batches):
-        prepare_worker()
         for pdf in batches:
             n_words_c, dup_w, top2_c, dup5_c = [], [], [], []
             for text in pdf["text"].values:

@@ -77,22 +77,8 @@ def test_emit_chunking_preserves_rows(spark):
     assert small == big == 10
 
 
-def _synth_pages(n):
-    words = " ".join(f"word{i}" for i in range(120))
-    return [(f"synth-{i}", synth_html(i, words, "en", "src")) for i in range(n)]
-
-
-def _synth_documents(spark, n):
-    """n article-shaped pages as a DOCUMENTS_SCHEMA frame, encoded on the driver."""
-    rows = [
-        {"doc_id": d, "uri": None, "spans": [s.as_row() for s in html_to_spans(html)]}
-        for d, html in _synth_pages(n)
-    ]
-    return spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
-
-
 def test_doc_bytes_expr_matches_python(spark):
-    docs = _synth_documents(spark, 5)
+    docs = fixture_documents(spark).limit(5)
     rows = docs.withColumn("doc_bytes", _doc_bytes_expr()).collect()
     for r in rows:
         assert r.doc_bytes == sum(len(s.text or "") for s in r.spans)
@@ -119,7 +105,7 @@ def test_partial_doc_stats_are_reused_not_recomputed(spark):
     contract) must keep that column — route_and_extract computes only the
     missing doc_tags, so the fused two-stat aggregate (named_struct) never
     appears in the plan and results are unchanged."""
-    docs = _synth_documents(spark, 6)
+    docs = fixture_documents(spark).limit(6)
     base = {r.doc_id: (r.status, r.length) for r in route_and_extract(docs).collect()}
     pre = docs.withColumn("doc_bytes", _doc_bytes_expr())
     routed_df = route_and_extract(pre, mega_doc_bytes=50_000)
@@ -244,6 +230,20 @@ def test_prescreen_gates_through_readerable(spark):
     assert n_skipped > 0
 
 
+def _synth_pages(n):
+    words = " ".join(f"word{i}" for i in range(120))
+    return [(f"synth-{i}", synth_html(i, words, "en", "src")) for i in range(n)]
+
+
+def _synth_documents(spark, n):
+    """n article-shaped pages as a DOCUMENTS_SCHEMA frame, encoded on the driver."""
+    rows = [
+        {"doc_id": d, "uri": None, "spans": [s.as_row() for s in html_to_spans(html)]}
+        for d, html in _synth_pages(n)
+    ]
+    return spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+
+
 def _poison_options():
     # a serializer that returns no string: the output-span codec raises
     return Options(serializer=lambda node: None)
@@ -271,7 +271,9 @@ def test_reused_worker_skips_zip_rereads(spark):
     worker's ``zipimport._read_directory`` with a counter on its first
     task and reports, on each later task in the same worker, the reads
     since the previous task ended: Spark's per-task
-    ``importlib.invalidate_caches()`` happens in between."""
+    ``importlib.invalidate_caches()`` happens in between.  Nothing here
+    calls ``prepare_worker``: unpickling the extractor imports the engine
+    inside the task, and that import prepares the worker."""
     import pandas as pd
     from pyspark.sql import types as T
 

@@ -15,12 +15,21 @@ eager_only = pytest.mark.skipif(
 )
 
 
+class _InTask:
+    """Stands in for pyspark's TaskContext inside a running task."""
+
+    @staticmethod
+    def get():
+        return object()
+
+
 @pytest.fixture
 def fresh_worker(monkeypatch):
-    """prepare_worker state as in a new worker process; the zipimport hook
-    and the GC state of the test process are restored afterwards, and
-    gc.freeze calls are counted instead of made."""
+    """prepare_worker state as in a new worker process running a Spark
+    task; the zipimport hook and the GC state of the test process are
+    restored afterwards, and gc.freeze calls are counted instead of made."""
     freezes = []
+    monkeypatch.setattr(worker, "TaskContext", _InTask)
     monkeypatch.setattr(worker, "_prepared", False)
     monkeypatch.setattr(worker, "_zip_reads", {})
     monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", worker._stock_invalidate)
@@ -115,6 +124,23 @@ def test_no_zip_hook_on_lazy_zipimport(fresh_worker, monkeypatch):
     worker.prepare_worker()
     assert zipimport.zipimporter.invalidate_caches is worker._stock_invalidate
     assert fresh_worker == [1]
+
+
+def test_outside_a_spark_task_nothing_changes():
+    """The driver and test processes import and call engine code too (here
+    a WARC batch function, as tests/test_corpus.py does): their GC state
+    and zipimport stay as they were."""
+    import pandas as pd
+
+    from go_readability_spark.spark import corpus
+
+    frozen = gc.get_freeze_count()
+    hook = zipimport.zipimporter.invalidate_caches
+    worker.prepare_worker()
+    list(corpus._warc_batches(iter([pd.DataFrame({"content": [b""], "path": ["a"]})])))
+    assert not worker._prepared
+    assert gc.get_freeze_count() == frozen
+    assert zipimport.zipimporter.invalidate_caches is hook is worker._stock_invalidate
 
 
 def test_default_cpus_is_the_host_core_count(monkeypatch):
