@@ -3,9 +3,12 @@
 The north rule's extraction surface includes "PDF/layout parse" alongside
 HTML boilerplate stripping.  This module handles the common simple case
 end-to-end with no third-party dependency: uncompressed or FlateDecode
-content streams, BT..ET text blocks, ``Tj`` / ``'`` / ``TJ`` show-text
-operators over both literal ``(...)`` strings (with PDF escapes) and hex
-``<...>`` strings, page-ordered.
+content streams, BT..ET text blocks, ``Tj`` / ``'`` / ``"`` / ``TJ``
+show-text operators over both literal ``(...)`` strings (with PDF
+escapes) and hex ``<...>`` strings, page-ordered.  PDF syntax is read by
+ONE lexer (``_lex``, PDF 32000 §7.2-7.3) in one left-to-right pass; the
+content-stream interpreter, the ToUnicode CMap parser, the CMap-resource
+test and the dictionary delimiter matcher all walk its tokens.
 
 CID-keyed (Type0/Identity-H) text — the common real-crawl case — is
 handled two ways.  When the file carries a usable cross-reference
@@ -31,70 +34,119 @@ in TRUE PAGE ORDER.  When no usable structure exists (fixture-grade or
 damaged files) the extractor falls back to scanning every top-level
 stream in physical order, the previous behavior.
 
-Layout model: one output line per show-text operator, pages in page-tree
-order (physical stream order under the fallback).  This mirrors how the
-HTML side treats the DOM's document order as layout order.
+Layout model: one output line per show-text operator (``Tj``, ``'``,
+``"``, ``TJ``) inside a ``BT`` text block, pages in page-tree order
+(physical stream order under the fallback).  ``Tf`` selects the font
+for the operators after it, across text blocks; ``q``/``Q`` save and
+restore that selection with the rest of the graphics state (§8.4.2).
+This mirrors how the HTML side treats the DOM's document order as layout
+order.
 """
 
 from __future__ import annotations
 
-import bisect
+import functools
 import re
 import zlib
+from typing import Callable, Iterator
 
-_STREAM_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n(.*?)endstream", re.DOTALL)
-_TEXT_BLOCK_RE = re.compile(rb"BT(.*?)ET", re.DOTALL)
-# (string) Tj   |   (string) '   |   [ ...(s1)...(s2)... ] TJ
-_TJ_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)\s*(?:Tj|')")
-# <hexdigits> Tj — one-byte character codes (simple fonts); CID-keyed
-# two-byte codes need a ToUnicode CMap and go through ``real_extract``
-_TJ_HEX_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>\s*(?:Tj|')")
-_TJ_ARRAY_RE = re.compile(rb"\[((?:[^\]\\]|\\.)*)\]\s*TJ", re.DOTALL)
-_STR_IN_ARRAY_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)")
-_HEX_IN_ARRAY_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>")
+_STREAM_START_RE = re.compile(rb">>\s*stream\r?\n")
+
+# -- Lexer (PDF 32000 §7.2-7.3) -----------------------------------------------
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"  # §7.2.2: not white-space/delimiter
+_TOKEN_RE = re.compile(
+    rb"[\x00\t\n\x0c\r ]+|%[^\r\n]*"  # white-space and comments: skipped
+    rb"|/(" + _REGULAR + rb"*)"  # 1 name, without its '/'
+    rb"|<([0-9A-Fa-f\s]*)>"  # 2 hex string, without its '<' '>'
+    rb"|(<<|>>|[\[\]{}])"  # 3 delimiter
+    rb"|(\()"  # 4 literal string: nesting needs the scan in _lex
+    rb"|([-+.0-9]" + _REGULAR + rb"*)"  # 5 number
+    rb"|(" + _REGULAR + rb"+)"  # 6 operator or other keyword
+    rb"|.",  # stray ')' '<' '>': skipped
+    re.DOTALL,
+)
+_NAME, _HEX, _DELIM, _LIT, _NUM, _OP = 1, 2, 3, 4, 5, 6
+_ARRAY = 7  # grouped by _objects, never produced by _lex
+_LIT_STOP_RE = re.compile(rb"[()\\]")
+
+
+def _lex(buf: bytes, pos: int = 0) -> Iterator[tuple[int, bytes, int]]:
+    """(kind, value, end offset) per token from ``pos`` on.  A literal
+    string's value is its raw bytes between the outer parentheses (escapes
+    kept): parentheses nest unless escaped (§7.3.4.2), and an unterminated
+    literal runs to the end of ``buf``."""
+    match, stop, n = _TOKEN_RE.match, _LIT_STOP_RE.search, len(buf)
+    while pos < n:
+        m = match(buf, pos)
+        kind, pos = m.lastindex, m.end()
+        if kind == _LIT:
+            start, depth, end = pos, 1, n
+            while depth:
+                s = stop(buf, pos)
+                if s is None:
+                    pos = n
+                    break
+                pos = s.end()
+                c = buf[s.start()]
+                if c == 0x5C:  # backslash: the next byte is escaped
+                    pos += 1
+                elif c == 0x28:
+                    depth += 1
+                else:
+                    depth -= 1
+            else:
+                end = pos - 1
+            yield _LIT, buf[start:end], pos
+        elif kind:
+            yield kind, m.group(kind), pos
+
+
+def _objects(buf: bytes) -> Iterator[tuple[int, object]]:
+    """(kind, value) per token with arrays grouped: ``[…]`` arrives as one
+    (_ARRAY, [(kind, value), …]).  An operator cannot sit inside an
+    array, so one drops any array still open and arrives on its own."""
+    arrays: list[list[tuple[int, object]]] = []
+    for kind, tok, _ in _lex(buf):
+        if kind == _DELIM:
+            if tok == b"[":
+                arrays.append([])
+            elif tok == b"]" and arrays:
+                item = (_ARRAY, arrays.pop())
+                if arrays:
+                    arrays[-1].append(item)
+                else:
+                    yield item
+        elif kind == _OP:
+            arrays.clear()
+            yield kind, tok
+        elif arrays:
+            arrays[-1].append((kind, tok))
+        else:
+            yield kind, tok
+
 
 _ESCAPES = {
     b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
     b"(": b"(", b")": b")", b"\\": b"\\",
 }
+# \ddd is 1-3 OCTAL digits (\8, \9 are not octal: the backslash drops);
+# \<EOL> is a line continuation (§7.3.4.2): backslash AND EOL drop, \r\n
+# being one EOL; a backslash before any other byte drops
+_ESCAPE_RE = re.compile(rb"\\(?:([0-7]{1,3})|\r\n|[\r\n]|(.))", re.DOTALL)
 
 
 def _unescape_bytes(raw: bytes) -> bytes:
-    out = bytearray()
-    i, n = 0, len(raw)
-    while i < n:
-        c = raw[i : i + 1]
-        if c == b"\\" and i + 1 < n:
-            nxt = raw[i + 1 : i + 2]
-            if nxt in _ESCAPES:
-                out += _ESCAPES[nxt]
-                i += 2
-                continue
-            if nxt in b"01234567":  # \ddd octal (1-3 OCTAL digits; \8, \9
-                # are not octal — bytes.isdigit would accept them and blow
-                # up int(..., 8), so scan 0-7 only)
-                j = i + 1
-                while j < min(i + 4, n) and raw[j : j + 1] in b"01234567":
-                    j += 1
-                out.append(int(raw[i + 1 : j], 8) & 0xFF)
-                i = j
-                continue
-            if nxt in b"\r\n":  # \<EOL> is a LINE CONTINUATION (PDF 32000
-                # §7.3.4.2): both the backslash AND the EOL drop; \r\n is
-                # one EOL marker
-                i += 2
-                if nxt == b"\r" and raw[i : i + 1] == b"\n":
-                    i += 1
-                continue
-            i += 1  # lone backslash before any other char: dropped
-            continue
-        out += c
-        i += 1
-    return bytes(out)
+    """Literal-string payload → bytes, PDF escapes resolved."""
+    if b"\\" not in raw:
+        return raw
 
+    def sub(m: re.Match) -> bytes:
+        if m.group(1):
+            return bytes([int(m.group(1), 8) & 0xFF])
+        c = m.group(2)
+        return _ESCAPES.get(c, c) if c else b""
 
-def _unescape(raw: bytes) -> str:
-    return _unescape_bytes(raw).decode("latin-1")
+    return _ESCAPE_RE.sub(sub, raw)
 
 
 def _hex_bytes(raw: bytes) -> bytes:
@@ -109,102 +161,69 @@ def _hex_bytes(raw: bytes) -> bytes:
         return b""
 
 
-def _unhex(raw: bytes, cmap: dict[int, str] | None = None) -> str:
-    """<...> hex string → text.  With no ``cmap``: one byte per 2 hex
-    digits, latin-1 (simple 1-byte-code fonts).  With a ToUnicode
-    ``cmap``: 2-byte character codes mapped through it (Identity-H
-    Type0 fonts; a trailing odd byte — malformed for 2-byte codes — and
-    unmapped codes are dropped).  A string NONE of whose 2-byte codes
-    exist in the document CMap falls back to 1-byte latin-1: in a
-    mixed-font document that is a simple font's hex string, not CID
-    text (partially-mapped strings stay CID-decoded — resolving those
-    needs per-font resources, the ``real_extract`` envelope)."""
-    bs = _hex_bytes(raw)
-    if cmap is None:
-        return bs.decode("latin-1")
-    out: list[str] = []
-    mapped = 0
-    for i in range(0, len(bs) - 1, 2):
-        v = cmap.get(int.from_bytes(bs[i : i + 2], "big"))
-        if v is not None:
-            mapped += 1
-            out.append(v)
-    if mapped == 0 and bs:
-        return bs.decode("latin-1")
-    return "".join(out)
-
-
 # -- ToUnicode CMap (PDF 32000 §9.10.3) ---------------------------------------
-_BFCHAR_RE = re.compile(rb"beginbfchar(.*?)endbfchar", re.DOTALL)
-_BFRANGE_RE = re.compile(rb"beginbfrange(.*?)endbfrange", re.DOTALL)
-_HEXTOK_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>")
-# <lo> <hi> [<dst1> <dst2> ...]  (array form: one destination per code)
-_BFRANGE_ARRAY_RE = re.compile(
-    rb"<([0-9A-Fa-f\s]*)>\s*<([0-9A-Fa-f\s]*)>\s*\[((?:\s*<[0-9A-Fa-f\s]*>)*)\s*\]"
-)
-# <lo> <hi> <dstStart>  (incrementing form)
-_BFRANGE_INCR_RE = re.compile(
-    rb"<([0-9A-Fa-f\s]*)>\s*<([0-9A-Fa-f\s]*)>\s*<([0-9A-Fa-f\s]*)>"
-)
 _MAX_BFRANGE = 1 << 16  # CID space bound: reject absurd ranges in garbage
+
+
+def _utf16(code: bytes) -> str:
+    return code.decode("utf-16-be", errors="ignore")
 
 
 def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
     """bfchar/bfrange sections → {char code → unicode str} (destinations
-    are UTF-16BE per §9.10.3; undecodable destinations are skipped)."""
+    are UTF-16BE per §9.10.3; undecodable destinations are skipped).
+    bfrange entries are ``<lo> <hi> <dstStart>`` (incrementing) or
+    ``<lo> <hi> [<dst> …]`` (one destination per code); bfrange sections
+    apply after every bfchar section.  Other keywords inside a section
+    are ignored."""
     cmap: dict[int, str] = {}
-
-    def dst_str(tok: bytes) -> str:
-        return _hex_bytes(tok).decode("utf-16-be", errors="ignore")
-
-    for m in _BFCHAR_RE.finditer(data):
-        toks = _HEXTOK_RE.findall(m.group(1))
-        for src, dst in zip(toks[0::2], toks[1::2]):
-            sb = _hex_bytes(src)
-            if sb:
-                cmap[int.from_bytes(sb, "big")] = dst_str(dst)
-    for m in _BFRANGE_RE.finditer(data):
-        body = m.group(1)
-        consumed: list[tuple[int, int]] = []
-        for am in _BFRANGE_ARRAY_RE.finditer(body):
-            lo = int.from_bytes(_hex_bytes(am.group(1)), "big")
-            hi = int.from_bytes(_hex_bytes(am.group(2)), "big")
+    ranges: list[list[tuple[int, object]]] = []
+    section, operands = b"", []
+    for kind, val in _objects(data):
+        if kind != _OP:
+            operands.append((kind, val))
+        elif val in (b"beginbfchar", b"beginbfrange"):
+            section, operands = val, []
+        elif val == b"endbfchar" and section == b"beginbfchar":
+            hexes = [_hex_bytes(v) for k, v in operands if k == _HEX]
+            for src, dst in zip(hexes[0::2], hexes[1::2]):
+                if src:
+                    cmap[int.from_bytes(src, "big")] = _utf16(dst)
+            section = b""
+        elif val == b"endbfrange" and section == b"beginbfrange":
+            ranges.append(operands)
+            section = b""
+    for ops in ranges:
+        i = 0
+        while i + 2 < len(ops):
+            (k1, lo), (k2, hi), (k3, dst) = ops[i : i + 3]
+            if k1 != _HEX or k2 != _HEX or k3 not in (_HEX, _ARRAY):
+                i += 1
+                continue
+            i += 3
+            lo = int.from_bytes(_hex_bytes(lo), "big")
+            hi = int.from_bytes(_hex_bytes(hi), "big")
             if hi - lo >= _MAX_BFRANGE:
                 continue
-            for k, d in enumerate(_HEXTOK_RE.findall(am.group(3))):
-                if lo + k <= hi:
-                    cmap[lo + k] = dst_str(d)
-            consumed.append((am.start(), am.end()))
-        for rm in _BFRANGE_INCR_RE.finditer(body):
-            if any(a <= rm.start() < b for a, b in consumed):
-                continue
-            lo = int.from_bytes(_hex_bytes(rm.group(1)), "big")
-            hi = int.from_bytes(_hex_bytes(rm.group(2)), "big")
-            dst = _hex_bytes(rm.group(3))
-            if not dst or hi - lo >= _MAX_BFRANGE:
-                continue
-            base = int.from_bytes(dst, "big")
-            width = max(len(dst), 2)
-            for k in range(hi - lo + 1):
-                try:
-                    cmap[lo + k] = (
-                        (base + k).to_bytes(width, "big").decode(
-                            "utf-16-be", errors="ignore"
-                        )
-                    )
-                except OverflowError:
-                    break
+            if k3 == _ARRAY:
+                dsts = [_hex_bytes(v) for k, v in dst if k == _HEX]
+            else:  # destinations count up from dstStart, within its width
+                first = _hex_bytes(dst)
+                base, width = int.from_bytes(first, "big"), max(len(first), 2)
+                top = min(hi - lo + 1, (1 << 8 * width) - base) if first else 0
+                dsts = [(base + k).to_bytes(width, "big") for k in range(top)]
+            for k, d in enumerate(dsts[: max(hi - lo + 1, 0)]):
+                cmap[lo + k] = _utf16(d)
     return cmap
 
 
 def _is_cmap_resource(s: bytes) -> bool:
     """A standalone ToUnicode CMap stream: carries bfchar/bfrange
-    sections and NO BT…ET text block.  Page content quoting the literal
+    sections and NO ``BT`` operator.  Page content quoting the literal
     text 'beginbfchar' inside a Tj string has text blocks, so it is
     neither skipped as a resource nor merged into the document CMap."""
-    return (
-        (b"beginbfchar" in s or b"beginbfrange" in s)
-        and _TEXT_BLOCK_RE.search(s) is None
+    return (b"beginbfchar" in s or b"beginbfrange" in s) and not any(
+        kind == _OP and tok == b"BT" for kind, tok, _ in _lex(s)
     )
 
 
@@ -241,11 +260,20 @@ def page_pieces_from_lines(lines: list[str]) -> list[str]:
 
 
 def _content_streams(pdf: bytes) -> list[bytes]:
-    streams = []
-    for m in _STREAM_RE.finditer(pdf):
-        head, data = m.group(1), m.group(2)
+    """Every stream in physical order, flate-decoded when its head says
+    so; the head runs from the first ``<<`` after the previous stream to
+    the ``>> stream`` keyword.  Each byte is scanned once: a regex asking
+    for the same shape retries every ``<<`` up to the end of the file."""
+    streams: list[bytes] = []
+    pos = 0
+    while (start := pdf.find(b"<<", pos)) >= 0:
+        m = _STREAM_START_RE.search(pdf, start + 2)
+        end = pdf.find(b"endstream", m.end()) if m else -1
+        if end < 0:
+            break
+        head, pos = pdf[start + 2 : m.start()], end + 9
         # stream data runs to the last newline before endstream
-        data = data.rstrip(b"\r\n")
+        data = pdf[m.end() : end].rstrip(b"\r\n")
         if b"/FlateDecode" in head:
             try:
                 data = zlib.decompress(data)
@@ -271,40 +299,26 @@ _REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R\b")
 _MAX_OBJECTS = 200_000  # structural walk bound: plenty for any real file
 
 
+_OBJECT_BOUNDARY = (b"obj", b"endobj", b"stream", b"endstream", b"xref", b"trailer", b"startxref")
+
+
 def _balanced(buf: bytes, start: int, open_tok: bytes, close_tok: bytes) -> int:
     """End index (exclusive) of the balanced ``open_tok``…``close_tok``
-    region beginning at ``start``, skipping literal strings; -1 if
-    unbalanced.  Token length 1 or 2 (``[``/``]`` and ``<<``/``>>``)."""
+    region beginning at ``start`` (``[``/``]`` or ``<<``/``>>`` delimiter
+    tokens, so a hex string such as ``<ABCD>`` before ``>>`` and anything
+    inside a string is not counted); -1 if unbalanced.  A region never
+    crosses an object boundary keyword, so an unclosed dictionary costs
+    a scan of its own object, not of the rest of the file."""
     depth = 0
-    i, n, w = start, len(buf), len(open_tok)
-    while i < n:
-        c = buf[i : i + 1]
-        if buf[i : i + w] == open_tok:
+    for kind, tok, end in _lex(buf, start):
+        if kind == _DELIM and tok == open_tok:
             depth += 1
-            i += w
-            continue
-        if buf[i : i + w] == close_tok:
+        elif kind == _DELIM and tok == close_tok:
             depth -= 1
-            i += w
             if depth == 0:
-                return i
-            continue
-        if c == b"(":  # literal string: ignore delimiters inside
-            j, d, esc = i + 1, 1, False
-            while j < n and d:
-                cc = buf[j : j + 1]
-                if esc:
-                    esc = False
-                elif cc == b"\\":
-                    esc = True
-                elif cc == b"(":
-                    d += 1
-                elif cc == b")":
-                    d -= 1
-                j += 1
-            i = j
-            continue
-        i += 1
+                return end
+        elif kind == _OP and tok in _OBJECT_BOUNDARY:
+            return -1
     return -1
 
 
@@ -401,9 +415,13 @@ def _decode_stream(head: bytes, raw: bytes) -> bytes | None:
     return data
 
 
+_FREE = ("f",)
+
+
 class _Doc:
     """Random-access object loader over a parsed cross-reference map.
-    Entries: obj num → ("o", byte offset) | ("c", objstm num, index)."""
+    Entries: obj num → ("o", byte offset) | ("c", objstm num, index) |
+    _FREE (deleted; a reference to it is null, §7.3.10)."""
 
     def __init__(self, pdf: bytes, entries: dict[int, tuple]):
         self.pdf = pdf
@@ -416,7 +434,7 @@ class _Doc:
         if depth > 8:
             return None, None
         e = self.entries.get(num)
-        if e is None:
+        if e is None or e == _FREE:
             return None, None
         if e[0] == "o":
             return self._object_at(e[1], depth)
@@ -493,8 +511,11 @@ class _Doc:
 
 def _parse_xref_table(pdf: bytes, offset: int, entries: dict[int, tuple]):
     """Classic §7.5.4 table at ``offset`` → (trailer dict bytes, [next
-    offsets to follow]); (None, []) if malformed."""
+    offsets to follow]); (None, []) if malformed.  A hybrid file's
+    /XRefStm (§7.5.8.4) is read here, before the table's free rows land:
+    such a table lists the objects its stream holds as free."""
     i = offset + 4  # past "xref"
+    free: list[int] = []
     while True:
         m = _XREF_SUBSEC_RE.match(pdf, i)
         if not m:
@@ -510,6 +531,8 @@ def _parse_xref_table(pdf: bytes, offset: int, entries: dict[int, tuple]):
             i = rm.end()
             if rm.group(3) == b"n":
                 entries.setdefault(start + k, ("o", int(rm.group(1))))
+            else:
+                free.append(start + k)
     tm = re.compile(rb"\s*trailer\s*<<").match(pdf, i)
     if not tm:
         return None, []
@@ -518,9 +541,11 @@ def _parse_xref_table(pdf: bytes, offset: int, entries: dict[int, tuple]):
         return None, []
     trailer = pdf[tm.end() - 2 : end]
     nxt = []
-    hybrid = _dict_int(trailer, b"XRefStm")  # hybrid-reference (§7.5.8.4)
+    hybrid = _dict_int(trailer, b"XRefStm")
     if hybrid is not None:
-        nxt.append(hybrid)
+        nxt += _parse_xref_stream(pdf, hybrid, entries)[1]
+    for num in free:  # a newer free row hides older sections' offsets
+        entries.setdefault(num, _FREE)
     prev = _dict_int(trailer, b"Prev")
     if prev is not None:
         nxt.append(prev)
@@ -561,7 +586,9 @@ def _parse_xref_stream(pdf: bytes, offset: int, entries: dict[int, tuple]):
             f2 = int.from_bytes(row[w1 : w1 + w2], "big")
             f3 = int.from_bytes(row[w1 + w2 :], "big")
             num = start + k
-            if f1 == 1:
+            if f1 == 0:
+                entries.setdefault(num, _FREE)
+            elif f1 == 1:
                 entries.setdefault(num, ("o", f2))
             elif f1 == 2:
                 entries.setdefault(num, ("c", f2, f3))
@@ -614,7 +641,6 @@ class _Font:
 
 # PDF name token after '/': anything up to a delimiter (§7.3.5)
 _FONT_REF_RE = re.compile(rb"/([^\s/<>\[\]()%]+)\s+(\d+)\s+\d+\s+R\b")
-_TF_RE = re.compile(rb"/([^\s/<>\[\]()%]+)\s+[-+0-9.]+\s+Tf\b")
 
 
 def _resolve_dict(doc: _Doc, body: bytes, key: bytes) -> bytes | None:
@@ -702,6 +728,8 @@ def structured_pages(pdf: bytes) -> list[tuple[bytes, dict[bytes, _Font]]] | Non
             refs = [ref] if ref is not None else []
         datas: list[bytes] = []
         for r in refs:
+            if doc.entries.get(r) == _FREE:
+                continue  # freed by a later update: a null reference
             _, data = doc.object(r)
             if data is None:
                 return None  # undecodable page content: whole path falls back
@@ -712,22 +740,13 @@ def structured_pages(pdf: bytes) -> list[tuple[bytes, dict[bytes, _Font]]] | Non
     return out or None
 
 
-def structured_page_streams(pdf: bytes) -> list[bytes] | None:
-    """Decoded page content in page-tree order (one entry per page); see
-    ``structured_pages``."""
-    pages = structured_pages(pdf)
-    if pages is None:
-        return None
-    return [content for content, _ in pages]
-
-
 def _decode_codes(bs: bytes, font: _Font) -> str:
-    """Character-code bytes → text through a RESOLVED font.  Type0: 2-byte
-    codes through the font's own CMap (unmapped codes and a trailing odd
-    byte drop; no ToUnicode at all degrades to the raw-byte latin-1 read,
-    the pre-resolution behavior; a string NONE of whose codes map reads
-    as latin-1 — on real crawls that is writer junk like an ASCII
-    literal shown under a CID font, and readable text must survive).
+    """Character-code bytes → text.  Type0: 2-byte codes through the
+    font's CMap (unmapped codes and a trailing odd byte drop; no CMap at
+    all degrades to the raw-byte latin-1 read; a string NONE of whose
+    codes map reads as latin-1 — on real crawls that is writer junk like
+    an ASCII literal shown under a CID font, or a simple font's hex
+    string in a mixed-font document, and readable text must survive).
     Simple fonts: 1-byte codes, mapped when a ToUnicode exists, else
     latin-1."""
     if font.two_byte:
@@ -748,82 +767,53 @@ def _decode_codes(bs: bytes, font: _Font) -> str:
     return bs.decode("latin-1")
 
 
-def _hex_text(raw: bytes, font: _Font | None, doc_cmap: dict[int, str] | None) -> str:
-    return _unhex(raw, doc_cmap) if font is None else _decode_codes(_hex_bytes(raw), font)
+_SIMPLE = _Font(False, None)  # literal strings with no resolved font
+_SHOW_STRING = (b"Tj", b"'", b'"')  # the string is the last operand
 
 
-def _lit_text(raw: bytes, font: _Font | None, doc_cmap: dict[int, str] | None) -> str:
-    del doc_cmap  # literal strings never went through the document CMap
-    return _unescape(raw) if font is None else _decode_codes(_unescape_bytes(raw), font)
-
-
-def _tf_events(stream: bytes) -> list[tuple[int, bytes]]:
-    """(absolute position, font name) per ``Tf`` operator, skipping
-    matches inside literal strings (text data quoting ' /F1 12 Tf' must
-    not switch fonts)."""
-    lit_spans = [(m.start(), m.end()) for m in _STR_IN_ARRAY_RE.finditer(stream)]
-    starts = [a for a, _ in lit_spans]
-    events: list[tuple[int, bytes]] = []
-    for m in _TF_RE.finditer(stream):
-        i = bisect.bisect_right(starts, m.start()) - 1
-        if i >= 0 and m.start() < lit_spans[i][1]:
-            continue
-        events.append((m.start(), m.group(1)))
-    return events
-
-
-def _stream_text(
+def _show_text(
     stream: bytes,
-    fonts: dict[bytes, _Font] | None,
-    doc_cmap: dict[int, str] | None,
+    fonts: dict[bytes, _Font],
+    doc_font: Callable[[], _Font],
     lines: list[str],
 ) -> None:
-    """Append one line per show-text operator.  With a non-empty per-page
-    ``fonts`` map, ``Tf`` operators select the decode per font; operators
-    before any Tf (or naming an unresolved font) use the document-CMap
-    fallback."""
-    events = _tf_events(stream) if fonts else []
-    positions = [p for p, _ in events]
-    names = [n for _, n in events]
-
-    def font_at(pos: int) -> _Font | None:
-        i = bisect.bisect_right(positions, pos) - 1
-        return fonts.get(names[i]) if i >= 0 else None
-
-    for block in _TEXT_BLOCK_RE.finditer(stream):
-        body = block.group(1)
-        base = block.start(1)
-        # array TJ first (so its inner strings aren't double-counted),
-        # tracked by span to preserve operator order
-        taken: list[tuple[int, str]] = []
-        consumed: list[tuple[int, int]] = []
-        for m in _TJ_ARRAY_RE.finditer(body):
-            f = font_at(base + m.start())
-            lits = list(_STR_IN_ARRAY_RE.finditer(m.group(1)))
-            lit_spans = [(s.start(), s.end()) for s in lits]
-            parts = [(s.start(), _lit_text(s.group(1), f, doc_cmap)) for s in lits] + [
-                (s.start(), _hex_text(s.group(1), f, doc_cmap))
-                for s in _HEX_IN_ARRAY_RE.finditer(m.group(1))
-                # a literal like (a<b>) must not double-count its
-                # hex-digit-only angle text as a hex string
-                if not any(a <= s.start() < b for a, b in lit_spans)
-            ]
-            taken.append((m.start(), "".join(t for _, t in sorted(parts))))
-            consumed.append((m.start(), m.end()))
-        for m in _TJ_RE.finditer(body):
-            if any(a <= m.start() < b for a, b in consumed):
-                continue
-            taken.append((m.start(), _lit_text(m.group(1), font_at(base + m.start()), doc_cmap)))
-            # record the literal span so hex-lookalike text INSIDE it
-            # (e.g. "(see <41> Tj)") isn't re-emitted by the hex scan
-            consumed.append((m.start(), m.end()))
-        for m in _TJ_HEX_RE.finditer(body):
-            if any(a <= m.start() < b for a, b in consumed):
-                continue
-            taken.append((m.start(), _hex_text(m.group(1), font_at(base + m.start()), doc_cmap)))
-        for _, text in sorted(taken):
-            if text:
-                lines.append(text)
+    """Append one line per show-text operator inside a text block.  ``Tf``
+    selects the decode from ``fonts``; before any Tf, or for a font name
+    ``fonts`` lacks, literal strings read as latin-1 and hex strings go
+    through ``doc_font()`` (the document CMap, built on first use)."""
+    operands: list[tuple[int, object]] = []
+    font: _Font | None = None
+    saved: list[_Font | None] = []
+    in_text = False
+    for kind, val in _objects(stream):
+        if kind != _OP:
+            operands.append((kind, val))
+            continue
+        if val == b"BT":
+            in_text = True
+        elif val == b"ET":
+            in_text = False
+        elif val == b"Tf":
+            if len(operands) > 1 and operands[-2][0] == _NAME:
+                font = fonts.get(operands[-2][1])
+        elif val == b"q":
+            saved.append(font)
+        elif val == b"Q":
+            if saved:
+                font = saved.pop()
+        elif in_text and operands:
+            k, v = operands[-1]
+            if (val == b"TJ" and k == _ARRAY) or (val in _SHOW_STRING and k in (_LIT, _HEX)):
+                text = "".join(
+                    _decode_codes(_unescape_bytes(s), font or _SIMPLE)
+                    if sk == _LIT
+                    else _decode_codes(_hex_bytes(s), font or doc_font())
+                    for sk, s in (v if k == _ARRAY else [(k, v)])
+                    if sk in (_LIT, _HEX)  # TJ arrays also hold kerning numbers
+                )
+                if text:
+                    lines.append(text)
+        operands.clear()
 
 
 def pdf_to_text_lines(pdf: bytes) -> list[str]:
@@ -833,22 +823,28 @@ def pdf_to_text_lines(pdf: bytes) -> list[str]:
     else all top-level streams in physical order.  Returns [] for PDFs
     with no extractable simple text.  Under the structural path, fonts
     resolve per page and ``Tf`` selects each operator's decode (so
-    conflicting per-font ToUnicode CMaps each apply correctly); under the
-    fallback, hex strings decode as 2-byte CIDs through the document's
-    merged ToUnicode CMap when one consistent map exists (Identity-H
-    envelope), else as 1-byte latin-1 codes (simple fonts)."""
-    lines: list[str] = []
-    streams = _content_streams(pdf)
-    doc_cmap = _document_cmap(streams)
+    conflicting per-font ToUnicode CMaps each apply correctly); without a
+    resolved font, hex strings decode as 2-byte CIDs through the
+    document's merged ToUnicode CMap when one consistent map exists
+    (Identity-H envelope), else as 1-byte latin-1 codes (simple fonts).
+    That map flate-decodes every stream, so it is built only when a hex
+    string needs it."""
     try:
         pages = structured_pages(pdf)
     except Exception:
         pages = None
+    streams = None if pages else _content_streams(pdf)
+
+    @functools.cache
+    def doc_font() -> _Font:
+        return _Font(True, _document_cmap(_content_streams(pdf) if streams is None else streams))
+
+    lines: list[str] = []
     if pages:
         for content, fonts in pages:
-            _stream_text(content, fonts, doc_cmap, lines)
+            _show_text(content, fonts, doc_font, lines)
     else:
         for s in streams:
             if not _is_cmap_resource(s):
-                _stream_text(s, None, doc_cmap, lines)
+                _show_text(s, {}, doc_font, lines)
     return lines

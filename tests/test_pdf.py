@@ -271,11 +271,11 @@ def test_literal_string_line_continuation():
     """Backslash-EOL inside a literal string is a line continuation (PDF
     32000 7.3.4.2): BOTH the backslash and the EOL drop; \\r\\n is one
     EOL marker."""
-    from go_readability_spark.codec.pdf import _unescape
+    from go_readability_spark.codec.pdf import _unescape_bytes
 
-    assert _unescape(b"line1\\\nline2") == "line1line2"
-    assert _unescape(b"line1\\\r\nline2") == "line1line2"
-    assert _unescape(b"line1\\\rline2") == "line1line2"
+    assert _unescape_bytes(b"line1\\\nline2") == b"line1line2"
+    assert _unescape_bytes(b"line1\\\r\nline2") == b"line1line2"
+    assert _unescape_bytes(b"line1\\\rline2") == b"line1line2"
 
 
 # -- Object-stream / xref-stream PDFs (PDF 32000 §7.5.7-7.5.8) ----------------
@@ -401,12 +401,12 @@ def test_pdf_classic_xref_table_extracts_in_page_order():
 
 
 def test_pdf_structured_page_streams_shape():
-    from go_readability_spark.codec.pdf import structured_page_streams
+    from go_readability_spark.codec.pdf import structured_pages
 
     pdf = _build_structured_pdf(PAGES3, xref_stream=True, scramble=True)
-    streams = structured_page_streams(pdf)
-    assert streams is not None and len(streams) == 3
-    assert all(b"BT" in s for s in streams)
+    pages = structured_pages(pdf)
+    assert pages is not None and len(pages) == 3
+    assert all(b"BT" in content for content, _ in pages)
 
 
 def test_pdf_broken_xref_falls_back_to_physical_scan():
@@ -566,3 +566,169 @@ def test_pdf_fuzz_burst_never_raises():
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     fuzz = importlib.import_module("fuzz_pdf")
     assert fuzz.main(2.0) == 0
+
+
+# -- Lexer-level behaviour: one left-to-right pass over content streams -------
+
+
+def test_pdf_operator_text_inside_literals_is_data():
+    """'ET'/'BT', parentheses and '%' inside a literal string are string
+    bytes: a 'BT(.*?)ET' scan ends the block at the ET of (MARKET), and a
+    literal whose parentheses nest balanced (§7.3.4.2) is one string.  A
+    '%' outside strings starts a comment."""
+    content = (
+        b"BT (MARKET) Tj (GET it) Tj (next) Tj ET\n"
+        b"BT (a (nested) b) Tj [(x (y) z) ( w)] TJ (BT) Tj ET\n"
+        b"BT (100%) Tj % (commented out) Tj\n(after) Tj ET"
+    )
+    lines = pdf_to_text_lines(_minimal_pdf(content))
+    assert lines == ["MARKET", "GET it", "next", "a (nested) b", "x (y) z w", "BT", "100%", "after"]
+
+
+def test_pdf_double_quote_and_unterminated_text_block():
+    """The '"' operator (word and character spacing, then the string)
+    shows text like Tj; a text block cut off before its ET still shows."""
+    lines = pdf_to_text_lines(_minimal_pdf(b'BT 1 0.5 (spaced out) " 2 1 <4869> " ET'))
+    assert lines == ["spaced out", "Hi"]
+    assert pdf_to_text_lines(_minimal_pdf(b"BT (tail) Tj")) == ["tail"]
+
+
+def test_pdf_font_selected_inside_q_does_not_leak_past_Q():
+    """Q restores the graphics state saved by q, the font included
+    (§8.4.2): text after Q decodes through the font selected before q."""
+    content = b"BT /FA 12 Tf ET\nq BT /FB 12 Tf <0003> Tj ET Q\nBT <0003> Tj ET"
+    assert pdf_to_text_lines(_two_font_pdf(content)) == ["B", "A"]
+
+
+def test_pdf_hex_string_closing_a_dict():
+    """A hex string right before '>>' is not half of a '>>' token: the
+    content stream whose dictionary ends in one is found, so the page
+    tree (not the physical order) still sets the order, and keys after a
+    nested '<</K <ABCD>>>' still resolve."""
+    second = b"BT (second) Tj ET"
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [3 0 R 4 0 R] /Count 2 >>",
+        3: b"<< /Type /Page /Parent 2 0 R /ID [<ABCD> <EF01>] /Contents 6 0 R >>",
+        4: b"<< /Type /Page /Extra <</K <ABCD>>> /Parent 2 0 R /Contents 5 0 R >>",
+        5: b"<< /Length %d /Check <ABCD>>>\nstream\n%s\nendstream" % (len(second), second),
+        6: ("stream", b"", b"BT (first) Tj ET"),
+    }
+    assert pdf_to_text_lines(_build_pdf_with_fonts(objs)) == ["first", "second"]
+
+
+def test_pdf_resolved_fonts_never_build_the_document_cmap(monkeypatch):
+    """When every show-text operator has a resolved font, the document
+    CMap (which flate-decodes every stream) is never built."""
+    from go_readability_spark.codec import pdf as codec
+
+    def boom(pdf):
+        raise AssertionError("document CMap built")
+
+    monkeypatch.setattr(codec, "_content_streams", boom)
+    content = b"BT (plain) Tj /FA 12 Tf <00030004> Tj ET\nBT /FB 12 Tf <0003> Tj ET"
+    assert codec.pdf_to_text_lines(_two_font_pdf(content)) == ["plain", "Apple", "B"]
+
+
+def test_pdf_show_text_scan_is_linear():
+    """16k show-text operators in one stream: one left-to-right pass takes
+    well under a second; an overlap check per operator took ~16 s."""
+    import time
+
+    ops = b"".join(b"(line %d of the stream) Tj T*\n" % i for i in range(16_000))
+    pdf = _minimal_pdf(b"BT /F1 11 Tf\n" + ops + b"ET", flate=True)
+    t0 = time.perf_counter()
+    lines = pdf_to_text_lines(pdf)
+    assert time.perf_counter() - t0 < 3.0
+    assert len(lines) == 16_000 and lines[-1] == "line 15999 of the stream"
+
+
+# -- Incremental updates: free cross-reference entries ------------------------
+
+
+def _startxref(pdf: bytes) -> int:
+    return int(pdf.rsplit(b"startxref", 1)[1].split()[0])
+
+
+def _pdf_update_freeing_obj4(xref_stream: bool) -> bytes:
+    """A page whose /Contents lists objects 4 and 5, then an incremental
+    update that frees object 4 — a classic table section with an 'f' row,
+    or an xref stream with a type-0 row — chained through /Prev."""
+    base = _build_pdf_with_fonts({
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        3: b"<< /Type /Page /Parent 2 0 R /Contents [4 0 R 5 0 R] >>",
+        4: ("stream", b"", b"BT (deleted draft) Tj ET"),
+        5: ("stream", b"", b"BT (kept text) Tj ET"),
+    })
+    buf, prev = bytearray(base), _startxref(base)
+    xref = len(buf)
+    if xref_stream:
+        row = bytes([0, 0, 0, 0, 0, 0, 1])  # W [1 4 2]: type 0, next free 0, gen 1
+        buf += (
+            b"6 0 obj\n<< /Type /XRef /Size 7 /W [1 4 2] /Index [4 1] /Root 1 0 R"
+            b" /Prev %d /Length %d >>\nstream\n%s\nendstream\nendobj\n" % (prev, len(row), row)
+        )
+    else:
+        buf += (
+            b"xref\n0 1\n0000000000 65535 f \n4 1\n0000000000 00001 f \n"
+            b"trailer\n<< /Size 6 /Root 1 0 R /Prev %d >>\n" % prev
+        )
+    buf += b"startxref\n%d\n%%%%EOF\n" % xref
+    return bytes(buf)
+
+
+def test_pdf_freed_content_object_is_not_extracted():
+    """A newer free entry hides the older in-use offset of the same object
+    along the /Prev chain; a page reference to it reads as null."""
+    for xref_stream in (False, True):
+        lines = pdf_to_text_lines(_pdf_update_freeing_obj4(xref_stream))
+        assert lines == ["kept text"], (xref_stream, lines)
+
+
+def test_pdf_hybrid_table_free_rows_yield_to_its_xref_stream():
+    """A hybrid-reference file (§7.5.8.4): the classic table lists the
+    ObjStm-packed catalog and page dicts as free, and the stream named by
+    its /XRefStm locates them.  Those free rows must not hide them."""
+    pdf = _build_structured_pdf(PAGES3, xref_stream=True, scramble=True)
+    size = 3 + 2 * len(PAGES3) + 2
+    rows = []
+    for num in range(size):
+        at = pdf.find(b"\n%d 0 obj\n" % num)  # top-level objects only
+        rows.append(b"%010d 00000 n \n" % (at + 1) if at >= 0 else b"0000000000 65535 f \n")
+    table = len(pdf)
+    pdf += (
+        b"xref\n0 %d\n" % size + b"".join(rows)
+        + b"trailer\n<< /Size %d /Root 1 0 R /XRefStm %d >>\n" % (size, _startxref(pdf))
+        + b"startxref\n%d\n%%%%EOF\n" % table
+    )
+    assert pdf_to_text_lines(pdf) == PAGES3
+
+
+def _unclosed_page_dicts_pdf(n: int) -> bytes:
+    """A classic-xref PDF whose ``n`` page dictionaries each open one
+    ``<<`` too many."""
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: b"<< /Type /Pages /Kids [%s] /Count %d >>"
+        % (b" ".join(b"%d 0 R" % (3 + i) for i in range(n)), n),
+    }
+    for i in range(n):
+        objs[3 + i] = b"<< /Type /Page /Parent 2 0 R << /Contents 9 0 R >>"
+    return _build_pdf_with_fonts(objs)
+
+
+def test_pdf_adversarial_structure_is_linear():
+    """Each byte is scanned a bounded number of times.  Thousands of
+    stream-less dictionaries: a regex retrying every '<<' to the end of
+    the file took ~80 s.  Thousands of unclosed page dictionaries: a
+    delimiter match running past its own object took ~70 s."""
+    import time
+
+    streamless = b"%PDF-1.4\n" + b"".join(
+        b"%d 0 obj << /A %d >> endobj\n" % (i, i) for i in range(16_000)
+    )
+    for pdf in (streamless, _unclosed_page_dicts_pdf(2_000)):
+        t0 = time.perf_counter()
+        assert pdf_to_text_lines(pdf) == []
+        assert time.perf_counter() - t0 < 3.0

@@ -4,9 +4,11 @@ Property: ``pdf_to_text_lines`` NEVER raises and returns a list of str,
 whatever bytes arrive — crawl PDFs are adversarial by construction
 (truncated files, flipped bytes, garbage xref offsets, hostile object
 graphs).  Structure-aware mutations start from valid fixtures (classic
-xref, xref-stream/ObjStm, per-font CID) so the fuzz reaches the deep
+xref, xref-stream/ObjStm, per-font CID, q/Q and array content, an
+incremental update freeing an object) so the fuzz reaches the deep
 paths (object loader, ObjStm unpack, page-tree walk, font resolution,
-CMap parse) instead of dying at the header check.
+CMap parse, the lexer's strings, comments and arrays) instead of dying
+at the header check.
 
 Usage: python tools/fuzz_pdf.py [seconds]   (default 60)
 """
@@ -33,6 +35,7 @@ _TOKENS = [
     b"/Filter", b"/FlateDecode", b"/First", b"/N", b"/W", b"/Index",
     b"beginbfchar", b"endbfchar", b"beginbfrange", b"BT", b"ET", b"Tj",
     b"TJ", b"Tf", b"<<", b">>", b"[", b"]", b"(", b")", b"R", b"0", b"\xef\xbf\xbd",
+    b"q", b"Q", b'"', b"'", b"%", b"(a(b)c)", b"((", b"))", b"\\",
 ]
 
 
@@ -46,6 +49,10 @@ def _seeds() -> list[bytes]:
         ),
         fixtures._minimal_pdf(fixtures.CONTENT, flate=True),
         fixtures._pdf_with_streams([fixtures.CID_CMAP, b"BT <0003> Tj ET"]),
+        fixtures._two_font_pdf(
+            b"q BT /FA 12 Tf 1 2 <0003> \" ET Q\nBT [(a (b) c) <0004>] TJ (x) ' ET"
+        ),
+        fixtures._pdf_update_freeing_obj4(xref_stream=True),
     ]
 
 
