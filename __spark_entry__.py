@@ -209,8 +209,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_length_quantiles": lambda spark, sf: TS.length_quantiles(_docs(spark, sf)),
         "text_pii_scrub": lambda spark, sf: P.pii_findings(_docs(spark, sf)),
         "corpus_mixture": lambda spark, sf: TS.corpus_mixture(_docs(spark, sf)),
-        "events_segment_rollup": _events_segment_rollup_query,
-        "view_click_attribution": _view_click_attribution_query,
+        "events_segment_rollup": R.events_segment_rollup,
+        "view_click_attribution": R.view_click_attribution_rollup,
         "training_corpus_funnel": lambda spark, sf: TS.training_corpus_funnel(_docs(spark, sf)),
     }
     assert len(q) == 50, f"driver records at most 50 correctness rows, got {len(q)}"
@@ -411,38 +411,6 @@ def _extract_articles_oracle_sql() -> str:
         return f.read()
 
 
-def _events_segment_rollup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming stream-static enrichment rollup
-    (streaming/enrich.py) — the registry face of that operator."""
-    from go_readability_spark.streaming.enrich import events_segment_rollup
-
-    return events_segment_rollup(spark, sf_dir)
-
-
-def _enrich_oracle_sql() -> str:
-    from go_readability_spark.streaming.enrich import (
-        events_segment_rollup_oracle_sql,
-    )
-
-    return events_segment_rollup_oracle_sql()
-
-
-def _view_click_attribution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming stream-stream interval join
-    (streaming/joins.py) — the registry face of that operator."""
-    from go_readability_spark.streaming.joins import view_click_attribution_rollup
-
-    return view_click_attribution_rollup(spark, sf_dir)
-
-
-def _attribution_oracle_sql() -> str:
-    from go_readability_spark.streaming.joins import (
-        view_click_attribution_oracle_sql,
-    )
-
-    return view_click_attribution_oracle_sql()
-
-
 def _extract_funnel_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hygiene funnel over EXTRACTED article text (grouped by page
     language) — extraction feeding corpus hygiene, end-to-end."""
@@ -503,8 +471,8 @@ def oracle_sql() -> dict[str, str]:
         "text_length_quantiles": TS.length_quantiles_oracle_sql(),
         "text_pii_scrub": P.pii_findings_oracle_sql(),
         "corpus_mixture": TS.corpus_mixture_oracle_sql(),
-        "events_segment_rollup": _enrich_oracle_sql(),
-        "view_click_attribution": _attribution_oracle_sql(),
+        "events_segment_rollup": R.events_segment_rollup_oracle_sql(),
+        "view_click_attribution": R.view_click_attribution_oracle_sql(),
         "training_corpus_funnel": TS.training_corpus_funnel_oracle_sql(),
         # The kernel is not SQL-expressible, so the extraction-chained
         # queries get PINNED-CONSTANT oracles: expected values computed once

@@ -19,10 +19,8 @@ the same CID space with different ToUnicode maps each decode through
 their own CMap (§9.10.3; destinations are UTF-16BE).  Without usable
 structure, the fallback is the single-consistent-CMap envelope: the
 document's CMap streams merge, and documents whose CMaps conflict fall
-back to the 1-byte latin-1 interpretation.  Encrypted files stay out of
-scope — pass a production extractor (pypdf/pdfminer) through the
-``real_extract`` hook of ``spark.corpus.ingest_pdf_documents`` and the
-Spark-side plumbing is unchanged.
+back to the 1-byte latin-1 interpretation.  Encrypted files, and
+conflicting CMaps in a file without usable structure, stay out of scope.
 
 Object-stream PDFs (the common PDF 1.5+ real-crawl class) are parsed
 structurally: cross-reference tables AND cross-reference streams
@@ -68,6 +66,8 @@ _TOKEN_RE = re.compile(
 _NAME, _HEX, _DELIM, _LIT, _NUM, _OP = 1, 2, 3, 4, 5, 6
 _ARRAY = 7  # grouped by _objects, never produced by _lex
 _LIT_STOP_RE = re.compile(rb"[()\\]")
+# ``obj`` / ``endobj`` as keywords: not part of a longer token or a name
+_OBJ_KEYWORD_RE = re.compile(rb"(?<!/)(?<!" + _REGULAR + rb")(?:end)?obj(?!" + _REGULAR + rb")")
 
 
 def _lex(buf: bytes, pos: int = 0) -> Iterator[tuple[int, bytes, int]]:
@@ -231,7 +231,7 @@ def _document_cmap(streams: list[bytes]) -> dict[int, str] | None:
     """The document's merged ToUnicode map, or None when out of envelope:
     no CMap streams at all, or several CMaps that disagree on a code
     (distinct fonts reusing the same CID space — needs per-font resource
-    resolution, i.e. the ``real_extract`` hook)."""
+    resolution, which a file without usable structure cannot give)."""
     merged: dict[int, str] | None = None
     for s in streams:
         if not _is_cmap_resource(s):
@@ -261,8 +261,10 @@ def page_pieces_from_lines(lines: list[str]) -> list[str]:
 
 def _content_streams(pdf: bytes) -> list[bytes]:
     """Every stream in physical order, flate-decoded when its head says
-    so; the head runs from the first ``<<`` after the previous stream to
-    the ``>> stream`` keyword.  Each byte is scanned once: a regex asking
+    so; the head is the stream's own dictionary, from the last ``obj`` or
+    ``endobj`` keyword before it (or the first ``<<`` after the previous
+    stream) to the ``>> stream`` keyword, so a filter named by an earlier
+    object does not apply.  Each byte is scanned once: a regex asking
     for the same shape retries every ``<<`` up to the end of the file."""
     streams: list[bytes] = []
     pos = 0
@@ -271,7 +273,10 @@ def _content_streams(pdf: bytes) -> list[bytes]:
         end = pdf.find(b"endstream", m.end()) if m else -1
         if end < 0:
             break
-        head, pos = pdf[start + 2 : m.start()], end + 9
+        head_at = start + 2
+        for kw in _OBJ_KEYWORD_RE.finditer(pdf, head_at, m.start()):
+            head_at = kw.end()
+        head, pos = pdf[head_at : m.start()], end + 9
         # stream data runs to the last newline before endstream
         data = pdf[m.end() : end].rstrip(b"\r\n")
         if b"/FlateDecode" in head:

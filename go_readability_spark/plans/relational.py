@@ -374,19 +374,23 @@ FROM per_session GROUP BY user_id ORDER BY user_id
 
 
 # ----------------------------------------------------------- windowed events
-def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (batch form of the streaming windowed
-    agg): hourly counts + exact decimal sums per event type."""
-    ev = _t(spark, sf_dir, "events")
+def _hourly_rollup(rows: DataFrame, key: str) -> DataFrame:
+    """Tumbling hourly rollup of (ts, <key>, value) rows: (hour, <key>,
+    n_events, sum_value), the sum taken in decimal(18,4) so it is exact."""
     return (
-        ev.withColumn("hour", F.date_trunc("hour", F.col("ts")))
-        .groupBy("hour", "event_type")
+        rows.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"), key)
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
         )
-        .orderBy("hour", "event_type")
+        .orderBy("hour", key)
     )
+
+
+def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling-window aggregation: hourly counts + exact decimal sums per
+    event type."""
+    return _hourly_rollup(_t(spark, sf_dir, "events"), "event_type")
 
 
 def hourly_event_rollup_oracle_sql() -> str:
@@ -396,6 +400,91 @@ SELECT date_trunc('hour', ts) AS hour, event_type,
        CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
 FROM events
 GROUP BY 1, 2 ORDER BY hour, event_type
+"""
+
+
+def segment_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, segment) dimension from the customer table."""
+    return _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"),
+        F.col("c_mktsegment").alias("segment"),
+    )
+
+
+def events_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events enriched with the customer's market segment, rolled up per
+    (hour, segment).  The inner join drops events of unknown users.  No
+    broadcast hint: Catalyst broadcasts a sub-threshold dimension on its
+    own, and an oversized one degrades to a shuffled join instead of an
+    over-memory broadcast."""
+    ev = _t(spark, sf_dir, "events").join(segment_dim(spark, sf_dir), "user_id")
+    return _hourly_rollup(ev, "segment")
+
+
+def events_segment_rollup_oracle_sql() -> str:
+    return """
+SELECT date_trunc('hour', e.ts) AS hour, c.c_mktsegment AS segment,
+       count(*) AS n_events,
+       CAST(sum(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+GROUP BY 1, 2 ORDER BY hour, segment
+"""
+
+
+# ------------------------------------------------------- interval attribution
+def view_click_pairs(views: DataFrame, clicks: DataFrame) -> DataFrame:
+    """(view, click) pairs of one user with the click at most 30 minutes
+    after the view: (user_id, view_id, view_ts, click_id, click_ts)."""
+    v = views.select(
+        "user_id",
+        F.col("event_id").alias("view_id"),
+        F.col("ts").cast("timestamp").alias("view_ts"),
+    )
+    c = clicks.select(
+        F.col("user_id").alias("click_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").cast("timestamp").alias("click_ts"),
+    )
+    cond = (
+        (v.user_id == c.click_user)
+        & (c.click_ts >= v.view_ts)
+        & (c.click_ts <= F.expr("view_ts + INTERVAL 30 minutes"))
+    )
+    return v.join(c, cond, "inner").select(
+        "user_id", "view_id", "view_ts", "click_id", "click_ts"
+    )
+
+
+def view_click_attribution_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Click attribution as an interval join over the events table, per
+    view-hour: (hour, n_pairs, n_attributed_views)."""
+    ev = _t(spark, sf_dir, "events")
+    pairs = view_click_pairs(
+        ev.filter(F.col("event_type") == "view"),
+        ev.filter(F.col("event_type") == "click"),
+    )
+    return (
+        pairs.groupBy(F.date_trunc("hour", F.col("view_ts")).alias("hour"))
+        .agg(
+            F.count("*").alias("n_pairs"),
+            F.countDistinct("view_id").alias("n_attributed_views"),
+        )
+        .orderBy("hour")
+    )
+
+
+def view_click_attribution_oracle_sql() -> str:
+    return """
+SELECT date_trunc('hour', v.ts) AS hour,
+       count(*) AS n_pairs,
+       count(DISTINCT v.event_id) AS n_attributed_views
+FROM events v
+JOIN events c
+  ON v.user_id = c.user_id
+ AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 30 MINUTE
+WHERE v.event_type = 'view' AND c.event_type = 'click'
+GROUP BY 1
+ORDER BY hour
 """
 
 

@@ -233,10 +233,8 @@ def ingest_html_documents(df: DataFrame) -> DataFrame:
     return df.select(*cols).mapInPandas(_ingest_batches, schema=DOCUMENTS_SCHEMA)
 
 
-def _pdf_batches(real_extract):
+def _pdf_batches():
     from ..codec.pdf import page_pieces_from_lines, pdf_to_text_lines
-
-    extract = real_extract or (lambda payload: pdf_to_text_lines(payload))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -244,7 +242,7 @@ def _pdf_batches(real_extract):
             has_uri = "uri" in pdf.columns
             for row in pdf.itertuples(index=False):
                 payload = bytes(row.payload) if row.payload is not None else b""
-                lines = extract(payload)
+                lines = pdf_to_text_lines(payload)
                 # page scaffolding: the kernel extracts from doc.body, so a
                 # text layer must arrive as a well-formed page, one span per
                 # source line (the layout unit PDF gives us); the piece
@@ -270,21 +268,20 @@ def _pdf_batches(real_extract):
     return run
 
 
-def ingest_pdf_documents(df: DataFrame, real_extract=None) -> DataFrame:
+def ingest_pdf_documents(df: DataFrame) -> DataFrame:
     """PDF ingest source: (doc_id, payload: binary[, uri]) → the
     interleaved-span documents table, one ``<p>`` span per text-layer line.
 
-    The stdlib extractor (``codec.pdf``) covers uncompressed + FlateDecode
-    simple PDFs; pass ``real_extract`` (payload → list[str], e.g. pypdf)
-    for full-fidelity production parsing — the distributed plumbing
-    (mapInPandas, binary column, span encoding) is identical either way.
-    The emitted documents run through the same extraction kernel as HTML
-    (paragraphs of a PDF text layer are exactly the <p>-corpus shape the
-    Arc90 scorer consumes).
+    The stdlib extractor (``codec.pdf``) reads uncompressed and
+    FlateDecode text layers; encrypted files, and conflicting CMaps in a
+    file without usable structure, are out of its scope.  The emitted
+    documents run through the same extraction kernel as HTML (paragraphs
+    of a PDF text layer are exactly the <p>-corpus shape the Arc90 scorer
+    consumes).
     """
     cols = ["doc_id", "payload"] + (["uri"] if "uri" in df.columns else [])
     return df.select(*cols).mapInPandas(
-        _pdf_batches(real_extract), schema=DOCUMENTS_SCHEMA
+        _pdf_batches(), schema=DOCUMENTS_SCHEMA
     )
 
 
@@ -336,8 +333,8 @@ def ingest_warc_documents(df: DataFrame) -> DataFrame:
     are ~1 GB and self-contained), and the record scan + HTML decode +
     span encode all run inside ``mapInPandas`` (``codec/warc.py``), so
     ingest scales with the archive count and nothing touches the driver.
-    In-batch fan-out (one archive row → many document rows) is the same
-    pattern as ``textops/multimodal.py:sample_frames``.
+    The fan-out (one archive row → many document rows) happens inside the
+    Python batch, flushed every ``WARC_CHUNK_RECORDS`` records.
     """
     cols = ["content"] + (["path"] if "path" in df.columns else [])
     return df.select(*cols).mapInPandas(_warc_batches, schema=DOCUMENTS_SCHEMA)

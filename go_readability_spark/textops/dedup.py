@@ -37,7 +37,7 @@ JACCARD_THRESHOLD = 0.8
 # canonicalizes vertical-tab-bearing crawl text differently in Spark vs
 # the DuckDB oracle.  The explicit class equals Java \s exactly (Spark
 # behavior unchanged) and compiles to the same set in RE2.  Used by
-# exact dedup, metrics, the funnel, and the streaming fingerprint.
+# exact dedup, metrics and the funnel.
 WS_RX = r"[ \t\n\x0b\f\r]+"
 
 

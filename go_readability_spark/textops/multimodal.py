@@ -1,115 +1,8 @@
-"""Multimodal column plumbing: media payloads as opaque ``binary`` columns
-with typed metadata, processed in Arrow-batched ``mapInPandas``.
-
-The image/audio decode libraries are not available in this container, so
-the decode step is a deterministic fake (documented below) behind the same
-schema/partitioning/batching contract a real decoder would use — swap
-``_fake_decode`` for PIL/ffmpeg in production and nothing else changes.
-
-Scale notes: media rows are wide (payloads) — the operator keeps Arrow
-batches small via the session's ``arrow.maxRecordsPerBatch`` and yields
-feature rows (narrow) immediately, so payload bytes never accumulate.
-"""
+"""Media audit over extracted article spans, in Catalyst only."""
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),       # img | video | audio
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),     # opaque bytes
-        T.StructField("content_type", T.StringType(), True),
-    ]
-)
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("payload_sha1", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def media_from_articles(articles: DataFrame) -> DataFrame:
-    """Project surviving media spans out of the articles table — pure
-    Catalyst (posexplode + filter on kind), no Python."""
-    exploded = articles.select(
-        "doc_id", F.posexplode_outer("spans").alias("pos", "span")
-    )
-    media = exploded.filter(
-        F.col("span.kind").isin("img", "video", "audio", "source", "embed", "iframe")
-    )
-    return media.select(
-        F.concat_ws("#", "doc_id", F.col("pos").cast("string")).alias("media_id"),
-        "doc_id",
-        F.col("span.kind").alias("kind"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.lit(None).cast("binary").alias("payload"),
-        F.lit(None).cast("string").alias("content_type"),
-    )
-
-
-def _fake_decode(payload: bytes, kind: str) -> dict:
-    """Deterministic stand-in for image/audio decode (no media libs in the
-    sandbox).  Derives pseudo-dimensions and an 8-dim feature vector from
-    the payload's sha1 — stable across runs, exercises the full schema.
-    Production: replace with PIL.Image.open / soundfile / pyav."""
-    digest = hashlib.sha1(payload).digest()
-    width = 64 + digest[0] % 192 if kind == "img" else None
-    height = 64 + digest[1] % 192 if kind == "img" else None
-    n_frames = 1 + digest[2] % 32 if kind in ("video", "audio") else None
-    feature = [round(b / 255.0, 6) for b in digest[:8]]
-    return {
-        "payload_sha1": hashlib.sha1(payload).hexdigest(),
-        "width": width,
-        "height": height,
-        "n_frames": n_frames,
-        "feature": feature,
-    }
-
-
-def decode_media_features(media: DataFrame, real_decode=None) -> DataFrame:
-    """media(payload: binary, …) → per-media features via mapInPandas."""
-    decode = real_decode
-    if decode is None:
-        decode = _fake_decode
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                feats = decode(payload, row.kind)
-                out.append(
-                    {
-                        "media_id": row.media_id,
-                        "kind": row.kind,
-                        "n_bytes": len(payload),
-                        **feats,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[f.name for f in FEATURES_SCHEMA.fields],
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        featurize, schema=FEATURES_SCHEMA
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def media_ref_stats(articles: DataFrame) -> DataFrame:
@@ -127,104 +20,4 @@ def media_ref_stats(articles: DataFrame) -> DataFrame:
             ).alias("n_absolute_refs"),
         )
         .orderBy("kind")
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_payload", T.BinaryType(), True),
-    ]
-)
-
-
-def _fake_resize(payload: bytes, kind: str, max_dim: int) -> dict:
-    """Deterministic resize stand-in: clamps the fake dimensions to
-    ``max_dim`` preserving aspect, re-derives the payload as a stable
-    digest chain (production: PIL thumbnail → re-encode)."""
-    feats = _fake_decode(payload, kind)
-    w, h = feats["width"] or max_dim, feats["height"] or max_dim
-    scale = min(1.0, max_dim / max(w, h))
-    out_w, out_h = max(1, int(w * scale)), max(1, int(h * scale))
-    fake_bytes = hashlib.sha1(payload + b"|resize|%d" % max_dim).digest()
-    return {"payload": fake_bytes, "width": out_w, "height": out_h}
-
-
-def resize_media(media: DataFrame, max_dim: int = 256, real_resize=None) -> DataFrame:
-    """media(payload: binary) → resized payloads, bounded to ``max_dim``.
-
-    Binary-in/binary-out ``mapInPandas``: each Arrow batch stays small
-    (session ``arrow.maxRecordsPerBatch``) and rows are emitted per batch,
-    so peak worker memory is one batch of payloads — the contract a real
-    image pipeline needs at 100 TB.  Swap ``real_resize`` in production.
-    """
-    resize = real_resize or _fake_resize
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                r = resize(payload, row.kind, max_dim)
-                out.append({"media_id": row.media_id, "kind": row.kind, **r})
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZED_SCHEMA.fields])
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        run, schema=RESIZED_SCHEMA
-    )
-
-
-def _fake_frames(payload: bytes, kind: str) -> list[bytes]:
-    """Deterministic frame extraction stand-in: ``n_frames`` digests chained
-    from the payload (production: pyav keyframe iterator)."""
-    n = _fake_decode(payload, kind)["n_frames"] or 1
-    frames, cur = [], payload
-    for i in range(n):
-        cur = hashlib.sha1(cur + b"|frame|%d" % i).digest()
-        frames.append(cur)
-    return frames
-
-
-def sample_frames(
-    media: DataFrame, every_n: int = 4, real_frames=None
-) -> DataFrame:
-    """video/audio media → one row per sampled frame (every ``every_n``-th).
-
-    The fan-out happens INSIDE the Python batch (one wide row in, a few
-    narrow rows out) and yields per input batch, so a long video never
-    materializes all frames at once alongside its siblings.
-    """
-    frames_of = real_frames or _fake_frames
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                for idx, frame in enumerate(frames_of(payload, row.kind)):
-                    if idx % every_n == 0:
-                        out.append(
-                            {
-                                "media_id": row.media_id,
-                                "frame_idx": idx,
-                                "frame_payload": frame,
-                            }
-                        )
-            yield pd.DataFrame(out, columns=[f.name for f in FRAMES_SCHEMA.fields])
-
-    return (
-        media.filter(F.col("kind").isin("video", "audio"))
-        .select("media_id", "kind", "payload")
-        .mapInPandas(run, schema=FRAMES_SCHEMA)
     )

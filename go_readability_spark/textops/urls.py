@@ -99,11 +99,6 @@ def canonical_url_sql(url_expr: str, engine: str) -> str:
     return f"CASE WHEN {host} <> '' THEN {canon} ELSE {url_expr} END"
 
 
-def canonical_url_col(url_col: str = "url") -> F.Column:
-    """Spark Column computing the canonical form of a URL column."""
-    return F.expr(canonical_url_sql(url_col, "spark"))
-
-
 def _synth_url_sql(engine: str, category: bool = False) -> str:
     """Deterministic fetch-URL for each (doc_id, source) row — the
     testdata tables carry no URL column, so the query derives one with

@@ -160,9 +160,9 @@ def test_pdf_simple_font_hex_in_cid_document_falls_back():
 
 def test_pdf_conflicting_cmaps_fall_back_to_single_byte():
     """Two fonts reusing the same CID space with different mappings need
-    per-font resource resolution (the real_extract hook) — the stdlib
-    codec must detect the conflict and keep the 1-byte interpretation
-    instead of guessing."""
+    per-font resource resolution, which this file has no structure for —
+    the stdlib codec must detect the conflict and keep the 1-byte
+    interpretation instead of guessing."""
     other = b"1 beginbfchar\n<0003> <0058>\nendbfchar\n"  # CID 3 -> 'X'
     content = b"BT <4869> Tj ET"  # 1-byte decode: 'Hi'
     lines = pdf_to_text_lines(_pdf_with_streams([CID_CMAP, other, content]))
@@ -174,29 +174,16 @@ def test_pdf_conflicting_cmaps_fall_back_to_single_byte():
     assert lines == ["H"]
 
 
-def test_pdf_cid_font_goes_through_real_extract_hook(spark):
+def test_pdf_cid_font_without_cmap_decodes_byte_wise():
     """CID-keyed (Type0) fonts WITHOUT an embedded consistent ToUnicode
     CMap are outside the stdlib codec's envelope: their hex strings are
-    2-byte CIDs the codec can't name, so the built-in decode produces
-    control-char garbage.  Production parsing arrives through the
-    ``real_extract`` hook; the Spark plumbing (mapInPandas, span
-    encoding, kernel) is identical."""
-    from go_readability_spark.spark.corpus import ingest_pdf_documents
-
+    2-byte CIDs the codec can't name, so the built-in decode reads them
+    one byte at a time and produces control-char garbage."""
     # <00480069> = CIDs 0x0048,0x0069 ("Hi" under an identity CMap) — the
     # 1-byte decode yields '\x00H\x00i', demonstrating the envelope edge
     cid_content = b"BT /F0 12 Tf <00480069> Tj ET"
     pdf = _minimal_pdf(cid_content, flate=True)
     assert pdf_to_text_lines(pdf) == ["\x00H\x00i"]  # in-envelope byte decode
-
-    df = spark.createDataFrame(
-        [("cid-1", bytearray(pdf))], "doc_id string, payload binary"
-    )
-    docs = ingest_pdf_documents(
-        df, real_extract=lambda payload: ["Hi from the CMap-aware extractor"]
-    )
-    texts = [s.text for s in docs.collect()[0].spans]
-    assert "<p>Hi from the CMap-aware extractor</p>" in texts
 
 
 def test_pdf_markup_chars_in_lines_are_data_not_tags(spark):
@@ -418,9 +405,22 @@ def test_pdf_broken_xref_falls_back_to_physical_scan():
     assert lines == list(reversed(PAGES3))  # physical order, all pages
 
 
+def test_pdf_physical_scan_reads_each_stream_head_from_its_own_dict():
+    """Without usable structure, a stream is inflated only when its own
+    dictionary names /FlateDecode: a filter in an earlier non-stream
+    object does not apply to the next plain stream."""
+    plain = b"2 0 obj << /Length 12 >> stream\nBT (x) Tj ET\nendstream endobj\n"
+    for first in (b"<< /Type /XObject >>", b"<< /Type /XObject /Filter /FlateDecode >>"):
+        assert pdf_to_text_lines(b"1 0 obj " + first + b" endobj\n" + plain) == ["x"]
+    # a name merely containing 'obj' does not cut a stream's own head short
+    packed = zlib.compress(b"BT (y) Tj ET")
+    flate = b"3 0 obj << /Filter /FlateDecode /Subobj 1 >> stream\n" + packed + b"\nendstream endobj\n"
+    assert pdf_to_text_lines(plain + flate) == ["x", "y"]
+
+
 def test_pdf_objstm_through_spark_ingest(spark):
     """The ObjStm envelope end-to-end: binary payload → ingest → kernel
-    paragraphs, without the real_extract hook."""
+    paragraphs."""
     from go_readability_spark.spark.corpus import ingest_pdf_documents
     from go_readability_spark.spark.extract import extract_articles
 

@@ -288,46 +288,6 @@ def test_every_query_has_oracle_unless_allowlisted():
     assert not missing, f"queries without oracle twins: {sorted(missing)}"
 
 
-def test_multimodal_plumbing(spark):
-    """decode path: media table with binary payloads → feature rows."""
-    from go_readability_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media_features,
-        media_from_articles,
-    )
-    from go_readability_spark.spark.corpus import fixture_documents
-    from go_readability_spark.spark.extract import extract_articles
-
-    arts = extract_articles(
-        fixture_documents(spark).filter("doc_id = 'keep-images'")
-    )
-    media = media_from_articles(arts)
-    mrows = media.collect()
-    assert mrows and all(r.kind in ("img", "video", "audio", "source", "embed", "iframe") for r in mrows)
-
-    payloads = spark.createDataFrame(
-        [
-            {
-                "media_id": r.media_id,
-                "doc_id": r.doc_id,
-                "kind": r.kind,
-                "media_ref": r.media_ref,
-                "payload": (r.media_ref or "x").encode(),
-                "content_type": "image/jpeg",
-            }
-            for r in mrows
-        ],
-        schema=MEDIA_SCHEMA,
-    )
-    feats = decode_media_features(payloads).collect()
-    assert len(feats) == len(mrows)
-    for f in feats:
-        assert f.n_bytes > 0 and len(f.payload_sha1) == 40
-        assert f.feature is not None and len(f.feature) == 8
-        if f.kind == "img":
-            assert f.width and f.height
-
-
 def test_jaccard_pairs_across_length_bucket_boundary(spark):
     """Near-identical docs whose lengths straddle a 64-char bucket boundary
     must still pair: adjacent-bucket blocking, not exact equality (which
@@ -529,45 +489,6 @@ def test_ivf_topk_recall_and_index_coverage(spark):
     assert recall > S.IVF_NPROBE / S.IVF_CLUSTERS + 0.04, recall
 
 
-def test_multimodal_resize_and_frame_sample(spark):
-    """resize: binary-in/binary-out with clamped dims; frame-sample:
-    deterministic in-batch fan-out of every-Nth frame for video/audio."""
-    from go_readability_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        _fake_decode,
-        resize_media,
-        sample_frames,
-    )
-
-    rows = [
-        {"media_id": f"m{i}", "doc_id": "d", "kind": kind,
-         "media_ref": None, "payload": f"payload-{i}".encode(),
-         "content_type": None}
-        for i, kind in enumerate(["img", "img", "video", "audio"])
-    ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-    resized = {r.media_id: r for r in resize_media(media, max_dim=100).collect()}
-    assert len(resized) == 4
-    for i, r in enumerate(rows):
-        out = resized[r["media_id"]]
-        assert bytes(out.payload) and bytes(out.payload) != r["payload"]
-        if r["kind"] == "img":
-            assert 1 <= out.width <= 100 and 1 <= out.height <= 100
-
-    frames = sample_frames(media, every_n=2).collect()
-    assert {f.media_id for f in frames} == {"m2", "m3"}  # video/audio only
-    for mid in ("m2", "m3"):
-        n_total = _fake_decode(dict((r["media_id"], r["payload"]) for r in rows)[mid],
-                               "video")["n_frames"]
-        got = sorted(f.frame_idx for f in frames if f.media_id == mid)
-        assert got == list(range(0, n_total, 2))
-    # determinism: same input → same frame bytes
-    again = sample_frames(media, every_n=2).collect()
-    assert sorted((f.media_id, f.frame_idx, bytes(f.frame_payload)) for f in frames) == \
-           sorted((f.media_id, f.frame_idx, bytes(f.frame_payload)) for f in again)
-
-
 def test_quantized_topk_fidelity(spark):
     """int8 quantization must preserve the exact top-k almost perfectly
     (measured 0.975 @ sf0.001, 1.0 @ sf0.1) and quantized values must stay
@@ -741,6 +662,73 @@ def test_range_join_band_edges(spark):
     assert ("e", "a") not in got
     # every event also pairs with nearby others; spot-check total sanity
     assert got[("c", "d")] == (1, 1_000_000)
+
+
+def test_segment_rollup_enriches_and_rolls_up_hourly(spark):
+    """Events joined to the customer segment dimension, rolled up per
+    (hour, segment) with exact decimal sums; a user with no dimension row
+    is dropped by the inner join."""
+    import datetime as dt
+
+    from unittest import mock
+
+    from go_readability_spark.plans import relational as R
+
+    def ev(event_id, hh, mm, user, value):
+        return (event_id, dt.datetime(2024, 1, 1, hh, mm), user, "click", value)
+
+    events = spark.createDataFrame(
+        [
+            ev(0, 0, 10, 1, 1.5),
+            ev(1, 0, 20, 1, 2.25),
+            ev(2, 0, 30, 2, 4.0),
+            ev(3, 0, 40, 9, 64.0),  # user 9 has no dim row -> dropped
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string, value double",
+    )
+    customer = spark.createDataFrame(
+        [(1, "BUILDING"), (2, "MACHINERY")], "c_custkey long, c_mktsegment string"
+    )
+    frames = {"events": events, "customer": customer}
+    with mock.patch.object(R, "_t", lambda spark, sf_dir, name: frames[name]):
+        got = {
+            (r.hour.hour, r.segment): (r.n_events, r.sum_value)
+            for r in R.events_segment_rollup(spark, "unused").collect()
+        }
+    assert got == {(0, "BUILDING"): (2, 3.75), (0, "MACHINERY"): (1, 4.0)}
+
+
+def test_view_click_interval_join_pairs(spark):
+    """Every (view, click) pair of one user with the click at most 30
+    minutes after the view: out-of-horizon clicks and other users' clicks
+    never pair, and the per-view-hour rollup counts the same pairs."""
+    import datetime as dt
+
+    from unittest import mock
+
+    from go_readability_spark.plans import relational as R
+
+    def ev(event_id, hh, mm, user, etype):
+        return (event_id, dt.datetime(2024, 1, 1, hh, mm), user, etype)
+
+    events = spark.createDataFrame(
+        [
+            ev(0, 0, 10, 1, "view"),
+            ev(1, 0, 20, 1, "click"),   # +10m -> pairs with view 0
+            ev(2, 0, 35, 1, "click"),   # +25m -> pairs with view 0
+            ev(3, 0, 50, 1, "click"),   # +40m -> OUT of 30m horizon
+            ev(4, 0, 15, 2, "click"),   # other user -> never pairs
+            ev(5, 1, 0, 2, "view"),     # no click in horizon
+        ],
+        "event_id long, ts timestamp, user_id long, event_type string",
+    )
+    pairs = R.view_click_pairs(
+        events.filter("event_type = 'view'"), events.filter("event_type = 'click'")
+    )
+    assert {(r.view_id, r.click_id) for r in pairs.collect()} == {(0, 1), (0, 2)}
+    with mock.patch.object(R, "_t", lambda spark, sf_dir, name: events):
+        rows = R.view_click_attribution_rollup(spark, "unused").collect()
+    assert [(r.hour.hour, r.n_pairs, r.n_attributed_views) for r in rows] == [(0, 2, 1)]
 
 
 def test_decontaminate_accepts_string_doc_ids(spark):

@@ -5,7 +5,8 @@ whatever bytes arrive — crawl PDFs are adversarial by construction
 (truncated files, flipped bytes, garbage xref offsets, hostile object
 graphs).  Structure-aware mutations start from valid fixtures (classic
 xref, xref-stream/ObjStm, per-font CID, q/Q and array content, an
-incremental update freeing an object) so the fuzz reaches the deep
+incremental update freeing an object, a structure-less file whose
+filter key sits in an earlier object) so the fuzz reaches the deep
 paths (object loader, ObjStm unpack, page-tree walk, font resolution,
 CMap parse, the lexer's strings, comments and arrays) instead of dying
 at the header check.
@@ -53,6 +54,9 @@ def _seeds() -> list[bytes]:
             b"q BT /FA 12 Tf 1 2 <0003> \" ET Q\nBT [(a (b) c) <0004>] TJ (x) ' ET"
         ),
         fixtures._pdf_update_freeing_obj4(xref_stream=True),
+        # no xref: an earlier object's /Filter must not reach a plain stream
+        b"1 0 obj << /Type /XObject /Filter /FlateDecode >> endobj\n"
+        b"2 0 obj << /Length 12 >> stream\nBT (x) Tj ET\nendstream endobj\n",
     ]
 
 
