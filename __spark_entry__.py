@@ -77,11 +77,10 @@ def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_readability_spark.spark.extract import route_and_extract
 
     # num_partitions: the input here is a COMPUTED frame (mapInPandas page
-    # synthesis), not a bucketed parquet scan — the no-shuffle two-branch
-    # union would re-run the whole synthesis once per branch.  The salted
-    # exchange routes megas and smalls in ONE scan of the synth output
-    # (extract.py route_and_extract docstring), and the shuffle it pays
-    # moves freshly-built spans that were never laid out on disk anyway.
+    # synthesis), not a bucketed parquet scan, so there is no write-time
+    # layout to keep; the salted exchange spreads the pages over
+    # defaultParallelism tasks, and the shuffle it pays moves freshly-built
+    # spans that were never laid out on disk anyway.
     return _session_cached(
         spark,
         sf_dir,

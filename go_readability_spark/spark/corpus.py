@@ -16,7 +16,8 @@ Synthetic pages deliberately include the boilerplate families the kernel
 must strip (nav/sidebar/comments/footer/share/script — regexps.go:8,17)
 and interleaved media anchors (img/figure/video-iframe) whose spans must
 survive exactly when their DOM position survives cleanup.  Every ~500th
-document is a mega-doc (content ×64) to exercise skew routing.
+document is a mega-doc (content ×64): the size outlier Arrow batch
+bounding and straggler metrics must cope with.
 """
 
 from __future__ import annotations
@@ -28,11 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..codec.spans import html_to_spans
+from ..kernel.golden import FIXTURES_DIR
+from .extract import DEFAULT_URI
 from .schema import DOCUMENTS_SCHEMA
 from . import worker  # noqa: F401  (sets up a Python worker on import)
-
-FIXTURES_DIR = "/root/reference/testdata/test-pages"
-FIXTURE_URI = "http://fakehost/test/page.html"
 
 _STOP_EVERY_WORDS = 13  # sentence length in words
 _SENTS_PER_PARA = 4
@@ -58,7 +58,7 @@ def fixture_documents(
         rows.append(
             {
                 "doc_id": name,
-                "uri": FIXTURE_URI,
+                "uri": DEFAULT_URI,
                 "spans": [s.as_row() for s in html_to_spans(html)],
             }
         )
@@ -84,7 +84,7 @@ def synth_html(doc_id: int, text: str, lang: str, source: str) -> str:
     title_words = " ".join(words[:5])
     rep = 2 + (doc_id % 3)
     if doc_id % 500 == 499:
-        rep = 64  # mega-doc: skew probe
+        rep = 64  # mega-doc: a size outlier (oracle-pinned data)
     body_words = (words * rep)[: len(words) * rep]
 
     sentences = []
@@ -188,9 +188,7 @@ def synthesize_documents(
     # A small single-file text table arrives as ONE input split, which
     # would run page synthesis AND the downstream in-place extraction on
     # one task (extract_articles at sf0.1/local[32]: 13.3s -> 6.4s from
-    # this spread alone — the two-branch union still re-ran synthesis
-    # per branch — and -> 3.5s combined with the salted single-scan
-    # exchange in __spark_entry__._extracted).  Repartition HERE, before any spans
+    # this spread alone).  Repartition HERE, before any spans
     # exist — the shuffle moves raw text rows, the cheapest point in the
     # pipeline — and only when the scan is actually under-split, so a
     # well-bucketed many-file corpus keeps its layout (CLAUDE.md: never
@@ -209,7 +207,7 @@ def _ingest_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             out.append(
                 {
                     "doc_id": row.doc_id,
-                    "uri": row.uri if has_uri else FIXTURE_URI,
+                    "uri": row.uri if has_uri else DEFAULT_URI,
                     "spans": [s.as_row() for s in html_to_spans(row.html or "")],
                 }
             )
@@ -259,7 +257,7 @@ def _pdf_batches():
                 out.append(
                     {
                         "doc_id": row.doc_id,
-                        "uri": row.uri if has_uri else FIXTURE_URI,
+                        "uri": row.uri if has_uri else DEFAULT_URI,
                         "spans": spans,
                     }
                 )
@@ -311,7 +309,7 @@ def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 out.append(
                     {
                         "doc_id": rec_id,
-                        "uri": uri or FIXTURE_URI,
+                        "uri": uri or DEFAULT_URI,
                         "spans": [s.as_row() for s in html_to_spans(html)],
                     }
                 )

@@ -8,10 +8,12 @@ surrounding plan (scan, repartition, filters, aggregations, writes) stays
 entirely JVM-side for Catalyst/Tungsten to optimize.
 
 Scale notes (10^12-doc design point, SURVEY.md §4.2):
-- Memory is bounded per-worker by ``emit_every`` (output rows are yielded in
-  small chunks, independent of Arrow input batch size) plus the single
-  largest document — cap ``spark.sql.execution.arrow.maxRecordsPerBatch``
-  so one mega-doc can't co-batch with hundreds of peers.
+- Memory is bounded per worker by the Arrow input batch plus the one
+  document the kernel holds: ``session.ensure_arrow_limits`` caps a batch
+  at ``ARROW_MAX_RECORDS`` rows and closes it at the row that reaches
+  ``ARROW_MAX_BYTES``, so a mega-document ends the batch it joins; output
+  rows are yielded in chunks of at most ``_EMIT_ROWS`` rows or
+  ``_EMIT_BYTES`` input bytes.
 - Skew: ``salted_repartition`` spreads documents uniformly regardless of
   upstream partitioning (mega-docs cluster by crawl host in real corpora).
 - Oversized docs degrade to ``status='too_large'`` rows via
@@ -31,9 +33,18 @@ from ..codec.spans import html_fragment_to_normalized_spans
 from ..kernel.options import Options
 from ..kernel.readability import parse_document
 from .schema import ARTICLES_SCHEMA
+from .session import ensure_arrow_limits
 from . import worker  # noqa: F401  (sets up a Python worker on import)
 
 DEFAULT_URI = "http://fakehost/test/page.html"
+
+# Output chunking: a chunk is yielded after this many rows, or earlier once
+# its documents' input HTML reaches _EMIT_BYTES (input length is a safe
+# upper proxy for output size), so the output buffer never holds a
+# mega-document plus dozens of peers.
+_EMIT_ROWS = 64
+_EMIT_BYTES = 8_000_000
+_SALT_SEED = 64
 
 _EMPTY = {
     "spans": None,
@@ -107,12 +118,7 @@ def extract_one(
     }
 
 
-def _batch_extractor(
-    options: Options,
-    emit_every: int,
-    emit_bytes: int = 8_000_000,
-    prescreen: bool = False,
-):
+def _batch_extractor(options: Options, prescreen: bool = False):
     cols = [f.name for f in ARTICLES_SCHEMA.fields]
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -125,11 +131,8 @@ def _batch_extractor(
                 out.append(
                     extract_one(row.doc_id, row.html, uri, options, prescreen)
                 )
-                # byte bound flushes early when a mega article lands in a
-                # mixed batch — the buffer never holds a mega plus dozens
-                # of peers (input length is a safe upper proxy for output)
                 out_sz += len(row.html or "")
-                if len(out) >= emit_every or out_sz >= emit_bytes:
+                if len(out) >= _EMIT_ROWS or out_sz >= _EMIT_BYTES:
                     yield pd.DataFrame(out, columns=cols)
                     out, out_sz = [], 0
         if out:
@@ -151,7 +154,6 @@ _HTML_EXPR = (
 def extract_articles(
     df: DataFrame,
     options: Options | None = None,
-    emit_every: int = 64,
     prescreen: bool = False,
 ) -> DataFrame:
     """documents(doc_id, spans[, uri]) → articles (ARTICLES_SCHEMA).
@@ -160,57 +162,21 @@ def extract_articles(
     else the input table carries; spans are reassembled to HTML JVM-side so
     only flat strings cross the Arrow boundary.  ``prescreen`` gates each
     document through IsProbablyReaderable first (see ``extract_one``).
+    The Arrow batch limits are enforced here, at the point of use, so a
+    session built without them (spark-submit) still batches boundedly.
     """
+    ensure_arrow_limits(df.sparkSession)
     opts = options or Options(classes_to_preserve=["page", "caption"])
     cols = [F.col("doc_id"), F.expr(_HTML_EXPR).alias("html")]
     if "uri" in df.columns:
         cols.append(F.col("uri"))
     return df.select(*cols).mapInPandas(
-        _batch_extractor(opts, emit_every, prescreen=prescreen),
+        _batch_extractor(opts, prescreen=prescreen),
         schema=ARTICLES_SCHEMA,
     )
 
 
-def with_doc_stats(df: DataFrame) -> DataFrame:
-    """JVM-side document size AND markup density in ONE pass over the span
-    texts — no Python.  ``doc_tags`` counts ``<`` occurrences, a cheap
-    upper proxy for DOM node count: kernel worker MEMORY scales with node
-    count, not bytes (an element-dense 3.2 MB page measured 1.4 GB RSS),
-    so density must route one-per-task exactly like byte-size does.  The
-    struct accumulator is referenced twice downstream, which blocks
-    CollapseProject from inlining the aggregate per consumer (CLAUDE.md
-    trap note)."""
-    stats = df.withColumn(
-        "_doc_stats",
-        F.expr(
-            "aggregate(spans, named_struct('b', 0L, 't', 0L), (acc, s) ->"
-            " named_struct("
-            "'b', acc.b + coalesce(length(s.text), 0L),"
-            "'t', acc.t + coalesce("
-            "length(s.text) - length(replace(s.text, '<', '')), 0L)))"
-        ),
-    )
-    return (
-        stats.withColumn("doc_bytes", F.col("_doc_stats.b"))
-        .withColumn("doc_tags", F.col("_doc_stats.t"))
-        .drop("_doc_stats")
-    )
-
-
-def _doc_bytes_expr():
-    return F.expr("aggregate(spans, 0L, (acc, s) -> acc + coalesce(length(s.text), 0L))")
-
-
-def _doc_tags_expr():
-    return F.expr(
-        "aggregate(spans, 0L, (acc, s) -> acc +"
-        " coalesce(length(s.text) - length(replace(s.text, '<', '')), 0L))"
-    )
-
-
-def salted_repartition(
-    df: DataFrame, num_partitions: int, salt_buckets: int = 64
-) -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     """Uniform spread of documents across tasks regardless of key skew.
 
     ``xxhash64(doc_id, salt)`` decorrelates from any upstream partitioning
@@ -225,94 +191,32 @@ def salted_repartition(
     straggler shape salting exists to prevent.  A high-cardinality key
     spreads by law of large numbers instead.
     """
-    salted = df.withColumn(
-        "_salt", F.xxhash64(F.col("doc_id"), F.lit(salt_buckets))
-    )
+    salted = df.withColumn("_salt", F.xxhash64(F.col("doc_id"), F.lit(_SALT_SEED)))
     return salted.repartition(num_partitions, F.col("_salt")).drop("_salt")
 
 
 def route_and_extract(
     df: DataFrame,
     options: Options | None = None,
-    mega_doc_bytes: int = 4_000_000,
     num_partitions: int | None = None,
-    mega_partitions: int = 256,
     prescreen: bool = False,
-    mega_doc_tags: int = 100_000,
 ) -> DataFrame:
-    """Size-routed extraction: mega-docs take a dedicated fine-grained pass.
-
-    Documents larger than ``mega_doc_bytes`` OR denser than
-    ``mega_doc_tags`` markup openers are repartitioned one-per-task so a
-    single 100 MB page can neither co-batch with peers (Arrow memory) nor
-    straggle a fat partition (SURVEY.md §7 hard parts).  The density arm
-    exists because kernel memory scales with NODE COUNT, not bytes: an
-    element-dense 3.2 MB page (400k inline elements) measured 1.4 GB of
-    worker RSS — co-batching a few of those OOMs an executor that the
-    byte threshold alone would happily co-batch.  Both branches are the
-    same operator — ``unionByName`` recombines.
+    """Extraction with an optional salted exchange in front.
 
     ``num_partitions``: pass it ONLY when the input layout is skewed or
     under-split — it inserts a salted full-corpus shuffle, which measured
     ~40% of job wall on a well-bucketed corpus (local[16]: 3890 vs 2637
     docs/s without/with).  The production corpus is bucketed at write time
     (Iceberg ``bucket(B, doc_id)``), so the normal path reads in place and
-    shuffles nothing.
+    shuffles nothing: one scan, one ``mapInPandas``.
 
-    Scan count: a two-branch filter split naively re-scans the corpus
-    (2× read amplification for a ~1/500 mega fraction).  Avoided two ways:
-    - With ``num_partitions`` the job already pays one full-corpus
-      exchange, so routing happens INSIDE it: the salt expression gives
-      megas doc_id-resolution salts (each mega lands in an independently
-      random partition, never clustered) and one extraction pass covers
-      everything — one scan, one shuffle, no union.  (Exchange reuse
-      across a two-branch union does not work here: Python map nodes
-      don't canonicalize equal, verified on the executed plan.)
-    - Without it, the dedicated mega pass remains, but pass an input that
-      already carries ``doc_bytes`` AND ``doc_tags`` (materialize both at
-      ingest and cluster/sort files by them — each branch's filter then
-      prunes at the parquet row-group level and each byte is read once).
-      If both are absent they are computed here in one fused pass
-      (``with_doc_stats``); if exactly one is present (the pre-density
-      contract materialized only ``doc_bytes``) it is REUSED — keeping
-      its row-group pruning — and only the missing stat is computed.
-      Either way only the numeric columns are evaluated per branch,
-      never the reassembled HTML.
+    A mega-document needs no route of its own: the Arrow byte cap
+    (``session.ARROW_MAX_BYTES``) closes its batch at it, the kernel
+    holds one document at a time in a worker Spark reuses across tasks (a
+    task boundary frees a DOM no sooner than the next row does), and
+    ``max_elems_to_parse`` turns a pathological page into a ``too_large``
+    row.
     """
-    have_bytes = "doc_bytes" in df.columns
-    have_tags = "doc_tags" in df.columns
-    if have_bytes and have_tags:
-        sized = df
-    elif have_bytes:
-        # caller pre-materialized doc_bytes under the pre-density contract:
-        # keep its row-group-pruning value, compute only the missing stat
-        sized = df.withColumn("doc_tags", _doc_tags_expr())
-    elif have_tags:
-        sized = df.withColumn("doc_bytes", _doc_bytes_expr())
-    else:
-        sized = with_doc_stats(df)
-    is_mega = (F.col("doc_bytes") > mega_doc_bytes) | (
-        F.col("doc_tags") > mega_doc_tags
-    )
     if num_partitions:
-        # raw high-cardinality salt, not pmod(hash, N): see
-        # salted_repartition's balls-in-bins note
-        salt = F.when(
-            is_mega, F.concat(F.lit("m"), F.col("doc_id").cast("string"))
-        ).otherwise(F.xxhash64(F.col("doc_id"), F.lit(64)).cast("string"))
-        routed = (
-            sized.withColumn("_salt", salt)
-            .repartition(num_partitions, F.col("_salt"))
-            .drop("_salt", "doc_bytes", "doc_tags")
-        )
-        return extract_articles(routed, options, prescreen=prescreen)
-    small = sized.filter(~is_mega).drop("doc_bytes", "doc_tags")
-    mega = sized.filter(is_mega).drop("doc_bytes", "doc_tags")
-    # Arrow input batches are cut per partition, so worker memory for the
-    # mega branch = (megas co-resident in one partition) × doc size.  Hash
-    # megas across many partitions (empty tasks cost ~ms) so a batch almost
-    # always holds ONE mega-doc — emit_every bounds only the output side.
-    mega = mega.repartition(mega_partitions, F.col("doc_id"))
-    return extract_articles(small, options, prescreen=prescreen).unionByName(
-        extract_articles(mega, options, emit_every=1, prescreen=prescreen)
-    )
+        df = salted_repartition(df, num_partitions)
+    return extract_articles(df, options, prescreen=prescreen)

@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kernel.options import Options
-from .extract import route_and_extract, salted_repartition
+from .extract import route_and_extract
 from .schema import LINEAGE_SCHEMA, METRICS_SCHEMA
 
 
@@ -116,7 +116,8 @@ def run_extraction(
     lineage_path = os.path.join(out_root, "lineage")
 
     pending = pending_buckets(spark, lineage_path, run_id, n_buckets)
-    skipped = [b for b in range(n_buckets) if b not in pending]
+    pending_set = set(pending)
+    skipped = [b for b in range(n_buckets) if b not in pending_set]
     res = RunResult(run_id=run_id, buckets_skipped=skipped)
 
     bucketed = with_bucket(documents, n_buckets)
@@ -128,12 +129,10 @@ def run_extraction(
         started_at = F.lit(datetime.datetime.now(datetime.timezone.utc)).cast(
             "timestamp"
         )
-        subset = bucketed.filter(F.col("bucket_id").isin(wave))
-        if num_partitions:
-            subset = salted_repartition(subset, num_partitions)
+        subset = bucketed.filter(F.col("bucket_id").isin(wave)).drop("bucket_id")
         t_wave = time.time()
         extracted = with_bucket(
-            route_and_extract(subset.drop("bucket_id"), options, prescreen=prescreen),
+            route_and_extract(subset, options, num_partitions, prescreen),
             n_buckets,
         )
         # Dynamic partition overwrite: re-running a failed wave replaces

@@ -1,9 +1,9 @@
 """Session builder with the engine's standard configs.
 
 Tuned for the extraction workload (SURVEY.md §4.2): AQE on (runtime
-coalescing + skew splitting), Arrow on with a small max batch so one
-mega-document cannot co-batch with hundreds of peers, and dynamic
-partition overwrite so per-bucket re-runs are idempotent.
+coalescing + skew splitting), Arrow on with batches capped by rows and by
+bytes (``ensure_arrow_limits``) so a mega-document ends its batch, and
+dynamic partition overwrite so per-bucket re-runs are idempotent.
 """
 
 from __future__ import annotations
@@ -12,7 +12,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Arrow batch limits for the extraction hop: a batch holds at most
+# ARROW_MAX_RECORDS rows and closes at the row that brings it to
+# ARROW_MAX_BYTES, so it never exceeds the byte cap by more than its last
+# document.  16 MiB is above 64 × the ~205 KB average real page, so
+# ordinary batches keep their 64 rows.
 ARROW_MAX_RECORDS = 64
+ARROW_MAX_BYTES = 16 * 1024 * 1024
+
+
+def ensure_arrow_limits(spark: SparkSession) -> None:
+    """Set both Arrow batch limits on ``spark``.  Called where the session
+    is built and again where extraction uses it, so a spark-submit session
+    built without the ``--conf`` (Spark's default is 10,000 records and no
+    byte cap) still batches boundedly."""
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
+    spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
 
 
 def default_cpus() -> int:
@@ -31,7 +46,7 @@ def build_session(
         cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    return (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -40,7 +55,6 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # articles/documents tables are scan-bound at corpus scale; zstd
         # cuts bytes-on-disk ~1.5-2x vs snappy at comparable decode cost
@@ -53,3 +67,5 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    ensure_arrow_limits(spark)
+    return spark

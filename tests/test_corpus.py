@@ -44,13 +44,9 @@ def test_ingest_html_documents_matches_driver_side_codec(spark):
     corpus extracts identically to the fixture_documents path."""
     import os
 
-    from go_readability_spark.spark.corpus import (
-        FIXTURES_DIR,
-        FIXTURE_URI,
-        fixture_documents,
-        ingest_html_documents,
-    )
-    from go_readability_spark.spark.extract import extract_articles
+    from go_readability_spark.kernel.golden import FIXTURES_DIR
+    from go_readability_spark.spark.corpus import fixture_documents, ingest_html_documents
+    from go_readability_spark.spark.extract import DEFAULT_URI, extract_articles
 
     names = sorted(
         n for n in os.listdir(FIXTURES_DIR)
@@ -58,7 +54,7 @@ def test_ingest_html_documents_matches_driver_side_codec(spark):
     )[:5]
     raw = spark.createDataFrame(
         [
-            (n, open(os.path.join(FIXTURES_DIR, n, "source.html"), encoding="utf-8").read(), FIXTURE_URI)
+            (n, open(os.path.join(FIXTURES_DIR, n, "source.html"), encoding="utf-8").read(), DEFAULT_URI)
             for n in names
         ],
         "doc_id string, html string, uri string",

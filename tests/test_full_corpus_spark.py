@@ -6,7 +6,8 @@ import json
 import os
 
 from go_readability_spark.codec.spans import html_fragment_to_normalized_spans
-from go_readability_spark.spark.corpus import FIXTURES_DIR, fixture_documents
+from go_readability_spark.kernel.golden import FIXTURES_DIR
+from go_readability_spark.spark.corpus import fixture_documents
 from go_readability_spark.spark.extract import extract_articles
 
 

@@ -53,8 +53,8 @@ def test_extract_job_end_to_end(spark):
 
 
 def test_mega_doc_routes_and_extracts(spark):
-    """A ~12 MB document flows through the mega branch without blowing
-    batch memory and still extracts (or degrades to a status row)."""
+    """A ~12 MB document extracts next to a small peer through the one
+    extraction route (or degrades to a status row)."""
     from go_readability_spark.codec.spans import html_to_spans
     from go_readability_spark.spark.extract import route_and_extract
     from go_readability_spark.spark.schema import DOCUMENTS_SCHEMA
@@ -70,7 +70,7 @@ def test_mega_doc_routes_and_extracts(spark):
                     "media_ref": "", "offset": 0}]},
     ]
     docs = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
-    out = {r.doc_id: r for r in route_and_extract(docs, mega_doc_bytes=4_000_000).collect()}
+    out = {r.doc_id: r for r in route_and_extract(docs).collect()}
     assert set(out) == {"mega-1", "small-1"}
     assert out["small-1"].status == "ok"
     assert out["mega-1"].status == "ok" and out["mega-1"].length > 1_000_000

@@ -6,18 +6,20 @@ import os
 
 import pytest
 
-from go_readability_spark.codec.spans import html_fragment_to_normalized_spans, html_to_spans
+from go_readability_spark.codec.spans import html_fragment_to_normalized_spans
+from go_readability_spark.kernel.golden import FIXTURES_DIR
 from go_readability_spark.kernel.options import Options
-from go_readability_spark.spark.corpus import FIXTURES_DIR, fixture_documents, synth_html
+from go_readability_spark.spark.corpus import fixture_documents
 from go_readability_spark.spark.extract import (
+    _EMIT_BYTES,
+    _EMIT_ROWS,
     _batch_extractor,
-    _doc_bytes_expr,
     extract_articles,
     extract_one,
     route_and_extract,
-    with_doc_stats,
 )
-from go_readability_spark.spark.schema import ARTICLES_SCHEMA, DOCUMENTS_SCHEMA
+from go_readability_spark.spark.schema import ARTICLES_SCHEMA
+from go_readability_spark.spark.session import ARROW_MAX_BYTES, ARROW_MAX_RECORDS
 
 # A diverse probe subset (full 119-fixture parity is covered Spark-free by
 # test_golden.py; here we verify the Spark boundary preserves it).
@@ -70,63 +72,112 @@ def test_media_refs_absolutized(fixture_articles):
     assert imgs and all(s.media_ref.startswith("http") for s in imgs)
 
 
-def test_emit_chunking_preserves_rows(spark):
-    docs = fixture_documents(spark).limit(10)
-    small = extract_articles(docs, emit_every=1).count()
-    big = extract_articles(docs, emit_every=1000).count()
-    assert small == big == 10
+def test_emit_chunking_preserves_rows():
+    """Output chunks are cut after _EMIT_ROWS rows, or earlier once their
+    input HTML reaches _EMIT_BYTES; every input row comes out exactly once."""
+    import pandas as pd
+
+    tiny = "<html><body><p>hi</p></body></html>"
+    n = _EMIT_ROWS + 6
+    crosses_rows = pd.DataFrame({"doc_id": [f"r{i}" for i in range(n)], "html": [tiny] * n})
+    big = "<html><body><div>" + "x" * _EMIT_BYTES + "</div></body></html>"
+    crosses_bytes = pd.DataFrame({"doc_id": ["b0", "big", "b1"], "html": [tiny, big, tiny]})
+    chunks = list(_batch_extractor(Options())(iter([crosses_rows, crosses_bytes])))
+    # 64 by rows; the 6 left over + b0 + big flush by bytes; b1 at the end
+    assert [len(c) for c in chunks] == [_EMIT_ROWS, 8, 1]
+    ids = [d for c in chunks for d in c.doc_id]
+    assert sorted(ids) == sorted([*crosses_rows.doc_id, *crosses_bytes.doc_id])
 
 
-def test_doc_bytes_expr_matches_python(spark):
-    docs = fixture_documents(spark).limit(5)
-    rows = docs.withColumn("doc_bytes", _doc_bytes_expr()).collect()
-    for r in rows:
-        assert r.doc_bytes == sum(len(s.text or "") for s in r.spans)
+def _dense_page():
+    """A small page of thousands of inline elements: element-dense, not big."""
+    body = "".join(f"<b>w{i}</b> " for i in range(3000))
+    return ("dense-1", f"<html><body><article><p>{body}</p></article></body></html>")
 
 
-def test_route_and_extract_covers_both_branches(spark):
-    docs = fixture_documents(spark).limit(20)
-    # threshold small enough that some fixtures route through the mega branch
-    out = route_and_extract(docs, mega_doc_bytes=50_000, num_partitions=4)
-    rows = out.collect()
-    assert len(rows) == 20
-    assert {r.doc_id for r in rows} == {r.doc_id for r in docs.select("doc_id").collect()}
+def test_route_and_extract_covers_both_branches(spark, synth_pages, pages_to_documents):
+    """The salted route and the in-place route return the same rows, over
+    ordinary pages, a ×64 mega page above 50 KB and an element-dense page."""
+    pages = synth_pages([0, 1, 2, 3, 499]) + [_dense_page()]
+    assert max(len(h) for _, h in pages) > 50_000
+    docs = pages_to_documents(pages)
+
+    def rows(df):
+        return sorted(
+            (r.doc_id, r.status, r.title, [tuple(s) for s in r.spans or []])
+            for r in df.collect()
+        )
+
+    in_place = rows(route_and_extract(docs))
+    assert in_place == rows(route_and_extract(docs, num_partitions=4))
+    assert {r[0] for r in in_place} == {d for d, _ in pages}
+    assert all(r[1] == "ok" for r in in_place)
 
 
-def test_with_doc_stats_matches_python(spark):
-    docs = fixture_documents(spark).limit(5)
-    for r in with_doc_stats(docs).collect():
-        assert r.doc_bytes == sum(len(s.text or "") for s in r.spans)
-        assert r.doc_tags == sum((s.text or "").count("<") for s in r.spans)
+def _plan_counts(df):
+    """Operator counts in the executed physical plan, after it has run."""
+    import re
 
-
-def test_partial_doc_stats_are_reused_not_recomputed(spark):
-    """A caller that pre-materialized only doc_bytes (the pre-density
-    contract) must keep that column — route_and_extract computes only the
-    missing doc_tags, so the fused two-stat aggregate (named_struct) never
-    appears in the plan and results are unchanged."""
-    docs = fixture_documents(spark).limit(6)
-    base = {r.doc_id: (r.status, r.length) for r in route_and_extract(docs).collect()}
-    pre = docs.withColumn("doc_bytes", _doc_bytes_expr())
-    routed_df = route_and_extract(pre, mega_doc_bytes=50_000)
-    plan = routed_df._jdf.queryExecution().executedPlan().toString()
-    assert "named_struct" not in plan  # fused recompute path not taken
-    routed = {r.doc_id: (r.status, r.length) for r in routed_df.collect()}
-    assert routed == base
-
-
-def test_dense_doc_routes_through_density_arm(spark):
-    """A small-bytes, element-dense doc must take the mega route (kernel
-    memory scales with node count, not bytes) and still extract exactly:
-    with mega_doc_tags low enough, the dense doc is the ONLY row in the
-    mega branch and the result set is unchanged."""
-    docs = fixture_documents(spark).limit(6)
-    base = {r.doc_id: (r.status, r.length) for r in route_and_extract(docs).collect()}
-    routed = {
-        r.doc_id: (r.status, r.length)
-        for r in route_and_extract(docs, mega_doc_tags=500).collect()
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {
+        op: len(re.findall(rf"\b{op}\b", plan))
+        for op in ("FileScan", "Union", "Exchange", "MapInPandas")
     }
-    assert routed == base  # density routing changes placement, never results
+
+
+def test_route_and_extract_plan_is_one_route(spark, synth_pages, pages_to_documents, tmp_path):
+    """One scan and one kernel pass: no union of size-routed branches, and
+    an exchange only when a salted repartition is asked for."""
+    table = str(tmp_path / "docs")
+    pages_to_documents(synth_pages(range(8))).write.parquet(table)
+    in_place = _plan_counts(route_and_extract(spark.read.parquet(table)))
+    assert in_place == {"FileScan": 1, "Union": 0, "Exchange": 0, "MapInPandas": 1}
+    salted = _plan_counts(route_and_extract(spark.read.parquet(table), num_partitions=4))
+    assert salted == {"FileScan": 1, "Union": 0, "Exchange": 1, "MapInPandas": 1}
+
+
+def test_extract_articles_enforces_arrow_limits(spark, synth_pages, pages_to_documents):
+    """A session left on Spark's Arrow defaults (10,000 records, no byte
+    cap) must still batch boundedly once extraction has run on it:
+    extract_articles applies both limits itself (a spark-submit session is
+    built without them).  A probe on the same session then sees no batch
+    over the row cap, a document larger than the byte cap ending the batch
+    it joins, and the next such document alone in its batch."""
+    from pyspark.sql import functions as F
+
+    keys = (
+        "spark.sql.execution.arrow.maxRecordsPerBatch",
+        "spark.sql.execution.arrow.maxBytesPerBatch",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "10000")
+    spark.conf.unset(keys[1])
+    try:
+        assert extract_articles(pages_to_documents(synth_pages([0]))).count() == 1
+
+        n, big = 3 * ARROW_MAX_RECORDS, ARROW_MAX_RECORDS + 5
+        docs = spark.range(0, n, 1, numPartitions=1).select(
+            F.col("id"),
+            F.when(F.col("id").isin(big, big + 1), F.repeat(F.lit("x"), ARROW_MAX_BYTES + 1))
+            .otherwise(F.lit("<p>small</p>"))
+            .alias("html"),
+        )
+
+        def probe(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                yield pd.DataFrame({"first": [pdf.id.min()], "last": [pdf.id.max()]})
+
+        spans = sorted((b.first, b.last) for b in docs.mapInPandas(probe, "first long, last long").collect())
+        assert sum(last - first + 1 for first, last in spans) == n
+        assert max(last - first + 1 for first, last in spans) <= ARROW_MAX_RECORDS
+        assert (ARROW_MAX_RECORDS, big) in spans
+        assert (big + 1, big + 1) in spans
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_malformed_spans_become_error_rows(spark):
@@ -230,27 +281,13 @@ def test_prescreen_gates_through_readerable(spark):
     assert n_skipped > 0
 
 
-def _synth_pages(n):
-    words = " ".join(f"word{i}" for i in range(120))
-    return [(f"synth-{i}", synth_html(i, words, "en", "src")) for i in range(n)]
-
-
-def _synth_documents(spark, n):
-    """n article-shaped pages as a DOCUMENTS_SCHEMA frame, encoded on the driver."""
-    rows = [
-        {"doc_id": d, "uri": None, "spans": [s.as_row() for s in html_to_spans(html)]}
-        for d, html in _synth_pages(n)
-    ]
-    return spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
-
-
 def _poison_options():
     # a serializer that returns no string: the output-span codec raises
     return Options(serializer=lambda node: None)
 
 
-def test_output_codec_failure_is_one_error_row():
-    (doc_id, html), = _synth_pages(1)
+def test_output_codec_failure_is_one_error_row(synth_pages):
+    (doc_id, html), = synth_pages([0])
     assert extract_one(doc_id, html, None, Options())["status"] == "ok"
     row = extract_one(doc_id, html, None, _poison_options())
     assert row["status"] == "parse_error"
@@ -258,14 +295,15 @@ def test_output_codec_failure_is_one_error_row():
     assert row["spans"] is None and row["title"] is None
 
 
-def test_output_codec_failure_through_spark(spark):
-    rows = extract_articles(_synth_documents(spark, 1), _poison_options()).collect()
+def test_output_codec_failure_through_spark(spark, synth_pages, pages_to_documents):
+    docs = pages_to_documents(synth_pages([0]))
+    rows = extract_articles(docs, _poison_options()).collect()
     assert len(rows) == 1
     assert rows[0].status == "parse_error"
     assert rows[0].error.startswith("TypeError: ")
 
 
-def test_reused_worker_skips_zip_rereads(spark):
+def test_reused_worker_skips_zip_rereads(spark, synth_pages):
     """A Python worker that already ran an extraction task re-reads no zip
     directory when Spark sets up its next task.  The probe wraps the
     worker's ``zipimport._read_directory`` with a counter on its first
@@ -277,7 +315,7 @@ def test_reused_worker_skips_zip_rereads(spark):
     import pandas as pd
     from pyspark.sql import types as T
 
-    extract = _batch_extractor(Options(classes_to_preserve=["page", "caption"]), 64)
+    extract = _batch_extractor(Options(classes_to_preserve=["page", "caption"]))
 
     def probed(batches):
         import os
@@ -305,7 +343,7 @@ def test_reused_worker_skips_zip_rereads(spark):
             T.StructField("zip_reads", T.LongType()),
         ]
     )
-    pages = spark.createDataFrame(pd.DataFrame(_synth_pages(2), columns=["doc_id", "html"]))
+    pages = spark.createDataFrame(pd.DataFrame(synth_pages(range(2)), columns=["doc_id", "html"]))
     job = pages.coalesce(1).mapInPandas(probed, schema).select("status", "pid", "primed", "zip_reads")
     tasks = []
     # Spark hands a task to any idle worker, so run one-task jobs until

@@ -7,7 +7,6 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from go_readability_spark.spark.corpus import fixture_documents
 from go_readability_spark.spark.pipeline import (
     metrics_summary,
     pending_buckets,
@@ -26,8 +25,9 @@ def out_root():
 
 
 @pytest.fixture(scope="module")
-def docs(spark):
-    return fixture_documents(spark).limit(40).cache()
+def docs(synth_pages, pages_to_documents):
+    # 40 synth_html pages; synth-499 is a ×64 mega page
+    return pages_to_documents(synth_pages(range(460, 500))).cache()
 
 
 def test_bucket_assignment_deterministic(spark, docs):
@@ -103,3 +103,24 @@ def test_metrics_summary(spark, docs, out_root):
     assert lineage.filter(
         (F.col("run_id") == "r4") & (F.col("status") == "done")
     ).count() == 4
+
+
+def test_salted_run_writes_each_doc_once(spark, docs, out_root):
+    """run_extraction(num_partitions=...) puts the salted exchange in front
+    of the kernel: every document is still written exactly once, into its
+    own bucket, and lineage lists every bucket."""
+    res = run_extraction(
+        spark, docs, out_root, "r6",
+        n_buckets=N_BUCKETS, buckets_per_wave=4, num_partitions=4,
+    )
+    assert sorted(res.buckets_done) == list(range(N_BUCKETS))
+    assert res.n_docs == docs.count()
+    want = {r.doc_id: r.bucket_id for r in with_bucket(docs, N_BUCKETS).collect()}
+    arts = spark.read.parquet(f"{out_root}/articles")
+    got = [(r.doc_id, r.bucket_id) for r in arts.select("doc_id", "bucket_id").collect()]
+    assert sorted(got) == sorted(want.items())
+    lineage = spark.read.parquet(f"{out_root}/lineage")
+    done = {r.bucket_id for r in lineage.filter(
+        (F.col("run_id") == "r6") & (F.col("status") == "done")
+    ).collect()}
+    assert done == set(range(N_BUCKETS))

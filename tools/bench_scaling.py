@@ -51,7 +51,7 @@ for _ in range(repeats):
     t0 = time.time()
     # the corpus is pre-bucketed at write time (the Iceberg bucket(B,
     # doc_id) layout) so extraction reads in place — no shuffle; mega-docs
-    # still take the fine-grained route inside route_and_extract
+    # close their Arrow batch (the session's byte cap)
     n, st = steal_pct_window(lambda: route_and_extract(docs).count())
     walls.append(round(time.time() - t0, 1)); steals.append(st)
 # min wall = the least hypervisor-stolen run (this VM shows 0-6%+ CPU steal;
@@ -259,7 +259,7 @@ def main() -> None:
 ## Scaling efficiency (north_rule: ≥ 0.8 from N to 4N)
 
 Same extraction job (route_and_extract: shuffle-free scan of the
-pre-bucketed corpus + mapInPandas Arc90 kernel, mega-docs size-routed) on
+pre-bucketed corpus + mapInPandas Arc90 kernel, byte-capped Arrow batches) on
 the same materialized span corpus, fresh JVM per level — the sandbox proxy
 for N vs 4N executors.  Per level the best of several
 repeats is reported: this sandbox VM shows intermittent hypervisor CPU
