@@ -29,7 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from go_readability_spark.spark.extract import route_and_extract
 
     docs = synthesize_documents(spark, "/root/testdata/sf0.001")
-    return route_and_extract(docs, num_partitions=8)
+    return route_and_extract(docs)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,19 +76,11 @@ def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_readability_spark.spark.corpus import synthesize_documents
     from go_readability_spark.spark.extract import route_and_extract
 
-    # num_partitions: the input here is a COMPUTED frame (mapInPandas page
-    # synthesis), not a bucketed parquet scan, so there is no write-time
-    # layout to keep; the salted exchange spreads the pages over
-    # defaultParallelism tasks, and the shuffle it pays moves freshly-built
-    # spans that were never laid out on disk anyway.
     return _session_cached(
         spark,
         sf_dir,
         "articles",
-        lambda: route_and_extract(
-            synthesize_documents(spark, sf_dir),
-            num_partitions=spark.sparkContext.defaultParallelism,
-        ),
+        lambda: route_and_extract(synthesize_documents(spark, sf_dir)),
     )
 
 
@@ -344,8 +336,7 @@ def _dedup_then_extract_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis or extraction.  The loser list (url_dedup_losers) is
     broadcast into a ``left_anti`` join against the raw text rows inside
     synthesize_documents — PLANS.md shows the BroadcastHashJoin LeftAnti —
-    then the survivors route through the same salted exchange + kernel as
-    extract_articles."""
+    then the survivors run through the same kernel as extract_articles."""
     from pyspark.sql import functions as F
 
     from go_readability_spark.spark.corpus import synthesize_documents
@@ -358,9 +349,7 @@ def _dedup_then_extract_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded by the re-fetch rate, so the persist is tiny at any scale
     losers = scratch_persist(U.url_dedup_losers(_docs(spark, sf_dir)))
     survivors = synthesize_documents(spark, sf_dir, exclude_doc_ids=losers)
-    arts = route_and_extract(
-        survivors, num_partitions=spark.sparkContext.defaultParallelism
-    )
+    arts = route_and_extract(survivors)
     digest = arts.groupBy().agg(
         F.count("*").alias("n_extracted"),
         F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),

@@ -240,20 +240,26 @@ def _pdf_batches():
             has_uri = "uri" in pdf.columns
             for row in pdf.itertuples(index=False):
                 payload = bytes(row.payload) if row.payload is not None else b""
-                lines = pdf_to_text_lines(payload)
-                # page scaffolding: the kernel extracts from doc.body, so a
-                # text layer must arrive as a well-formed page, one span per
-                # source line (the layout unit PDF gives us); the piece
-                # builder (incl. HTML-escaping) is shared with the CLI path
-                pieces = page_pieces_from_lines(lines)
                 spans, off = [], 0
-                for piece in pieces:
-                    # kind "markup" matches html_to_spans' vocabulary for
-                    # non-media raw-HTML spans (codec/spans.py:76)
-                    spans.append(
-                        {"kind": "markup", "text": piece, "media_ref": "", "offset": off}
-                    )
-                    off += len(piece)
+                try:
+                    lines = pdf_to_text_lines(payload)
+                    # page scaffolding: the kernel extracts from doc.body, so
+                    # a text layer must arrive as a well-formed page, one
+                    # span per source line (the layout unit PDF gives us);
+                    # the piece builder (incl. HTML-escaping) is shared with
+                    # the CLI path
+                    for piece in page_pieces_from_lines(lines):
+                        # kind "markup" matches html_to_spans' vocabulary for
+                        # non-media raw-HTML spans (codec/spans.py:76)
+                        spans.append(
+                            {"kind": "markup", "text": piece, "media_ref": "", "offset": off}
+                        )
+                        off += len(piece)
+                except Exception:
+                    # one unreadable file must not fail the ingest task: it
+                    # becomes a document without spans, which extraction
+                    # reports as one parse_error row
+                    spans = []
                 out.append(
                     {
                         "doc_id": row.doc_id,
@@ -306,13 +312,14 @@ def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # for fallback record ids (indexes restart at 0 per archive)
             archive_id = (getattr(row, "path", "") or "") if has_path else ""
             for rec_id, uri, html in warc_html_pages(payload, archive_id):
-                out.append(
-                    {
-                        "doc_id": rec_id,
-                        "uri": uri or DEFAULT_URI,
-                        "spans": [s.as_row() for s in html_to_spans(html)],
-                    }
-                )
+                try:
+                    spans = [s.as_row() for s in html_to_spans(html)]
+                except Exception:
+                    # as in _pdf_batches: a record the span codec cannot
+                    # encode becomes a document without spans, not a
+                    # failed task
+                    spans = []
+                out.append({"doc_id": rec_id, "uri": uri or DEFAULT_URI, "spans": spans})
                 if len(out) >= WARC_CHUNK_RECORDS:
                     yield pd.DataFrame(out, columns=cols)
                     out = []

@@ -5,16 +5,17 @@ dataflow targets ``df.writeTo(tbl).append()`` on a real catalog, with
 ``bucket(B, doc_id)`` as the Iceberg partition transform):
 
     <out>/articles/bucket_id=K/...   extraction results, partitioned by bucket
-    <out>/metrics/                   per-bucket extraction metrics appends
-    <out>/lineage/                   checkpoint rows, one per finished bucket
+    <out>/lineage/                   one row per finished bucket, with its counts
 
 Checkpoint unit = deterministic bucket ``pmod(xxhash64(doc_id), B)``.
-A run processes pending buckets in waves; each wave dynamically overwrites
-exactly its own ``bucket_id=`` partitions (idempotent re-run) and then
-appends lineage rows.  Resume = broadcast anti-join of the bucket domain
-against ``lineage.status='done'`` for the run — at 10^12 docs the lineage
-side stays tiny (B rows), so the anti-join is a broadcast, never a shuffle
-of the corpus.
+A run processes pending buckets in waves; each wave is one articles write,
+which dynamically overwrites exactly its own ``bucket_id=`` partitions
+(idempotent re-run) and counts each bucket's rows on the way through
+(``DataFrame.observe``), then one lineage append that marks the buckets
+done and carries those counts.  Resume = the bucket domain minus the
+run's ``status='done'`` lineage rows, taken on the driver: the lineage
+holds at most B rows per run, so the corpus is never touched to find
+what is left.
 """
 
 from __future__ import annotations
@@ -24,11 +25,11 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..kernel.options import Options
 from .extract import route_and_extract
-from .schema import LINEAGE_SCHEMA, METRICS_SCHEMA
+from .schema import LINEAGE_SCHEMA
 
 
 def _ensure_dynamic_overwrite(spark: SparkSession) -> None:
@@ -51,31 +52,26 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def done_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> DataFrame:
-    """bucket_ids already completed for run_id (empty frame if no lineage yet)."""
-    if not _exists(spark, lineage_path):
-        return spark.createDataFrame([], "bucket_id int")
-    return (
-        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
-        .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("bucket_id")
-        .distinct()
-    )
-
-
 def pending_buckets(
     spark: SparkSession, lineage_path: str, run_id: str, n_buckets: int
 ) -> list[int]:
-    """Resume anti-join: full bucket domain minus completed lineage rows.
-
-    The domain is ``spark.range(B)`` (tiny), the lineage scan is tiny; the
-    corpus itself is only touched later, filtered by the surviving bucket
-    ids — which pushes down to partition pruning on a bucketed table.
-    """
-    domain = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket_id"))
-    done = done_buckets(spark, lineage_path, run_id)
-    pending = domain.join(F.broadcast(done), "bucket_id", "left_anti")
-    return sorted(r.bucket_id for r in pending.collect())
+    """Resume: the bucket domain minus the run's ``status='done'`` lineage
+    rows, as a set difference on the driver.  The collected side is at
+    most one row per bucket, and with no lineage yet no job is submitted;
+    the corpus itself is only touched later, filtered by the surviving
+    bucket ids — which pushes down to partition pruning on a bucketed
+    table.  Lineage written before the count columns existed reads them
+    as NULL under the explicit schema, so old roots still resume."""
+    if not _exists(spark, lineage_path):
+        return list(range(n_buckets))
+    done = {
+        r.bucket_id
+        for r in spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+        .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
+        .select("bucket_id")
+        .collect()
+    }
+    return [b for b in range(n_buckets) if b not in done]
 
 
 @dataclass
@@ -106,13 +102,12 @@ def run_extraction(
     any of those buckets (before its lineage commit) — used by the resume
     tests; never set in production.  ``prescreen`` gates documents through
     IsProbablyReaderable before the grab loop (extract.extract_one) —
-    skipped documents land as ``status='not_readerable'`` rows, so lineage
-    and metrics still account for every input document.
+    skipped documents land as ``status='not_readerable'`` rows, so the
+    lineage counts still account for every input document.
     """
     t0 = time.time()
     _ensure_dynamic_overwrite(spark)
     articles_path = os.path.join(out_root, "articles")
-    metrics_path = os.path.join(out_root, "metrics")
     lineage_path = os.path.join(out_root, "lineage")
 
     pending = pending_buckets(spark, lineage_path, run_id, n_buckets)
@@ -121,6 +116,7 @@ def run_extraction(
     res = RunResult(run_id=run_id, buckets_skipped=skipped)
 
     bucketed = with_bucket(documents, n_buckets)
+    bucket, ok = F.col("bucket_id"), F.col("status") == "ok"
     for i in range(0, len(pending), buckets_per_wave):
         wave = pending[i : i + buckets_per_wave]
         # driver-side literal, NOT F.current_timestamp(): the lazy column
@@ -129,61 +125,55 @@ def run_extraction(
         started_at = F.lit(datetime.datetime.now(datetime.timezone.utc)).cast(
             "timestamp"
         )
-        subset = bucketed.filter(F.col("bucket_id").isin(wave)).drop("bucket_id")
+        subset = bucketed.filter(bucket.isin(wave)).drop("bucket_id")
+        # the write counts its own rows per bucket: the observed aggregates
+        # run in the write's result stage, so no second pass reads the
+        # articles back.  An Observation reports only its first action,
+        # hence a fresh one per wave.
+        obs = Observation()
+        counts = [
+            c
+            for b in wave
+            for c in (
+                F.count_if(bucket == b).alias(f"n_docs_{b}"),
+                F.count_if((bucket == b) & ok).alias(f"n_ok_{b}"),
+            )
+        ]
         t_wave = time.time()
         extracted = with_bucket(
             route_and_extract(subset, options, num_partitions, prescreen),
             n_buckets,
-        )
+        ).observe(obs, *counts)
         # Dynamic partition overwrite: re-running a failed wave replaces
         # exactly its own bucket_id= partitions — idempotent.
         extracted.write.mode("overwrite").partitionBy("bucket_id").parquet(
             articles_path
         )
         wave_sec = max(time.time() - t_wave, 1e-9)
-
-        stats = (
-            spark.read.parquet(articles_path)
-            .filter(F.col("bucket_id").isin(wave))
-            .groupBy("bucket_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum((F.col("status") == "ok").cast("long")).alias("n_ok"),
-                F.sum((F.col("status") != "ok").cast("long")).alias("n_failed"),
-            )
-            .collect()
-        )
+        seen = obs.get
         if fail_buckets and any(b in fail_buckets for b in wave):
             raise RuntimeError(f"injected failure in wave {wave}")
 
-        total_docs = sum(r.n_docs for r in stats)
-        metrics_rows = [
-            {
-                "run_id": run_id,
-                "bucket_id": int(r.bucket_id),
-                "n_docs": int(r.n_docs),
-                "n_ok": int(r.n_ok),
-                "n_failed": int(r.n_failed),
-                "docs_per_sec": float(r.n_docs) / wave_sec,
-                "finished_at": None,
-            }
-            for r in stats
-        ]
-        if metrics_rows:
-            spark.createDataFrame(metrics_rows, METRICS_SCHEMA).withColumn(
-                "finished_at", F.current_timestamp()
-            ).write.mode("append").parquet(metrics_path)
-        lineage_rows = [
-            {
-                "run_id": run_id,
-                "bucket_id": int(b),
-                "input_snapshot_id": None,
-                "status": "done",
-                "started_at": None,
-                "finished_at": None,
-            }
-            for b in wave
-        ]
+        lineage_rows = []
+        for b in wave:
+            n_docs, n_ok = seen[f"n_docs_{b}"], seen[f"n_ok_{b}"]
+            lineage_rows.append(
+                {
+                    "run_id": run_id,
+                    "bucket_id": b,
+                    "input_snapshot_id": None,
+                    "status": "done",
+                    "started_at": None,
+                    "finished_at": None,
+                    "n_docs": n_docs,
+                    "n_ok": n_ok,
+                    "n_failed": n_docs - n_ok,
+                    # an empty bucket has no rate (min over the run skips it)
+                    "docs_per_sec": n_docs / wave_sec if n_docs else None,
+                }
+            )
+        # the wave's one commit: the done mark and the counts are one
+        # append, so no crash point sits between them
         spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).withColumn(
             "started_at", started_at
         ).withColumn("finished_at", F.current_timestamp()).write.mode(
@@ -191,18 +181,19 @@ def run_extraction(
         ).parquet(lineage_path)
 
         res.buckets_done.extend(wave)
-        res.n_docs += total_docs
-        res.n_ok += sum(r.n_ok for r in stats)
+        res.n_docs += sum(r["n_docs"] for r in lineage_rows)
+        res.n_ok += sum(r["n_ok"] for r in lineage_rows)
 
     res.wall_sec = time.time() - t0
     return res
 
 
 def metrics_summary(spark: SparkSession, out_root: str, run_id: str) -> DataFrame:
-    """Aggregate per-bucket metrics for one run — plain hash-agg, partial+final."""
+    """Aggregate the per-bucket counts of one run's lineage — plain
+    hash-agg, partial+final."""
     return (
-        spark.read.schema(METRICS_SCHEMA).parquet(os.path.join(out_root, "metrics"))
-        .filter(F.col("run_id") == run_id)
+        spark.read.schema(LINEAGE_SCHEMA).parquet(os.path.join(out_root, "lineage"))
+        .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .groupBy("run_id")
         .agg(
             F.sum("n_docs").alias("n_docs"),

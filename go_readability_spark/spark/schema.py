@@ -48,20 +48,9 @@ ARTICLES_SCHEMA = T.StructType(
     ]
 )
 
-# Per-bucket progress metrics (FIXTURES.md §3).
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("bucket_id", T.IntegerType(), False),
-        T.StructField("n_docs", T.LongType(), False),
-        T.StructField("n_ok", T.LongType(), False),
-        T.StructField("n_failed", T.LongType(), False),
-        T.StructField("docs_per_sec", T.DoubleType(), True),
-        T.StructField("finished_at", T.TimestampType(), True),
-    ]
-)
-
-# Checkpoint/lineage table: one row per completed bucket wave.
+# Checkpoint/lineage table: one row per bucket a wave finished, carrying
+# the bucket's counts as the articles write observed them (FIXTURES.md §3).
+# The counts are nullable: rows written before they existed read as NULL.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -70,5 +59,9 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
         T.StructField("started_at", T.TimestampType(), True),
         T.StructField("finished_at", T.TimestampType(), True),
+        T.StructField("n_docs", T.LongType(), True),
+        T.StructField("n_ok", T.LongType(), True),
+        T.StructField("n_failed", T.LongType(), True),
+        T.StructField("docs_per_sec", T.DoubleType(), True),
     ]
 )

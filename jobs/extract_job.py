@@ -8,7 +8,7 @@ clusters):
         --conf spark.sql.sources.partitionOverwriteMode=dynamic \
         jobs/extract_job.py \
         --input  <path or iceberg table of documents(doc_id, spans[, uri])> \
-        --output <output root: articles/ metrics/ lineage/> \
+        --output <output root: articles/ lineage/> \
         --run-id prod-2026-08-16 \
         --n-buckets 4096 --buckets-per-wave 256 \
         --num-partitions 8192

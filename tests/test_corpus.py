@@ -284,3 +284,29 @@ def test_warc_quoted_charset_decodes():
     )
     html = http_response_html(body)
     assert html is not None and "Привет" in html
+
+
+def test_warc_record_that_raises_becomes_empty_document(monkeypatch):
+    """A record the span codec raises on becomes one document without spans
+    instead of failing the ingest task; its neighbours still encode."""
+    import pandas as pd
+
+    from go_readability_spark.spark import corpus as C
+
+    real = C.html_to_spans
+
+    def flaky(html):
+        if "poison" in html:
+            raise RuntimeError("boom")
+        return real(html)
+
+    monkeypatch.setattr(C, "html_to_spans", flaky)
+    payload = b"".join(
+        _warc_record("response", _http(body.encode()), uri=f"http://a.ex/{i}", rec_id=f"<urn:p:{i}>")
+        for i, body in enumerate(["<html><body><p>fine</p></body></html>", "<p>poison</p>"])
+    )
+    frames = list(C._warc_batches(iter([pd.DataFrame({"content": [payload], "path": ["a"]})])))
+    spans = {d: list(s) for f in frames for d, s in zip(f["doc_id"], f["spans"])}
+    assert sorted(spans) == ["<urn:p:0>", "<urn:p:1>"]
+    assert spans["<urn:p:1>"] == []
+    assert "".join(s["text"] for s in spans["<urn:p:0>"]) == "<html><body><p>fine</p></body></html>"

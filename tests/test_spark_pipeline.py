@@ -1,6 +1,8 @@
 """Checkpoint/resume pipeline tests: bucket determinism, failure-injection
-resume, idempotent partition overwrite, metrics aggregation."""
+resume, idempotent partition overwrite, metrics aggregation, jobs per wave,
+write-observed counts, resume over lineage without the count columns."""
 
+import datetime
 import shutil
 import tempfile
 
@@ -124,3 +126,93 @@ def test_salted_run_writes_each_doc_once(spark, docs, out_root):
         (F.col("run_id") == "r6") & (F.col("status") == "done")
     ).collect()}
     assert done == set(range(N_BUCKETS))
+
+
+def _jobs_submitted(spark, fn):
+    """Spark jobs ``fn()`` submits, from the status store (the listener bus
+    is drained first so the last job is registered)."""
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+    listener_bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    out = fn()
+    listener_bus.waitUntilEmpty()
+    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
+
+
+def test_wave_submits_one_write_and_one_commit(spark, docs, out_root):
+    """A wave is the articles write plus the lineage append; a fully resumed
+    run only reads the lineage."""
+    docs.count()  # materialize the cached fixture outside the measurement
+    res, n_jobs = _jobs_submitted(spark, lambda: run_extraction(
+        spark, docs, out_root, "r7", n_buckets=N_BUCKETS, buckets_per_wave=N_BUCKETS,
+    ))
+    assert sorted(res.buckets_done) == list(range(N_BUCKETS))
+    assert n_jobs <= 2
+
+    res2, n_jobs = _jobs_submitted(spark, lambda: run_extraction(
+        spark, docs, out_root, "r7", n_buckets=N_BUCKETS, buckets_per_wave=N_BUCKETS,
+    ))
+    assert res2.buckets_done == []
+    assert n_jobs <= 1
+
+
+def test_lineage_counts_match_articles(spark, docs, out_root):
+    """The counts the write observed per bucket equal a recount of what it
+    wrote; an empty bucket is done with zero docs and no rate."""
+    n_buckets = 64  # 40 docs: most buckets stay empty
+    res = run_extraction(
+        spark, docs, out_root, "r8", n_buckets=n_buckets, buckets_per_wave=32
+    )
+    arts = spark.read.parquet(f"{out_root}/articles")
+    want = {
+        r.bucket_id: (r.n_docs, r.n_ok)
+        for r in arts.groupBy("bucket_id").agg(
+            F.count("*").alias("n_docs"),
+            F.count_if(F.col("status") == "ok").alias("n_ok"),
+        ).collect()
+    }
+    lineage = {
+        r.bucket_id: r
+        for r in spark.read.parquet(f"{out_root}/lineage")
+        .filter(F.col("run_id") == "r8").collect()
+    }
+    assert sorted(lineage) == list(range(n_buckets))
+    assert 0 < len(want) < n_buckets
+    for b, row in lineage.items():
+        n_docs, n_ok = want.get(b, (0, 0))
+        assert (row.n_docs, row.n_ok, row.n_failed) == (n_docs, n_ok, n_docs - n_ok)
+        if n_docs:
+            assert row.docs_per_sec > 0
+        else:
+            assert row.docs_per_sec is None
+    assert res.n_docs == docs.count() and res.n_ok == sum(v[1] for v in want.values())
+
+
+def test_lineage_without_count_columns_resumes(spark, docs, out_root):
+    """Lineage written before the count columns existed (six columns) still
+    marks its buckets done; new rows append beside it."""
+    from pyspark.sql import types as T
+
+    old_schema = T.StructType([
+        T.StructField("run_id", T.StringType(), False),
+        T.StructField("bucket_id", T.IntegerType(), False),
+        T.StructField("input_snapshot_id", T.LongType(), True),
+        T.StructField("status", T.StringType(), False),
+        T.StructField("started_at", T.TimestampType(), True),
+        T.StructField("finished_at", T.TimestampType(), True),
+    ])
+    now = datetime.datetime(2024, 1, 1)
+    rows = [("r9", b, None, "done", now, now) for b in (0, 2, 5)]
+    rows.append(("other", 1, None, "done", now, now))
+    spark.createDataFrame(rows, old_schema).write.parquet(f"{out_root}/lineage")
+
+    pend = pending_buckets(spark, f"{out_root}/lineage", "r9", N_BUCKETS)
+    assert pend == [1, 3, 4, 6, 7]
+    res = run_extraction(
+        spark, docs, out_root, "r9", n_buckets=N_BUCKETS, buckets_per_wave=4
+    )
+    assert sorted(res.buckets_done) == pend
+    assert pending_buckets(spark, f"{out_root}/lineage", "r9", N_BUCKETS) == []
+    row = metrics_summary(spark, out_root, "r9").collect()[0]
+    assert row.n_docs == res.n_docs
