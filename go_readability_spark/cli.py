@@ -17,7 +17,6 @@ import sys
 from .codec.spans import html_fragment_to_normalized_spans
 from .kernel.options import Options
 from .kernel.readability import parse_document
-from .kernel.readerable import is_probably_readerable
 
 
 def _pdf_to_page(payload: bytes) -> str:
@@ -64,11 +63,12 @@ def main(argv: list[str] | None = None) -> int:
     html, default_uri = _load(args.source, args.timeout)
     uri = args.uri or default_uri
 
-    if args.check_readerable and not is_probably_readerable(html):
+    result, _article, status = parse_document(
+        html, uri, Options(), prescreen=args.check_readerable
+    )
+    if status == "not_readerable":
         print("document is probably not readerable", file=sys.stderr)
         return 2
-
-    result, _article, status = parse_document(html, uri, Options())
     if result is None:
         print(f"extraction failed: {status}", file=sys.stderr)
         return 1

@@ -35,6 +35,7 @@ from .options import (
     Options,
     Result,
 )
+from .readerable import scan_readerable
 from .urlfix import to_absolute_uri
 
 # Element tags to score by default (readability.go:53).
@@ -144,8 +145,6 @@ class Readability:
             raise ValueError("first argument to Readability constructor should be a HTML document")
         self.options = options or Options()
         self.doc = parse_html(html_source, uri)
-        if self.doc is None or self.doc.body is None:
-            raise NoArticleError("cannot parse doc")
         # Start with all flags set (readability.go:125).
         self.flags = FLAG_STRIP_UNLIKELYS | FLAG_WEIGHT_CLASSES | FLAG_CLEAN_CONDITIONALLY
         self.article_title = ""
@@ -1442,6 +1441,8 @@ class Readability:
     # -- entry point (readability.go:2174-2240) ----------------------------------------
 
     def parse(self) -> Result:
+        if self.doc.body is None:
+            raise NoArticleError("cannot parse doc")
         if self.options.max_elems_to_parse > 0:
             num_tags = len(self.doc.get_elements_by_tag_name("*"))
             if num_tags > self.options.max_elems_to_parse:
@@ -1498,20 +1499,27 @@ class Readability:
 
 
 def parse_document(
-    html_source: str, uri: str, options: Options | None = None
+    html_source: str, uri: str, options: Options | None = None, prescreen: bool = False
 ) -> tuple[Result | None, Node | None, str]:
     """Convenience wrapper: returns (result, article DOM, status).
 
-    status is one of 'ok' | 'no_article' | 'too_large' | 'parse_error';
-    the article DOM is the post-processed content tree (used by the span
-    codec to emit output spans in final document order).
+    The one place a status is assigned: 'ok' | 'not_readerable' |
+    'no_article' | 'too_large' | 'parse_error'.  ``prescreen``
+    (readerable.go:20-27) runs the read-only readerable scan on the one
+    DOM before parse() mutates it; its verdict wins over every other
+    status, and a scan failure lets the full parse decide.  The article
+    DOM is the post-processed content tree (the span codec's input).
     """
     try:
         r = Readability(html_source, uri, options)
-    except NoArticleError:
-        return None, None, "no_article"
-    except Exception:
-        return None, None, "parse_error"
+    except Exception:  # an empty source, or a parser failure
+        return None, None, "not_readerable" if prescreen and not html_source else "parse_error"
+    if prescreen:
+        try:
+            if not scan_readerable(r.doc, r.options):
+                return None, None, "not_readerable"
+        except Exception:
+            pass  # scan failure: let the full parse decide
     try:
         result = r.parse()
     except TooLargeError:

@@ -74,7 +74,11 @@ def _has_li_p(node: Node) -> bool:
 
 
 def is_probably_readerable(html_source: str, options: Options | None = None) -> bool:
-    doc = parse_html(html_source, "")
+    return scan_readerable(parse_html(html_source, ""), options)
+
+
+def scan_readerable(doc: Node, options: Options | None = None) -> bool:
+    """The verdict over a built DOM; read-only, so it can precede parse()."""
     opts = options or Options()
 
     # Document-order p/pre/article scan plus parents of div > br

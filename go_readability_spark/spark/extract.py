@@ -70,26 +70,18 @@ def extract_one(
     """Run the kernel on one document's reassembled HTML → one articles-row dict.
 
     ``prescreen`` is the reference's advertised two-step workflow
-    (readerable.go:20-27: "check IsProbablyReaderable before you parse"):
-    the cheap readerable scan runs first and non-readerable documents
-    return ``status='not_readerable'`` rows without paying the grab
-    loop / cleanup / serialization (same two-parse cost profile as
-    calling the reference's two entry points in sequence).  Measured on a
-    70/30 article/link-farm mix (10k docs, local[16], min-of-3): wall
+    (readerable.go:20-27: "check IsProbablyReaderable before you parse"),
+    run by ``parse_document`` on the one DOM it builds: non-readerable
+    documents return ``status='not_readerable'`` rows without paying the
+    grab loop / cleanup / serialization.  Measured on a 70/30
+    article/link-farm mix (10k docs, local[16], min-of-3): wall
     2.42 → 1.68 s (−31%), and without the gate every link farm extracts
     as a plausible-looking ``status='ok'`` row of navigation text — the
     gate buys corpus QUALITY as well as wall time.  Real crawls skew far
     more non-readerable than 30%."""
-    if prescreen:
-        from ..kernel.readerable import is_probably_readerable
-
-        try:
-            readerable = is_probably_readerable(html or "", options)
-        except Exception:
-            readerable = True  # scan failure: let the full parse decide
-        if not readerable:
-            return {"doc_id": doc_id, "status": "not_readerable", "error": None, **_EMPTY}
-    result, _article, status = parse_document(html or "", uri or DEFAULT_URI, options)
+    result, _article, status = parse_document(
+        html or "", uri or DEFAULT_URI, options, prescreen
+    )
     if result is None:
         return {"doc_id": doc_id, "status": status, "error": None, **_EMPTY}
     try:

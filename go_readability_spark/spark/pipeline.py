@@ -93,17 +93,14 @@ def run_extraction(
     buckets_per_wave: int = 8,
     options: Options | None = None,
     num_partitions: int | None = None,
-    fail_buckets: set[int] | None = None,
     prescreen: bool = False,
 ) -> RunResult:
     """Checkpointed extraction of ``documents`` into ``out_root``.
 
-    ``fail_buckets`` injects a failure after extraction of a wave containing
-    any of those buckets (before its lineage commit) — used by the resume
-    tests; never set in production.  ``prescreen`` gates documents through
-    IsProbablyReaderable before the grab loop (extract.extract_one) —
-    skipped documents land as ``status='not_readerable'`` rows, so the
-    lineage counts still account for every input document.
+    ``prescreen`` gates documents through IsProbablyReaderable before the
+    grab loop (kernel.readability.parse_document) — skipped documents land
+    as ``status='not_readerable'`` rows, so the lineage counts still
+    account for every input document.
     """
     t0 = time.time()
     _ensure_dynamic_overwrite(spark)
@@ -151,8 +148,6 @@ def run_extraction(
         )
         wave_sec = max(time.time() - t_wave, 1e-9)
         seen = obs.get
-        if fail_buckets and any(b in fail_buckets for b in wave):
-            raise RuntimeError(f"injected failure in wave {wave}")
 
         lineage_rows = []
         for b in wave:
@@ -172,9 +167,10 @@ def run_extraction(
                     "docs_per_sec": n_docs / wave_sec if n_docs else None,
                 }
             )
-        # the wave's one commit: the done mark and the counts are one
-        # append, so no crash point sits between them
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).withColumn(
+        # the wave's one commit: done marks and counts in one append, no crash
+        # point between them; one slice, one file (coalesce(1) was 2x slower)
+        rows = spark.sparkContext.parallelize(lineage_rows, 1)
+        spark.createDataFrame(rows, LINEAGE_SCHEMA).withColumn(
             "started_at", started_at
         ).withColumn("finished_at", F.current_timestamp()).write.mode(
             "append"

@@ -1,10 +1,40 @@
+import os
+
 import pytest
+
+from go_readability_spark.kernel.golden import FIXTURES_DIR, list_fixtures
+
+HAVE_REFERENCE = os.path.isdir(FIXTURES_DIR)
 
 
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: scale-proof tests (bigger synthetic corpora)"
     )
+    config.addinivalue_line(
+        "markers",
+        f"requires_reference: reads the golden corpus at {FIXTURES_DIR}; "
+        "skipped when that directory is absent",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    if HAVE_REFERENCE:
+        return
+    skip = pytest.mark.skip(reason=f"golden corpus absent: {FIXTURES_DIR}")
+    for item in items:
+        if "requires_reference" in item.keywords:
+            item.add_marker(skip)
+
+
+def pytest_generate_tests(metafunc):
+    """A ``golden_name`` argument runs the test once per golden fixture.
+    Without the corpus it gets one placeholder id, which the
+    requires_reference skip then reports; collection never reads the
+    missing directory."""
+    if "golden_name" in metafunc.fixturenames:
+        names = list_fixtures() if HAVE_REFERENCE else ["corpus-absent"]
+        metafunc.parametrize("golden_name", names)
 
 
 @pytest.fixture(scope="session")

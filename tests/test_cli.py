@@ -4,6 +4,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 FIXTURE = "/root/reference/testdata/test-pages/001/source.html"
 
 
@@ -14,18 +16,21 @@ def run_cli(*args):
     )
 
 
+@pytest.mark.requires_reference
 def test_cli_html_output():
     r = run_cli(FIXTURE, "-u", "http://fakehost/test/page.html", "-o", "html")
     assert r.returncode == 0
     assert "<p>" in r.stdout
 
 
+@pytest.mark.requires_reference
 def test_cli_text_output():
     r = run_cli(FIXTURE, "-u", "http://fakehost/test/page.html", "-o", "text")
     assert r.returncode == 0
     assert "JavaScript" in r.stdout and "<p>" not in r.stdout
 
 
+@pytest.mark.requires_reference
 def test_cli_json_output():
     r = run_cli(FIXTURE, "-u", "http://fakehost/test/page.html", "-o", "json")
     assert r.returncode == 0

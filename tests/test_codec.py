@@ -14,13 +14,13 @@ from go_readability_spark.codec.spans import (
     spans_to_html,
 )
 from go_readability_spark.kernel.dom import parse_html
-from go_readability_spark.kernel.golden import FIXTURES_DIR, list_fixtures
+from go_readability_spark.kernel.golden import FIXTURES_DIR
 
 
-@pytest.mark.parametrize("name", list_fixtures())
-def test_input_codec_roundtrip_fixture(name):
+@pytest.mark.requires_reference
+def test_input_codec_roundtrip_fixture(golden_name):
     """Reassembling spans in offset order reproduces source byte-for-byte."""
-    with open(os.path.join(FIXTURES_DIR, name, "source.html"), encoding="utf-8") as f:
+    with open(os.path.join(FIXTURES_DIR, golden_name, "source.html"), encoding="utf-8") as f:
         src = f.read()
     spans = html_to_spans(src)
     assert spans_to_html(spans) == src
@@ -220,6 +220,7 @@ def test_no_fabricated_media_refs_adversarial():
         _assert_media_subseq(html)
 
 
+@pytest.mark.requires_reference
 def test_no_fabricated_media_refs_golden_corpus():
     import glob
 

@@ -1,5 +1,7 @@
 """Corpus synthesis tests: determinism, codec round-trip, skew shape."""
 
+import pytest
+
 from go_readability_spark.codec.spans import html_to_spans, spans_to_html
 from go_readability_spark.spark.corpus import synth_html, synthesize_documents
 
@@ -38,6 +40,7 @@ def test_synthesize_documents_spark(spark):
         assert "<article>" in html and "</html>" in html
 
 
+@pytest.mark.requires_reference
 def test_ingest_html_documents_matches_driver_side_codec(spark):
     """Distributed ingest of raw (doc_id, html, uri) rows produces the
     exact span rows the driver-side codec produces, and the ingested

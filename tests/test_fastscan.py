@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import glob
 
+import pytest
+
 from hypothesis import given, settings, strategies as st
 
 from go_readability_spark.kernel import dom
@@ -207,6 +209,7 @@ def test_fastscan_adversarial_equivalence():
         _assert_equivalent(src)
 
 
+@pytest.mark.requires_reference
 def test_fastscan_golden_corpus_equivalence():
     """Every golden source AND expected fragment: fast path (when taken)
     builds the identical tree; abort rate stays a minority."""

@@ -5,12 +5,15 @@ span-sequence equality and all seven metadata fields (~20 s)."""
 import json
 import os
 
+import pytest
+
 from go_readability_spark.codec.spans import html_fragment_to_normalized_spans
 from go_readability_spark.kernel.golden import FIXTURES_DIR
 from go_readability_spark.spark.corpus import fixture_documents
 from go_readability_spark.spark.extract import extract_articles
 
 
+@pytest.mark.requires_reference
 def test_full_corpus_span_and_metadata_parity(spark):
     rows = {r.doc_id: r for r in extract_articles(fixture_documents(spark)).collect()}
     assert len(rows) == 119

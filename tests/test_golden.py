@@ -9,12 +9,12 @@ compared exactly.
 
 import pytest
 
-from go_readability_spark.kernel.golden import list_fixtures, run_fixture
+from go_readability_spark.kernel.golden import run_fixture
 
 
-@pytest.mark.parametrize("name", list_fixtures())
-def test_golden_fixture(name):
-    fr = run_fixture(name)
+@pytest.mark.requires_reference
+def test_golden_fixture(golden_name):
+    fr = run_fixture(golden_name)
     assert not fr.error, fr.error
     detail = "\n".join(fr.diffs[:5])
     assert fr.content_ok, f"content span mismatch:\n{detail}"

@@ -7,6 +7,8 @@ import sys
 import tempfile
 import zipfile
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -24,6 +26,7 @@ def test_package_zip_builds():
     assert not any("__pycache__" in n for n in names)
 
 
+@pytest.mark.requires_reference
 def test_extract_job_end_to_end(spark):
     """Drive jobs/extract_job.py in its own process, exactly as a
     spark-submit driver runs it (own JVM, own session lifecycle)."""

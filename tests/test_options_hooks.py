@@ -5,6 +5,8 @@ when supplied and leave defaults byte-identical when omitted."""
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from go_readability_spark.kernel.options import Options
@@ -20,6 +22,7 @@ def _src() -> str:
         return f.read()
 
 
+@pytest.mark.requires_reference
 def test_custom_serializer_replaces_inner_html():
     src = _src()
     default = Readability(src, URI).parse()
@@ -35,6 +38,7 @@ def test_custom_serializer_replaces_inner_html():
     assert custom.text_content == default.text_content
 
 
+@pytest.mark.requires_reference
 def test_custom_html2text_drives_text_and_length():
     src = _src()
     default = Readability(src, URI).parse()
@@ -49,6 +53,7 @@ def test_custom_html2text_drives_text_and_length():
     assert default.text_content != expected
 
 
+@pytest.mark.requires_reference
 def test_custom_visibility_checker_gates_readerable():
     src = _src()
     assert is_probably_readerable(src) is True
@@ -59,6 +64,7 @@ def test_custom_visibility_checker_gates_readerable():
     )
 
 
+@pytest.mark.requires_reference
 def test_defaults_unchanged_when_hooks_unset():
     src = _src()
     a = Readability(src, URI).parse()

@@ -101,6 +101,7 @@ def test_vocab_topk_uses_partial_topk(spark):
     assert "doc_id" not in plan.split("ReadSchema")[-1]
 
 
+@pytest.mark.requires_reference
 def test_extraction_scan_is_pruned(spark):
     """The extraction operator must read only doc_id/spans/uri, whatever
     else the table carries (column pruning through mapInPandas)."""

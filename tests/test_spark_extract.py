@@ -53,6 +53,7 @@ def _expected_spans(name):
         return [s.as_tuple() for s in html_fragment_to_normalized_spans(f.read())]
 
 
+@pytest.mark.requires_reference
 @pytest.mark.parametrize("name", PROBE_FIXTURES)
 def test_span_equality_through_spark(fixture_articles, name):
     row = fixture_articles[name]
@@ -61,10 +62,12 @@ def test_span_equality_through_spark(fixture_articles, name):
     assert got == _expected_spans(name)
 
 
+@pytest.mark.requires_reference
 def test_all_probe_statuses_ok(fixture_articles):
     assert all(r.status == "ok" for r in fixture_articles.values())
 
 
+@pytest.mark.requires_reference
 def test_media_refs_absolutized(fixture_articles):
     imgs = [
         s for s in fixture_articles["keep-images"].spans if s.kind == "img"
@@ -238,47 +241,112 @@ def test_null_and_garbage_spans_degrade_gracefully(spark):
         assert r.status in ("ok", "no_article", "parse_error")
 
 
-def test_prescreen_gates_through_readerable(spark):
+L = "word " * 80
+# hand-written non-readerable pages: navigation only, or 50 bare divs
+LINK_FARM = (
+    "<html><body>"
+    + "".join(f'<a href="/p{i}">link {i}</a> ' for i in range(200))
+    + "</body></html>"
+)
+DIV_PAGE = "<html><body>" + "<div>x</div>" * 50 + "</body></html>"
+STATUS_OPTIONS = [
+    Options(),
+    Options(max_elems_to_parse=10),
+    Options(serializer=lambda node: None),
+]
+# html -> statuses with prescreen off, then on, under STATUS_OPTIONS in order
+STATUS_TABLE = [
+    pytest.param("", ("parse_error",) * 3, ("not_readerable",) * 3, id="empty"),
+    pytest.param(None, ("parse_error",) * 3, ("not_readerable",) * 3, id="none"),
+    pytest.param(
+        f"<p>{L}</p><p>{L}</p>", ("no_article",) * 3, ("no_article",) * 3, id="no-html-body"
+    ),
+    pytest.param("<p>hi</p>", ("no_article",) * 3, ("not_readerable",) * 3, id="short"),
+    pytest.param(
+        f"<html><div><p>{L}</p></div></html>",
+        ("no_article",) * 3,
+        ("not_readerable",) * 3,
+        id="body-less",
+    ),
+    pytest.param(
+        f"<body><article><p>{L}</p><p>{L}</p></article></body>",
+        ("ok", "ok", "parse_error"),
+        ("ok", "ok", "parse_error"),
+        id="article",
+    ),
+    pytest.param(
+        LINK_FARM, ("ok", "too_large", "parse_error"), ("not_readerable",) * 3, id="link-farm"
+    ),
+    pytest.param(
+        DIV_PAGE, ("ok", "too_large", "parse_error"), ("not_readerable",) * 3, id="div-page"
+    ),
+]
+
+
+@pytest.mark.parametrize("html,off,on", STATUS_TABLE)
+def test_extract_one_status_table(html, off, on):
+    """parse_document assigns every status; the prescreen verdict wins over
+    the empty-source parse_error, the body-less no_article and too_large."""
+    for prescreen, want in ((False, off), (True, on)):
+        rows = [extract_one("d", html, None, o, prescreen) for o in STATUS_OPTIONS]
+        assert tuple(r["status"] for r in rows) == want, prescreen
+        for r in rows:
+            if r["status"] == "parse_error" and html:
+                assert r["error"].startswith("TypeError: ")
+            else:
+                assert r["error"] is None
+
+
+@pytest.mark.parametrize("html,off,on", STATUS_TABLE)
+def test_source_is_parsed_once(monkeypatch, html, off, on):
+    """One DOM per document: with the prescreen on or off, the source
+    reaches parse_html once (an empty source, never); the output spans
+    reparse the serialized article, not the source."""
+    from go_readability_spark.codec import spans
+    from go_readability_spark.kernel import dom, readability, readerable
+
+    seen = []
+
+    def counting_parse_html(src, *args):
+        seen.append(src)
+        return dom.parse_html(src, *args)
+
+    for mod in (readability, readerable, spans):
+        monkeypatch.setattr(mod, "parse_html", counting_parse_html)
+    for prescreen in (False, True):
+        seen.clear()
+        extract_one("d", html, None, Options(), prescreen)
+        assert seen.count(html) == (1 if html else 0), prescreen
+
+
+def test_prescreen_gates_through_readerable(spark, synth_pages, pages_to_documents):
     """The reference's check-before-parse workflow through the Spark
     surface: with prescreen=True, every document the kernel's
     IsProbablyReaderable rejects lands as a status='not_readerable' row
     (no grab-loop output), and every readerable document extracts
     IDENTICALLY to the ungated path."""
-    import os
-
-    from go_readability_spark.codec.spans import spans_to_html, Span
-    from go_readability_spark.kernel.options import Options
     from go_readability_spark.kernel.readerable import is_probably_readerable
 
-    from pyspark.sql import functions as F
-
-    # include the four known non-readerable fixtures plus a readerable slice
-    non_readerable = ("js-link-replacement", "lazy-image-3", "mozilla-2",
-                      "remove-aria-hidden")
-    docs = fixture_documents(spark).filter(
-        F.col("doc_id").isin(*non_readerable) | F.col("doc_id").startswith("0")
-    )
+    pages = synth_pages(range(6)) + [("link-farm", LINK_FARM), ("div-page", DIV_PAGE)]
+    docs = pages_to_documents(pages)
     opts = Options(classes_to_preserve=["page", "caption"])
     gated = {r.doc_id: r for r in extract_articles(docs, opts, prescreen=True).collect()}
     plain = {r.doc_id: r for r in extract_articles(docs, opts).collect()}
-    assert set(gated) == set(plain)
-    n_skipped = 0
-    for name, row in gated.items():
-        src = open(
-            os.path.join(FIXTURES_DIR, name, "source.html"), encoding="utf-8"
-        ).read()
-        truth = is_probably_readerable(src, opts)
-        if truth:
-            assert row.status == plain[name].status, name
+    assert set(gated) == set(plain) == {d for d, _ in pages}
+    skipped = set()
+    for name, html in pages:
+        row = gated[name]
+        if is_probably_readerable(html, opts):
+            assert row.status == plain[name].status == "ok", name
             assert row.text_content == plain[name].text_content, name
             assert row.title == plain[name].title, name
+            assert row.spans == plain[name].spans, name
         else:
-            n_skipped += 1
+            skipped.add(name)
             assert row.status == "not_readerable", name
             assert row.spans is None and row.text_content is None, name
-    # the golden corpus contains deliberately non-readerable fixtures, so
-    # the gate must actually fire
-    assert n_skipped > 0
+    # the hand-written pages are the non-readerable ones, and only they
+    assert skipped == {"link-farm", "div-page"}
 
 
 def _poison_options():

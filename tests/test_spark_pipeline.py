@@ -3,6 +3,7 @@ resume, idempotent partition overwrite, metrics aggregation, jobs per wave,
 write-observed counts, resume over lineage without the count columns."""
 
 import datetime
+import glob
 import shutil
 import tempfile
 
@@ -39,11 +40,26 @@ def test_bucket_assignment_deterministic(spark, docs):
     assert all(0 <= v < N_BUCKETS for v in a.values())
 
 
-def test_failure_resume_completes_corpus(spark, docs, out_root):
-    with pytest.raises(RuntimeError, match="injected"):
+def _crash_lineage_append_of(monkeypatch, bucket):
+    """Fail the lineage append of the wave holding ``bucket``: that wave's
+    articles are written, its done marks are not."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if path.endswith("lineage") and self._df.filter(F.col("bucket_id") == bucket).count():
+            raise RuntimeError(f"injected failure in the wave holding bucket {bucket}")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def test_failure_resume_completes_corpus(spark, docs, out_root, monkeypatch):
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected"):
+        _crash_lineage_append_of(m, 6)
         run_extraction(
-            spark, docs, out_root, "r1",
-            n_buckets=N_BUCKETS, buckets_per_wave=4, fail_buckets={6},
+            spark, docs, out_root, "r1", n_buckets=N_BUCKETS, buckets_per_wave=4
         )
     pend = pending_buckets(spark, f"{out_root}/lineage", "r1", N_BUCKETS)
     assert pend and len(pend) < N_BUCKETS
@@ -74,6 +90,16 @@ def test_rerun_wave_is_idempotent(spark, docs, out_root):
     run_extraction(spark, docs, out_root, "r3", n_buckets=4, buckets_per_wave=4)
     n2 = spark.read.parquet(f"{out_root}/articles").count()
     assert n1 == n2 == docs.count()
+
+
+@pytest.mark.parametrize("per_wave,files", [(N_BUCKETS, 1), (N_BUCKETS // 4, 4)])
+def test_lineage_append_writes_one_file_per_wave(spark, docs, out_root, per_wave, files):
+    """Each wave commits its lineage rows as one file, not one per slice of
+    the driver-side rows."""
+    run_extraction(
+        spark, docs, out_root, "r10", n_buckets=N_BUCKETS, buckets_per_wave=per_wave
+    )
+    assert len(glob.glob(f"{out_root}/lineage/part-*.parquet")) == files
 
 
 def test_static_overwrite_session_is_safe(spark, docs, out_root):

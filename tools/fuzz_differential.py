@@ -7,10 +7,16 @@ Reuses the two strongest invariants in the suite, at open-ended volume:
   (tests/test_fastscan.py::_assert_equivalent);
 * codec soundness: ``html_to_spans`` must byte-preserve on re-serialize
   and its media spans must equal the DOM parse's media-element sequence
-  (tests/test_codec.py::_assert_media_subseq).
+  (tests/test_codec.py::_assert_media_subseq);
+* one DOM per document (``_assert_one_dom``): ``is_probably_readerable``
+  equals ``scan_readerable`` over ``parse_html(html, uri)`` for any uri,
+  and ``parse_document(prescreen=True)`` gives the two-step status --
+  ``not_readerable`` exactly when the standalone check is false, else the
+  ``prescreen=False`` status.
 
 Inputs: random fragment soup over an adversarial alphabet plus mutated
-slices of the real golden pages.  Usage::
+slices of the real golden pages (deterministic ``synth_html`` pages when
+the golden corpus is absent).  Usage::
 
     python tools/fuzz_differential.py [seconds=600] [seed=20260818]
 
@@ -29,6 +35,13 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from go_readability_spark.kernel.dom import parse_html  # noqa: E402
+from go_readability_spark.kernel.readability import parse_document  # noqa: E402
+from go_readability_spark.kernel.readerable import (  # noqa: E402
+    is_probably_readerable,
+    scan_readerable,
+)
 
 
 def _load(name: str, path: str):
@@ -88,6 +101,26 @@ def _wrap(rng: random.Random, s: str) -> str:
     return f"<!--{s}"  # unterminated comment swallowing the soup
 
 
+# document URIs the one-DOM check parses under: the scan must not depend
+# on the URI the extraction resolves links against
+_URIS = ["http://fakehost/test/page.html", "file:///srv/a%20b/page.html?q=1#f", "::not a uri"]
+
+
+def _assert_one_dom(s: str) -> None:
+    try:
+        standalone = is_probably_readerable(s)
+    except Exception:
+        standalone = None  # the two-step workflow lets the full parse decide
+    if standalone is not None:
+        for uri in _URIS:
+            scanned = scan_readerable(parse_html(s, uri))
+            assert scanned == standalone, f"scan under {uri!r}: {scanned}, standalone {standalone}"
+    uri = _URIS[len(s) % len(_URIS)]
+    gated = parse_document(s, uri, prescreen=True)[2]
+    want = "not_readerable" if standalone is False else parse_document(s, uri)[2]
+    assert gated == want, f"prescreen status {gated!r}, two-step {want!r}"
+
+
 def main() -> int:
     seconds = float(sys.argv[1]) if len(sys.argv) > 1 else 600.0
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260818
@@ -100,6 +133,11 @@ def main() -> int:
         src = os.path.join(d, "source.html")
         if os.path.exists(src):
             pages.append(open(src, encoding="utf-8", errors="replace").read())
+    if not pages:
+        from go_readability_spark.spark.corpus import synth_html
+
+        words = " ".join(f"word{i}" for i in range(120))
+        pages = [synth_html(i, words, "en", "src") for i in range(25)]
 
     rng = random.Random(seed)
     deadline = time.time() + seconds
@@ -132,7 +170,7 @@ def main() -> int:
             s = s[:i] + rng.choice("<>\"'=&;!-/ ") + s[i:]
         if rng.random() < 0.12:
             s = _wrap(rng, s) + (rng.choice(FRAGS) if rng.random() < 0.5 else "")
-        for check in (fs._assert_equivalent, tc._assert_media_subseq):
+        for check in (fs._assert_equivalent, tc._assert_media_subseq, _assert_one_dom):
             try:
                 check(s)
             except AssertionError as e:
