@@ -14,7 +14,7 @@ import argparse
 import json
 import sys
 
-from .codec.spans import html_fragment_to_normalized_spans
+from .codec.spans import dom_to_spans
 from .kernel.options import Options
 from .kernel.readability import parse_document
 
@@ -63,7 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     html, default_uri = _load(args.source, args.timeout)
     uri = args.uri or default_uri
 
-    result, _article, status = parse_document(
+    result, article, status = parse_document(
         html, uri, Options(), prescreen=args.check_readerable
     )
     if status == "not_readerable":
@@ -78,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.output == "html":
         print(result.html_content)
     else:
-        spans = [s.as_row() for s in html_fragment_to_normalized_spans(result.html_content)]
+        spans = [s.as_row() for s in dom_to_spans(article)]
         print(
             json.dumps(
                 {

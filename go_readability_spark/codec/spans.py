@@ -20,6 +20,9 @@ anchored at their surviving DOM positions with absolutized ``media_ref``.
 Span-sequence equality ``(kind, text, media_ref, order)`` over this encoding
 subsumes the reference test's DOM comparison (readability_test.go:115-160:
 node descriptor + attribute set + collapsed text, empty text skipped).
+The engine walks the article DOM the kernel returns and never parses the
+serialized article; ``html_fragment_to_normalized_spans`` is the string
+entry point (a parse, then the same walk).
 """
 
 from __future__ import annotations
@@ -30,8 +33,8 @@ from dataclasses import dataclass
 from ..kernel.dom import (
     CDATA_CONTENT_ELEMENTS,
     ELEMENT_NODE,
-    TEXT_NODE,
     Node,
+    decode_html,
     parse_html,
 )
 from ..kernel.regexps import MULTIPLE_WHITESPACES
@@ -294,6 +297,23 @@ def _open_tag_repr(n: Node) -> str:
     return f"<{n.local_name}{inner}>"
 
 
+def _serializes_empty(n: Node) -> bool:
+    """True iff ``n``'s children serialize to nothing: the reparse would
+    hold ``n`` with no children (e.g. an element whose only child is a
+    doctype)."""
+    stack = list(n.child_nodes)
+    while stack:
+        c = stack.pop()
+        if c.node_type != ELEMENT_NODE:
+            if c.get_inner_html():  # a text node's serialized form; a doctype's is ""
+                return False
+        elif c.local_name:
+            return False
+        else:
+            stack.extend(c.child_nodes)
+    return True
+
+
 def dom_to_spans(container: Node) -> list[Span]:
     """Normalized output-span encoding of a (sub)tree's children.
 
@@ -301,45 +321,62 @@ def dom_to_spans(container: Node) -> list[Span]:
     (htmlTransform, readability_test.go:281-283), whitespace-only text nodes
     skipped (readability_test.go:252-258), attribute *sets* compared
     (readability_test.go:134-151) via sorted serialization.
+
+    Run on the live article, it emits what the reference's reparse of
+    the serialized article (readability_test.go:113-114) would hold: a
+    maximal run of sibling non-element nodes (through doctypes and
+    empty-named ``<a:>`` elements, which serialize no tag) is ONE text
+    span decoded from its serialized form (the reparse's double decode,
+    ``&amp;#65;`` -> ``A``), and an element whose children serialize to
+    nothing is childless.  Where the serialized article would not parse
+    back into the article's tree (text that reads as markup, ``<`` + a
+    letter, ``/``, ``!`` or ``?``), it emits what the article holds.
     """
     spans: list[Span] = []
-    offset = 0
+    run: list[str] = []
 
     def emit(kind: str, text: str, media_ref: str = "") -> None:
-        nonlocal offset
-        spans.append(Span(kind, text, media_ref, offset))
-        offset += 1
+        spans.append(Span(kind, text, media_ref, len(spans)))
+
+    def flush_run() -> None:
+        if run:
+            text = MULTIPLE_WHITESPACES.sub(" ", decode_html("".join(run))).strip()
+            run.clear()
+            if text:
+                emit("text", text)
 
     stack: list[object] = list(reversed(container.child_nodes))
     while stack:
         item = stack.pop()
         if isinstance(item, str):
+            flush_run()
             emit("markup", item)
             continue
         n = item
-        if n.node_type == TEXT_NODE:
-            text = MULTIPLE_WHITESPACES.sub(" ", n.get_text_content()).strip()
-            if text:
-                emit("text", text)
-        elif n.node_type == ELEMENT_NODE:
-            if n.local_name in MEDIA_TAGS:
-                emit(n.local_name, _open_tag_repr(n), n.get_attribute("src"))
-            else:
-                emit("markup", _open_tag_repr(n))
-            if n.child_nodes:
-                stack.append(f"</{n.local_name}>")
-                stack.extend(reversed(n.child_nodes))
-            elif n.local_name not in MEDIA_TAGS:
-                emit("markup", f"</{n.local_name}>")
+        if n.node_type != ELEMENT_NODE:
+            run.append(n.get_inner_html())
+            continue
+        local = n.local_name
+        if not local:
+            stack.extend(reversed(n.child_nodes))
+            continue
+        flush_run()
+        media = local in MEDIA_TAGS
+        if media:
+            emit(local, _open_tag_repr(n), n.get_attribute("src"))
+        else:
+            emit("markup", _open_tag_repr(n))
+        if not media or not _serializes_empty(n):
+            stack.append(f"</{local}>")
+            stack.extend(reversed(n.child_nodes))
+    flush_run()
     return spans
 
 
 def html_fragment_to_normalized_spans(html: str) -> list[Span]:
     """Parse an HTML fragment with the kernel DOM and emit normalized spans.
 
-    Used for both sides of the golden comparison: the engine's serialized
-    article and the fixture's expected.html go through the same parser and
-    the same normalization, mirroring how the reference re-parses both sides
-    before comparing (readability_test.go:113-114).
+    The string entry point: golden's expected.html side, and the
+    serialize+reparse reference the article walk is tested against.
     """
     return dom_to_spans(parse_html(html, ""))

@@ -1028,19 +1028,13 @@ def _fast_scan(s: str, b: _DOMBuilder) -> None:
             i = j + 1
 
 
-# observability for tests/benchmarks: how often the fast path holds
-PARSE_STATS = {"fast": 0, "fallback": 0}
-
-
 def parse_html(html_src: str, url: str = "") -> Node:
     """Parse an HTML string into a document node (domparser.go:1133-1155)."""
     doc = new_document(url)
     builder = _DOMBuilder(doc)
     try:
         _fast_scan(html_src, builder)
-        PARSE_STATS["fast"] += 1
     except _Abort:
-        PARSE_STATS["fallback"] += 1
         doc = new_document(url)
         builder = _DOMBuilder(doc)
         builder.feed(html_src)

@@ -4,9 +4,11 @@ fixtures (reference: readability_test.go:90-200).
 Each fixture runs with base URI ``http://fakehost/test/page.html`` and
 ``ClassesToPreserve("caption")`` (readability_test.go:92-100).  Content
 equality is exact span-sequence equality ``(kind, text, media_ref, order)``
-over the normalized output codec, applied symmetrically to the engine's
-serialized article and the fixture's expected.html; metadata fields are
-compared exactly (missing JSON keys == empty string / false).
+over the normalized output codec: the engine side is ``dom_to_spans`` over
+the article DOM ``parse_document`` returns (exactly what ``extract_one``
+emits), the expected side is the same walk over a parse of the fixture's
+expected.html; metadata fields are compared exactly (missing JSON keys ==
+empty string / false).
 """
 
 from __future__ import annotations
@@ -15,9 +17,9 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from ..codec.spans import html_fragment_to_normalized_spans
+from ..codec.spans import dom_to_spans, html_fragment_to_normalized_spans
 from .options import Options
-from .readability import Readability
+from .readability import parse_document
 from .readerable import is_probably_readerable
 
 FIXTURES_DIR = "/root/reference/testdata/test-pages"
@@ -64,14 +66,15 @@ def run_fixture(name: str, root: str = FIXTURES_DIR, check_readerable: bool = Tr
     with open(os.path.join(base, "expected-metadata.json"), encoding="utf-8") as f:
         expected_meta = json.load(f)
 
-    try:
-        reader = Readability(source, BASE_URI, Options(classes_to_preserve=["page", "caption"]))
-        result = reader.parse()
-    except Exception as exc:  # noqa: BLE001 - harness surfaces everything
-        fr.error = f"{type(exc).__name__}: {exc}"
+    # the engine's own path: extract_one's parse_document + article walk
+    result, article, status = parse_document(
+        source, BASE_URI, Options(classes_to_preserve=["page", "caption"])
+    )
+    if result is None:
+        fr.error = f"status {status}"
         return fr
 
-    actual_spans = html_fragment_to_normalized_spans(result.html_content)
+    actual_spans = dom_to_spans(article)
     expected_spans = html_fragment_to_normalized_spans(expected_html)
     fr.content_ok = [s.as_tuple() for s in actual_spans] == [
         s.as_tuple() for s in expected_spans

@@ -15,6 +15,7 @@ from go_readability_spark.codec.spans import (
 )
 from go_readability_spark.kernel.dom import parse_html
 from go_readability_spark.kernel.golden import FIXTURES_DIR
+from go_readability_spark.kernel.readability import parse_document
 
 
 @pytest.mark.requires_reference
@@ -92,13 +93,36 @@ def test_output_codec_skips_empty_text():
     assert [s.text for s in spans] == ["<div>", "<p>", "x", "</p>", "</div>"]
 
 
-def test_serialize_reparse_stability():
-    """Engine-side spans from the live DOM == spans from serialize+reparse."""
-    html = '<div><p>a &amp; b</p><img src="i.png"/><ul><li>x</li></ul></div>'
-    doc = parse_html(html, "")
-    direct = dom_to_spans(doc)
-    reparsed = html_fragment_to_normalized_spans(doc.get_inner_html())
-    assert [s.as_tuple() for s in direct] == [s.as_tuple() for s in reparsed]
+_FILL = "The quick brown fox jumps over the lazy dog, again and again. " * 8
+
+
+@pytest.mark.parametrize(
+    "inner",
+    [
+        pytest.param(
+            '<div><p>a &amp; b</p><img src="i.png"/><ul><li>x</li></ul></div>', id="plain"
+        ),
+        pytest.param('<p>left <span class="share">Share this</span> right</p>', id="share-removed"),
+        pytest.param("<p>left <form>x</form> right</p>", id="form-removed"),
+        pytest.param("<p>a<![CDATA[ b ]]>c</p>", id="cdata-splits-run"),
+        pytest.param("<p>a<!doctype html>b</p>", id="mid-body-doctype"),
+        # the CDATA text serializes as &amp;#65;, which the reparse decodes to A
+        pytest.param("<p>x <b><![CDATA[&#65;]]></b></p>", id="double-decode"),
+        pytest.param('<p><img src="x.png"><!doctype html></img> tail</p>', id="doctype-only-child"),
+    ],
+)
+def test_serialize_reparse_stability(inner):
+    """The output spans of the live article equal those of its serialized
+    form reparsed: each input pins one normalization the reparse applies
+    (text runs merged across removed nodes, CDATA and doctypes; the
+    reparse's double decode; an element whose only child serializes to
+    nothing is childless)."""
+    page = f"<html><body><article><p>{_FILL}</p>{inner}<p>{_FILL}</p></article></body></html>"
+    result, article, status = parse_document(page, "http://fakehost/test/page.html")
+    assert status == "ok"
+    walk = [s.as_tuple() for s in dom_to_spans(article)]
+    reparsed = html_fragment_to_normalized_spans(result.html_content)
+    assert walk == [s.as_tuple() for s in reparsed]
 
 
 def test_media_tag_with_quoted_gt_and_comments():

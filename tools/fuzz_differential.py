@@ -12,7 +12,14 @@ Reuses the two strongest invariants in the suite, at open-ended volume:
   equals ``scan_readerable`` over ``parse_html(html, uri)`` for any uri,
   and ``parse_document(prescreen=True)`` gives the two-step status --
   ``not_readerable`` exactly when the standalone check is false, else the
-  ``prescreen=False`` status.
+  ``prescreen=False`` status;
+* one walk per article (``_assert_one_walk``): the soup, wrapped in an
+  article page, that ``parse_document`` extracts has
+  ``dom_to_spans(article)`` equal to the reparse of its serialized form,
+  ``html_fragment_to_normalized_spans(result.html_content)``, unless the
+  article is in the residual class (``_residual``: the serialized article
+  does not parse back into the article's tree, and the walk emits what
+  the article holds).  Residual cases are counted.
 
 Inputs: random fragment soup over an adversarial alphabet plus mutated
 slices of the real golden pages (deterministic ``synth_html`` pages when
@@ -20,8 +27,8 @@ the golden corpus is absent).  Usage::
 
     python tools/fuzz_differential.py [seconds=600] [seed=20260818]
 
-Prints ``N cases, F failures`` and any failing input.  The r4 closing
-session ran 5,461,164 cases with 0 failures (~15 min).
+Prints ``N cases, F failures, R walk residuals`` and any failing input.
+The r4 closing session ran 5,461,164 cases with 0 failures (~15 min).
 """
 
 from __future__ import annotations
@@ -30,13 +37,22 @@ import glob
 import importlib.util
 import os
 import random
+import re
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from go_readability_spark.kernel.dom import parse_html  # noqa: E402
+from go_readability_spark.codec.spans import (  # noqa: E402
+    dom_to_spans,
+    html_fragment_to_normalized_spans,
+)
+from go_readability_spark.kernel.dom import (  # noqa: E402
+    CDATA_CONTENT_ELEMENTS,
+    ELEMENT_NODE,
+    parse_html,
+)
 from go_readability_spark.kernel.readability import parse_document  # noqa: E402
 from go_readability_spark.kernel.readerable import (  # noqa: E402
     is_probably_readerable,
@@ -78,6 +94,9 @@ FRAGS = [
     "<img alt=it's src=l.png>", "<img alt=he\"said src=m.png>",
     "<script><!-- '</script>' --></script>", "<style><!--", "<a b=c'd>",
     "<img alt=\"x src=bare'quote.png>",
+    # a prefixed raw-text name: the element is a <title> whose content
+    # was tokenized as markup
+    "<svg:title>", "</svg:title>",
 ]
 
 # structural wrappers: embed ANY generated soup inside a comment, CDATA
@@ -121,6 +140,68 @@ def _assert_one_dom(s: str) -> None:
     assert gated == want, f"prescreen status {gated!r}, two-step {want!r}"
 
 
+_FILL = "The quick brown fox jumps over the lazy dog, again and again. " * 8
+# text the tokenizer reads as markup
+_MARKUP_IN_TEXT = re.compile(r"<[a-zA-Z/!?]")
+
+
+def _residual(article) -> bool:
+    """True when the serialized article does not parse back into the
+    article's own tree, so the reparse cannot equal the walk:
+
+    * a text run (grouped as ``dom_to_spans`` groups them) serializes to
+      text the tokenizer reads as markup (``<p a="bx> <img src=x.png>``);
+    * an element's local name does not start with an ASCII letter
+      (``<ns:&tag>`` keeps ``&tag``), so its serialized tag reads as text;
+    * an element is named ``html``: the reparse's root cleanup
+      (domparser.go:1142-1153) keeps only that element;
+    * an element named like a raw-text element (``<svg:title>`` keeps
+      ``title``) holds an element, which the reparse reads as raw text.
+    """
+    run: list[str] = []
+    stack = list(reversed(article.child_nodes))
+    while stack:
+        n = stack.pop()
+        if n is None or n.node_type == ELEMENT_NODE and n.local_name:
+            if _MARKUP_IN_TEXT.search("".join(run)):
+                return True
+            run.clear()
+        if n is None:
+            continue
+        if n.node_type != ELEMENT_NODE:
+            run.append(n.get_inner_html())
+            continue
+        local = n.local_name
+        if local and (
+            not ("a" <= local[0] <= "z")
+            or local == "html"
+            or local in CDATA_CONTENT_ELEMENTS and n.children
+        ):
+            return True
+        if local:
+            stack.append(None)
+        stack.extend(reversed(n.child_nodes))
+    return bool(_MARKUP_IN_TEXT.search("".join(run)))
+
+
+def _assert_one_walk(s: str) -> bool:
+    """True when ``s``, wrapped in an article page, extracts to an article
+    in the residual class whose walk differs from its reparse."""
+    if len(s) % 2:
+        page = f"<html><body><article><p>{_FILL}</p>{s}<p>{_FILL}</p></article></body></html>"
+    else:
+        page = f"<html><body><article><p>{_FILL}{s}{_FILL}</p><p>{_FILL}</p></article></body></html>"
+    result, article, status = parse_document(page, _URIS[0])
+    if status != "ok":
+        return False
+    walk = [x.as_tuple() for x in dom_to_spans(article)]
+    reparse = [x.as_tuple() for x in html_fragment_to_normalized_spans(result.html_content)]
+    if walk == reparse:
+        return False
+    assert _residual(article), f"walk {walk} != reparse {reparse}"
+    return True
+
+
 def main() -> int:
     seconds = float(sys.argv[1]) if len(sys.argv) > 1 else 600.0
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260818
@@ -141,7 +222,7 @@ def main() -> int:
 
     rng = random.Random(seed)
     deadline = time.time() + seconds
-    n = fails = 0
+    n = fails = residuals = 0
     while time.time() < deadline:
         n += 1
         mode = rng.random()
@@ -170,16 +251,17 @@ def main() -> int:
             s = s[:i] + rng.choice("<>\"'=&;!-/ ") + s[i:]
         if rng.random() < 0.12:
             s = _wrap(rng, s) + (rng.choice(FRAGS) if rng.random() < 0.5 else "")
-        for check in (fs._assert_equivalent, tc._assert_media_subseq, _assert_one_dom):
+        for check in (fs._assert_equivalent, tc._assert_media_subseq, _assert_one_dom, _assert_one_walk):
             try:
-                check(s)
+                if check(s) is True and check is _assert_one_walk:
+                    residuals += 1
             except AssertionError as e:
                 fails += 1
                 print("FAIL:", repr(s[:200]))
                 print(e)
         if fails >= 5:
             break
-    print(f"{n} cases, {fails} failures")
+    print(f"{n} cases, {fails} failures, {residuals} walk residuals")
     return 1 if fails else 0
 
 
