@@ -4,9 +4,9 @@ driver's testdata tables, each with a DuckDB oracle twin.
 These are the cross-document dataflow shapes the extraction pipeline uses:
 bucketed metrics aggregation, broadcast anti-join resume, full-outer golden
 comparison, salted-key distribution, readerable pre-screen — plus the
-general agg/join/window/sort shapes (pricing summary, dim joins, top-k,
-sessionization, time windows) that make the engine a complete analytics
-surface.
+window/join/rollup shapes the registry checks over the events and orders
+tables (top-k, sessionization, as-of and range joins, hourly segment
+rollup, view→click attribution, ROLLUP).
 
 Cross-engine determinism: double SUMs are order-dependent, so every summed
 double goes through DECIMAL (exact, associative) and the final value is
@@ -192,85 +192,6 @@ FROM scored GROUP BY source ORDER BY source
 """
 
 
-# ----------------------------------------------------------- pricing summary
-def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: wide hash-agg with decimal-exact sums (order-independent
-    → reproducible across any partitioning)."""
-    li = _t(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= F.expr("timestamp'1998-09-02 00:00:00'"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(
-                (dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).cast(
-                    "decimal(28,8)"
-                )
-            )
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def pricing_summary_oracle_sql() -> str:
-    return """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-       CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,4))
-                     * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
-                     AS DECIMAL(28,8))) AS DOUBLE) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-# ------------------------------------------------------------- dim join tree
-def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-join shape: fact × broadcast dim chain (customer→nation→region).
-    All three dims are broadcast — zero shuffle on the dim side."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    dims = (
-        customer.join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .select("c_custkey", "r_name")
-    )
-    return (
-        orders.join(F.broadcast(dims), orders.o_custkey == dims.c_custkey)
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("revenue"),
-        )
-        .orderBy("r_name")
-    )
-
-
-def revenue_by_region_oracle_sql() -> str:
-    return """
-SELECT r.r_name AS r_name, count(*) AS n_orders,
-       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name ORDER BY r_name
-"""
-
-
 # ---------------------------------------------------------------- top-k window
 def topk_orders_per_customer(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """Per-group top-k: window row_number with a total (tie-broken) order —
@@ -385,22 +306,6 @@ def _hourly_rollup(rows: DataFrame, key: str) -> DataFrame:
         )
         .orderBy("hour", key)
     )
-
-
-def hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation: hourly counts + exact decimal sums per
-    event type."""
-    return _hourly_rollup(_t(spark, sf_dir, "events"), "event_type")
-
-
-def hourly_event_rollup_oracle_sql() -> str:
-    return """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY 1, 2 ORDER BY hour, event_type
-"""
 
 
 def segment_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,39 +543,6 @@ FROM e a JOIN e b
  AND b.ts_us - a.ts_us BETWEEN 0 AND {RANGE_WINDOW_US}
  AND (a.ts_us < b.ts_us OR (a.ts_us = b.ts_us AND a.event_id < b.event_id))
 GROUP BY type_a, type_b ORDER BY type_a, type_b
-"""
-
-
-# ------------------------------------------------------------ JSON extraction
-def events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured projection: pull a typed field out of the JSON
-    ``props`` column and aggregate it — the log-enrichment shape.  JSON
-    path evaluation (`get_json_object`) is a JVM-side codegen'd expression
-    applied map-side before the one low-cardinality rollup shuffle; at
-    100 TB the scan dominates, exactly like the other textstats passes."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.count("k").alias("n_with_k"),
-            F.sum("k").alias("sum_k"),
-            F.max("k").alias("max_k"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def events_props_json_oracle_sql() -> str:
-    return """
-WITH e AS (
-  SELECT event_type, CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events
-)
-SELECT event_type, count(*) AS n_events, count(k) AS n_with_k,
-       CAST(sum(k) AS BIGINT) AS sum_k, max(k) AS max_k
-FROM e GROUP BY event_type ORDER BY event_type
 """
 
 

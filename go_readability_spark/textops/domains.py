@@ -1,32 +1,23 @@
-"""Host-level corpus shaping: per-host contribution caps and
-quality-weighted deterministic sampling.
+"""Host-level corpus shaping: per-host boilerplate removal, the chained
+shaping funnel, and the leakage-safe train/val/test split.
 
-Two stages every web-scale pretraining pipeline runs between dedup and
+Stages every web-scale pretraining pipeline runs between extraction and
 mixture packing (no reference equivalent — the reference,
 readability.go:265-403, only resolves URIs inside one document; shaping
 the corpus by fetch host is an engine capability):
 
-* **domain_caps** — cap how many documents any single host contributes
-  (RefinedWeb / FineWeb-style "site caps"): without it, a handful of
-  mega-hosts (forums, wikis, mirrors) dominate the token mixture.  The
-  keeper rule is highest quality first (the shared
-  ``textstats.quality_scores`` composite), ties by least doc_id.
-* **quality_weighted_sample** — reproducible sampling where a document's
-  keep probability is proportional to its quality score (the
-  upsample-good/downsample-bad stage).  No ``rand()`` anywhere: the
-  uniform draw is an md5 bucket of the doc_id, so the sample is
-  identical per engine, per partitioning, and per rerun — the same
-  determinism recipe as ``textstats.stratified_sample``.
+* **host_boilerplate_removal** — delete the word blocks that recur across
+  a host's documents (site templates: navigation, headers, footers).
+* **corpus_shaping_funnel** — boilerplate removal → quality gates on the
+  cleaned text → a per-host contribution cap of ``DOMAIN_CAP`` documents
+  (RefinedWeb / FineWeb-style "site caps", highest quality first, ties by
+  least doc_id) → per-source rollup.
+* **leakage_safe_split** — deterministic md5 split buckets drawn per
+  near-dup group, so near-duplicates never straddle train and eval.
 
-Scale shapes (100 TB): ``domain_caps`` filters on ``row_number() <= K``
-over the host window, which Spark plans as WindowGroupLimit — each map
-task pre-prunes its partition to K rows per host BEFORE the exchange, so
-a 10^8-page mega-host ships ~K rows per upstream partition instead of
-10^8 (machine-checked in tests/test_plans.py).  ``quality_weighted_sample``
-is a pure map-side filter plus one low-cardinality rollup.  Host
-extraction here parses the synthesized fetch URL; a production run swaps
-in a public-suffix-list lookup (a broadcast map) to group by registrable
-domain instead of raw host — same plan shape.
+Host extraction here parses the synthesized fetch URL; a production run
+swaps in a public-suffix-list lookup (a broadcast map) to group by
+registrable domain instead of raw host — same plan shape.
 """
 
 from __future__ import annotations
@@ -39,11 +30,6 @@ from .urls import _URL_RX, _synth_url_sql
 # Keep at most this many documents per host (test-scale constant; a real
 # run sizes it from the target mixture, e.g. FineWeb's per-domain caps).
 DOMAIN_CAP = 3
-
-# quality_hbp ranges over [0, 20000] (see textstats.quality_scores), so a
-# draw uniform over [0, QW_SCALE) kept iff draw < quality_hbp keeps a
-# document with probability quality_hbp / 20000 — linear in quality.
-QW_SCALE = 20000
 
 
 def _stop_bp_sql(engine: str, col: str = "text") -> str:
@@ -85,50 +71,6 @@ def _host_sql(engine: str) -> str:
     """Lowercased fetch-URL host for each document row, per engine
     (the synthetic URL derivation shared with textops.urls)."""
     return f"lower(regexp_extract(({_synth_url_sql(engine)}), '{_URL_RX}', 2))"
-
-
-def domain_caps(documents: DataFrame, cap: int = DOMAIN_CAP) -> DataFrame:
-    """Per-host contribution cap: the ``cap`` highest-quality documents
-    of every host (ties by least doc_id), with their within-host rank —
-    the rows a capped corpus RETAINS.
-
-    The rank filter is ``row_number() <= cap``, which Catalyst rewrites
-    to WindowGroupLimit: every upstream partition is pruned to at most
-    ``cap`` rows per host map-side, so the host exchange moves O(hosts ×
-    cap × partitions) rows, never the corpus — the shape that survives a
-    mega-host at 100 TB."""
-    per_doc = documents.selectExpr(
-        "doc_id",
-        f"({_host_sql('spark')}) AS host",
-        f"({_quality_hbp_sql('spark')}) AS quality_hbp",
-    )
-    w = Window.partitionBy("host").orderBy(
-        F.col("quality_hbp").desc(), F.col("doc_id").asc()
-    )
-    return (
-        per_doc.withColumn("host_rank", F.row_number().over(w))
-        .filter(F.col("host_rank") <= cap)
-        .orderBy("host", "host_rank")
-    )
-
-
-def domain_caps_oracle_sql(cap: int = DOMAIN_CAP) -> str:
-    return f"""
-WITH per_doc AS (
-  SELECT doc_id,
-         ({_host_sql('duckdb')}) AS host,
-         ({_quality_hbp_sql('duckdb')}) AS quality_hbp
-  FROM documents
-), ranked AS (
-  SELECT doc_id, host, quality_hbp,
-         row_number() OVER (PARTITION BY host ORDER BY quality_hbp DESC, doc_id)
-           AS host_rank
-  FROM per_doc
-)
-SELECT doc_id, host, quality_hbp, CAST(host_rank AS INT) AS host_rank
-FROM ranked WHERE host_rank <= {cap}
-ORDER BY host, host_rank
-"""
 
 
 # Boilerplate detection constants (test-scale: the synthetic corpus is
@@ -308,49 +250,6 @@ SELECT doc_id, host, n_blocks, n_removed_blocks,
        md5(clean_text) AS clean_fp
 FROM cleaned
 ORDER BY doc_id
-"""
-
-
-def quality_weighted_sample(documents: DataFrame) -> DataFrame:
-    """Quality-weighted deterministic sample rollup per source: each doc
-    is kept with probability ``quality_hbp / {QW_SCALE}`` via an md5
-    uniform draw on its doc_id — reproducible across engines, reruns,
-    and partitionings (no ``rand()``).  Pure map-side filter + one
-    low-cardinality hash aggregate; nothing corpus-sized shuffles."""
-    draw = F.expr(
-        "cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"
-    ) % QW_SCALE
-    flagged = documents.select(
-        "source",
-        F.size(F.split(F.col("text"), " ")).alias("n_words"),
-        (draw < F.expr(f"({_quality_hbp_sql('spark')})")).alias("keep"),
-    )
-    return (
-        flagged.groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("keep").cast("long")).alias("n_kept"),
-            F.sum(
-                F.when(F.col("keep"), F.col("n_words")).otherwise(F.lit(0)).cast("long")
-            ).alias("kept_tokens"),
-        )
-        .orderBy("source")
-    )
-
-
-def quality_weighted_sample_oracle_sql() -> str:
-    return f"""
-WITH flagged AS (
-  SELECT source,
-         len(string_split(text, ' ')) AS n_words,
-         (('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % {QW_SCALE})
-           < ({_quality_hbp_sql('duckdb')}) AS keep
-  FROM documents
-)
-SELECT source, count(*) AS n_docs,
-       CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-       CAST(sum(CASE WHEN keep THEN n_words ELSE 0 END) AS BIGINT) AS kept_tokens
-FROM flagged GROUP BY source ORDER BY source
 """
 
 

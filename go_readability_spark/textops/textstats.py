@@ -884,301 +884,3 @@ FROM packed
 GROUP BY source, budget_tokens
 ORDER BY source
 """
-
-
-# Training-sequence capacity for pack_sequences: small enough that sf0.01
-# documents straddle boundaries (the interesting case), realistic shape
-# (pretraining pipelines pack 2k-8k-token sequences).
-PACK_SEQ_LEN = 2048
-
-
-def pack_sequences(documents: DataFrame, seq_len: int = PACK_SEQ_LEN) -> DataFrame:
-    """Concat-and-chunk sequence packing: lay every document end-to-end in
-    a deterministic per-source order and chop the stream into fixed
-    ``seq_len``-token training sequences — the packing stage that turns a
-    filtered corpus into pretraining batches (documents straddle sequence
-    boundaries; nothing is padded or dropped).  Per document:
-    (doc_id, source, n_tokens, tok_start, seq_first, seq_last), where
-    ``tok_start`` is the document's offset in its source's token stream
-    and ``seq_first``/``seq_last`` the sequence ids it lands in.
-
-    No reference equivalent (corpus tier).  Deterministic like
-    ``corpus_mixture``: the stream order is the same md5-hash admission
-    recipe, so a re-run, another partitioning, or the DuckDB oracle lay
-    out the SAME stream.  Whitespace tokens (``split`` on ' ') — the
-    empty string still yields one token, so ``n_tokens >= 1`` always and
-    ``seq_last = (tok_start + n_tokens - 1) div seq_len`` needs no
-    zero-length guard.
-
-    Scale shape: ONE cumulative-sum window per source (the only
-    exchange); everything after is map-side integer division.  Window
-    skew follows source size, same story as ``corpus_mixture`` — at
-    100 TB pre-aggregate per (source, hash-bucket) and prefix-sum bucket
-    subtotals, which leaves this operator's math unchanged.  All output
-    columns BIGINT on both engines (DuckDB window SUM is HUGEINT —
-    cast; see the oracle).
-    """
-    key = F.expr(
-        "cast(conv(substr(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint)"
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy(key.asc(), F.col("doc_id").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sized = documents.select(
-        "doc_id",
-        "source",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    )
-    return (
-        sized.withColumn(
-            "tok_start", F.sum("n_tokens").over(w) - F.col("n_tokens")
-        )
-        .select(
-            "doc_id",
-            "source",
-            "n_tokens",
-            "tok_start",
-            F.expr(f"tok_start div {seq_len}").alias("seq_first"),
-            F.expr(f"(tok_start + n_tokens - 1) div {seq_len}").alias("seq_last"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def pack_sequences_oracle_sql(seq_len: int = PACK_SEQ_LEN) -> str:
-    return f"""
-WITH sized AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT AS key
-  FROM documents
-), laid AS (
-  SELECT doc_id, source, n_tokens,
-         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY key ASC, doc_id ASC
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              - n_tokens AS BIGINT) AS tok_start
-  FROM sized
-)
-SELECT doc_id, source, n_tokens, tok_start,
-       tok_start // {seq_len} AS seq_first,
-       (tok_start + n_tokens - 1) // {seq_len} AS seq_last
-FROM laid
-ORDER BY doc_id
-"""
-
-
-# Length-histogram bucket width in words (test-scale; a production run
-# uses log-spaced buckets over the same floor-division shape).
-HIST_BUCKET_W = 25
-
-
-def length_histogram(documents: DataFrame) -> DataFrame:
-    """Per-source document-length histogram: doc counts and token mass per
-    ``HIST_BUCKET_W``-word bucket — the mixture diagnostic a pipeline
-    reads before setting packing/truncation lengths (too-short and
-    too-long tails per source).  Integer floor-division bucketing, one
-    low-cardinality hash aggregate over (source, bucket); nothing
-    corpus-sized shuffles.  No reference equivalent (corpus tier)."""
-    b = HIST_BUCKET_W
-    binned = documents.select(
-        "source", F.size(F.split(F.col("text"), " ")).alias("n_words")
-    ).select(
-        "source",
-        "n_words",
-        F.expr(f"CAST(n_words AS BIGINT) div {b}").alias("bucket"),
-    )
-    return (
-        binned.groupBy("source", "bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.col("n_words").cast("long")).alias("total_words"),
-        )
-        .select(
-            "source",
-            (F.col("bucket") * b).alias("bucket_lo"),
-            ((F.col("bucket") + 1) * b - 1).alias("bucket_hi"),
-            "n_docs",
-            "total_words",
-        )
-        .orderBy("source", "bucket_lo")
-    )
-
-
-def length_histogram_oracle_sql() -> str:
-    b = HIST_BUCKET_W
-    return f"""
-WITH binned AS (
-  SELECT source,
-         len(string_split(text, ' ')) AS n_words,
-         CAST(len(string_split(text, ' ')) AS BIGINT) // {b} AS bucket
-  FROM documents
-)
-SELECT source,
-       bucket * {b} AS bucket_lo,
-       (bucket + 1) * {b} - 1 AS bucket_hi,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_words) AS BIGINT) AS total_words
-FROM binned GROUP BY source, bucket ORDER BY source, bucket_lo
-"""
-
-
-# Unigram-rank vocabulary size (test-scale: the synthetic corpus has ~30
-# distinct words, so V=20 leaves a real out-of-vocabulary tail to
-# exercise the OOV arm; production sizes V to the broadcast budget).
-LM_VOCAB_V = 20
-
-
-def unigram_rank_score(documents: DataFrame) -> DataFrame:
-    """Corpus-informed per-document quality score: the mean corpus
-    frequency RANK of a document's tokens (×10000, integer floor
-    division) plus its out-of-vocabulary token count — an integer-exact
-    stand-in for the CCNet/KenLM perplexity gate (common-word-heavy
-    prose scores low, rare-token noise scores high) with no floats, so
-    both engines agree bit-for-bit where a log-prob model would drift.
-
-    Scale shape: two passes — (1) a unigram frequency aggregate pruned to
-    the top-``LM_VOCAB_V`` ranks (deterministic ties: freq desc, word
-    asc), which is small by construction and **broadcast**; (2) a
-    map-side explode + broadcast left join + per-doc aggregate.  The
-    corpus never shuffles on the word key in the scoring pass; OOV
-    tokens take rank V+1.  No reference equivalent (corpus tier)."""
-    v = LM_VOCAB_V
-    toks = documents.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
-    )
-    # top-V selection via orderBy+limit (TakeOrderedAndProject: each task
-    # keeps its local top-V, the driver merges V-row heaps) — the ranking
-    # window then runs over only V rows, so the unpartitioned window never
-    # sees the full vocabulary (which is 10^8+ words at real scale)
-    top = (
-        toks.groupBy("word")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.col("c").desc(), F.col("word").asc())
-        .limit(v)
-    )
-    vocab = top.withColumn(
-        "rank",
-        F.row_number().over(Window.orderBy(F.col("c").desc(), F.col("word").asc())),
-    ).select("word", "rank")
-    scored = toks.join(F.broadcast(vocab), "word", "left").select(
-        "doc_id",
-        F.coalesce(F.col("rank"), F.lit(v + 1)).cast("long").alias("r"),
-        F.col("rank").isNull().cast("long").alias("oov"),
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("oov").alias("oov_words"),
-            F.expr("CAST(sum(r) * 10000 AS BIGINT) div count(*)").alias(
-                "mean_rank_x10k"
-            ),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def unigram_rank_score_oracle_sql() -> str:
-    v = LM_VOCAB_V
-    return f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-), freq AS (
-  SELECT word, count(*) AS c FROM toks GROUP BY word
-), vocab AS (
-  SELECT word, rank FROM (
-    SELECT word, row_number() OVER (ORDER BY c DESC, word) AS rank FROM freq
-  ) WHERE rank <= {v}
-), scored AS (
-  SELECT t.doc_id,
-         CAST(coalesce(x.rank, {v + 1}) AS BIGINT) AS r,
-         CASE WHEN x.rank IS NULL THEN 1 ELSE 0 END AS oov
-  FROM toks t LEFT JOIN vocab x USING (word)
-)
-SELECT doc_id,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(oov) AS BIGINT) AS oov_words,
-       CAST((sum(r) * 10000) // count(*) AS BIGINT) AS mean_rank_x10k
-FROM scored GROUP BY doc_id ORDER BY doc_id
-"""
-
-
-# Cross-source overlap: shingles shared by more sources than this are
-# uninformative stop-shingles AND quadratic pair-fanout hazards — drop
-# them before pairing (the same guard Dolma-style overlap audits apply).
-OVERLAP_MAX_DF = 10
-
-
-def source_overlap(documents: DataFrame) -> DataFrame:
-    """Cross-source contamination matrix: for every source pair, the
-    number of distinct word-{DECON_K}-shingles both contain — the
-    dataset-overlap audit run before mixing corpora (two "independent"
-    sources sharing many shingles are mirrors or siblings and would
-    double-count tokens in the mixture).
-
-    Scale shape: distinct (source, shingle-hash) is one hash agg on a
-    fixed-width key; shingles present in ≥2 and ≤{OVERLAP_MAX_DF} sources
-    survive (the DF cap bounds the per-shingle pair fan-out, so the
-    self-join can never go quadratic on a ubiquitous shingle); the pair
-    join is an equi-join on the shingle hash; the rollup key is
-    (source, source) — tiny.  No reference equivalent (corpus tier)."""
-    w = documents.select("source", F.split(F.col("text"), " ").alias("w")).filter(
-        F.size("w") >= DECON_K
-    )
-    # CASE WHEN guards the expression itself (CLAUDE.md sequence() trap)
-    sh = w.select(
-        "source",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(w) >= {DECON_K} THEN"
-                f" transform(sequence(0, size(w) - {DECON_K}),"
-                f" i -> md5(concat_ws(' ', slice(w, i + 1, {DECON_K}))))"
-                f" ELSE array() END"
-            )
-        ).alias("h"),
-    ).distinct()
-    dfc = (
-        sh.groupBy("h")
-        .agg(F.count("*").alias("n_src"))
-        .filter((F.col("n_src") >= 2) & (F.col("n_src") <= OVERLAP_MAX_DF))
-        .select("h")
-    )
-    kept = sh.join(dfc, "h")
-    a, b = kept.alias("a"), kept.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h")) & (F.col("a.source") < F.col("b.source")),
-        )
-        .groupBy(
-            F.col("a.source").alias("source_a"), F.col("b.source").alias("source_b")
-        )
-        .agg(F.count("*").alias("n_shared_shingles"))
-        .orderBy("source_a", "source_b")
-    )
-
-
-def source_overlap_oracle_sql() -> str:
-    return f"""
-WITH w AS (
-  SELECT source, string_split(text, ' ') AS w FROM documents
-  WHERE len(string_split(text, ' ')) >= {DECON_K}
-), sh AS (
-  SELECT DISTINCT source,
-         unnest(list_transform(range(0, len(w) - {DECON_K} + 1),
-                               i -> md5(array_to_string(w[i + 1 : i + {DECON_K}], ' ')))) AS h
-  FROM w
-), dfc AS (
-  SELECT h FROM sh GROUP BY h
-  HAVING count(*) >= 2 AND count(*) <= {OVERLAP_MAX_DF}
-), kept AS (
-  SELECT source, h FROM sh WHERE h IN (SELECT h FROM dfc)
-)
-SELECT a.source AS source_a, b.source AS source_b,
-       CAST(count(*) AS BIGINT) AS n_shared_shingles
-FROM kept a JOIN kept b ON a.h = b.h AND a.source < b.source
-GROUP BY a.source, b.source
-ORDER BY source_a, source_b
-"""

@@ -74,11 +74,12 @@ def test_no_accidental_cross_product_or_row_udf(spark, name):
 
 
 def test_pushdown_reaches_scan(spark):
-    """Representative pushdown checks: the pricing filter and the
-    embedding query-id filters must land in the parquet scan."""
+    """Representative pushdown checks: the attribution rollup's click
+    filter and the embedding query-id filters must land in the parquet
+    scan."""
     e = _entry()
-    plan = _plan(_all_queries(e)["pricing_summary"](spark, SF_DIR))
-    assert "PushedFilters: [IsNotNull(l_shipdate)" in plan
+    plan = _plan(e.queries()["view_click_attribution"](spark, SF_DIR))
+    assert "PushedFilters: [IsNotNull(event_type), EqualTo(event_type,click)" in plan
     plan = _plan(e.queries()["similarity_cosine_topk"](spark, SF_DIR))
     assert "LessThan(vec_id,8)" in plan
 

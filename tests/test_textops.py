@@ -2,7 +2,6 @@
 oracle must match DuckDB value-for-value at sf0.001 (the driver runs the
 same comparison at sf0.01 — tools/check_oracles.py mirrors it)."""
 
-import math
 import os
 import sys
 
@@ -11,31 +10,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.check_oracles import duck_views, normalize
+
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = []
-    for row in rows:
-        vals = []
-        for i in order:
-            v = row[i]
-            if isinstance(v, float):
-                v = "nan" if math.isnan(v) else f"{v:.10g}"
-            elif hasattr(v, "isoformat"):
-                v = v.isoformat()
-            elif isinstance(v, (list, tuple)):
-                v = str(list(v))
-            else:
-                v = str(v)
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort()
-    return out
 
 
 # Extraction-chained queries use pinned-constant oracles computed from the
@@ -47,18 +24,9 @@ SF_DIR_PINNED = _entry_mod.PINNED_SF_DIR
 PINNED_SF01 = _entry_mod.PINNED_ORACLES
 
 
-def _duck_con(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
-
 @pytest.fixture(scope="module")
 def duck():
-    con = _duck_con(SF_DIR)
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -87,7 +55,7 @@ def test_query_matches_oracle(spark, duck, name):
     e = _entry()
     if name in PINNED_SF01:
         sdf = _all_queries(e)[name](spark, SF_DIR_PINNED)
-        con = _duck_con(SF_DIR_PINNED)
+        con = duck_views(SF_DIR_PINNED)
         try:
             res = con.sql(_all_oracles(e)[name])
             drows = res.fetchall()
@@ -101,7 +69,7 @@ def test_query_matches_oracle(spark, duck, name):
         dcols = [d[0] for d in res.description]
     srows = [tuple(r) for r in sdf.collect()]
     assert sorted(sdf.columns) == sorted(dcols)
-    assert _normalize(srows, sdf.columns) == _normalize(drows, dcols)
+    assert normalize(srows, sdf.columns) == normalize(drows, dcols)
 
 
 def test_session_cache_caps_and_evicts(spark):
@@ -286,6 +254,25 @@ def test_every_query_has_oracle_unless_allowlisted():
     e = _entry()
     missing = set(_all_queries(e)) - set(_all_oracles(e)) - ROWS_ONLY_OK
     assert not missing, f"queries without oracle twins: {sorted(missing)}"
+
+
+def test_check_oracles_rejects_unknown_query(monkeypatch, capsys):
+    """A mistyped or retired query name fails the oracle mirror with exit 2
+    before any Spark session starts, instead of checking nothing and
+    passing."""
+    import tools.check_oracles as C
+    from go_readability_spark.spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("check_oracles built a Spark session")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    monkeypatch.setattr(
+        sys, "argv", ["check_oracles.py", SF_DIR, "dedup_exact", "no_such_query"]
+    )
+    assert C.main() == 2
+    err = capsys.readouterr().err
+    assert "no_such_query" in err and "dedup_exact" not in err
 
 
 def test_jaccard_pairs_across_length_bucket_boundary(spark):
@@ -550,38 +537,6 @@ def test_repetition_signals_matches_declarative_twin(spark):
     slow = _repetition_signals_declarative(docs)
     assert fast.schema == slow.schema
     assert [tuple(r) for r in fast.collect()] == [tuple(r) for r in slow.collect()]
-
-
-def test_pack_sequences_boundary_semantics(spark):
-    """Pin concat-and-chunk packing on a stream small enough to lay out by
-    hand: with seq_len=10 and one source, documents straddle boundaries
-    exactly when their token span crosses a multiple of 10, the stream is
-    gapless (each tok_start equals the previous doc's tok_start+n_tokens
-    in admission order), and empty text still occupies one token slot."""
-    from go_readability_spark.textops.textstats import pack_sequences
-
-    docs = spark.createDataFrame(
-        [
-            (1, "src1", " ".join(["w"] * 7)),   # 7 tokens
-            (2, "src1", " ".join(["w"] * 6)),   # 6 tokens
-            (3, "src1", ""),                    # empty text = 1 token
-            (4, "src1", " ".join(["w"] * 25)),  # spans 3+ sequences
-        ],
-        "doc_id long, source string, text string",
-    )
-    rows = {r.doc_id: r for r in pack_sequences(docs, seq_len=10).collect()}
-    assert {r.n_tokens for r in rows.values()} == {7, 6, 1, 25}
-    assert rows[3].n_tokens == 1  # '' splits to one empty token
-    # gapless stream in admission (tok_start) order
-    laid = sorted(rows.values(), key=lambda r: r.tok_start)
-    pos = 0
-    for r in laid:
-        assert r.tok_start == pos
-        assert r.seq_first == pos // 10
-        assert r.seq_last == (pos + r.n_tokens - 1) // 10
-        pos += r.n_tokens
-    # the 25-token doc spans at least three sequences wherever it lands
-    assert rows[4].seq_last - rows[4].seq_first >= 2
 
 
 def test_asof_carry_forward_semantics(spark):
@@ -1288,19 +1243,6 @@ def test_quality_hbp_sql_lockstep(spark):
         .count()
     )
     assert diff == 0
-
-
-def test_domain_caps_plans_window_group_limit(spark):
-    """The rank<=cap filter must plan as WindowGroupLimit with a map-side
-    partial BEFORE the host exchange (the mega-host scale guarantee the
-    module docstring claims) — two WindowGroupLimit nodes, partial first."""
-    from go_readability_spark.textops.domains import domain_caps
-
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    plan = domain_caps(docs)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("WindowGroupLimit") == 2
-    partial = plan.index("WindowGroupLimit", plan.index("WindowGroupLimit") + 1)
-    assert "Exchange" in plan[:partial], plan
 
 
 def test_host_boilerplate_hand_case(spark):

@@ -3,6 +3,9 @@ on Spark and its oracle_sql() twin on DuckDB at a given sf, compare
 row-count, schema width, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+Exits 1 on a mismatch, 2 when a named query is in neither queries() nor
+extra_queries().
 """
 
 from __future__ import annotations
@@ -15,9 +18,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+TABLES = "customer orders events documents embeddings".split()
 
 
 def normalize(rows, columns):
@@ -41,27 +42,38 @@ def normalize(rows, columns):
     return out
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    import __spark_entry__ as e
-    from go_readability_spark.spark.session import build_session
-
-    spark = build_session(cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
-
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table in ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+
+    import __spark_entry__ as e
 
     # extras: value-checked faces kept out of the 50-row driver registry —
     # the mirror gates them identically
+    all_queries = {**e.queries(), **e.extra_queries()}
+    unknown = sorted(only - all_queries.keys())
+    if unknown:
+        print("unknown queries:", " ".join(unknown), file=sys.stderr)
+        return 2
+
+    from go_readability_spark.spark.session import build_session
+
+    spark = build_session()
+    spark.sparkContext.setLogLevel("ERROR")
+
+    con = duck_views(sf_dir)
     oracles = {**e.oracle_sql(), **e.extra_oracle_sql()}
     failures = []
-    all_queries = {**e.queries(), **e.extra_queries()}
     for name, fn in all_queries.items():
         if only and name not in only:
             continue

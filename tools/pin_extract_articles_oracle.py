@@ -43,7 +43,7 @@ def main() -> int:
     import __spark_entry__ as e
     from go_readability_spark.spark.session import build_session
 
-    spark = build_session(cpus=8)
+    spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
     rows = e.queries()["extract_articles"](spark, e.PINNED_SF_DIR).collect()
     spark.stop()
