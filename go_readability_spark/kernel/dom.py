@@ -27,12 +27,21 @@ parser's *quirks*, because the golden corpus outputs depend on them:
 
 The tree is single-document, fully mutable, and never crosses a Spark row
 boundary: one instance lives only inside one vectorized-UDF batch iteration.
+
+``_scan`` is the engine's one HTML tokenizer: it reproduces html.parser
+3.11's ``feed`` + ``close`` token stream exactly (see the tokenizer
+section below), and both ``parse_html`` and the input span codec
+(``codec.spans.html_to_spans``) consume it.
 """
 
 from __future__ import annotations
 
 import re
+from html import unescape as _unescape_html
 from html.parser import HTMLParser as _HTMLParser
+from html.parser import attrfind_tolerant as _ATTRFIND
+from html.parser import locatestarttagend_tolerant as _LOCATE_START
+from html.parser import tagfind_tolerant as _TAGFIND
 from urllib.parse import urljoin
 
 from .regexps import ENTITY_REFERENCES, HTML_CHAR_CODES
@@ -688,6 +697,10 @@ _INTERESTING_LT = re.compile("<")
 class _DOMBuilder(_HTMLParser):
     """Tokenizer-driven tree builder mirroring domparser.go:1029-1155.
 
+    ``parse_html`` drives it with ``_scan``.  It stays an ``HTMLParser``
+    subclass so the tests can drive the same handlers with the stock
+    ``feed``, the reference ``_scan`` is checked against.
+
     Raw-text elements match the Go tokenizer's set minus script/noscript
     (which the reference explicitly opts out of raw-text mode for,
     domparser.go:1102-1104).
@@ -709,14 +722,6 @@ class _DOMBuilder(_HTMLParser):
     def clear_cdata_mode(self) -> None:  # keep '&' uninteresting after raw text
         super().clear_cdata_mode()
         self.interesting = _INTERESTING_LT
-
-    def updatepos(self, i: int, j: int) -> int:
-        # Line/column tracking is only consumed by getpos() (error
-        # reporting), which this builder never calls — but the base
-        # implementation counts newlines over every consumed token span,
-        # a measurable share of tokenizer time on large pages.  Skip it;
-        # callers only need the advanced cursor.
-        return j
 
     # -- text buffering ------------------------------------------------------
 
@@ -758,7 +763,11 @@ class _DOMBuilder(_HTMLParser):
             else:
                 alist.append([name, v])
 
-    def handle_starttag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
+    # ``start``/``end`` is the tag's source extent, which ``_scan`` reports
+    # to every consumer; the tree does not keep it
+    def handle_starttag(
+        self, tag: str, attrs: list[tuple[str, str | None]], start: int = 0, end: int = 0
+    ) -> None:
         self._flush_text()
         node = new_element(tag)
         if attrs:
@@ -768,7 +777,9 @@ class _DOMBuilder(_HTMLParser):
         # (domparser_test.go:357-367).
         self.stack.append(node)
 
-    def handle_startendtag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
+    def handle_startendtag(
+        self, tag: str, attrs: list[tuple[str, str | None]], start: int = 0, end: int = 0
+    ) -> None:
         self._flush_text()
         node = new_element(tag)
         if attrs:
@@ -823,84 +834,72 @@ class _DOMBuilder(_HTMLParser):
             self._finish_element(self.stack.pop())
 
 
-class _Abort(Exception):
-    """Fast scanner hit a construct outside its proven-equivalent subset."""
-
-
-# -- fast-path tokenizer ------------------------------------------------------
+# -- the tokenizer -------------------------------------------------------------
 #
-# ``html.parser``'s goahead/parse_starttag machinery dominates kernel parse
-# time (~40% profiled).  This scanner handles the WELL-FORMED subset with one
-# compiled match per tag and raises _Abort on anything outside it, at which
-# point parse_html falls back to the stock feed() path — so documents with
-# quirky markup get byte-identical handling by construction, and documents in
-# the subset get provably identical events (each pattern below consumes the
-# exact span the corresponding html.parser 3.11 regex would: tag-name /
-# attr-name / value classes are strict SUBSETS of tagfind_tolerant /
-# attrfind_tolerant, the end-tag pattern IS endtagfind, the comment close IS
-# _markupbase's ``--\s*>``, and the raw-text end pattern IS set_cdata_mode's).
-# Possessive quantifiers (3.11+) make non-matching tags fail without
-# backtracking.  Serializer output (the normalize-spans reparse) is always in
-# the subset, so round-trip reparses take the fast path unconditionally.
+# ``_scan`` is the engine's one HTML tokenizer: ``parse_html`` builds the DOM
+# from it and the input span codec (codec/spans.py) classifies media tags
+# from it.  It drives a consumer's handler methods exactly as html.parser
+# 3.11's ``feed`` + ``close`` would drive them on a ``_DOMBuilder``:
+# the same tokens, the same data, the same close()-time recovery, and an
+# AssertionError wherever the stock parser raises one.  Stock ``feed`` itself
+# runs only in the tests, as the reference this scanner is compared with.
 #
-# Aborting constructs: <! other than <!doctype/<!--, <?, tags with unquoted
-# '/'-or-'<'-bearing values, bare '='/empty values, '=='+ indicators,
-# truncated tags/comments at EOF — all rare in real corpora, absent from
-# synth pages.  ('='-LED attr names fast-path since r4: they close the
-# last real-page abort, clean-links.)
-
-# Two boundary rules keep this a true subset of html.parser's tokens:
+# html.parser's goahead/parse_starttag machinery dominated kernel parse
+# time (~40% profiled), so well-formed start tags take one compiled
+# ``_FAST_START`` match and everything else takes the exact stock logic
+# (``_parse_starttag``, ``_parse_endtag``, ``_parse_marked_section``)
+# with html.parser's own patterns.  Each ``_FAST_START`` match consumes the
+# exact span html.parser would: its tag-name / attr-name / value classes
+# are strict SUBSETS of tagfind_tolerant / attrfind_tolerant, and a tag it
+# does not match falls through to the exact path.  Possessive quantifiers
+# (3.11+) make non-matching tags fail without backtracking.  Serializer
+# output and the benchmark pages are always in the fast subset.
+#
+# Boundary rules that keep a fast match a true subset of html.parser's tokens:
 # 1. The char RIGHT AFTER the tag name must be ASCII whitespace, '/' or
 #    '>' — tagfind_tolerant's name class excludes only ASCII \t\n\r\f
 #    space / > \x00, so a Unicode space (NBSP, \x0b,  ) there is
-#    eaten INTO the name by feed(); Python's Unicode-aware \s would
+#    eaten INTO the name by html.parser; Python's Unicode-aware \s would
 #    treat it as a separator and silently build a different tree.
 #    Requiring an ASCII-ws first char per separator run (deeper \s is
-#    fine: attrfind's own separators are Unicode \s) forces those
-#    documents to _Abort instead.
+#    fine: attrfind's own separators are Unicode \s) sends those tags
+#    to the exact path instead.
 # 2. Bare (unquoted) attribute values INCLUDE '/' — attrfind_tolerant's
-#    value class is [^>\s]*, so feed() parses <meta charset=utf-8/> as
+#    value class is [^>\s]*, so html.parser parses <meta charset=utf-8/> as
 #    an OPEN tag whose value is 'utf-8/'; excluding '/' here would let
 #    (/?+)> claim it as self-closing and silently diverge.
 # 3. An attribute may start IMMEDIATELY after a quoted value with no
-#    whitespace (<button title="x"data-a="1">, common in minified HTML —
-#    the top real-corpus abort class): attrfind_tolerant's start anchor
-#    is the lookbehind (?<=['"\s/]), satisfied by the closing quote
-#    itself, and locatestarttagend_tolerant's [\s/]* separator matches
-#    empty there — so feed() tokenizes the run into separate attrs.  The
-#    (?<=[\"']) separator alternative below fires exactly at those
-#    boundaries: bare values exclude quotes in the fast subset, and a
-#    name run can only STOP at a non-name char ({ws, =, /, >, <}, none a
-#    name-start), so the previous char can only be a quote when a QUOTED
-#    VALUE just closed — never mid-token.  (Names starting right after a
-#    BARE value can't occur: the bare-value run would have consumed them.)
+#    whitespace (<button title="x"data-a="1">, common in minified HTML):
+#    attrfind_tolerant's start anchor is the lookbehind (?<=['"\s/]),
+#    satisfied by the closing quote itself, and
+#    locatestarttagend_tolerant's [\s/]* separator matches empty there —
+#    so html.parser tokenizes the run into separate attrs.  The (?<=[\"'])
+#    separator alternative below fires exactly at those boundaries: bare
+#    values exclude quotes in the fast subset, and a name run can only
+#    STOP at a non-name char ({ws, =, /, >, <}, none a name-start), so
+#    the previous char can only be a quote when a QUOTED VALUE just
+#    closed — never mid-token.
 # 4. Attr NAMES may contain quote chars and may LEAD with '='
 #    (attrfind_tolerant's name classes are [^\s/>][^\s/=>]* — quotes
 #    legal throughout, '=' legal as FIRST char only; real-corpus attr
-#    soup like bbc-1's `presidency."=""` and clean-links'
-#    `REL=" stylesheet "=" "` hit both).  The fast name class
-#    (=[^\s/>=<]*+|[^\s/>=<]++) is a strict subset (it additionally
-#    excludes '<'); wherever the run stops early on a char feed() would
-#    keep, the tail pattern can't match and the whole tag ABORTS to the
-#    fallback — tokens never silently diverge.
+#    soup like `presidency."=""` and `REL=" stylesheet "=" "` hit both).
+#    The fast name class (=[^\s/>=<]*+|[^\s/>=<]++) is a strict subset
+#    (it additionally excludes '<'); wherever the run stops early on a
+#    char html.parser would keep, the tail pattern can't match and the tag
+#    takes the exact path — tokens never silently diverge.
 # 5. A name with no fast-parsable value must not be followed by '='
-#    (the (?!\s*=) guard): feed()'s value indicator is '=+' and its bare
+#    (the (?!\s*=) guard): html.parser's value indicator is '=+' and its bare
 #    value class [^>\s]* also eats '=', quotes, and EMPTY values, so any
 #    '=' the fast value alternation leaves behind would bind to the
 #    PREVIOUS name there while the fast splitter would restart a fresh
 #    name at it (`<a b = = c>` → feed: ('b','='),('c',None); unguarded
-#    fast: ('b',None),('=','c')).  The guard turns every such tag into
-#    an _Abort instead of a silent token divergence.
+#    fast: ('b',None),('=','c')).
 _FAST_START = re.compile(
     r"<([a-zA-Z][-a-zA-Z0-9._:]*+)"  # tag name: subset of tagfind_tolerant
-    # attr name: subset of attrfind_tolerant — may LEAD with '=' (feed()'s
-    # name class [^\s/>][^\s/=>]* accepts it; clean-links' REL="x"=" " does
-    # this), but '=' never continues a name on either side
+    # attr name: subset of attrfind_tolerant — may LEAD with '=' but '='
+    # never continues a name
     r"((?:(?:[\t\n\r\f ]\s*+|(?<=[\"']))(?:=[^\s/>=<]*+|[^\s/>=<]++)"
-    # value: either a full '= value', or NO '=' may lie ahead — feed()'s
-    # indicator is '=+' and its bare-value class [^>\s]* eats '='/quotes/
-    # empties, so an '=' the fast value class can't consume would bind
-    # differently there; the lookahead forces those tags to _Abort instead
+    # value: either a full '= value', or NO '=' may lie ahead (rule 5)
     r"(?:\s*+=\s*+(?:\"[^\"]*+\"|'[^']*+'|[^\s>\"'`=<]++)|(?!\s*=)))*+)"
     r"(?:[\t\n\r\f ]\s*+)?+(/?+)>"
 )
@@ -910,35 +909,120 @@ _FAST_ATTR = re.compile(
     r"(?:\s*+=\s*+(\"[^\"]*+\"|'[^']*+'|[^\s>\"'`=<]++)|(?!\s*=))"
 )
 # identical to html.parser's endtagfind
-_FAST_END = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+_END_TAG = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 # identical to _markupbase's _commentclose
-_FAST_COMMENT_CLOSE = re.compile(r"--\s*>")
-# identical to _markupbase's _declname_match / section closers
-_FAST_DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*").match
-_FAST_MARKED_CLOSE = re.compile(r"]\s*]\s*>")
-_FAST_MS_MARKED_CLOSE = re.compile(r"]\s*>")
+_COMMENT_CLOSE = re.compile(r"--\s*>")
+# identical to _markupbase's _declname_match and marked-section closers
+_DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*").match
+_MARKED_CLOSE = re.compile(r"]\s*]\s*>")
+_MS_MARKED_CLOSE = re.compile(r"]\s*>")
 # identical to set_cdata_mode's per-element pattern
-_FAST_CDATA_END = {
+_CDATA_END = {
     elem: re.compile(rf"</\s*{elem}\s*>", re.I)
     for elem in _DOMBuilder.CDATA_CONTENT_ELEMENTS
 }
+# check_for_whole_start_tag's incomplete-input indicator set
+_INCOMPLETE_NEXT = frozenset("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ=/")
 
-# public face of the raw-text element set for the span codec (codec/spans.py
-# must classify media tags exactly as this parser tokenizes them)
+# the raw-text element set, as the tokenizer applies it
 CDATA_CONTENT_ELEMENTS = _DOMBuilder.CDATA_CONTENT_ELEMENTS
 
-from html import unescape as _unescape_html  # noqa: E402 (html.parser's attr decode)
+
+def _parse_starttag(s: str, j: int, hd) -> tuple[int, str | None, list | None, bool]:
+    """html.parser's check_for_whole_start_tag + parse_starttag at ``j``
+    (``s[j] == '<'``, ``s[j+1]`` a letter), for tags ``_FAST_START``
+    does not match.  Returns ``(end, tag, attrs, startend)``; ``tag`` is
+    None when no token is emitted: ``end == -1`` for a tag incomplete at
+    end of input (close()-time recovery follows), else the malformed
+    tag's extent, already passed to ``hd`` as data."""
+    k = _LOCATE_START.match(s, j).end()
+    nxt = s[k : k + 1]
+    if nxt == ">":
+        end = k + 1
+    elif nxt == "/" and s.startswith("/>", k):
+        end = k + 2
+    elif nxt == "" or nxt in _INCOMPLETE_NEXT:
+        return -1, None, None, False
+    else:
+        end = k
+    tm = _TAGFIND.match(s, j + 1)
+    p = tm.end()
+    attrs: list[tuple[str, str | None]] = []
+    while p < end:
+        am = _ATTRFIND.match(s, p)
+        if not am:
+            break
+        name, rest, value = am.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        if value:
+            value = _unescape_html(value)
+        attrs.append((name.lower(), value))
+        p = am.end()
+    tail = s[p:end].strip()
+    if tail not in (">", "/>"):
+        hd(s[j:end])
+        return end, None, None, False
+    return end, tm.group(1).lower(), attrs, tail == "/>"
 
 
-def _fast_scan(s: str, b: _DOMBuilder) -> None:
-    """Drive ``b``'s handler methods over ``s`` exactly as one
-    ``feed(s)`` + ``close()`` would, or raise _Abort."""
+def _parse_endtag(s: str, j: int, b) -> int:
+    """html.parser's parse_endtag at ``j`` for an end tag ``_END_TAG``
+    does not match (never in raw-text mode: ``_scan`` consumes raw text
+    up to its close tag)."""
+    gt = s.find(">", j + 2)
+    if gt < 0:
+        return -1
+    nm = _TAGFIND.match(s, j + 2)
+    if nm is None:
+        if s.startswith("</>", j):
+            return j + 3
+        b.handle_comment(s[j + 2 : gt])  # parse_bogus_comment
+        return gt + 1
+    # the name class excludes '>', so the tag ends at the first '>'
+    b.handle_endtag(nm.group(1).lower())
+    return gt + 1
+
+
+def _parse_marked_section(s: str, j: int, b) -> int:
+    """_markupbase's parse_marked_section at ``j`` (``<![``): <![CDATA[..]]>
+    et al.  (CDATA blocks inside scripts are common — script content is
+    tokenized as markup in this builder.)"""
+    if j + 3 == len(s):
+        return -1
+    nm = _DECLNAME(s, j + 3)
+    if nm is None:
+        raise AssertionError("expected name token at %r" % s[j : j + 20])
+    if nm.end() == len(s):
+        return -1
+    sect = nm.group().strip().lower()
+    if sect in ("temp", "cdata", "ignore", "include", "rcdata"):
+        cm = _MARKED_CLOSE.search(s, j + 3)
+    elif sect in ("if", "else", "endif"):
+        cm = _MS_MARKED_CLOSE.search(s, j + 3)
+    else:
+        raise AssertionError(
+            "unknown status keyword %r in marked section" % s[j + 3 : nm.end()]
+        )
+    if cm is None:
+        return -1
+    b.unknown_decl(s[j + 3 : cm.start()])
+    return cm.end()
+
+
+def _scan(s: str, b) -> None:
+    """Drive consumer ``b``'s handler methods over ``s`` exactly as one
+    html.parser ``feed`` + ``close`` would drive a ``_DOMBuilder``,
+    raising AssertionError where it does.  Start-tag handlers also get
+    the tag's source extent ``[start, end)``."""
     i, n = 0, len(s)
     hd = b.handle_data
     find = s.find
     start_m = _FAST_START.match
-    end_m = _FAST_END.match
-    cdata_set = b.CDATA_CONTENT_ELEMENTS
+    end_m = _END_TAG.match
+    cdata_set = CDATA_CONTENT_ELEMENTS
     while i < n:
         j = find("<", i)
         if j < 0:
@@ -949,95 +1033,97 @@ def _fast_scan(s: str, b: _DOMBuilder) -> None:
         c = s[j + 1 : j + 2]
         if ("a" <= c <= "z") or ("A" <= c <= "Z"):
             m = start_m(s, j)
-            if m is None:
-                raise _Abort
-            tag = m.group(1).lower()
-            raw_attrs = m.group(2)
-            attrs: list[tuple[str, str | None]] = []
-            if raw_attrs:
-                for am in _FAST_ATTR.finditer(raw_attrs):
-                    v = am.group(2)
-                    if v is not None:
-                        if v[0] in "\"'":
-                            v = v[1:-1]
-                        if "&" in v:
-                            v = _unescape_html(v)
-                    attrs.append((am.group(1).lower(), v))
-            i = m.end()
-            if m.group(3):
-                b.handle_startendtag(tag, attrs)
+            if m is not None:
+                tag = m.group(1).lower()
+                raw_attrs = m.group(2)
+                attrs = []
+                if raw_attrs:
+                    for am in _FAST_ATTR.finditer(raw_attrs):
+                        v = am.group(2)
+                        if v is not None:
+                            if v[0] in "\"'":
+                                v = v[1:-1]
+                            if "&" in v:
+                                v = _unescape_html(v)
+                        attrs.append((am.group(1).lower(), v))
+                k = m.end()
+                startend = m.group(3)
             else:
-                b.handle_starttag(tag, attrs)
+                k, tag, attrs, startend = _parse_starttag(s, j, hd)
+            if startend:
+                b.handle_startendtag(tag, attrs, j, k)
+            elif tag is not None:
+                b.handle_starttag(tag, attrs, j, k)
                 if tag in cdata_set:
-                    em = _FAST_CDATA_END[tag].search(s, i)
+                    em = _CDATA_END[tag].search(s, k)
                     if em is None:
                         # unterminated raw text: goahead parks in cdata mode
                         # and the tail is never emitted — drop it identically
                         return
-                    if em.start() > i:
-                        hd(s[i : em.start()])
+                    if em.start() > k:
+                        hd(s[k : em.start()])
                     b.handle_endtag(tag)
-                    i = em.end()
+                    k = em.end()
         elif c == "/":
             m = end_m(s, j)
-            if m is None:
-                raise _Abort
-            b.handle_endtag(m.group(1).lower())
-            i = m.end()
+            if m is not None:
+                b.handle_endtag(m.group(1).lower())
+                k = m.end()
+            else:
+                k = _parse_endtag(s, j, b)
         elif c == "!":
             if s.startswith("<!--", j):
-                cm = _FAST_COMMENT_CLOSE.search(s, j + 4)
+                cm = _COMMENT_CLOSE.search(s, j + 4)
                 if cm is None:
-                    raise _Abort
-                b.handle_comment(s[j + 4 : cm.start()])
-                i = cm.end()
-            elif s.startswith("<![", j):
-                # _markupbase.parse_marked_section: <![CDATA[..]]> et al.
-                # (CDATA blocks inside scripts are common — script content
-                # is tokenized as markup in this builder).  A name the
-                # stock path would AssertionError on aborts instead: the
-                # fallback then raises identically, behavior preserved.
-                nm = _FAST_DECLNAME(s, j + 3)
-                if nm is None or nm.end() == n:
-                    raise _Abort
-                sect = nm.group().strip().lower()
-                if sect in ("temp", "cdata", "ignore", "include", "rcdata"):
-                    cm = _FAST_MARKED_CLOSE.search(s, j + 3)
-                elif sect in ("if", "else", "endif"):
-                    cm = _FAST_MS_MARKED_CLOSE.search(s, j + 3)
+                    k = -1
                 else:
-                    raise _Abort
-                if cm is None:
-                    raise _Abort
-                b.unknown_decl(s[j + 3 : cm.start()])
-                i = cm.end()
+                    b.handle_comment(s[j + 4 : cm.start()])
+                    k = cm.end()
+            elif s.startswith("<![", j):
+                k = _parse_marked_section(s, j, b)
             elif s[j : j + 9].lower() == "<!doctype":
-                g = find(">", j + 9)
-                if g < 0:
-                    raise _Abort
-                b.handle_decl(s[j + 2 : g])
-                i = g + 1
+                k = find(">", j + 9)
+                if k >= 0:
+                    b.handle_decl(s[j + 2 : k])
+                    k += 1
             else:
-                raise _Abort
+                k = find(">", j + 2)  # parse_bogus_comment
+                if k >= 0:
+                    b.handle_comment(s[j + 2 : k])
+                    k += 1
         elif c == "?":
-            raise _Abort
+            k = find(">", j + 2)  # parse_pi
+            if k >= 0:
+                b.handle_pi(s[j + 2 : k])
+                k += 1
         else:
             # '<' + non-markup char, or trailing '<' at EOF: literal data
             # (goahead's handle_data("<") branch / close()'s tail flush)
             hd("<")
-            i = j + 1
+            k = j + 1
+        if k < 0:
+            # close()-time recovery for an unterminated construct: up to
+            # and including the next '>' (else up to the next '<', else
+            # one char) becomes data, and tokenizing resumes there
+            k = find(">", j + 1)
+            if k < 0:
+                k = find("<", j + 1)
+                if k < 0:
+                    k = j + 1
+            else:
+                k += 1
+            hd(s[j:k])
+        i = k
 
 
 def parse_html(html_src: str, url: str = "") -> Node:
-    """Parse an HTML string into a document node (domparser.go:1133-1155)."""
+    """Parse an HTML string into a document node (domparser.go:1133-1155).
+
+    Raises AssertionError on the malformed marked sections html.parser
+    rejects (``parse_document`` reports them as ``parse_error``)."""
     doc = new_document(url)
     builder = _DOMBuilder(doc)
-    try:
-        _fast_scan(html_src, builder)
-    except _Abort:
-        doc = new_document(url)
-        builder = _DOMBuilder(doc)
-        builder.feed(html_src)
+    _scan(html_src, builder)
     builder.finish()
 
     if doc.document_element is not None:

@@ -187,10 +187,6 @@ class Readability:
         return n.get_elements_by_tag_names(tags)
 
     @staticmethod
-    def _some_node(nodes: list[Node], fn) -> bool:
-        return any(fn(n) for n in nodes)
-
-    @staticmethod
     def _every_node(nodes: list[Node], fn) -> bool:
         return all(fn(n) for n in nodes)
 

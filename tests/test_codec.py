@@ -181,15 +181,16 @@ def _dom_media_seq(html):
     try:
         builder.feed(html)
         builder.finish()  # close()-recovery can emit further events
-    except Exception:
-        return None  # stock-parser parse error: no token stream to compare
+    except AssertionError:
+        pass  # stock-parser parse error: the events before it are the stream
     return events
 
 
 def _assert_media_subseq(html):
     """Differential invariant vs the DOM builder: the codec's media spans
     must EQUAL the parser's media start-tag event sequence — same tags,
-    same stored src values, same order.  (r4-late upgrade from the old
+    same stored src values, same order, up to where the stock parser
+    raises.  (r4-late upgrade from the old
     subsequence check: the walk now mirrors check_for_whole_start_tag /
     parse_starttag / close()-recovery via html.parser's own regexes, so
     it neither fabricates media refs on constructs the parser rejects
@@ -200,12 +201,17 @@ def _assert_media_subseq(html):
     spans = html_to_spans(html)
     assert spans_to_html(spans) == html  # byte preservation always
     dom = _dom_media_seq(html)
-    if dom is None:
-        return
     got = [(s.kind, s.media_ref) for s in spans if s.kind != "markup"]
     assert got == dom, (
         f"media spans {got!r} != DOM sequence {dom!r} for {html[:120]!r}"
     )
+
+
+# nameless and unknown-keyword marked sections: stock feed() raises
+_RAISING_MARKED_SECTIONS = (
+    "<html><body><![ bad]]><img src=a.png><p>x</p></body></html>",
+    "<html><body><img src=pre.png><![bogus[x]]><img src=a.png></body></html>",
+)
 
 
 def test_no_fabricated_media_refs_adversarial():
@@ -239,9 +245,21 @@ def test_no_fabricated_media_refs_adversarial():
         # namespaced media: local name is the element identity
         '<a0:img id="i" src="http://cdn.example/icon1.png" />',
         "<x:video src=v.mp4></x:video>",
+        # marked sections the stock parser raises on end the token
+        # stream: no media span at or after the construct
+        *_RAISING_MARKED_SECTIONS,
     ]
     for html in cases:
         _assert_media_subseq(html)
+
+
+def test_raising_marked_section_is_parse_error():
+    """The kernel reports the inputs whose media spans stop at a raising
+    marked section as parse_error."""
+    from go_readability_spark.kernel.readability import parse_document
+
+    for html in _RAISING_MARKED_SECTIONS:
+        assert parse_document(html, "http://fakehost/test/page.html")[2] == "parse_error"
 
 
 @pytest.mark.requires_reference

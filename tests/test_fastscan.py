@@ -1,11 +1,11 @@
-"""Fast-path tokenizer equivalence (kernel/dom.py _fast_scan).
+"""Tokenizer equivalence (kernel/dom.py _scan).
 
-The fast scanner must produce the EXACT event stream html.parser's feed()
-path would for every document it accepts — anything else must raise
-_Abort so parse_html falls back.  These tests compare full deep tree
-equality (tags, attributes, text, structure, captured doc fields)
-between the two paths over the golden corpus, an adversarial quirk set,
-and randomized fragment soup.
+The scanner must drive the tree builder EXACTLY as html.parser's stock
+feed() + close() would, and raise AssertionError exactly where the stock
+parser raises.  These tests compare full deep tree equality (tags,
+attributes, text, structure, captured doc fields) between the two paths
+over the golden corpus, an adversarial quirk set, and randomized fragment
+soup.
 """
 
 from __future__ import annotations
@@ -19,28 +19,18 @@ from hypothesis import given, settings, strategies as st
 from go_readability_spark.kernel import dom
 
 
-def _both(src: str):
-    d1 = dom.new_document("")
-    b1 = dom._DOMBuilder(d1)
-    aborted = False
+def _build(src: str, drive):
+    """(document, raised): the tree ``drive`` builds, or raised=True where
+    it raises AssertionError (the stock parser's malformed marked
+    sections; parse_document maps them to 'parse_error')."""
+    doc = dom.new_document("")
+    b = dom._DOMBuilder(doc)
     try:
-        dom._fast_scan(src, b1)
-    except dom._Abort:
-        aborted = True
-    b1.finish()
-    d2 = dom.new_document("")
-    b2 = dom._DOMBuilder(d2)
-    feed_raised = False
-    try:
-        b2.feed(src)
-        b2.finish()
+        drive(b)
+        b.finish()
     except AssertionError:
-        # the STOCK parser raises on some malformed marked sections
-        # (<![ with no name token); parse_document maps it to
-        # 'parse_error'.  The fast path must abort there so the fallback
-        # raises identically.
-        feed_raised = True
-    return d1, d2, aborted, feed_raised
+        return doc, True
+    return doc, False
 
 
 def _deep_eq(a, b) -> bool:
@@ -61,16 +51,15 @@ def _deep_eq(a, b) -> bool:
     return all(_deep_eq(x, y) for x, y in zip(a.child_nodes, b.child_nodes))
 
 
-def _assert_equivalent(src: str) -> bool:
-    """True if the fast path handled it; always asserts equivalence."""
-    d1, d2, aborted, feed_raised = _both(src)
-    if feed_raised:
-        assert aborted, f"fast path accepted input the stock path raises on: {src[:120]!r}"
-        return False
-    if aborted:
-        return False  # fallback IS the feed path: equivalent by construction
-    assert _deep_eq(d1, d2), f"fast/feed divergence on {src[:120]!r}"
-    return True
+def _assert_equivalent(src: str) -> None:
+    """The scanner builds the tree stock feed() builds, or both raise."""
+    d1, scan_raised = _build(src, lambda b: dom._scan(src, b))
+    d2, feed_raised = _build(src, lambda b: b.feed(src))
+    assert scan_raised == feed_raised, (
+        f"scanner raised={scan_raised}, feed raised={feed_raised} on {src[:120]!r}"
+    )
+    if not feed_raised:
+        assert _deep_eq(d1, d2), f"scan/feed divergence on {src[:120]!r}"
 
 
 ADVERSARIAL = [
@@ -126,7 +115,7 @@ ADVERSARIAL = [
     # review findings: unquoted value swallowed by '/>' (attrfind's bare
     # value class includes '/'), and Unicode whitespace after a tag name
     # (tagfind's name class excludes only ASCII ws, so feed() eats it
-    # into the NAME — the fast path must match or abort)
+    # into the NAME — the fast path must match it or leave it to the exact path)
     "<meta charset=utf-8/><p>y</p>",
     "<img src=x.png/><br clear=all/>",
     "<div\xa0id=a>y</div>",
@@ -142,7 +131,7 @@ ADVERSARIAL = [
     "<a b=1\x0bc=2>l</a>",
     '<a b="1"/>',
     # no-space-after-quoted-value separators (attrfind_tolerant's
-    # (?<=['"\s/]) start anchor — the top real-corpus abort class,
+    # (?<=['"\s/]) start anchor — once the top real-corpus slow-path class,
     # minified HTML like medium-2's <button ..."data-action="...">)
     '<a b="1"c="2">x</a>',
     "<a b='1'c='2'>x</a>",
@@ -163,7 +152,7 @@ ADVERSARIAL = [
     '<a x="1""2"="3">x</a>',
     '<a b"c>x</a>',
     '<a island=" i ":=" " how=" ">x</a>',
-    # nameless ="..." after a quoted value (clean-links): abort+fallback
+    # nameless ="..." after a quoted value (clean-links): exact path
     '<link rel=" s "=" " type="text/css">',
     # marked sections (_markupbase.parse_marked_section parity)
     "<script>/*<![CDATA[*/ var x = 1; /*]]>*/</script>",
@@ -178,7 +167,7 @@ ADVERSARIAL = [
     "<![weird[x]]>",
     "<![RCDATA[q]] >",
     "<![TEMP[t] ] >",
-    # '='-led attr names (r4: the last real-page abort class, clean-links)
+    # '='-led attr names (clean-links)
     '<LINK REL=" stylesheet "=" " type="text/css">x',
     '<a ="x">x',
     '<a = "x">x',
@@ -194,13 +183,30 @@ ADVERSARIAL = [
     "<a ='y' c=d>x",
     '<a "q"="v">x',
     "<a ='>x",
-    # guard class: an '=' the fast value alternation can't consume must
-    # abort (feed() binds it to the PREVIOUS name via '=+'/bare-'=' values)
+    # guard class: an '=' the fast value alternation can't consume takes
+    # the exact path (feed() binds it to the PREVIOUS name via '=+'/bare-'='
+    # values)
     "<a b = = c>x",
     "<a b = >x",
     "<a == >x",
     "<a b==c>x",
     "<a =`=`>x",
+    # constructs only the exact html.parser paths handle: truncation at
+    # EOF (close()-time recovery resumes after the next '>' or '<'),
+    # malformed start tags (data), end-tag and declaration oddities, PIs,
+    # and the marked sections the stock parser raises on
+    "<a", "<a b", "<a b=", "<a b='x", "<a b='x' c", "<a/", "<a/x>", "<a /",
+    "<a b=1 / >x", "<a\xa0", "<x!>y", "<a b='1'\x00c>x", "<a b='1'`c>x",
+    "<img src=a.png<img src=b.png>", "<p a=\"bx> <img src=z></p>",
+    "</", "</a", "</a\n", "</>x", "</ >x", "</3>x", "</a b='>'>x", "</a\xa0>x",
+    "<!", "<!x", "<!x>y", "<!>y", "<!-->y", "<!--->y", "<!-- a -- >b",
+    "<!doctype", "<!DOCTYPE html", "<!doctype>x", "<!DOCTYPEhtml>x",
+    "<?", "<?x", "<?x>y", "<?xml?>z",
+    "<![CDATA", "<![CDATA[", "<![if", "<![if x", "<![endif]", "<![ ", "<![1]]>",
+    "<html><body><![ bad]]><img src=a.png><p>x</p></body></html>",
+    "<p>a</p><![bogus[x]]><p>b</p>",
+    "<title>t</title><!--x<p>y",
+    "<style>a</style ><script>b<![CDATA[</script>",
 ]
 
 
@@ -209,40 +215,51 @@ def test_fastscan_adversarial_equivalence():
         _assert_equivalent(src)
 
 
+@pytest.fixture
+def exact_path_calls(monkeypatch):
+    """Tags that left the one-match start/end-tag fast path: the exact
+    html.parser paths are wrapped to record each call, then delegate."""
+    calls = []
+
+    def counted(fn):
+        def wrapper(s, j, *rest):
+            calls.append(s[j : j + 40])
+            return fn(s, j, *rest)
+
+        return wrapper
+
+    monkeypatch.setattr(dom, "_parse_starttag", counted(dom._parse_starttag))
+    monkeypatch.setattr(dom, "_parse_endtag", counted(dom._parse_endtag))
+    return calls
+
+
 @pytest.mark.requires_reference
-def test_fastscan_golden_corpus_equivalence():
-    """Every golden source AND expected fragment: fast path (when taken)
-    builds the identical tree; abort rate stays a minority."""
+def test_fastscan_golden_corpus_equivalence(exact_path_calls):
+    """Every golden source AND expected fragment builds the identical
+    tree, and every tag in them takes the one-match fast path (238/238
+    files since round 4: quote-adjacent separators, quote-bearing and
+    '='-led attr names, the (?!\\s*=) guard)."""
     files = sorted(glob.glob("/root/reference/testdata/test-pages/*/*.html"))
     assert files, "golden corpus not found"
-    fast = 0
     for f in files:
-        src = open(f, encoding="utf-8").read()
-        if _assert_equivalent(src):
-            fast += 1
-    # r4 (late): '='-led attr names closed the last abort class — the
-    # full corpus is fast-path now (238/238).  Any regression means a
-    # fast-path class (quote-adjacent separators, quote-bearing or
-    # '='-led names, the (?!\s*=) guard) broke
-    assert fast == len(files), (fast, len(files))
+        _assert_equivalent(open(f, encoding="utf-8").read())
+    assert exact_path_calls == [], exact_path_calls[:10]
 
 
-def test_fastscan_covers_synth_and_serializer_output(monkeypatch):
-    """Bench pages and serializer round-trip output are always in the
-    fast subset — the paths the throughput number depends on.  The
-    fallback ``feed`` raises here, so a parse that left the fast path
-    would fail."""
+def test_fastscan_covers_synth_and_serializer_output(exact_path_calls):
+    """Bench pages and serializer round-trip output stay on the one-match
+    start/end-tag path the throughput number depends on."""
     from go_readability_spark.spark.corpus import synth_html
 
-    def no_fallback(self, data):
-        raise AssertionError("parse fell back to html.parser feed()")
-
-    monkeypatch.setattr(dom._DOMBuilder, "feed", no_fallback)
     page = synth_html(7, "Body text & more < less.", "en", "src")
     doc = dom.parse_html(page)
     body = doc.get_elements_by_tag_name("body")[0]
     reparsed = dom.parse_html(body.get_inner_html())
     assert reparsed.get_inner_html() == body.get_inner_html()
+    assert exact_path_calls == []
+    # the wrappers do see the exact paths: a tag outside the fast subset
+    dom.parse_html("<a b = = c>x</a b>")
+    assert len(exact_path_calls) == 2
 
 
 @settings(max_examples=400, deadline=None)

@@ -7,7 +7,7 @@ materialized corpus at two parallelism levels — local[N] and local[4N] —
 in fresh JVMs, and reporting docs/sec at each plus
 efficiency = rate(4N) / (4 · rate(N)).
 
-Usage: python tools/bench_scaling.py [--n 8] [--replicate 54] [--sf-dir ...]
+Usage: python tools/bench_scaling.py [--n 1] [--replicate 54] [--sf-dir ...]
 Prints a JSON line; the default --level interleaved is the measurement
 of record (same-window, symmetric best-of-2) and is transcribed into
 BENCH/BASELINE.md by hand with its narrative.  The low/high/both path
@@ -84,17 +84,16 @@ def run_level(cpus: int, corpus: str, repeats: int = 2) -> dict:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    # Default N=4 (→ 4N=16): steal-aware busy-loop calibration of this VM
-    # measures the raw hardware scaling ceiling at 0.95 for 4→16 procs but
-    # only 0.74 for 8→32 — the host cannot deliver 4× the throughput of 8
-    # busy cores even with zero Spark involvement.  A single-machine proxy
-    # must keep both levels inside the host's linear region, exactly as
-    # real N- and 4N-executor clusters size executors within their hosts.
-    ap.add_argument("--n", type=int, default=4)
+    # Default N=1 (→ 4N=4, which fits a 4-core host): a single-machine
+    # proxy must keep both levels inside the host's cores, exactly as real
+    # N- and 4N-executor clusters size executors within their hosts; an
+    # oversubscribed 4N level measures the scheduler, not the pipeline.
+    ap.add_argument("--n", type=int, default=1)
     ap.add_argument(
-        "--corpus-kind", choices=["fixtures", "synth"], default="fixtures",
+        "--corpus-kind", choices=["fixtures", "synth"], default="synth",
         help="fixtures = 119 real golden pages replicated (kernel-dominated, "
-        "natural 1KB-500KB skew); synth = testdata-derived small pages",
+        "natural 1KB-500KB skew; needs the reference checkout); synth = "
+        "testdata-derived small pages",
     )
     ap.add_argument("--replicate", type=int, default=None)
     ap.add_argument("--repeats", type=int, default=3)
@@ -141,7 +140,7 @@ def main() -> None:
         )
         from go_readability_spark.spark.session import build_session
 
-        spark = build_session(cpus=32, app_name="corpus-build")
+        spark = build_session(app_name="corpus-build")
         spark.sparkContext.setLogLevel("ERROR")
         if args.corpus_kind == "fixtures":
             corpus_df = fixture_documents(spark, replicate=args.replicate).repartition(128)
@@ -159,23 +158,20 @@ def main() -> None:
         # merely controlling for steal.
         probe_before = host_probe_s()
         # the 4N-way delivery probe: the 1-core loop misses windows where
-        # only parallel delivery degrades (BENCH/BASELINE.md r4 note) —
-        # so it GATES too, not just records (healthy readings at ≤16-way
-        # sit at 1.4-1.8s; ≥2s is the degraded-delivery signature that
-        # produced the bogus 0.74-0.77 efficiency readings)
+        # only parallel delivery degrades (BENCH/BASELINE.md r4 note), so
+        # it gates.  The gate is relative, as bench.host_probe_parallel_s
+        # defines it (>= 1.5x the 1-core probe = degraded delivery): the
+        # absolute speed of the loop differs from host to host
         probe_par_before = host_probe_parallel_s(args.n * 4)
-        if (
-            probe_before >= 2.0 or probe_par_before >= 2.0
-        ) and not args.skip_probe_gate:
+        if probe_par_before >= 1.5 * probe_before and not args.skip_probe_gate:
             print(json.dumps({
                 "metric": "scaling_efficiency_N_to_4N",
                 "aborted": "host degraded",
                 "host_probe_s": probe_before,
                 "host_probe_par_s": probe_par_before,
-                "note": "busy-loop probe (1-core or 4N-way) >= 2s: "
-                        "degradation window; re-run when the 1-core probe "
-                        "reads <= 1.5s and the 4N-way probe <= 1.9s "
-                        "(see BENCH/BASELINE.md)",
+                "note": "4N-way busy-loop probe >= 1.5x the 1-core probe: "
+                        "parallel delivery is degraded; re-run in a "
+                        "cleaner window (see BENCH/BASELINE.md)",
             }))
             return
         h1 = run_level(args.n * 4, args.corpus, repeats=1)

@@ -1,13 +1,14 @@
-"""Extended differential fuzz over the input codec and fast-path tokenizer.
+"""Extended differential fuzz over the input codec and the HTML tokenizer.
 
-Reuses the two strongest invariants in the suite, at open-ended volume:
+Reuses the strongest invariants in the suite, at open-ended volume:
 
-* fast-scan equivalence: ``_fast_scan`` must build the exact tree the
-  stock ``html.parser`` feed path builds, or abort to it
+* tokenizer equivalence: ``_scan`` must build the exact tree the stock
+  ``html.parser`` feed() + close() path builds, or raise AssertionError
+  exactly where the stock parser raises
   (tests/test_fastscan.py::_assert_equivalent);
 * codec soundness: ``html_to_spans`` must byte-preserve on re-serialize
-  and its media spans must equal the DOM parse's media-element sequence
-  (tests/test_codec.py::_assert_media_subseq);
+  and its media spans must equal the stock parser's media start-tag
+  events, up to where it raises (tests/test_codec.py::_assert_media_subseq);
 * one DOM per document (``_assert_one_dom``): ``is_probably_readerable``
   equals ``scan_readerable`` over ``parse_html(html, uri)`` for any uri,
   and ``parse_document(prescreen=True)`` gives the two-step status --
@@ -97,6 +98,10 @@ FRAGS = [
     # a prefixed raw-text name: the element is a <title> whose content
     # was tokenized as markup
     "<svg:title>", "</svg:title>",
+    # constructs only the exact html.parser paths tokenize: malformed end
+    # tags, bogus comments, '='-soup attrs, and the marked sections the
+    # stock parser raises on
+    "</>", "</ p>", "</3>", "<!x>", "<a b = = c>", "<a\xa0b>", "<![ bad]]>", "<![x[",
 ]
 
 # structural wrappers: embed ANY generated soup inside a comment, CDATA
