@@ -250,7 +250,7 @@ def _document_cmap(streams: list[bytes]) -> dict[int, str] | None:
 
 def page_pieces_from_lines(lines: list[str]) -> list[str]:
     """Text-layer lines → the <p>-scaffold page pieces both ingest paths
-    share (spark.corpus._pdf_batches builds spans from the pieces, the CLI
+    share (spark.corpus._spans builds spans from the pieces, the CLI
     joins them).  Lines are HTML-escaped: PDF text is data, not markup —
     '<', '>', '&' in a line (e.g. "a < b", "AT&T") must survive the kernel
     parse verbatim instead of being read as tags."""

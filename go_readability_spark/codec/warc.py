@@ -99,7 +99,9 @@ def http_response_html(body: bytes) -> str | None:
     raw = body[head_end + 4 :]
     try:
         return raw.decode(charset, "replace")
-    except LookupError:
+    # LookupError: an unknown charset.  UnicodeError: a codec that cannot
+    # decode with "replace" (idna, undefined, punycode) raises anyway.
+    except (LookupError, UnicodeError):
         return raw.decode("utf-8", "replace")
 
 

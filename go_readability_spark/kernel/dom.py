@@ -48,15 +48,6 @@ from .regexps import ENTITY_REFERENCES, HTML_CHAR_CODES
 
 ELEMENT_NODE = 1
 TEXT_NODE = 3
-
-# Subtree-text memo invalidation: every structural/text mutator marks the
-# mutated node AND its whole ancestor chain dirty (never early-stopping —
-# a clean ancestor may sit above a node whose own cache was never computed,
-# so a hit on a dirty node proves nothing about the nodes above it).
-# Untouched sibling subtrees keep their memos, which is what makes the
-# scoring loop's repeated text reads cheap between removals.
-CDATA_SECTION_NODE = 4
-COMMENT_NODE = 8
 DOCUMENT_NODE = 9
 DOCUMENT_TYPE_NODE = 10
 
@@ -107,6 +98,12 @@ def encode_html(text: str) -> str:
     )
 
 
+# Subtree-text memo invalidation: every structural/text mutator marks the
+# mutated node AND its whole ancestor chain dirty (never early-stopping —
+# a clean ancestor may sit above a node whose own cache was never computed,
+# so a hit on a dirty node proves nothing about the nodes above it).
+# Untouched sibling subtrees keep their memos, which is what makes the
+# scoring loop's repeated text reads cheap between removals.
 class Node:
     """One node: element, text, document or doctype (domparser.go:355-383)."""
 

@@ -69,7 +69,6 @@ JSONLD_ARTICLE_TYPES = re.compile(
 TITLE_FINAL_PART = re.compile(r" [\|\-\\/>»] ")
 TITLE_SEPARATORS = re.compile(r" [\\/>»] ")
 OTHER_TITLE_SEPARATORS = re.compile(r"(.*)[\|\-\\/>»] .*", _I)
-TITLE_FIRST_PART = re.compile(r"[^\|\-\\/>»]*[\|\-\\/>»](.*)", _I)
 MULTIPLE_WHITESPACES = re.compile(r"\s+", _A)
 SINGLE_WHITESPACE = re.compile(r"\s", _A)
 SINGLE_DOT = re.compile(r"\.")

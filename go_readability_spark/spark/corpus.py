@@ -1,16 +1,29 @@
-"""Deterministic corpus synthesis → the interleaved-span documents table.
+"""The documents table's four sources, and the one encoder they share.
 
-Two generators, both emitting ``DOCUMENTS_SCHEMA`` rows (BASELINE.json
-``input_hint`` shape):
+Every source emits ``DOCUMENTS_SCHEMA`` rows (BASELINE.json ``input_hint``
+shape) from inside ``mapInPandas``, so ingest scales with the cluster and
+the driver never materializes pages:
 
-1. ``fixture_documents`` — the reference's 119 golden pages
-   (/root/reference/testdata/test-pages), for end-to-end correctness.
-2. ``synthesize_documents`` — article-shaped HTML pages generated
-   deterministically from the driver's ``documents.parquet`` text corpus
-   (TESTDATA.md), for throughput/scaling benchmarks.  Generation happens
-   *inside* ``mapInPandas`` so it scales with the cluster — the driver never
-   materializes pages.  No randomness: all variation is modular arithmetic
-   on ``doc_id``, so sf0.01 tonight equals sf0.01 tomorrow.
+1. ``synthesize_documents`` — article-shaped HTML pages generated
+   deterministically from a ``documents.parquet`` text corpus
+   (TESTDATA.md), for throughput/scaling benchmarks.  No randomness: all
+   variation is modular arithmetic on ``doc_id``, so sf0.01 tonight equals
+   sf0.01 tomorrow.
+2. ``ingest_html_documents`` — any table of (doc_id, html[, uri]), such as
+   a JSONL crawl dump; ``fixture_documents`` feeds it the reference's
+   golden pages.
+3. ``ingest_pdf_documents`` — PDF files, one markup span per text-layer
+   line.
+4. ``ingest_warc_documents`` — crawl archives, one document per HTML
+   response record.
+
+One encoder: a source is a per-row page generator that yields
+``(doc_id, uri, page)``, the page an HTML ``str`` or PDF ``bytes``;
+``_spans`` turns a page into span rows, and ``session.emit_frames`` cuts
+the output.  ``_spans`` holds the one failure rule: a page it cannot
+encode becomes a document without spans, never a failed task.  An
+optional input column is defaulted when the input is selected, never per
+row.
 
 Synthetic pages deliberately include the boilerplate families the kernel
 must strip (nav/sidebar/comments/footer/share/script — regexps.go:8,17)
@@ -23,49 +36,80 @@ bounding and straggler metrics must cope with.
 from __future__ import annotations
 
 import os
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..codec.pdf import page_pieces_from_lines, pdf_to_text_lines
 from ..codec.spans import html_to_spans
+from ..codec.warc import warc_html_pages
 from ..kernel.golden import FIXTURES_DIR
-from .extract import DEFAULT_URI
+from .extract import DEFAULT_URI, column_or
 from .schema import DOCUMENTS_SCHEMA
+from .session import emit_frames
 from . import worker  # noqa: F401  (sets up a Python worker on import)
 
+_COLUMNS = [f.name for f in DOCUMENTS_SCHEMA.fields]
 _STOP_EVERY_WORDS = 13  # sentence length in words
 _SENTS_PER_PARA = 4
+
+
+def _spans(page: str | bytes) -> list[dict]:
+    """One page → its span rows.  HTML goes through the byte-preserving
+    ``html_to_spans`` (spans_to_html(html_to_spans(x)) == x).  A PDF's
+    text layer arrives as a well-formed page, one span per source line
+    (the layout unit PDF gives us), since the kernel extracts from
+    doc.body; the piece builder, HTML-escaping included, is shared with
+    the CLI.  A page either codec raises on becomes a document without
+    spans, which extraction reports as one parse_error row."""
+    try:
+        if isinstance(page, str):
+            return [s.as_row() for s in html_to_spans(page)]
+        rows, off = [], 0
+        for piece in page_pieces_from_lines(pdf_to_text_lines(page)):
+            # kind "markup" is html_to_spans' kind for non-media raw HTML
+            rows.append({"kind": "markup", "text": piece, "media_ref": "", "offset": off})
+            off += len(piece)
+        return rows
+    except Exception:
+        return []
+
+
+def _encode(pages: Callable[..., Iterable[tuple[str, str, str | bytes]]]):
+    """The one ingest batch function: ``pages(row)`` yields each input
+    row's pages, and each page becomes one documents row."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = (
+            ({"doc_id": doc_id, "uri": uri, "spans": _spans(page)}, len(page))
+            for pdf in batches
+            for row in pdf.itertuples(index=False)
+            for doc_id, uri, page in pages(row)
+        )
+        return emit_frames(rows, _COLUMNS)
+
+    return run
 
 
 def fixture_documents(
     spark: SparkSession, root: str = FIXTURES_DIR, replicate: int = 1
 ) -> DataFrame:
-    """119 golden fixtures as a documents DataFrame.
+    """The golden pages (``root/<name>/source.html``) as a documents
+    DataFrame, encoded by ``ingest_html_documents``.
 
-    ``replicate`` fans each fixture out K× with unique doc_ids
-    (JVM-side crossJoin — span payloads are not re-encoded in Python):
-    the real-page-scale corpus for throughput/scaling benchmarks, with the
-    corpus's natural 1 KB–500 KB size skew.
+    ``replicate`` fans each fixture out K× with unique doc_ids (a
+    JVM-side crossJoin): the real-page-scale corpus for throughput/scaling
+    benchmarks, with the corpus's natural 1 KB–500 KB size skew.
     """
-    rows = []
+    pages = []
     for name in sorted(os.listdir(root)):
         src = os.path.join(root, name, "source.html")
-        if not os.path.isfile(src):
-            continue
-        with open(src, encoding="utf-8") as f:
-            html = f.read()
-        rows.append(
-            {
-                "doc_id": name,
-                "uri": DEFAULT_URI,
-                "spans": [s.as_row() for s in html_to_spans(html)],
-            }
-        )
-    df = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
+        if os.path.isfile(src):
+            with open(src, encoding="utf-8") as f:
+                pages.append((name, f.read()))
+    df = ingest_html_documents(spark.createDataFrame(pages, "doc_id string, html string"))
     if replicate > 1:
-        import pyspark.sql.functions as F
-
         df = (
             df.crossJoin(spark.range(replicate).select(F.col("id").alias("rep")))
             .withColumn(
@@ -138,23 +182,12 @@ def synth_html(doc_id: int, text: str, lang: str, source: str) -> str:
     return "\n".join(parts)
 
 
-def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        has_rep = "rep" in pdf.columns
-        for row in pdf.itertuples(index=False):
-            doc_id = int(row.doc_id)
-            rep = int(row.rep) if has_rep else 0
-            html = synth_html(doc_id, row.text or "", row.lang or "en", row.source or "src")
-            uid = f"doc-{doc_id:09d}" + (f"-r{rep:03d}" if rep else "")
-            out.append(
-                {
-                    "doc_id": uid,
-                    "uri": f"http://synth.example/{row.source}/{doc_id}.html",
-                    "spans": [s.as_row() for s in html_to_spans(html)],
-                }
-            )
-        yield pd.DataFrame(out, columns=["doc_id", "uri", "spans"])
+def _synth_pages(row) -> Iterator[tuple[str, str, str]]:
+    doc_id = int(row.doc_id)
+    rep = int(row.rep)
+    html = synth_html(doc_id, row.text or "", row.lang or "en", row.source or "src")
+    uid = f"doc-{doc_id:09d}" + (f"-r{rep:03d}" if rep else "")
+    yield uid, f"http://synth.example/{row.source}/{doc_id}.html", html
 
 
 def synthesize_documents(
@@ -174,17 +207,16 @@ def synthesize_documents(
     drop a duplicate is before it pays page build + kernel; the exclusion
     side is broadcast so the corpus-sized side never shuffles for it.
     """
-    import pyspark.sql.functions as F
-
     src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "text", "lang", "source"
     )
     if exclude_doc_ids is not None:
         src = src.join(F.broadcast(exclude_doc_ids), "doc_id", "left_anti")
     if replicate > 1:
-        src = src.withColumn(
-            "rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1)))
-        )
+        rep = F.explode(F.sequence(F.lit(0), F.lit(replicate - 1)))
+    else:
+        rep = F.lit(0)
+    src = src.withColumn("rep", rep)
     # A small single-file text table arrives as ONE input split, which
     # would run page synthesis AND the downstream in-place extraction on
     # one task (extract_articles at sf0.1/local[32]: 13.3s -> 6.4s from
@@ -196,80 +228,27 @@ def synthesize_documents(
     target = max(spark.sparkContext.defaultParallelism, replicate)
     if len(src.inputFiles()) < target:
         src = src.repartition(target)
-    return src.mapInPandas(_synth_batches, schema=DOCUMENTS_SCHEMA)
+    return src.mapInPandas(_encode(_synth_pages), schema=DOCUMENTS_SCHEMA)
 
 
-def _ingest_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = []
-        has_uri = "uri" in pdf.columns
-        for row in pdf.itertuples(index=False):
-            out.append(
-                {
-                    "doc_id": row.doc_id,
-                    "uri": row.uri if has_uri else DEFAULT_URI,
-                    "spans": [s.as_row() for s in html_to_spans(row.html or "")],
-                }
-            )
-        yield pd.DataFrame(out, columns=["doc_id", "uri", "spans"])
+def _html_pages(row) -> Iterator[tuple[str, str, str]]:
+    yield row.doc_id, row.uri, row.html or ""
 
 
 def ingest_html_documents(df: DataFrame) -> DataFrame:
     """The generic ingest source: any table carrying (doc_id, html[, uri])
-    → the interleaved-span documents table (``DOCUMENTS_SCHEMA``,
-    BASELINE.json input_hint shape).
+    → the interleaved-span documents table.
 
-    Distributed: the byte-preserving span codec (``codec.spans
-    .html_to_spans`` — spans_to_html(html_to_spans(x)) == x, property-
-    tested) runs inside ``mapInPandas``, so ingest scales with the cluster
-    and never materializes pages on the driver.  This is how raw crawl
-    output (JSONL/CSV/WARC-extracted HTML read with plain ``spark.read``)
-    enters the engine; ``fixture_documents``/``synthesize_documents`` are
-    just two callers of the same codec.
+    This is how raw crawl output (JSONL/CSV/WARC-extracted HTML read with
+    plain ``spark.read``) enters the engine.  A table without ``uri``
+    gets ``DEFAULT_URI``.
     """
-    cols = ["doc_id", "html"] + (["uri"] if "uri" in df.columns else [])
-    return df.select(*cols).mapInPandas(_ingest_batches, schema=DOCUMENTS_SCHEMA)
+    cols = ["doc_id", "html", column_or(df, "uri", DEFAULT_URI)]
+    return df.select(*cols).mapInPandas(_encode(_html_pages), schema=DOCUMENTS_SCHEMA)
 
 
-def _pdf_batches():
-    from ..codec.pdf import page_pieces_from_lines, pdf_to_text_lines
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            has_uri = "uri" in pdf.columns
-            for row in pdf.itertuples(index=False):
-                payload = bytes(row.payload) if row.payload is not None else b""
-                spans, off = [], 0
-                try:
-                    lines = pdf_to_text_lines(payload)
-                    # page scaffolding: the kernel extracts from doc.body, so
-                    # a text layer must arrive as a well-formed page, one
-                    # span per source line (the layout unit PDF gives us);
-                    # the piece builder (incl. HTML-escaping) is shared with
-                    # the CLI path
-                    for piece in page_pieces_from_lines(lines):
-                        # kind "markup" matches html_to_spans' vocabulary for
-                        # non-media raw-HTML spans (codec/spans.py:76)
-                        spans.append(
-                            {"kind": "markup", "text": piece, "media_ref": "", "offset": off}
-                        )
-                        off += len(piece)
-                except Exception:
-                    # one unreadable file must not fail the ingest task: it
-                    # becomes a document without spans, which extraction
-                    # reports as one parse_error row
-                    spans = []
-                out.append(
-                    {
-                        "doc_id": row.doc_id,
-                        "uri": row.uri if has_uri else DEFAULT_URI,
-                        "spans": spans,
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "uri", "spans"])
-
-    return run
+def _pdf_pages(row) -> Iterator[tuple[str, str, bytes]]:
+    yield row.doc_id, row.uri, bytes(row.payload) if row.payload is not None else b""
 
 
 def ingest_pdf_documents(df: DataFrame) -> DataFrame:
@@ -283,48 +262,16 @@ def ingest_pdf_documents(df: DataFrame) -> DataFrame:
     of a PDF text layer are exactly the <p>-corpus shape the Arc90 scorer
     consumes).
     """
-    cols = ["doc_id", "payload"] + (["uri"] if "uri" in df.columns else [])
-    return df.select(*cols).mapInPandas(
-        _pdf_batches(), schema=DOCUMENTS_SCHEMA
-    )
+    cols = ["doc_id", "payload", column_or(df, "uri", DEFAULT_URI)]
+    return df.select(*cols).mapInPandas(_encode(_pdf_pages), schema=DOCUMENTS_SCHEMA)
 
 
-# Records per yielded Arrow batch during WARC ingest.  A real CommonCrawl
-# archive is ~1 GB with ~50k records; accumulating every decoded page +
-# its span rows into ONE pandas frame before yielding held ~3× the archive
-# size per task (VERDICT r4 watch item).  warc_html_pages is a generator
-# over the raw payload, so flushing every N records bounds the resident
-# decoded set to the chunk while the payload bytes stay the only
-# archive-sized allocation.
-WARC_CHUNK_RECORDS = 64
-
-
-def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..codec.warc import warc_html_pages
-
-    cols = ["doc_id", "uri", "spans"]
-    out: list[dict] = []
-    for pdf in batches:
-        has_path = "path" in pdf.columns
-        for row in pdf.itertuples(index=False):
-            payload = bytes(row.content) if row.content is not None else b""
-            # binaryFile's path column is the natural per-archive identity
-            # for fallback record ids (indexes restart at 0 per archive)
-            archive_id = (getattr(row, "path", "") or "") if has_path else ""
-            for rec_id, uri, html in warc_html_pages(payload, archive_id):
-                try:
-                    spans = [s.as_row() for s in html_to_spans(html)]
-                except Exception:
-                    # as in _pdf_batches: a record the span codec cannot
-                    # encode becomes a document without spans, not a
-                    # failed task
-                    spans = []
-                out.append({"doc_id": rec_id, "uri": uri or DEFAULT_URI, "spans": spans})
-                if len(out) >= WARC_CHUNK_RECORDS:
-                    yield pd.DataFrame(out, columns=cols)
-                    out = []
-    if out:
-        yield pd.DataFrame(out, columns=cols)
+def _warc_pages(row) -> Iterator[tuple[str, str, str]]:
+    payload = bytes(row.content) if row.content is not None else b""
+    # binaryFile's path column is the natural per-archive identity for
+    # fallback record ids (indexes restart at 0 per archive)
+    for rec_id, uri, html in warc_html_pages(payload, row.path or ""):
+        yield rec_id, uri or DEFAULT_URI, html
 
 
 def ingest_warc_documents(df: DataFrame) -> DataFrame:
@@ -339,7 +286,9 @@ def ingest_warc_documents(df: DataFrame) -> DataFrame:
     span encode all run inside ``mapInPandas`` (``codec/warc.py``), so
     ingest scales with the archive count and nothing touches the driver.
     The fan-out (one archive row → many document rows) happens inside the
-    Python batch, flushed every ``WARC_CHUNK_RECORDS`` records.
+    Python batch; ``emit_frames`` cuts it, so the decoded records held at
+    once are one frame's, and the archive bytes stay the only
+    archive-sized allocation.
     """
-    cols = ["content"] + (["path"] if "path" in df.columns else [])
-    return df.select(*cols).mapInPandas(_warc_batches, schema=DOCUMENTS_SCHEMA)
+    cols = ["content", column_or(df, "path", "")]
+    return df.select(*cols).mapInPandas(_encode(_warc_pages), schema=DOCUMENTS_SCHEMA)

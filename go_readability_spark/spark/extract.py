@@ -12,8 +12,8 @@ Scale notes (10^12-doc design point, SURVEY.md §4.2):
   document the kernel holds: ``session.ensure_arrow_limits`` caps a batch
   at ``ARROW_MAX_RECORDS`` rows and closes it at the row that reaches
   ``ARROW_MAX_BYTES``, so a mega-document ends the batch it joins; output
-  rows are yielded in chunks of at most ``_EMIT_ROWS`` rows or
-  ``_EMIT_BYTES`` input bytes.
+  rows leave in ``session.emit_frames`` chunks of at most
+  ``EMIT_MAX_ROWS`` rows or ``EMIT_MAX_BYTES`` input bytes.
 - Skew: ``salted_repartition`` spreads documents uniformly regardless of
   upstream partitioning (mega-docs cluster by crawl host in real corpora).
 - Oversized docs degrade to ``status='too_large'`` rows via
@@ -27,23 +27,17 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..codec.spans import dom_to_spans
 from ..kernel.options import Options
 from ..kernel.readability import parse_document
 from .schema import ARTICLES_SCHEMA
-from .session import ensure_arrow_limits
+from .session import emit_frames, ensure_arrow_limits
 from . import worker  # noqa: F401  (sets up a Python worker on import)
 
 DEFAULT_URI = "http://fakehost/test/page.html"
 
-# Output chunking: a chunk is yielded after this many rows, or earlier once
-# its documents' input HTML reaches _EMIT_BYTES (input length is a safe
-# upper proxy for output size), so the output buffer never holds a
-# mega-document plus dozens of peers.
-_EMIT_ROWS = 64
-_EMIT_BYTES = 8_000_000
 _SALT_SEED = 64
 
 _EMPTY = {
@@ -112,25 +106,23 @@ def extract_one(
     }
 
 
+def column_or(df: DataFrame, name: str, default) -> Column:
+    """``df``'s column ``name``, or the literal ``default`` under that name
+    when ``df`` has none: an optional input column is decided once, when the
+    operator's input is selected, so batch functions read it on every row."""
+    return F.col(name) if name in df.columns else F.lit(default).alias(name)
+
+
 def _batch_extractor(options: Options, prescreen: bool = False):
     cols = [f.name for f in ARTICLES_SCHEMA.fields]
 
     def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: list[dict] = []
-        out_sz = 0
-        for pdf in batches:
-            has_uri = "uri" in pdf.columns
-            for row in pdf.itertuples(index=False):
-                uri = getattr(row, "uri", None) if has_uri else None
-                out.append(
-                    extract_one(row.doc_id, row.html, uri, options, prescreen)
-                )
-                out_sz += len(row.html or "")
-                if len(out) >= _EMIT_ROWS or out_sz >= _EMIT_BYTES:
-                    yield pd.DataFrame(out, columns=cols)
-                    out, out_sz = [], 0
-        if out:
-            yield pd.DataFrame(out, columns=cols)
+        rows = (
+            (extract_one(row.doc_id, row.html, row.uri, options, prescreen), len(row.html or ""))
+            for pdf in batches
+            for row in pdf.itertuples(index=False)
+        )
+        return emit_frames(rows, cols)
 
     return extract_batch
 
@@ -161,9 +153,7 @@ def extract_articles(
     """
     ensure_arrow_limits(df.sparkSession)
     opts = options or Options(classes_to_preserve=["page", "caption"])
-    cols = [F.col("doc_id"), F.expr(_HTML_EXPR).alias("html")]
-    if "uri" in df.columns:
-        cols.append(F.col("uri"))
+    cols = [F.col("doc_id"), F.expr(_HTML_EXPR).alias("html"), column_or(df, "uri", DEFAULT_URI)]
     return df.select(*cols).mapInPandas(
         _batch_extractor(opts, prescreen=prescreen),
         schema=ARTICLES_SCHEMA,

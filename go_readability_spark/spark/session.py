@@ -1,15 +1,20 @@
-"""Session builder with the engine's standard configs.
+"""Session builder with the engine's standard configs, and the batch
+limits of the engine's document operators.
 
 Tuned for the extraction workload (SURVEY.md §4.2): AQE on (runtime
 coalescing + skew splitting), Arrow on with batches capped by rows and by
 bytes (``ensure_arrow_limits``) so a mega-document ends its batch, and
-dynamic partition overwrite so per-bucket re-runs are idempotent.
+dynamic partition overwrite so per-bucket re-runs are idempotent.  On the
+way out, extraction and every ingest source cut their output frames with
+``emit_frames``.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable, Iterator
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 # Arrow batch limits for the extraction hop: a batch holds at most
@@ -28,6 +33,29 @@ def ensure_arrow_limits(spark: SparkSession) -> None:
     byte cap) still batches boundedly."""
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
     spark.conf.set("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
+
+
+# Output frame limits: a frame is cut after EMIT_MAX_ROWS rows, or earlier
+# once its rows' input reaches EMIT_MAX_BYTES (input length is a safe upper
+# proxy for output size), so the output buffer never holds a mega-document
+# plus dozens of peers, nor a whole crawl archive's decoded records.
+EMIT_MAX_ROWS = 64
+EMIT_MAX_BYTES = 8_000_000
+
+
+def emit_frames(rows: Iterable[tuple[dict, int]], columns: list[str]) -> Iterator[pd.DataFrame]:
+    """(output row, input bytes) pairs → pandas frames of ``columns``, cut
+    by the two limits above; every row comes out once, in order."""
+    out: list[dict] = []
+    size = 0
+    for row, n in rows:
+        out.append(row)
+        size += n
+        if len(out) >= EMIT_MAX_ROWS or size >= EMIT_MAX_BYTES:
+            yield pd.DataFrame(out, columns=columns)
+            out, size = [], 0
+    if out:
+        yield pd.DataFrame(out, columns=columns)
 
 
 def default_cpus() -> int:

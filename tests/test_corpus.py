@@ -4,6 +4,7 @@ import pytest
 
 from go_readability_spark.codec.spans import html_to_spans, spans_to_html
 from go_readability_spark.spark.corpus import synth_html, synthesize_documents
+from go_readability_spark.spark.session import EMIT_MAX_BYTES, EMIT_MAX_ROWS
 
 
 def test_synth_html_deterministic():
@@ -43,43 +44,41 @@ def test_synthesize_documents_spark(spark):
 @pytest.mark.requires_reference
 def test_ingest_html_documents_matches_driver_side_codec(spark):
     """Distributed ingest of raw (doc_id, html, uri) rows produces the
-    exact span rows the driver-side codec produces, and the ingested
-    corpus extracts identically to the fixture_documents path."""
+    exact span rows the codec produces in this process, and the ingested
+    corpus extracts as the fixture pages do in-process."""
     import os
 
     from go_readability_spark.kernel.golden import FIXTURES_DIR
-    from go_readability_spark.spark.corpus import fixture_documents, ingest_html_documents
-    from go_readability_spark.spark.extract import DEFAULT_URI, extract_articles
+    from go_readability_spark.kernel.options import Options
+    from go_readability_spark.spark.corpus import ingest_html_documents
+    from go_readability_spark.spark.extract import DEFAULT_URI, extract_articles, extract_one
 
     names = sorted(
         n for n in os.listdir(FIXTURES_DIR)
         if os.path.isfile(os.path.join(FIXTURES_DIR, n, "source.html"))
     )[:5]
+    pages = {}
+    for n in names:
+        with open(os.path.join(FIXTURES_DIR, n, "source.html"), encoding="utf-8") as f:
+            pages[n] = f.read()
     raw = spark.createDataFrame(
-        [
-            (n, open(os.path.join(FIXTURES_DIR, n, "source.html"), encoding="utf-8").read(), DEFAULT_URI)
-            for n in names
-        ],
+        [(n, html, DEFAULT_URI) for n, html in pages.items()],
         "doc_id string, html string, uri string",
     )
     ingested = ingest_html_documents(raw)
     ing = {r.doc_id: [tuple(s) for s in r.spans] for r in ingested.collect()}
-    fix = {
-        r.doc_id: [tuple(s) for s in r.spans]
-        for r in fixture_documents(spark).collect()
-        if r.doc_id in set(names)
+    assert ing == {
+        n: [(s.kind, s.text, s.media_ref, s.offset) for s in html_to_spans(html)]
+        for n, html in pages.items()
     }
-    assert ing == fix
 
     a = extract_articles(ingested).select("doc_id", "title", "length", "status").collect()
-    b = [
-        r
-        for r in extract_articles(fixture_documents(spark))
-        .select("doc_id", "title", "length", "status")
-        .collect()
-        if r.doc_id in set(names)
-    ]
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    opts = Options(classes_to_preserve=["page", "caption"])
+    b = []
+    for n, html in pages.items():
+        row = extract_one(n, html, DEFAULT_URI, opts)
+        b.append((n, row["title"], row["length"], row["status"]))
+    assert sorted(map(tuple, a)) == sorted(b)
 
 
 def _warc_record(rtype, body, uri=None, rec_id=None, extra=None):
@@ -100,9 +99,19 @@ def _http(body_bytes, ctype="text/html; charset=utf-8"):
     )
 
 
+# Charsets whose codec raises even under errors="replace" (idna and
+# undefined on any input, punycode on non-ASCII bytes); such a record
+# decodes as UTF-8, like an unknown charset
+_RAISING_CHARSETS = ("idna", "undefined", "punycode")
+
+
 def _build_warc():
     html1 = "<html><body><p>First crawled page &amp; more.</p></body></html>"
     html2 = "<html><body><div><p>Second page.</p></div></body></html>"
+    odd = {
+        f"<urn:r:cs-{cs}>": (f"http://a.ex/{cs}", f"<html><body><p>Café, served as {cs}.</p></body></html>")
+        for cs in _RAISING_CHARSETS
+    }
     return (
         _warc_record("warcinfo", b"software: synth")
         + _warc_record("request", b"GET / HTTP/1.1\r\n\r\n", uri="http://a.ex/")
@@ -118,8 +127,17 @@ def _build_warc():
         + b"not a warc record at all\r\n"
         + _warc_record(
             "response", _http(html2.encode()), uri="http://a.ex/two", rec_id="<urn:r:3>"
+        )
+        + b"".join(
+            _warc_record(
+                "response",
+                _http(html.encode(), ctype=f"text/html; charset={cs}"),
+                uri=uri,
+                rec_id=rid,
+            )
+            for cs, (rid, (uri, html)) in zip(_RAISING_CHARSETS, odd.items())
         ),
-        {"<urn:r:1>": ("http://a.ex/one", html1), "<urn:r:3>": ("http://a.ex/two", html2)},
+        {"<urn:r:1>": ("http://a.ex/one", html1), "<urn:r:3>": ("http://a.ex/two", html2), **odd},
     )
 
 
@@ -158,43 +176,57 @@ def test_ingest_warc_documents_spark(spark, tmp_path):
     }
 
 
-def test_warc_ingest_yields_bounded_chunks(spark):
-    """A multi-MB archive must stream out of _warc_batches in bounded
-    chunks (VERDICT r4 watch item: one frame per archive held ~3× the
-    archive size), and chunking must not change the extracted documents."""
+def _extract_chunks():
+    """70 tiny pages cross the row limit; an 8 MB page crosses the byte limit."""
+    import pandas as pd
+
+    from go_readability_spark.kernel.options import Options
+    from go_readability_spark.spark.extract import DEFAULT_URI, _batch_extractor
+
+    def frame(ids, pages):
+        return pd.DataFrame({"doc_id": ids, "html": pages, "uri": [DEFAULT_URI] * len(ids)})
+
+    tiny = "<html><body><p>hi</p></body></html>"
+    big = "<html><body><div>" + "x" * EMIT_MAX_BYTES + "</div></body></html>"
+    rows = [f"r{i}" for i in range(EMIT_MAX_ROWS + 6)]
+    batches = [frame(rows, [tiny] * len(rows)), frame(["b0", "big", "b1"], [tiny, big, tiny])]
+    # 64 by rows; the 6 left over + b0 + big by bytes; b1 at the end
+    return _batch_extractor(Options()), batches, [*rows, "b0", "big", "b1"], [EMIT_MAX_ROWS, 8, 1]
+
+
+def _warc_chunks():
+    """One multi-MB archive whose records cross the row limit three times:
+    a frame per archive would hold ~3× the archive."""
     import pandas as pd
 
     from go_readability_spark.spark import corpus as C
 
-    n_pages = 3 * C.WARC_CHUNK_RECORDS + 7
-    body = "<html><body>" + "<p>filler paragraph text.</p>" * 400 + "</body></html>"
+    n_pages = 3 * EMIT_MAX_ROWS + 7
+    body = "<p>filler paragraph text.</p>" * 400 + "</body></html>"
     payload = b"".join(
         _warc_record(
             "response",
-            _http(f"<html><body><p>page {i}</p>{body[12:]}".encode()),
+            _http(f"<html><body><p>page {i}</p>{body}".encode()),
             uri=f"http://a.ex/p{i}",
             rec_id=f"<urn:chunk:{i}>",
         )
         for i in range(n_pages)
     )
     assert len(payload) > 2_000_000  # genuinely multi-MB
-    frames = list(
-        C._warc_batches(iter([pd.DataFrame({"content": [payload], "path": ["a"]})]))
-    )
-    assert len(frames) == 4  # 3 full chunks + remainder, never one mega frame
-    assert [len(f) for f in frames[:-1]] == [C.WARC_CHUNK_RECORDS] * 3
-    assert frames[-1].shape[0] == 7
-    all_ids = [d for f in frames for d in f["doc_id"]]
-    assert all_ids == [f"<urn:chunk:{i}>" for i in range(n_pages)]
-    # parity: the Spark path over the chunked generator returns every page
-    import tempfile, os
+    ids = [f"<urn:chunk:{i}>" for i in range(n_pages)]
+    batches = [pd.DataFrame({"content": [payload], "path": ["a"]})]
+    return C._encode(C._warc_pages), batches, ids, [EMIT_MAX_ROWS] * 3 + [7]
 
-    with tempfile.TemporaryDirectory() as td:
-        p = os.path.join(td, "big.warc")
-        with open(p, "wb") as fh:
-            fh.write(payload)
-        bf = spark.read.format("binaryFile").load(p)
-        assert C.ingest_warc_documents(bf).count() == n_pages
+
+@pytest.mark.parametrize("case", [_extract_chunks, _warc_chunks], ids=["extract", "warc"])
+def test_emit_frames_cuts_by_rows_and_bytes(case):
+    """Every operator's output leaves through session.emit_frames: a frame
+    is cut after EMIT_MAX_ROWS rows, or earlier once its rows' input
+    reaches EMIT_MAX_BYTES, and every row comes out once, in order."""
+    operator, batches, ids, sizes = case()
+    frames = list(operator(iter(batches)))
+    assert [len(f) for f in frames] == sizes
+    assert [d for f in frames for d in f["doc_id"]] == ids
 
 
 def test_warc_codec_graceful_on_corrupt_gzip():
@@ -289,27 +321,73 @@ def test_warc_quoted_charset_decodes():
     assert html is not None and "Привет" in html
 
 
-def test_warc_record_that_raises_becomes_empty_document(monkeypatch):
-    """A record the span codec raises on becomes one document without spans
-    instead of failing the ingest task; its neighbours still encode."""
+def _poison_sources():
+    """Per source: (page generator, one input batch, the bad page's doc_id).
+    Each batch holds a good page and one whose HTML says "poison" (a PDF:
+    whose payload is b"poison")."""
     import pandas as pd
 
     from go_readability_spark.spark import corpus as C
+    from go_readability_spark.spark.extract import DEFAULT_URI
 
-    real = C.html_to_spans
+    good = "<html><body><p>fine</p></body></html>"
+    pdf = b"%PDF-1.4\n1 0 obj << /Length 27 >> stream\nBT (Hello PDF world.) Tj ET\nendstream endobj\n"
+    uris = [DEFAULT_URI, DEFAULT_URI]
+    warc = b"".join(
+        _warc_record("response", _http(body.encode()), uri=f"http://a.ex/{i}", rec_id=f"<urn:p:{i}>")
+        for i, body in enumerate([good, "<p>poison</p>"])
+    )
+    return {
+        "html": (
+            C._html_pages,
+            pd.DataFrame({"doc_id": ["good", "bad"], "html": [good, "<p>poison</p>"], "uri": uris}),
+            "bad",
+        ),
+        "synth": (
+            C._synth_pages,
+            pd.DataFrame(
+                {"doc_id": [1, 2], "text": ["fine words", "poison words"], "lang": ["en", "en"],
+                 "source": ["s", "s"], "rep": [0, 0]}
+            ),
+            "doc-000000002",
+        ),
+        "pdf": (
+            C._pdf_pages,
+            pd.DataFrame({"doc_id": ["good", "bad"], "payload": [pdf, b"poison"], "uri": uris}),
+            "bad",
+        ),
+        "warc": (C._warc_pages, pd.DataFrame({"content": [warc], "path": ["a"]}), "<urn:p:1>"),
+    }
 
-    def flaky(html):
+
+@pytest.mark.parametrize("source", ["html", "synth", "pdf", "warc"])
+def test_poison_page_becomes_one_empty_document(monkeypatch, source):
+    """A page a codec raises on becomes one document without spans instead
+    of failing the ingest task; its neighbour encodes as it does without
+    the poison."""
+    from go_readability_spark.spark import corpus as C
+
+    pages, batch, bad = _poison_sources()[source]
+
+    def encode():
+        frames = C._encode(pages)(iter([batch]))
+        return {d: list(s) for f in frames for d, s in zip(f["doc_id"], f["spans"])}
+
+    clean = encode()
+    real_html, real_pdf = C.html_to_spans, C.pdf_to_text_lines
+
+    def html_to_spans(html):
         if "poison" in html:
             raise RuntimeError("boom")
-        return real(html)
+        return real_html(html)
 
-    monkeypatch.setattr(C, "html_to_spans", flaky)
-    payload = b"".join(
-        _warc_record("response", _http(body.encode()), uri=f"http://a.ex/{i}", rec_id=f"<urn:p:{i}>")
-        for i, body in enumerate(["<html><body><p>fine</p></body></html>", "<p>poison</p>"])
-    )
-    frames = list(C._warc_batches(iter([pd.DataFrame({"content": [payload], "path": ["a"]})])))
-    spans = {d: list(s) for f in frames for d, s in zip(f["doc_id"], f["spans"])}
-    assert sorted(spans) == ["<urn:p:0>", "<urn:p:1>"]
-    assert spans["<urn:p:1>"] == []
-    assert "".join(s["text"] for s in spans["<urn:p:0>"]) == "<html><body><p>fine</p></body></html>"
+    def pdf_to_text_lines(payload):
+        if payload == b"poison":
+            raise ValueError("boom")
+        return real_pdf(payload)
+
+    monkeypatch.setattr(C, "html_to_spans", html_to_spans)
+    monkeypatch.setattr(C, "pdf_to_text_lines", pdf_to_text_lines)
+    got = encode()
+    assert len(got) == 2 and got[bad] == [] and clean[bad] != []
+    assert {d: s for d, s in got.items() if d != bad} == {d: s for d, s in clean.items() if d != bad}

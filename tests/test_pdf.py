@@ -732,28 +732,3 @@ def test_pdf_adversarial_structure_is_linear():
         t0 = time.perf_counter()
         assert pdf_to_text_lines(pdf) == []
         assert time.perf_counter() - t0 < 3.0
-
-
-def test_pdf_ingest_row_that_raises_becomes_empty_document(monkeypatch):
-    """A payload the text-layer extractor raises on becomes one document
-    without spans (extraction then reports it as parse_error); the other
-    rows of the batch are untouched."""
-    import pandas as pd
-
-    from go_readability_spark.codec import pdf as codec_pdf
-    from go_readability_spark.spark import corpus as C
-
-    real = codec_pdf.pdf_to_text_lines
-
-    def flaky(payload):
-        if payload == b"poison":
-            raise ValueError("boom")
-        return real(payload)
-
-    monkeypatch.setattr(codec_pdf, "pdf_to_text_lines", flaky)
-    batch = pd.DataFrame({"doc_id": ["good", "bad"], "payload": [_minimal_pdf(CONTENT), b"poison"]})
-    (out,) = list(C._pdf_batches()(iter([batch])))
-    spans = dict(zip(out["doc_id"], out["spans"]))
-    assert sorted(spans) == ["bad", "good"]
-    assert list(spans["bad"]) == []
-    assert any("Hello PDF world." in s["text"] for s in spans["good"])

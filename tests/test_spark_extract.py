@@ -13,8 +13,6 @@ from go_readability_spark.kernel.readability import parse_document
 from go_readability_spark.spark.corpus import fixture_documents
 from go_readability_spark.spark.extract import (
     DEFAULT_URI,
-    _EMIT_BYTES,
-    _EMIT_ROWS,
     _HTML_EXPR,
     _batch_extractor,
     extract_articles,
@@ -76,23 +74,6 @@ def test_media_refs_absolutized(fixture_articles):
         s for s in fixture_articles["keep-images"].spans if s.kind == "img"
     ]
     assert imgs and all(s.media_ref.startswith("http") for s in imgs)
-
-
-def test_emit_chunking_preserves_rows():
-    """Output chunks are cut after _EMIT_ROWS rows, or earlier once their
-    input HTML reaches _EMIT_BYTES; every input row comes out exactly once."""
-    import pandas as pd
-
-    tiny = "<html><body><p>hi</p></body></html>"
-    n = _EMIT_ROWS + 6
-    crosses_rows = pd.DataFrame({"doc_id": [f"r{i}" for i in range(n)], "html": [tiny] * n})
-    big = "<html><body><div>" + "x" * _EMIT_BYTES + "</div></body></html>"
-    crosses_bytes = pd.DataFrame({"doc_id": ["b0", "big", "b1"], "html": [tiny, big, tiny]})
-    chunks = list(_batch_extractor(Options())(iter([crosses_rows, crosses_bytes])))
-    # 64 by rows; the 6 left over + b0 + big flush by bytes; b1 at the end
-    assert [len(c) for c in chunks] == [_EMIT_ROWS, 8, 1]
-    ids = [d for c in chunks for d in c.doc_id]
-    assert sorted(ids) == sorted([*crosses_rows.doc_id, *crosses_bytes.doc_id])
 
 
 def _dense_page():
@@ -385,7 +366,7 @@ def test_output_codec_failure_through_spark(spark, synth_pages, pages_to_documen
             module.dom_to_spans = stock
 
     docs = pages_to_documents(synth_pages([0]))
-    html = docs.select("doc_id", F.expr(_HTML_EXPR).alias("html"))
+    html = docs.select("doc_id", F.expr(_HTML_EXPR).alias("html"), "uri")
     rows = html.mapInPandas(broken, ARTICLES_SCHEMA).collect()
     assert len(rows) == 1
     assert rows[0].status == "parse_error"
@@ -446,7 +427,9 @@ def test_reused_worker_skips_zip_rereads(spark, synth_pages):
             T.StructField("zip_reads", T.LongType()),
         ]
     )
-    pages = spark.createDataFrame(pd.DataFrame(synth_pages(range(2)), columns=["doc_id", "html"]))
+    pages = spark.createDataFrame(
+        pd.DataFrame(synth_pages(range(2)), columns=["doc_id", "html"]).assign(uri=DEFAULT_URI)
+    )
     job = pages.coalesce(1).mapInPandas(probed, schema).select("status", "pid", "primed", "zip_reads")
     tasks = []
     # Spark hands a task to any idle worker, so run one-task jobs until

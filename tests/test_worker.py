@@ -137,7 +137,7 @@ def test_outside_a_spark_task_nothing_changes():
     frozen = gc.get_freeze_count()
     hook = zipimport.zipimporter.invalidate_caches
     worker.prepare_worker()
-    list(corpus._warc_batches(iter([pd.DataFrame({"content": [b""], "path": ["a"]})])))
+    list(corpus._encode(corpus._warc_pages)(iter([pd.DataFrame({"content": [b""], "path": ["a"]})])))
     assert not worker._prepared
     assert gc.get_freeze_count() == frozen
     assert zipimport.zipimporter.invalidate_caches is hook is worker._stock_invalidate
