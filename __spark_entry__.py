@@ -2,7 +2,7 @@
 
 ``entry`` runs the flagship extraction: synthesize the interleaved-span
 documents table (BASELINE.json input_hint shape) from sf0.001 and run the
-Arc90 kernel through ``mapInPandas``.  ``queries``/``oracle_sql`` expose
+Arc90 kernel through ``mapInArrow``.  ``queries``/``oracle_sql`` expose
 the Spark-level operator inventory (SURVEY.md §2 [S] tier plus the
 training-data-pipeline ops) with DuckDB twins for the value-level
 correctness gate.
@@ -133,7 +133,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skew_salt_distribution": R.skew_salt_distribution,
         "readerable_prescreen": R.readerable_prescreen,
         # extraction surface, front-loaded (non-SQL-expressible: kernel
-        # inside mapInPandas; correctness gated by the 119-fixture golden
+        # inside mapInArrow; correctness gated by the 119-fixture golden
         # suite under pytest, and by pinned-constant oracles computed once
         # from the deterministic seed-42 sf0.01 corpus — a value-level
         # regression gate for the kernel-through-Spark path)

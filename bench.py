@@ -13,8 +13,8 @@ Env:
                       not job startup)
 
 The headline is the flagship extraction pipeline: synthesize the
-interleaved-span corpus (mapInPandas page builder) → salted repartition →
-Arc90 kernel extraction (mapInPandas) → count.  docs/sec is measured over
+interleaved-span corpus (mapInArrow page builder) → salted repartition →
+Arc90 kernel extraction (mapInArrow) → count.  docs/sec is measured over
 the extraction job wall time.  tools/bench_scaling.py runs this at two
 parallelism levels for the N→4N scaling-efficiency evidence.
 """

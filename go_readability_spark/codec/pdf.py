@@ -259,6 +259,37 @@ def page_pieces_from_lines(lines: list[str]) -> list[str]:
     return ["<html><body>", *(f"<p>{escape(line)}</p>" for line in lines), "</body></html>"]
 
 
+# A FlateDecode stream inflates to at most this many bytes; one that would
+# inflate further is treated as corrupt.  It equals the engine's Arrow
+# batch byte cap (spark/session.py ARROW_MAX_BYTES): no longer text fits a
+# batch anyway, and the largest stream in the crawl_archives PDFs of seeds
+# 1-6 inflates to 204,148 bytes.  Uncapped, a 255 KiB PDF peaked at 532 MiB.
+_INFLATE_LIMIT = 16 * 1024 * 1024
+_INFLATE_CHUNK = 1 << 20
+
+
+def _inflate(raw: bytes) -> bytes | None:
+    """``raw`` zlib-inflated, or None when it is corrupt, truncated, or
+    inflates past ``_INFLATE_LIMIT``.  Output is taken a chunk at a time,
+    so an over-limit stream stops at the limit (one capped ``decompress``
+    call peaks at twice it: its blocks, then their join)."""
+    d = zlib.decompressobj()
+    parts, size = [], 0
+    try:
+        while not d.eof:
+            part = d.decompress(raw, _INFLATE_CHUNK)
+            if not part:  # input exhausted before the end of the stream
+                break
+            size += len(part)
+            if size > _INFLATE_LIMIT:
+                return None
+            parts.append(part)
+            raw = d.unconsumed_tail
+    except zlib.error:
+        return None
+    return b"".join(parts) if d.eof else None
+
+
 def _content_streams(pdf: bytes) -> list[bytes]:
     """Every stream in physical order, flate-decoded when its head says
     so; the head is the stream's own dictionary, from the last ``obj`` or
@@ -280,9 +311,8 @@ def _content_streams(pdf: bytes) -> list[bytes]:
         # stream data runs to the last newline before endstream
         data = pdf[m.end() : end].rstrip(b"\r\n")
         if b"/FlateDecode" in head:
-            try:
-                data = zlib.decompress(data)
-            except zlib.error:
+            data = _inflate(data)
+            if data is None:
                 continue
         streams.append(data)
     return streams
@@ -406,9 +436,8 @@ def _decode_stream(head: bytes, raw: bytes) -> bytes | None:
         return raw
     if named.group(1) != b"FlateDecode":
         return None
-    try:
-        data = zlib.decompress(raw)
-    except zlib.error:
+    data = _inflate(raw)
+    if data is None:
         return None
     parms = _dict_subdict(head, b"DecodeParms") or _dict_subdict(head, b"DP")
     if parms:

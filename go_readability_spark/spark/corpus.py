@@ -1,7 +1,7 @@
 """The documents table's four sources, and the one encoder they share.
 
 Every source emits ``DOCUMENTS_SCHEMA`` rows (BASELINE.json ``input_hint``
-shape) from inside ``mapInPandas``, so ingest scales with the cluster and
+shape) from inside ``mapInArrow``, so ingest scales with the cluster and
 the driver never materializes pages:
 
 1. ``synthesize_documents`` — article-shaped HTML pages generated
@@ -17,13 +17,14 @@ the driver never materializes pages:
 4. ``ingest_warc_documents`` — crawl archives, one document per HTML
    response record.
 
-One encoder: a source is a per-row page generator that yields
+One encoder: a source is a per-row page generator that takes an input
+row as a dict (``RecordBatch.to_pylist()``) and yields
 ``(doc_id, uri, page)``, the page an HTML ``str`` or PDF ``bytes``;
 ``_spans`` turns a page into span rows, and ``session.emit_frames`` cuts
-the output.  ``_spans`` holds the one failure rule: a page it cannot
-encode becomes a document without spans, never a failed task.  An
-optional input column is defaulted when the input is selected, never per
-row.
+the output and builds its Arrow batches without pandas.  ``_spans`` holds
+the one failure rule: a page it cannot encode becomes a document without
+spans, never a failed task.  An optional input column is defaulted when
+the input is selected, never per row.
 
 Synthetic pages deliberately include the boilerplate families the kernel
 must strip (nav/sidebar/comments/footer/share/script — regexps.go:8,17)
@@ -38,8 +39,9 @@ from __future__ import annotations
 import os
 from typing import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codec.pdf import page_pieces_from_lines, pdf_to_text_lines
 from ..codec.spans import html_to_spans
@@ -50,7 +52,7 @@ from .schema import DOCUMENTS_SCHEMA
 from .session import emit_frames
 from . import worker  # noqa: F401  (sets up a Python worker on import)
 
-_COLUMNS = [f.name for f in DOCUMENTS_SCHEMA.fields]
+_DOCUMENTS_ARROW = to_arrow_schema(DOCUMENTS_SCHEMA)
 _STOP_EVERY_WORDS = 13  # sentence length in words
 _SENTS_PER_PARA = 4
 
@@ -76,18 +78,18 @@ def _spans(page: str | bytes) -> list[dict]:
         return []
 
 
-def _encode(pages: Callable[..., Iterable[tuple[str, str, str | bytes]]]):
+def _encode(pages: Callable[[dict], Iterable[tuple[str, str, str | bytes]]]):
     """The one ingest batch function: ``pages(row)`` yields each input
     row's pages, and each page becomes one documents row."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rows = (
             ({"doc_id": doc_id, "uri": uri, "spans": _spans(page)}, len(page))
-            for pdf in batches
-            for row in pdf.itertuples(index=False)
+            for batch in batches
+            for row in batch.to_pylist()
             for doc_id, uri, page in pages(row)
         )
-        return emit_frames(rows, _COLUMNS)
+        return emit_frames(rows, _DOCUMENTS_ARROW)
 
     return run
 
@@ -182,12 +184,13 @@ def synth_html(doc_id: int, text: str, lang: str, source: str) -> str:
     return "\n".join(parts)
 
 
-def _synth_pages(row) -> Iterator[tuple[str, str, str]]:
-    doc_id = int(row.doc_id)
-    rep = int(row.rep)
-    html = synth_html(doc_id, row.text or "", row.lang or "en", row.source or "src")
+def _synth_pages(row: dict) -> Iterator[tuple[str, str, str]]:
+    doc_id = int(row["doc_id"])
+    rep = int(row["rep"])
+    source = row["source"]
+    html = synth_html(doc_id, row["text"] or "", row["lang"] or "en", source or "src")
     uid = f"doc-{doc_id:09d}" + (f"-r{rep:03d}" if rep else "")
-    yield uid, f"http://synth.example/{row.source}/{doc_id}.html", html
+    yield uid, f"http://synth.example/{source}/{doc_id}.html", html
 
 
 def synthesize_documents(
@@ -198,7 +201,7 @@ def synthesize_documents(
 ) -> DataFrame:
     """documents.parquet(text corpus) → interleaved-span documents table.
 
-    Distributed: the page builder runs in ``mapInPandas`` over the scaled
+    Distributed: the page builder runs in ``mapInArrow`` over the scaled
     text table, so the span corpus is generated where it is consumed.
     ``replicate`` fans each source row out K× (unique doc_ids, identical
     page content) — the bench knob for compute-dominated scaling runs.
@@ -228,11 +231,11 @@ def synthesize_documents(
     target = max(spark.sparkContext.defaultParallelism, replicate)
     if len(src.inputFiles()) < target:
         src = src.repartition(target)
-    return src.mapInPandas(_encode(_synth_pages), schema=DOCUMENTS_SCHEMA)
+    return src.mapInArrow(_encode(_synth_pages), schema=DOCUMENTS_SCHEMA)
 
 
-def _html_pages(row) -> Iterator[tuple[str, str, str]]:
-    yield row.doc_id, row.uri, row.html or ""
+def _html_pages(row: dict) -> Iterator[tuple[str, str, str]]:
+    yield row["doc_id"], row["uri"], row["html"] or ""
 
 
 def ingest_html_documents(df: DataFrame) -> DataFrame:
@@ -244,11 +247,11 @@ def ingest_html_documents(df: DataFrame) -> DataFrame:
     gets ``DEFAULT_URI``.
     """
     cols = ["doc_id", "html", column_or(df, "uri", DEFAULT_URI)]
-    return df.select(*cols).mapInPandas(_encode(_html_pages), schema=DOCUMENTS_SCHEMA)
+    return df.select(*cols).mapInArrow(_encode(_html_pages), schema=DOCUMENTS_SCHEMA)
 
 
-def _pdf_pages(row) -> Iterator[tuple[str, str, bytes]]:
-    yield row.doc_id, row.uri, bytes(row.payload) if row.payload is not None else b""
+def _pdf_pages(row: dict) -> Iterator[tuple[str, str, bytes]]:
+    yield row["doc_id"], row["uri"], row["payload"] or b""
 
 
 def ingest_pdf_documents(df: DataFrame) -> DataFrame:
@@ -263,14 +266,13 @@ def ingest_pdf_documents(df: DataFrame) -> DataFrame:
     consumes).
     """
     cols = ["doc_id", "payload", column_or(df, "uri", DEFAULT_URI)]
-    return df.select(*cols).mapInPandas(_encode(_pdf_pages), schema=DOCUMENTS_SCHEMA)
+    return df.select(*cols).mapInArrow(_encode(_pdf_pages), schema=DOCUMENTS_SCHEMA)
 
 
-def _warc_pages(row) -> Iterator[tuple[str, str, str]]:
-    payload = bytes(row.content) if row.content is not None else b""
+def _warc_pages(row: dict) -> Iterator[tuple[str, str, str]]:
     # binaryFile's path column is the natural per-archive identity for
     # fallback record ids (indexes restart at 0 per archive)
-    for rec_id, uri, html in warc_html_pages(payload, row.path or ""):
+    for rec_id, uri, html in warc_html_pages(row["content"] or b"", row["path"] or ""):
         yield rec_id, uri or DEFAULT_URI, html
 
 
@@ -283,7 +285,7 @@ def ingest_warc_documents(df: DataFrame) -> DataFrame:
     ``spark.read.format("binaryFile").load("s3://.../segment/*.warc.gz")``
     gives one task per archive (the natural WARC parallelism — archives
     are ~1 GB and self-contained), and the record scan + HTML decode +
-    span encode all run inside ``mapInPandas`` (``codec/warc.py``), so
+    span encode all run inside ``mapInArrow`` (``codec/warc.py``), so
     ingest scales with the archive count and nothing touches the driver.
     The fan-out (one archive row → many document rows) happens inside the
     Python batch; ``emit_frames`` cuts it, so the decoded records held at
@@ -291,4 +293,4 @@ def ingest_warc_documents(df: DataFrame) -> DataFrame:
     archive-sized allocation.
     """
     cols = ["content", column_or(df, "path", "")]
-    return df.select(*cols).mapInPandas(_encode(_warc_pages), schema=DOCUMENTS_SCHEMA)
+    return df.select(*cols).mapInArrow(_encode(_warc_pages), schema=DOCUMENTS_SCHEMA)

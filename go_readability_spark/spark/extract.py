@@ -1,4 +1,4 @@
-"""The extraction operator: spans-in → article-spans-out via ``mapInPandas``.
+"""The extraction operator: spans-in → article-spans-out via ``mapInArrow``.
 
 This is the engine's only Python execution surface (SURVEY.md §2.9): Arrow
 ships batches of whole documents into the Python worker, the per-document
@@ -12,8 +12,11 @@ Scale notes (10^12-doc design point, SURVEY.md §4.2):
   document the kernel holds: ``session.ensure_arrow_limits`` caps a batch
   at ``ARROW_MAX_RECORDS`` rows and closes it at the row that reaches
   ``ARROW_MAX_BYTES``, so a mega-document ends the batch it joins; output
-  rows leave in ``session.emit_frames`` chunks of at most
+  rows leave in ``session.emit_frames`` batches of at most
   ``EMIT_MAX_ROWS`` rows or ``EMIT_MAX_BYTES`` input bytes.
+- No pandas in the worker: input batches are read with ``to_pylist()``
+  and output batches are built from Arrow buffers (``emit_frames``), so
+  an extraction worker never imports pandas (~39 MB of its RSS).
 - Skew: ``salted_repartition`` spreads documents uniformly regardless of
   upstream partitioning (mega-docs cluster by crawl host in real corpora).
 - Oversized docs degrade to ``status='too_large'`` rows via
@@ -26,8 +29,9 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codec.spans import dom_to_spans
 from ..kernel.options import Options
@@ -39,6 +43,8 @@ from . import worker  # noqa: F401  (sets up a Python worker on import)
 DEFAULT_URI = "http://fakehost/test/page.html"
 
 _SALT_SEED = 64
+
+_ARTICLES_ARROW = to_arrow_schema(ARTICLES_SCHEMA)
 
 _EMPTY = {
     "spans": None,
@@ -114,15 +120,13 @@ def column_or(df: DataFrame, name: str, default) -> Column:
 
 
 def _batch_extractor(options: Options, prescreen: bool = False):
-    cols = [f.name for f in ARTICLES_SCHEMA.fields]
-
-    def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rows = (
-            (extract_one(row.doc_id, row.html, row.uri, options, prescreen), len(row.html or ""))
-            for pdf in batches
-            for row in pdf.itertuples(index=False)
+            (extract_one(doc_id, html, uri, options, prescreen), len(html or ""))
+            for batch in batches
+            for doc_id, html, uri in zip(*(batch.column(c).to_pylist() for c in ("doc_id", "html", "uri")))
         )
-        return emit_frames(rows, cols)
+        return emit_frames(rows, _ARTICLES_ARROW)
 
     return extract_batch
 
@@ -154,7 +158,7 @@ def extract_articles(
     ensure_arrow_limits(df.sparkSession)
     opts = options or Options(classes_to_preserve=["page", "caption"])
     cols = [F.col("doc_id"), F.expr(_HTML_EXPR).alias("html"), column_or(df, "uri", DEFAULT_URI)]
-    return df.select(*cols).mapInPandas(
+    return df.select(*cols).mapInArrow(
         _batch_extractor(opts, prescreen=prescreen),
         schema=ARTICLES_SCHEMA,
     )
@@ -192,7 +196,7 @@ def route_and_extract(
     ~40% of job wall on a well-bucketed corpus (local[16]: 3890 vs 2637
     docs/s without/with).  The production corpus is bucketed at write time
     (Iceberg ``bucket(B, doc_id)``), so the normal path reads in place and
-    shuffles nothing: one scan, one ``mapInPandas``.
+    shuffles nothing: one scan, one ``mapInArrow``.
 
     A mega-document needs no route of its own: the Arrow byte cap
     (``session.ARROW_MAX_BYTES``) closes its batch at it, the kernel

@@ -5,16 +5,18 @@ Tuned for the extraction workload (SURVEY.md §4.2): AQE on (runtime
 coalescing + skew splitting), Arrow on with batches capped by rows and by
 bytes (``ensure_arrow_limits``) so a mega-document ends its batch, and
 dynamic partition overwrite so per-bucket re-runs are idempotent.  On the
-way out, extraction and every ingest source cut their output frames with
-``emit_frames``.
+way out, extraction and every ingest source cut and build their output
+Arrow batches with ``emit_frames``.
 """
 
 from __future__ import annotations
 
 import os
+from array import array
+from itertools import accumulate
 from typing import Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 # Arrow batch limits for the extraction hop: a batch holds at most
@@ -43,19 +45,67 @@ EMIT_MAX_ROWS = 64
 EMIT_MAX_BYTES = 8_000_000
 
 
-def emit_frames(rows: Iterable[tuple[dict, int]], columns: list[str]) -> Iterator[pd.DataFrame]:
-    """(output row, input bytes) pairs → pandas frames of ``columns``, cut
-    by the two limits above; every row comes out once, in order."""
+def emit_frames(rows: Iterable[tuple[dict, int]], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """(output row, input bytes) pairs → Arrow record batches of
+    ``schema``, cut by the two limits above; every row comes out once, in
+    order."""
     out: list[dict] = []
     size = 0
     for row, n in rows:
         out.append(row)
         size += n
         if len(out) >= EMIT_MAX_ROWS or size >= EMIT_MAX_BYTES:
-            yield pd.DataFrame(out, columns=columns)
+            yield _record_batch(out, schema)
             out, size = [], 0
     if out:
-        yield pd.DataFrame(out, columns=columns)
+        yield _record_batch(out, schema)
+
+
+def _record_batch(rows: list[dict], schema: pa.Schema) -> pa.RecordBatch:
+    """``rows`` as one batch of ``schema``, built from Arrow buffers:
+    ``pa.array``, ``RecordBatch.from_pylist`` / ``from_pydict`` and
+    ``Table.from_*`` import pandas on first use (pyarrow's array-like
+    probe), which costs an extraction or ingest worker ~39 MB of RSS."""
+    columns = [_array(f.type, [row[f.name] for row in rows]) for f in schema]
+    return pa.RecordBatch.from_arrays(columns, schema=schema)
+
+
+def _array(typ: pa.DataType, values: list) -> pa.Array:
+    """Python values (None for null) → an Arrow array of ``typ``: utf8,
+    int32, or a list or struct (a dict per value, never null) of those.
+    Offsets and ints are native int32 arrays, which is Arrow's
+    little-endian layout on the hosts Spark runs on."""
+    n = len(values)
+    valid = _validity(values)
+    if pa.types.is_string(typ):
+        data = [b"" if v is None else v.encode() for v in values]
+        return pa.Array.from_buffers(typ, n, [valid, _offsets(map(len, data)), pa.py_buffer(b"".join(data))])
+    if pa.types.is_int32(typ):
+        return pa.Array.from_buffers(typ, n, [valid, pa.py_buffer(array("i", [v or 0 for v in values]))])
+    if pa.types.is_list(typ):
+        items = [x for v in values if v is not None for x in v]
+        lengths = (0 if v is None else len(v) for v in values)
+        return pa.Array.from_buffers(typ, n, [valid, _offsets(lengths)], children=[_array(typ.value_type, items)])
+    if pa.types.is_struct(typ):
+        children = [_array(f.type, [v[f.name] for v in values]) for f in typ]
+        return pa.Array.from_buffers(typ, n, [valid], children=children)
+    raise TypeError(f"no Arrow buffer layout for {typ}")
+
+
+def _validity(values: list) -> pa.Buffer | None:
+    """The validity bitmap (bit i set when values[i] is not None), or None
+    when no value is null."""
+    if None not in values:
+        return None
+    bits = bytearray((len(values) + 7) // 8)
+    for i, v in enumerate(values):
+        if v is not None:
+            bits[i >> 3] |= 1 << (i & 7)
+    return pa.py_buffer(bits)
+
+
+def _offsets(lengths: Iterable[int]) -> pa.Buffer:
+    return pa.py_buffer(array("i", accumulate(lengths, initial=0)))
 
 
 def default_cpus() -> int:

@@ -7,11 +7,12 @@ is imported inside a Spark task: ``spark/extract.py`` and
 ``spark/corpus.py`` import it, and a worker imports them while it
 unpickles the first extraction or ingest function it runs (cloudpickle
 pickles a module-level function by reference, also when a closure names
-it, and unpickling it imports its module).  By then pyspark, pandas,
-pyarrow and the kernel are imported.  A closure pickled by value that
-names no engine global (the textops folds) imports neither, so a worker
-that only ever runs such closures stays unprepared.  Imported anywhere
-else (the driver, a test process) it changes nothing.
+it, and unpickling it imports its module).  By then pyspark, pyarrow and
+the kernel are imported; pandas is not (extraction and ingest never
+import it).  A closure pickled by value that names no engine global (the
+textops folds) imports neither, so a worker that only ever runs such
+closures stays unprepared.  Imported anywhere else (the driver, a test
+process) it changes nothing.
 
 - **Zip directory re-reads.**  Before each task,
   ``pyspark.worker_util.setup_spark_files`` calls
@@ -23,8 +24,9 @@ else (the driver, a test process) it changes nothing.
   re-reads it lazily, so the hook is installed below 3.13 only.  It
   re-reads an archive when its ``(st_mtime_ns, st_size, st_ino)`` changed
   since the last read, so a zip rewritten in place is still picked up.
-- **GC rescans of the import heap.**  A worker tracks ~77k objects after
-  importing pyspark, pandas, pyarrow and the engine, and every full
+- **GC rescans of the import heap.**  A worker tracks ~43k objects after
+  importing pyspark, pyarrow and the engine (~74k while the engine still
+  imported pandas; ``gc.get_freeze_count()`` inside a task), and every full
   collection triggered while a 50-300 KB page's DOM is built rescanned
   them.  ``gc.freeze()`` moves that heap into the permanent generation,
   which collections skip: kernel CPU over the 8 pages fell 3.34 -> 2.62 s

@@ -1,0 +1,149 @@
+"""The engine's Arrow writer (``session.emit_frames``) and the pandas-free
+extraction and ingest workers it makes possible."""
+
+import json
+import os
+import subprocess
+import sys
+import zlib
+
+import pyarrow as pa
+import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from go_readability_spark.spark.schema import ARTICLES_SCHEMA, DOCUMENTS_SCHEMA
+from go_readability_spark.spark.session import EMIT_MAX_BYTES, EMIT_MAX_ROWS, emit_frames
+
+_SPAN = {"kind": "markup", "text": "<p>", "media_ref": "", "offset": 0}
+_TEXTS = ["", "plain", "naïve café", "日本語のテキスト", "astral 𝄞 😀 𠜎", "a\x00b"]
+
+
+def _article(i: int) -> dict:
+    """Row ``i`` of the table: each nullable column is null on some rows;
+    spans cycle through None, [], one span and several (with a null text
+    and a null media_ref)."""
+    text = _TEXTS[i % len(_TEXTS)]
+    spans = [
+        None,
+        [],
+        [{**_SPAN, "text": text, "offset": i}],
+        [_SPAN, {"kind": "img", "text": None, "media_ref": text, "offset": 3},
+         {"kind": "markup", "text": text, "media_ref": None, "offset": 9}],
+    ][i % 4]
+    row = {
+        "doc_id": f"doc-{i}-{text}",
+        "spans": spans,
+        "status": "ok" if i % 2 else "",
+        "length": None if i % 5 == 1 else len(text) - 2,
+    }
+    names = ["title", "byline", "dir", "lang", "excerpt", "site_name", "published_time", "text_content", "error"]
+    for k, name in enumerate(names):
+        row[name] = None if (i + k) % 3 == 0 else _TEXTS[(i + k) % len(_TEXTS)]
+    return row
+
+
+def _document(i: int) -> dict:
+    article = _article(i)
+    return {"doc_id": article["doc_id"], "uri": article["title"], "spans": article["spans"]}
+
+
+@pytest.mark.parametrize(
+    "schema, make", [(ARTICLES_SCHEMA, _article), (DOCUMENTS_SCHEMA, _document)], ids=["articles", "documents"]
+)
+def test_writer_matches_pyarrow_builder(schema, make):
+    """Each batch equals what pyarrow's own row builder makes of the same
+    rows, and passes full validation.  The table cuts by rows first
+    (EMIT_MAX_ROWS tiny rows), then by bytes (a row that reaches
+    EMIT_MAX_BYTES), then ends on a short tail."""
+    arrow = to_arrow_schema(schema)
+    sizes = [1] * (EMIT_MAX_ROWS + 3) + [EMIT_MAX_BYTES] + [1] * 5
+    rows = [(make(i), n) for i, n in enumerate(sizes)]
+    batches = list(emit_frames(iter(rows), arrow))
+    assert [b.num_rows for b in batches] == [EMIT_MAX_ROWS, 4, 5]
+    start = 0
+    for batch in batches:
+        want = pa.RecordBatch.from_pylist([r for r, _ in rows[start : start + batch.num_rows]], schema=arrow)
+        batch.validate(full=True)
+        assert batch.schema == arrow
+        assert batch.equals(want), (batch.to_pylist(), want.to_pylist())
+        start += batch.num_rows
+    assert start == len(rows)
+
+
+def _warc(pages: list[str]) -> bytes:
+    out = b""
+    for i, page in enumerate(pages):
+        body = b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n\r\n" + page.encode()
+        head = (
+            f"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: {len(body)}\r\n"
+            f"WARC-Target-URI: http://a.ex/{i}\r\nWARC-Record-ID: <urn:g:{i}>\r\n\r\n"
+        )
+        out += head.encode() + body + b"\r\n\r\n"
+    return out
+
+
+_PAGE = "<html><head><title>T</title></head><body><article><p>" + "Some words here, " * 60 + "</p></article></body></html>"
+_PDF_CONTENT = zlib.compress(b"BT (Hello PDF world.) Tj ET")
+_PDF = (
+    b"%%PDF-1.4\n1 0 obj << /Filter /FlateDecode /Length %d >> stream\n" % len(_PDF_CONTENT)
+    + _PDF_CONTENT
+    + b"\nendstream endobj\n"
+)
+
+# The four ingest sources and extraction, each as its batch function's
+# name and one input batch of the columns Spark hands it.
+_INPUTS = {
+    "extract": {"doc_id": ["a", "b"], "html": [_PAGE, None], "uri": ["http://x.ex/a", None]},
+    "html": {"doc_id": ["a", "b"], "html": [_PAGE, None], "uri": ["http://x.ex/a", None]},
+    "synth": {"doc_id": [1, 2], "text": ["fine words here", None], "lang": ["en", None],
+              "source": ["s", None], "rep": [0, 1]},
+    "pdf": {"doc_id": ["p", "q"], "payload": [_PDF, None], "uri": ["http://x.ex/p", None]},
+    "warc": {"content": [_warc([_PAGE, "<p>second</p>"]), None], "path": ["a", None]},
+}
+
+_GUARD = r"""
+import json, sys
+import pyarrow as pa
+from go_readability_spark.spark import corpus, extract
+from go_readability_spark.kernel.options import Options
+
+assert "pandas" not in sys.modules, "importing the engine imported pandas"
+fns = {
+    "extract": extract._batch_extractor(Options(), prescreen=True),
+    "html": corpus._encode(corpus._html_pages),
+    "synth": corpus._encode(corpus._synth_pages),
+    "pdf": corpus._encode(corpus._pdf_pages),
+    "warc": corpus._encode(corpus._warc_pages),
+}
+rows = {}
+for name, fn in fns.items():
+    with pa.ipc.open_stream(sys.argv[1] + "/" + name) as reader:
+        rows[name] = [r for b in fn(iter(reader)) for r in b.to_pylist()]
+print(json.dumps({"pandas": "pandas" in sys.modules, "rows": rows}))
+"""
+
+
+def test_workers_never_import_pandas(tmp_path):
+    """In a fresh interpreter, importing the engine and running extraction
+    and all four ingest sources over IPC-read Arrow batches (as a Spark
+    worker receives them) leaves pandas unimported, and the rows come out."""
+    for name, columns in _INPUTS.items():
+        batch = pa.RecordBatch.from_pydict(columns)
+        with pa.ipc.new_stream(str(tmp_path / name), batch.schema) as writer:
+            writer.write_batch(batch)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _GUARD, str(tmp_path)], cwd=root, capture_output=True, text=True
+    )
+    assert proc.returncode == 0, proc.stderr
+    out = json.loads(proc.stdout)
+    assert out["pandas"] is False
+    rows = out["rows"]
+    assert [(r["doc_id"], r["status"]) for r in rows["extract"]] == [("a", "ok"), ("b", "not_readerable")]
+    assert [r["doc_id"] for r in rows["html"]] == ["a", "b"]
+    assert [r["doc_id"] for r in rows["synth"]] == ["doc-000000001", "doc-000000002-r001"]
+    assert [r["doc_id"] for r in rows["pdf"]] == ["p", "q"]
+    assert [r["doc_id"] for r in rows["warc"]] == ["<urn:g:0>", "<urn:g:1>"]
+    pdf_text = "".join(s["text"] for s in rows["pdf"][0]["spans"])
+    assert pdf_text == "<html><body><p>Hello PDF world.</p></body></html>"
+    assert all(r["spans"] for r in rows["html"][:1] + rows["synth"] + rows["warc"])

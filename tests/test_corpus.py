@@ -178,13 +178,13 @@ def test_ingest_warc_documents_spark(spark, tmp_path):
 
 def _extract_chunks():
     """70 tiny pages cross the row limit; an 8 MB page crosses the byte limit."""
-    import pandas as pd
+    import pyarrow as pa
 
     from go_readability_spark.kernel.options import Options
     from go_readability_spark.spark.extract import DEFAULT_URI, _batch_extractor
 
     def frame(ids, pages):
-        return pd.DataFrame({"doc_id": ids, "html": pages, "uri": [DEFAULT_URI] * len(ids)})
+        return pa.RecordBatch.from_pydict({"doc_id": ids, "html": pages, "uri": [DEFAULT_URI] * len(ids)})
 
     tiny = "<html><body><p>hi</p></body></html>"
     big = "<html><body><div>" + "x" * EMIT_MAX_BYTES + "</div></body></html>"
@@ -197,7 +197,7 @@ def _extract_chunks():
 def _warc_chunks():
     """One multi-MB archive whose records cross the row limit three times:
     a frame per archive would hold ~3× the archive."""
-    import pandas as pd
+    import pyarrow as pa
 
     from go_readability_spark.spark import corpus as C
 
@@ -214,7 +214,7 @@ def _warc_chunks():
     )
     assert len(payload) > 2_000_000  # genuinely multi-MB
     ids = [f"<urn:chunk:{i}>" for i in range(n_pages)]
-    batches = [pd.DataFrame({"content": [payload], "path": ["a"]})]
+    batches = [pa.RecordBatch.from_pydict({"content": [payload], "path": ["a"]})]
     return C._encode(C._warc_pages), batches, ids, [EMIT_MAX_ROWS] * 3 + [7]
 
 
@@ -226,7 +226,7 @@ def test_emit_frames_cuts_by_rows_and_bytes(case):
     operator, batches, ids, sizes = case()
     frames = list(operator(iter(batches)))
     assert [len(f) for f in frames] == sizes
-    assert [d for f in frames for d in f["doc_id"]] == ids
+    assert [d for f in frames for d in f["doc_id"].to_pylist()] == ids
 
 
 def test_warc_codec_graceful_on_corrupt_gzip():
@@ -325,7 +325,7 @@ def _poison_sources():
     """Per source: (page generator, one input batch, the bad page's doc_id).
     Each batch holds a good page and one whose HTML says "poison" (a PDF:
     whose payload is b"poison")."""
-    import pandas as pd
+    import pyarrow as pa
 
     from go_readability_spark.spark import corpus as C
     from go_readability_spark.spark.extract import DEFAULT_URI
@@ -340,12 +340,12 @@ def _poison_sources():
     return {
         "html": (
             C._html_pages,
-            pd.DataFrame({"doc_id": ["good", "bad"], "html": [good, "<p>poison</p>"], "uri": uris}),
+            pa.RecordBatch.from_pydict({"doc_id": ["good", "bad"], "html": [good, "<p>poison</p>"], "uri": uris}),
             "bad",
         ),
         "synth": (
             C._synth_pages,
-            pd.DataFrame(
+            pa.RecordBatch.from_pydict(
                 {"doc_id": [1, 2], "text": ["fine words", "poison words"], "lang": ["en", "en"],
                  "source": ["s", "s"], "rep": [0, 0]}
             ),
@@ -353,10 +353,10 @@ def _poison_sources():
         ),
         "pdf": (
             C._pdf_pages,
-            pd.DataFrame({"doc_id": ["good", "bad"], "payload": [pdf, b"poison"], "uri": uris}),
+            pa.RecordBatch.from_pydict({"doc_id": ["good", "bad"], "payload": [pdf, b"poison"], "uri": uris}),
             "bad",
         ),
-        "warc": (C._warc_pages, pd.DataFrame({"content": [warc], "path": ["a"]}), "<urn:p:1>"),
+        "warc": (C._warc_pages, pa.RecordBatch.from_pydict({"content": [warc], "path": ["a"]}), "<urn:p:1>"),
     }
 
 
@@ -371,7 +371,7 @@ def test_poison_page_becomes_one_empty_document(monkeypatch, source):
 
     def encode():
         frames = C._encode(pages)(iter([batch]))
-        return {d: list(s) for f in frames for d, s in zip(f["doc_id"], f["spans"])}
+        return {d: s for f in frames for d, s in zip(f["doc_id"].to_pylist(), f["spans"].to_pylist())}
 
     clean = encode()
     real_html, real_pdf = C.html_to_spans, C.pdf_to_text_lines

@@ -1,5 +1,5 @@
 """Full 119-fixture golden parity THROUGH the Spark boundary: every golden
-page goes in as spans, through mapInPandas, and must come out with exact
+page goes in as spans, through mapInArrow, and must come out with exact
 span-sequence equality and all seven metadata fields (~20 s)."""
 
 import json

@@ -227,6 +227,32 @@ def test_pdf_garbage_and_empty():
     assert pdf_to_text_lines(bad) == []
 
 
+def test_pdf_inflation_is_capped():
+    """A FlateDecode stream that inflates to 64 MiB (a zip bomb beside a
+    normal page) is skipped like a corrupt one, on the physical stream
+    scan and on the cross-reference path alike: the normal page's lines
+    come out unchanged and memory stays under twice the inflate limit."""
+    import tracemalloc
+
+    from go_readability_spark.codec.pdf import _INFLATE_LIMIT
+
+    bomb = b" " * (64 << 20)
+    cases = [
+        (_pdf_with_streams([bomb, CONTENT], flate=True), pdf_to_text_lines(_pdf_with_streams([CONTENT], flate=True))),
+        (_build_structured_pdf(["alpha page one", "x" * (64 << 20)], scramble=False), ["alpha page one"]),
+    ]
+    del bomb
+    for pdf, want in cases:
+        assert len(pdf) < 1 << 20
+        tracemalloc.start()
+        try:
+            assert pdf_to_text_lines(pdf) == want
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 2 * _INFLATE_LIMIT
+
+
 def test_ingest_pdf_documents_extracts_through_kernel(spark):
     """PDF binary rows → span documents → the same Arc90 extraction
     operator as HTML, end-to-end."""

@@ -7,7 +7,8 @@ load-bearing properties so a refactor can't silently regress them:
   tiny broadcast side (query vectors, centroid tables) may contain a
   nested-loop/cartesian join;
 - no row-at-a-time Python: BatchEvalPython (per-row UDF) must never
-  appear — the only Python surface is Arrow-batched mapInPandas;
+  appear — the only Python surfaces are Arrow-batched mapInArrow
+  (extraction, ingest) and mapInPandas (the textops folds);
 - filters on the base-table scans reach parquet (PushedFilters) for the
   representative pushdown queries.
 """
@@ -105,7 +106,7 @@ def test_vocab_topk_uses_partial_topk(spark):
 @pytest.mark.requires_reference
 def test_extraction_scan_is_pruned(spark):
     """The extraction operator must read only doc_id/spans/uri, whatever
-    else the table carries (column pruning through mapInPandas)."""
+    else the table carries (column pruning through mapInArrow)."""
     from pyspark.sql import functions as F
 
     from go_readability_spark.spark.corpus import fixture_documents

@@ -1,4 +1,4 @@
-"""Spark-level extraction tests: the mapInPandas operator must reproduce the
+"""Spark-level extraction tests: the mapInArrow operator must reproduce the
 pure-Python kernel's golden results through the full codec round-trip
 (FIXTURES.md §2: span-sequence equality (kind, text, media_ref, order))."""
 
@@ -109,7 +109,7 @@ def _plan_counts(df):
     plan = df._jdf.queryExecution().executedPlan().toString()
     return {
         op: len(re.findall(rf"\b{op}\b", plan))
-        for op in ("FileScan", "Union", "Exchange", "MapInPandas")
+        for op in ("FileScan", "Union", "Exchange", "MapInArrow")
     }
 
 
@@ -119,9 +119,9 @@ def test_route_and_extract_plan_is_one_route(spark, synth_pages, pages_to_docume
     table = str(tmp_path / "docs")
     pages_to_documents(synth_pages(range(8))).write.parquet(table)
     in_place = _plan_counts(route_and_extract(spark.read.parquet(table)))
-    assert in_place == {"FileScan": 1, "Union": 0, "Exchange": 0, "MapInPandas": 1}
+    assert in_place == {"FileScan": 1, "Union": 0, "Exchange": 0, "MapInArrow": 1}
     salted = _plan_counts(route_and_extract(spark.read.parquet(table), num_partitions=4))
-    assert salted == {"FileScan": 1, "Union": 0, "Exchange": 1, "MapInPandas": 1}
+    assert salted == {"FileScan": 1, "Union": 0, "Exchange": 1, "MapInArrow": 1}
 
 
 def test_extract_articles_enforces_arrow_limits(spark, synth_pages, pages_to_documents):
@@ -152,12 +152,13 @@ def test_extract_articles_enforces_arrow_limits(spark, synth_pages, pages_to_doc
         )
 
         def probe(batches):
-            import pandas as pd
+            import pyarrow as pa
 
-            for pdf in batches:
-                yield pd.DataFrame({"first": [pdf.id.min()], "last": [pdf.id.max()]})
+            for batch in batches:
+                ids = batch.column("id").to_pylist()
+                yield pa.RecordBatch.from_pydict({"first": [min(ids)], "last": [max(ids)]})
 
-        spans = sorted((b.first, b.last) for b in docs.mapInPandas(probe, "first long, last long").collect())
+        spans = sorted((b.first, b.last) for b in docs.mapInArrow(probe, "first long, last long").collect())
         assert sum(last - first + 1 for first, last in spans) == n
         assert max(last - first + 1 for first, last in spans) <= ARROW_MAX_RECORDS
         assert (ARROW_MAX_RECORDS, big) in spans
@@ -367,7 +368,7 @@ def test_output_codec_failure_through_spark(spark, synth_pages, pages_to_documen
 
     docs = pages_to_documents(synth_pages([0]))
     html = docs.select("doc_id", F.expr(_HTML_EXPR).alias("html"), "uri")
-    rows = html.mapInPandas(broken, ARTICLES_SCHEMA).collect()
+    rows = html.mapInArrow(broken, ARTICLES_SCHEMA).collect()
     assert len(rows) == 1
     assert rows[0].status == "parse_error"
     assert rows[0].error == "TypeError: walk failed"
@@ -396,8 +397,9 @@ def test_reused_worker_skips_zip_rereads(spark, synth_pages):
     ``importlib.invalidate_caches()`` happens in between.  Nothing here
     calls ``prepare_worker``: unpickling the extractor imports the engine
     inside the task, and that import prepares the worker."""
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     extract = _batch_extractor(Options(classes_to_preserve=["page", "caption"]))
 
@@ -416,7 +418,9 @@ def test_reused_worker_skips_zip_rereads(spark, synth_pages):
             zipimport._read_directory = read_directory
         reads = read_directory.calls
         for out in extract(batches):
-            yield out.assign(pid=os.getpid(), primed=primed, zip_reads=reads)
+            n = out.num_rows
+            probes = [pa.array([os.getpid()] * n, pa.int64()), pa.array([primed] * n), pa.array([reads] * n, pa.int64())]
+            yield pa.RecordBatch.from_arrays(out.columns + probes, schema=arrow_schema)
         read_directory.calls = 0
 
     schema = T.StructType(
@@ -427,10 +431,11 @@ def test_reused_worker_skips_zip_rereads(spark, synth_pages):
             T.StructField("zip_reads", T.LongType()),
         ]
     )
+    arrow_schema = to_arrow_schema(schema)
     pages = spark.createDataFrame(
-        pd.DataFrame(synth_pages(range(2)), columns=["doc_id", "html"]).assign(uri=DEFAULT_URI)
+        [(d, html, DEFAULT_URI) for d, html in synth_pages(range(2))], "doc_id string, html string, uri string"
     )
-    job = pages.coalesce(1).mapInPandas(probed, schema).select("status", "pid", "primed", "zip_reads")
+    job = pages.coalesce(1).mapInArrow(probed, schema).select("status", "pid", "primed", "zip_reads")
     tasks = []
     # Spark hands a task to any idle worker, so run one-task jobs until
     # one lands on a worker an earlier job already primed

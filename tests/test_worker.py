@@ -130,14 +130,15 @@ def test_outside_a_spark_task_nothing_changes():
     """The driver and test processes import and call engine code too (here
     a WARC batch function, as tests/test_corpus.py does): their GC state
     and zipimport stay as they were."""
-    import pandas as pd
+    import pyarrow as pa
 
     from go_readability_spark.spark import corpus
 
     frozen = gc.get_freeze_count()
     hook = zipimport.zipimporter.invalidate_caches
     worker.prepare_worker()
-    list(corpus._encode(corpus._warc_pages)(iter([pd.DataFrame({"content": [b""], "path": ["a"]})])))
+    batch = pa.RecordBatch.from_pydict({"content": [b""], "path": ["a"]})
+    list(corpus._encode(corpus._warc_pages)(iter([batch])))
     assert not worker._prepared
     assert gc.get_freeze_count() == frozen
     assert zipimport.zipimporter.invalidate_caches is hook is worker._stock_invalidate

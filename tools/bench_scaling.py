@@ -70,6 +70,17 @@ spark.stop()
 sys.path.insert(0, REPO)
 from bench import host_probe_parallel_s, host_probe_s  # noqa: E402
 
+_DEGRADED_NOTE = (
+    "4N-way busy-loop probe >= 1.5x the 1-core probe: parallel delivery "
+    "is degraded; re-run in a cleaner window (see BENCH/BASELINE.md)"
+)
+
+
+def _degraded(probe_s: float, probe_par_s: float) -> bool:
+    """The window is degraded when the 4N-way probe takes >= 1.5x the
+    1-core one (bench.host_probe_parallel_s)."""
+    return probe_par_s >= 1.5 * probe_s
+
 
 def run_level(cpus: int, corpus: str, repeats: int = 2) -> dict:
     script = RUN_SNIPPET.format(repo=REPO)
@@ -157,6 +168,9 @@ def main() -> None:
         # on both levels (4N,N,4N,N): taking the best 4N against a single
         # N run would bias the selection toward the ≥0.8 gate instead of
         # merely controlling for steal.
+        # Both probe pairs gate, the one taken before the runs and the one
+        # taken after them: a window that degrades mid-measurement skews
+        # the pairing as much as one that starts degraded
         probe_before = host_probe_s()
         # the 4N-way delivery probe: the 1-core loop misses windows where
         # only parallel delivery degrades (BENCH/BASELINE.md r4 note), so
@@ -164,21 +178,35 @@ def main() -> None:
         # defines it (>= 1.5x the 1-core probe = degraded delivery): the
         # absolute speed of the loop differs from host to host
         probe_par_before = host_probe_parallel_s(args.n * 4)
-        if probe_par_before >= 1.5 * probe_before and not args.skip_probe_gate:
+        if _degraded(probe_before, probe_par_before) and not args.skip_probe_gate:
             print(json.dumps({
                 "metric": "scaling_efficiency_N_to_4N",
                 "aborted": "host degraded",
                 "host_probe_s": probe_before,
                 "host_probe_par_s": probe_par_before,
-                "note": "4N-way busy-loop probe >= 1.5x the 1-core probe: "
-                        "parallel delivery is degraded; re-run in a "
-                        "cleaner window (see BENCH/BASELINE.md)",
+                "note": _DEGRADED_NOTE,
             }))
             return
         h1 = run_level(args.n * 4, args.corpus, repeats=1)
         l1 = run_level(args.n, args.corpus, repeats=1)
         h2 = run_level(args.n * 4, args.corpus, repeats=1)
         l2 = run_level(args.n, args.corpus, repeats=1)
+        probe_after = host_probe_s()
+        probe_par_after = host_probe_parallel_s(args.n * 4)
+        probes = {
+            "host_probe_s": [probe_before, probe_after],
+            "host_probe_par_s": [probe_par_before, probe_par_after],
+        }
+        if _degraded(probe_after, probe_par_after) and not args.skip_probe_gate:
+            # no efficiency of record from a window that degraded
+            print(json.dumps({
+                "metric": "scaling_efficiency_N_to_4N",
+                "aborted": "host degraded during runs",
+                "runs": [h1, l1, h2, l2],
+                **probes,
+                "note": _DEGRADED_NOTE,
+            }))
+            return
         hi = h1 if h1["docs_per_sec"] >= h2["docs_per_sec"] else h2
         lo = l1 if l1["docs_per_sec"] >= l2["docs_per_sec"] else l2
         eff = hi["docs_per_sec"] / (4 * lo["docs_per_sec"])
@@ -192,8 +220,7 @@ def main() -> None:
             "efficiency": round(eff, 3),
             "runs": [h1, l1, h2, l2],
             "n_docs": lo["n_docs"],
-            "host_probe_s": [probe_before, host_probe_s()],
-            "host_probe_par_s": [probe_par_before, host_probe_parallel_s(args.n * 4)],
+            **probes,
         }))
         return
 
@@ -256,7 +283,7 @@ def main() -> None:
 ## Scaling efficiency (north_rule: ≥ 0.8 from N to 4N)
 
 Same extraction job (route_and_extract: shuffle-free scan of the
-pre-bucketed corpus + mapInPandas Arc90 kernel, byte-capped Arrow batches) on
+pre-bucketed corpus + mapInArrow Arc90 kernel, byte-capped Arrow batches) on
 the same materialized span corpus, fresh JVM per level — the sandbox proxy
 for N vs 4N executors.  Per level the best of several
 repeats is reported: this sandbox VM shows intermittent hypervisor CPU
