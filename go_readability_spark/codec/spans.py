@@ -30,6 +30,7 @@ entry point (a parse, then the same walk).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Iterable, Iterator
 
 from ..kernel.dom import (
     ELEMENT_NODE,
@@ -52,6 +53,10 @@ class Span:
     media_ref: str
     offset: int
 
+    def __getitem__(self, field: str):
+        """Read a field by name, as from a span row (``s["kind"]``)."""
+        return getattr(self, field)
+
     def as_tuple(self) -> tuple[str, str, str, int]:
         return (self.kind, self.text, self.media_ref, self.offset)
 
@@ -64,18 +69,50 @@ class Span:
         }
 
 
+class SpanColumns:
+    """One document's spans as four parallel columns, the layout of the
+    ``spans`` struct's fields: what the codecs fill and what
+    ``session.emit_frames`` writes, with no per-span object.  It reads
+    as a sequence of ``Span``s (``len``, iteration, indexing), each built
+    on demand."""
+
+    __slots__ = ("kind", "text", "media_ref", "offset")
+
+    def __init__(self) -> None:
+        self.kind: list[str] = []
+        self.text: list[str] = []
+        self.media_ref: list[str] = []
+        self.offset: list[int] = []
+
+    def append(self, kind: str, text: str, media_ref: str, offset: int) -> None:
+        self.kind.append(kind)
+        self.text.append(text)
+        self.media_ref.append(media_ref)
+        self.offset.append(offset)
+
+    def __len__(self) -> int:
+        return len(self.kind)
+
+    def __iter__(self) -> Iterator[Span]:
+        return map(Span, self.kind, self.text, self.media_ref, self.offset)
+
+    def __getitem__(self, i: int) -> Span:
+        return Span(self.kind[i], self.text[i], self.media_ref[i], self.offset[i])
+
+
 class _MediaSpans:
     """``_scan`` consumer: a media span over each media start-tag token's
     extent, byte-preserving markup spans between them."""
 
     def __init__(self, html: str) -> None:
         self.html = html
-        self.spans: list[Span] = []
+        self.spans = SpanColumns()
         self.out = 0  # end of the last emitted span
 
     def markup(self, upto: int) -> None:
         if upto > self.out:
-            self.spans.append(Span("markup", self.html[self.out : upto], "", len(self.spans)))
+            spans = self.spans
+            spans.append("markup", self.html[self.out : upto], "", len(spans))
             self.out = upto
 
     def handle_starttag(self, tag: str, attrs: list, start: int, end: int) -> None:
@@ -86,9 +123,8 @@ class _MediaSpans:
             node = new_element(tag)
             _DOMBuilder._build_attrs(node, attrs)
             self.markup(start)
-            self.spans.append(
-                Span(node.local_name, self.html[start:end], node.get_attribute("src"), len(self.spans))
-            )
+            spans = self.spans
+            spans.append(node.local_name, self.html[start:end], node.get_attribute("src"), len(spans))
             self.out = end
 
     handle_startendtag = handle_starttag
@@ -99,7 +135,7 @@ class _MediaSpans:
     handle_data = handle_endtag = handle_comment = handle_pi = handle_decl = unknown_decl = _ignore
 
 
-def html_to_spans(html: str) -> list[Span]:
+def html_to_spans(html: str) -> SpanColumns:
     """Decompose raw HTML into interleaved markup/media spans
     (byte-preserving), classified by the kernel's own tokenizer: a media
     tag becomes a media span exactly where the DOM parser emits a media
@@ -120,14 +156,15 @@ def html_to_spans(html: str) -> list[Span]:
     return consumer.spans
 
 
-def spans_to_html(spans: list[Span]) -> str:
+def spans_to_html(spans: Iterable[Span]) -> str:
     """Reassemble a document from ordered spans (inverse of html_to_spans)."""
     return "".join(s.text for s in sorted(spans, key=lambda s: s.offset))
 
 
 def _open_tag_repr(n: Node) -> str:
-    attrs = sorted((name, value) for name, value in n.attributes)
-    inner = "".join(f' {name}="{value}"' for name, value in attrs)
+    if not n.attributes:
+        return f"<{n.local_name}>"
+    inner = "".join(f' {name}="{value}"' for name, value in sorted(n.attributes))
     return f"<{n.local_name}{inner}>"
 
 
@@ -148,7 +185,7 @@ def _serializes_empty(n: Node) -> bool:
     return True
 
 
-def dom_to_spans(container: Node) -> list[Span]:
+def dom_to_spans(container: Node) -> SpanColumns:
     """Normalized output-span encoding of a (sub)tree's children.
 
     Normalization matches the reference test harness: whitespace collapsed
@@ -166,11 +203,11 @@ def dom_to_spans(container: Node) -> list[Span]:
     back into the article's tree (text that reads as markup, ``<`` + a
     letter, ``/``, ``!`` or ``?``), it emits what the article holds.
     """
-    spans: list[Span] = []
+    spans = SpanColumns()
     run: list[str] = []
 
     def emit(kind: str, text: str, media_ref: str = "") -> None:
-        spans.append(Span(kind, text, media_ref, len(spans)))
+        spans.append(kind, text, media_ref, len(spans))
 
     def flush_run() -> None:
         if run:
@@ -207,7 +244,7 @@ def dom_to_spans(container: Node) -> list[Span]:
     return spans
 
 
-def html_fragment_to_normalized_spans(html: str) -> list[Span]:
+def html_fragment_to_normalized_spans(html: str) -> SpanColumns:
     """Parse an HTML fragment with the kernel DOM and emit normalized spans.
 
     The string entry point: golden's expected.html side, and the

@@ -61,6 +61,13 @@ VOID_ELEMS = frozenset(
 
 _ENTITY_MAP = {"lt": "<", "gt": ">", "amp": "&", "quot": '"', "apos": "'"}
 
+# The one empty node list every childless node and attribute-less element
+# shares until its first insert: most nodes are text nodes or leaves, and
+# three fresh lists per node were most of the DOM's GC-tracked objects.
+# Only the inserting mutators below replace it with a list; nothing may
+# mutate a node list from outside ``Node``'s methods.
+_EMPTY: tuple = ()
+
 
 def decode_html(s: str) -> str:
     """Decode the XML entity subset + numeric char refs (domparser.go:74-100).
@@ -142,14 +149,14 @@ class Node:
         self.node_name = node_name
         self._text_content: str | None = None
         self._inner_html: str | None = None
-        self.attributes: list[list[str]] = []
+        self.attributes: list[list[str]] | tuple = _EMPTY
         self.parent_node: Node | None = None
         self.next_sibling: Node | None = None
         self.previous_sibling: Node | None = None
         self.previous_element_sibling: Node | None = None
         self.next_element_sibling: Node | None = None
-        self.child_nodes: list[Node] = []
-        self.children: list[Node] = []
+        self.child_nodes: list[Node] | tuple = _EMPTY
+        self.children: list[Node] | tuple = _EMPTY
         self.document_uri = ""
         self._base_uri = ""
         self.title = ""
@@ -204,19 +211,26 @@ class Node:
         append path: a tree under initial construction from fresh nodes has
         no clean memos anywhere, so there is nothing to invalidate."""
 
-        last = self.last_child()
-        if last is not None:
+        kids = self.child_nodes
+        if kids:
+            last = kids[-1]
             last.next_sibling = child
-        child.previous_sibling = last
+            child.previous_sibling = last
+            kids.append(child)
+        else:
+            child.previous_sibling = None
+            self.child_nodes = [child]
 
         if child.node_type == ELEMENT_NODE:
-            if self.children:
-                child.previous_element_sibling = self.children[-1]
-            self.children.append(child)
+            els = self.children
+            if els:
+                child.previous_element_sibling = els[-1]
+                els.append(child)
+            else:
+                self.children = [child]
             if child.previous_element_sibling is not None:
                 child.previous_element_sibling.next_element_sibling = child
 
-        self.child_nodes.append(child)
         child.parent_node = self
 
     def remove_child(self, child: Node) -> Node:
@@ -291,7 +305,9 @@ class Node:
                     new_node.previous_element_sibling.next_element_sibling = new_node
                 if new_node.next_element_sibling is not None:
                     new_node.next_element_sibling.previous_element_sibling = new_node
-                if new_node.next_element_sibling is not None:
+                if not self.children:
+                    self.children = [new_node]
+                elif new_node.next_element_sibling is not None:
                     self.children.insert(
                         _index_of(new_node.next_element_sibling, self.children), new_node
                     )
@@ -327,7 +343,10 @@ class Node:
             if attr[0] == name:
                 attr[1] = value
                 return
-        self.attributes.append([name, value])
+        if self.attributes:
+            self.attributes.append([name, value])
+        else:
+            self.attributes = [[name, value]]
 
     def remove_attribute(self, name: str) -> None:
         for i, attr in enumerate(self.attributes):
@@ -518,7 +537,7 @@ class Node:
             t._text_content = text
             t.parent_node = self
             self.child_nodes = [t]
-            self.children = []
+            self.children = _EMPTY
         else:
             self._text_content = text
 
@@ -619,25 +638,29 @@ def clone_deep(root: Node) -> Node:
     Iterative (explicit stack) so kernel recursion limits never bind on
     pathologically deep documents.  Algorithm annotations (content_score,
     data_table) stay at their uninitialized defaults — the pristine source
-    tree is never scored."""
+    tree is never scored.  Empty node lists stay the shared empty tuple."""
     out = Node(root.node_type, root.node_name)
     out.local_name = root.local_name
     out.tag_name = root.tag_name
     out._text_content = root._text_content
     out._inner_html = root._inner_html
-    out.attributes = [list(a) for a in root.attributes]
+    if root.attributes:
+        out.attributes = [list(a) for a in root.attributes]
     stack = [(root, out)]
     while stack:
         orig, copy = stack.pop()
         prev: Node | None = None
         prev_el: Node | None = None
+        kids: list[Node] = []
+        els: list[Node] = []
         for ch in orig.child_nodes:
             cc = Node(ch.node_type, ch.node_name)
             cc.local_name = ch.local_name
             cc.tag_name = ch.tag_name
             cc._text_content = ch._text_content
             cc._inner_html = ch._inner_html
-            cc.attributes = [list(a) for a in ch.attributes]
+            if ch.attributes:
+                cc.attributes = [list(a) for a in ch.attributes]
             cc.parent_node = copy
             cc.previous_sibling = prev
             if prev is not None:
@@ -646,13 +669,42 @@ def clone_deep(root: Node) -> Node:
                 cc.previous_element_sibling = prev_el
                 if prev_el is not None:
                     prev_el.next_element_sibling = cc
-                copy.children.append(cc)
+                els.append(cc)
                 prev_el = cc
-            copy.child_nodes.append(cc)
+            kids.append(cc)
             prev = cc
             if ch.child_nodes:
                 stack.append((ch, cc))
+        if kids:
+            copy.child_nodes = kids
+        if els:
+            copy.children = els
     return out
+
+
+def release(root: Node) -> None:
+    """Unlink a detached tree so that refcounting frees it at once.
+
+    The DOM is cyclic (parent, sibling and child links point both ways),
+    so a dropped tree otherwise waits for a full gen-2 collection, and
+    while it waits each collection rescans it.  Clearing every node's
+    parent/sibling links and child lists leaves no cycle; a node then
+    lives only as long as something outside the tree holds it.  Iterative,
+    so no depth binds.  ``root`` must be detached (no parent), and
+    nothing may walk the tree afterwards: its nodes keep their names,
+    attributes and text but no structure."""
+    if root.node_type == DOCUMENT_NODE:
+        root.head = root.body = root.document_element = None
+    stack = [root]
+    pop = stack.pop
+    while stack:
+        n = pop()
+        kids = n.child_nodes
+        if kids:
+            n.child_nodes = n.children = _EMPTY
+            stack += kids
+        n.parent_node = n.next_sibling = n.previous_sibling = None
+        n.previous_element_sibling = n.next_element_sibling = None
 
 
 def _index_of(node: Node, nodes: list[Node]) -> int:
@@ -672,13 +724,24 @@ def new_document(url: str) -> Node:
     return doc
 
 
+# tag as written -> (local_name, tag_name): a page repeats a few dozen tag
+# names thousands of times, so its elements share one pair of strings per
+# name.  A worker lives across many documents, so the table stops growing
+# at _TAG_NAMES_MAX names; a name past the bound is built per element.
+_TAG_NAMES: dict[str, tuple[str, str]] = {}
+_TAG_NAMES_MAX = 1024
+
+
 def new_element(tag: str) -> Node:
     """Namespace-unaware element factory (domparser.go:722-740)."""
     n = Node(ELEMENT_NODE)
-    if ":" in tag:
-        tag = tag.rsplit(":", 1)[1]
-    n.local_name = tag.lower()
-    n.tag_name = tag.upper()
+    names = _TAG_NAMES.get(tag)
+    if names is None:
+        local = tag.rsplit(":", 1)[1] if ":" in tag else tag
+        names = (local.lower(), local.upper())
+        if len(_TAG_NAMES) < _TAG_NAMES_MAX:
+            _TAG_NAMES[tag] = names
+    n.local_name, n.tag_name = names
     return n
 
 
@@ -750,7 +813,11 @@ class _DOMBuilder(_HTMLParser):
     def _build_attrs(node: Node, attrs: list[tuple[str, str | None]]) -> None:
         # set_attribute semantics (first-position, last-value-wins on dup
         # names, domparser.go:762-770) without per-attr method dispatch
+        if not attrs:
+            return
         alist = node.attributes
+        if not alist:
+            alist = node.attributes = []
         for name, value in attrs:
             v = value if value is not None else ""
             for attr in alist:

@@ -26,6 +26,7 @@ from .dom import (
     create_text_node,
     new_element,
     parse_html,
+    release,
 )
 from .options import (
     DEFAULT_CHAR_THRESHOLD,
@@ -560,6 +561,7 @@ class Readability:
         page_cache_html = page.get_inner_html()
         # Parsed-once pristine copy of the cache: each failed attempt adopts
         # a deep clone instead of re-tokenizing the HTML (see dom.clone_deep).
+        # It shares no node with the page, so it is released on return.
         pristine_cache: Node | None = None
 
         while True:
@@ -860,6 +862,7 @@ class Readability:
                     self.attempts.append((article_content, text_length))
                     self.attempts.sort(key=lambda a: -a[1])
                     if self.attempts[0][1] == 0:
+                        release(pristine_cache)
                         return None
                     article_content = self.attempts[0][0]
                     parse_successful = True
@@ -875,6 +878,8 @@ class Readability:
                     if article_dir:
                         self.article_dir = article_dir
                         break
+                if pristine_cache is not None:
+                    release(pristine_cache)
                 return article_content
 
     # -- metadata (readability.go:1293-1540) --------------------------------------
@@ -1459,6 +1464,7 @@ class Readability:
         article_content = self._grab_article(None)
         if article_content is None:
             raise NoArticleError("cannot grab article")
+        self._last_article = article_content
 
         self._post_process_content(article_content)
 
@@ -1467,7 +1473,6 @@ class Readability:
             if paragraphs:
                 metadata.excerpt = paragraphs[0].get_text_content().strip()
 
-        self._last_article = article_content
         # Pluggable serialization hooks (readability.go:2219-2226): a custom
         # serializer replaces GetInnerHTML; a custom html2text derives
         # text_content from the serialized HTML instead of the DOM walk.
@@ -1504,24 +1509,35 @@ def parse_document(
     (readerable.go:20-27) runs the read-only readerable scan on the one
     DOM before parse() mutates it; its verdict wins over every other
     status, and a scan failure lets the full parse decide.  The article
-    DOM is the post-processed content tree (the span codec's input).
+    DOM is the post-processed content tree (the span codec's input): a
+    fresh element never inserted into the document.  Before it returns,
+    on every status, the document and every grab attempt it does not
+    return are released (``dom.release``), so their nodes are freed now,
+    not at the next full collection.
     """
     try:
         r = Readability(html_source, uri, options)
     except Exception:  # an empty source, or a parser failure
         return None, None, "not_readerable" if prescreen and not html_source else "parse_error"
+    result: Result | None = None
+    status = "ok"
     if prescreen:
         try:
             if not scan_readerable(r.doc, r.options):
-                return None, None, "not_readerable"
+                status = "not_readerable"
         except Exception:
             pass  # scan failure: let the full parse decide
-    try:
-        result = r.parse()
-    except TooLargeError:
-        return None, None, "too_large"
-    except NoArticleError:
-        return None, None, "no_article"
-    except Exception:
-        return None, None, "parse_error"
-    return result, r._last_article, "ok"
+    if status == "ok":
+        try:
+            result = r.parse()
+        except TooLargeError:
+            status = "too_large"
+        except NoArticleError:
+            status = "no_article"
+        except Exception:
+            status = "parse_error"
+    article = r._last_article if result is not None else None
+    for tree in (r.doc, r._last_article, *(a for a, _ in r.attempts)):
+        if tree is not None and tree is not article:
+            release(tree)
+    return result, article, status

@@ -20,7 +20,7 @@ the driver never materializes pages:
 One encoder: a source is a per-row page generator that takes an input
 row as a dict (``RecordBatch.to_pylist()``) and yields
 ``(doc_id, uri, page)``, the page an HTML ``str`` or PDF ``bytes``;
-``_spans`` turns a page into span rows, and ``session.emit_frames`` cuts
+``_spans`` turns a page into span columns, and ``session.emit_frames`` cuts
 the output and builds its Arrow batches without pandas.  ``_spans`` holds
 the one failure rule: a page it cannot encode becomes a document without
 spans, never a failed task.  An optional input column is defaulted when
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codec.pdf import page_pieces_from_lines, pdf_to_text_lines
-from ..codec.spans import html_to_spans
+from ..codec.spans import SpanColumns, html_to_spans
 from ..codec.warc import warc_html_pages
 from ..kernel.golden import FIXTURES_DIR
 from .extract import DEFAULT_URI, column_or
@@ -57,25 +57,26 @@ _STOP_EVERY_WORDS = 13  # sentence length in words
 _SENTS_PER_PARA = 4
 
 
-def _spans(page: str | bytes) -> list[dict]:
-    """One page → its span rows.  HTML goes through the byte-preserving
+def _spans(page: str | bytes) -> SpanColumns:
+    """One page → its span columns.  HTML goes through the byte-preserving
     ``html_to_spans`` (spans_to_html(html_to_spans(x)) == x).  A PDF's
     text layer arrives as a well-formed page, one span per source line
     (the layout unit PDF gives us), since the kernel extracts from
     doc.body; the piece builder, HTML-escaping included, is shared with
-    the CLI.  A page either codec raises on becomes a document without
-    spans, which extraction reports as one parse_error row."""
+    the CLI; a span's offset is its character offset in the page.  A page
+    either codec raises on becomes a document without spans, which
+    extraction reports as one parse_error row."""
     try:
         if isinstance(page, str):
-            return [s.as_row() for s in html_to_spans(page)]
-        rows, off = [], 0
+            return html_to_spans(page)
+        spans, off = SpanColumns(), 0
         for piece in page_pieces_from_lines(pdf_to_text_lines(page)):
             # kind "markup" is html_to_spans' kind for non-media raw HTML
-            rows.append({"kind": "markup", "text": piece, "media_ref": "", "offset": off})
+            spans.append("markup", piece, "", off)
             off += len(piece)
-        return rows
+        return spans
     except Exception:
-        return []
+        return SpanColumns()
 
 
 def _encode(pages: Callable[[dict], Iterable[tuple[str, str, str | bytes]]]):

@@ -9,7 +9,9 @@ entirely JVM-side for Catalyst/Tungsten to optimize.
 
 Scale notes (10^12-doc design point, SURVEY.md §4.2):
 - Memory is bounded per worker by the Arrow input batch plus the one
-  document the kernel holds: ``session.ensure_arrow_limits`` caps a batch
+  document the kernel holds, whose DOM is released (``dom.release``) and
+  so freed by refcounting as soon as its row is built, not at the next
+  full GC collection: ``session.ensure_arrow_limits`` caps a batch
   at ``ARROW_MAX_RECORDS`` rows and closes it at the row that reaches
   ``ARROW_MAX_BYTES``, so a mega-document ends the batch it joins; output
   rows leave in ``session.emit_frames`` batches of at most
@@ -34,6 +36,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..codec.spans import dom_to_spans
+from ..kernel.dom import release
 from ..kernel.options import Options
 from ..kernel.readability import parse_document
 from .schema import ARTICLES_SCHEMA
@@ -83,18 +86,22 @@ def extract_one(
     The output spans are ``dom_to_spans`` over the article DOM the kernel
     returns: the document is tokenized once, and the serialized article
     (``Result.html_content``, shaped by ``Options.serializer``) is never
-    parsed again."""
+    parsed again.  The row's ``spans`` is the walk's ``SpanColumns``, and
+    the article is released once they are built: the kernel has already
+    released the document, so the row is all this call leaves."""
     result, article, status = parse_document(
         html or "", uri or DEFAULT_URI, options, prescreen
     )
     if result is None:
         return {"doc_id": doc_id, "status": status, "error": None, **_EMPTY}
     try:
-        out_spans = [s.as_row() for s in dom_to_spans(article)]
+        out_spans = dom_to_spans(article)
     except Exception as exc:
         # a walk failure is one error row, never a failed Spark task
         error = f"{type(exc).__name__}: {str(exc)[:200]}"
         return {"doc_id": doc_id, "status": "parse_error", "error": error, **_EMPTY}
+    finally:
+        release(article)
     return {
         "doc_id": doc_id,
         "spans": out_spans,

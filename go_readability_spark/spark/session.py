@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 from array import array
-from itertools import accumulate
+from itertools import accumulate, chain
 from typing import Iterable, Iterator
 
 import pyarrow as pa
@@ -72,9 +72,11 @@ def _record_batch(rows: list[dict], schema: pa.Schema) -> pa.RecordBatch:
 
 def _array(typ: pa.DataType, values: list) -> pa.Array:
     """Python values (None for null) → an Arrow array of ``typ``: utf8,
-    int32, or a list or struct (a dict per value, never null) of those.
-    Offsets and ints are native int32 arrays, which is Arrow's
-    little-endian layout on the hosts Spark runs on."""
+    int32, or a list of structs whose value is a columns object (one
+    attribute per struct field, each a list, as ``codec.spans.SpanColumns``
+    holds a document's spans), so no per-item object is read.  Offsets and
+    ints are native int32 arrays, which is Arrow's little-endian layout on
+    the hosts Spark runs on."""
     n = len(values)
     valid = _validity(values)
     if pa.types.is_string(typ):
@@ -82,13 +84,13 @@ def _array(typ: pa.DataType, values: list) -> pa.Array:
         return pa.Array.from_buffers(typ, n, [valid, _offsets(map(len, data)), pa.py_buffer(b"".join(data))])
     if pa.types.is_int32(typ):
         return pa.Array.from_buffers(typ, n, [valid, pa.py_buffer(array("i", [v or 0 for v in values]))])
-    if pa.types.is_list(typ):
-        items = [x for v in values if v is not None for x in v]
+    if pa.types.is_list(typ) and pa.types.is_struct(typ.value_type):
+        cols = [v for v in values if v is not None]
+        struct = typ.value_type
+        fields = [_array(f.type, list(chain.from_iterable(getattr(c, f.name) for c in cols))) for f in struct]
+        items = pa.Array.from_buffers(struct, sum(map(len, cols)), [None], children=fields)
         lengths = (0 if v is None else len(v) for v in values)
-        return pa.Array.from_buffers(typ, n, [valid, _offsets(lengths)], children=[_array(typ.value_type, items)])
-    if pa.types.is_struct(typ):
-        children = [_array(f.type, [v[f.name] for v in values]) for f in typ]
-        return pa.Array.from_buffers(typ, n, [valid], children=children)
+        return pa.Array.from_buffers(typ, n, [valid, _offsets(lengths)], children=[items])
     raise TypeError(f"no Arrow buffer layout for {typ}")
 
 

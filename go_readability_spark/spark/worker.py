@@ -29,12 +29,16 @@ process) it changes nothing.
   imported pandas; ``gc.get_freeze_count()`` inside a task), and every full
   collection triggered while a 50-300 KB page's DOM is built rescanned
   them.  ``gc.freeze()`` moves that heap into the permanent generation,
-  which collections skip: kernel CPU over the 8 pages fell 3.34 -> 2.62 s
-  in-process (GC pauses 1.08 -> 0.72 s), and heavy_pages
-  ``cpu_s_per_kdoc`` 586 -> 513 against the stat-gated hook alone (lower
-  in 21 of 22 alternating pairs).  Freeze once per process, never per
-  task: a later freeze would pin that task's cyclic garbage for the life
-  of the worker.  Disabling GC per document instead raised the
+  which collections skip: heavy_pages ``cpu_s_per_kdoc`` fell 586 -> 513
+  against the stat-gated hook alone (lower in 21 of 22 alternating pairs).
+  Since each document's DOM is released by refcounting
+  (``kernel.dom.release``), full collections are rare and the freeze
+  saves less: over the 8 pages in-process (two runs each, after the
+  imports a worker makes), GC pauses went 0.08-0.11 -> 0.04-0.05 s with
+  the freeze, for kernel CPU of 0.88-1.23 s (before the release:
+  0.30-0.33 -> 0.18-0.23 s of 1.52-1.77 s).  Freeze once per process,
+  never per task: a later freeze would pin that task's cyclic garbage
+  for the life of the worker.  Disabling GC per document instead raised the
   tracemalloc peak of a retry-heavy link farm from 84 to 128 MB.
 """
 

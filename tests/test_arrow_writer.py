@@ -11,17 +11,26 @@ import pyarrow as pa
 import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from go_readability_spark.codec.spans import SpanColumns
+from go_readability_spark.kernel.options import Options
+from go_readability_spark.spark import corpus, extract
 from go_readability_spark.spark.schema import ARTICLES_SCHEMA, DOCUMENTS_SCHEMA
 from go_readability_spark.spark.session import EMIT_MAX_BYTES, EMIT_MAX_ROWS, emit_frames
 
 _SPAN = {"kind": "markup", "text": "<p>", "media_ref": "", "offset": 0}
 _TEXTS = ["", "plain", "naïve café", "日本語のテキスト", "astral 𝄞 😀 𠜎", "a\x00b"]
+# a PDF page's spans: offsets are character offsets, not span indexes
+_PDF_SPANS = [
+    {"kind": "markup", "text": "<html><body>", "media_ref": "", "offset": 0},
+    {"kind": "markup", "text": "<p>Hello PDF world.</p>", "media_ref": "", "offset": 12},
+    {"kind": "markup", "text": "</body></html>", "media_ref": "", "offset": 35},
+]
 
 
 def _article(i: int) -> dict:
-    """Row ``i`` of the table: each nullable column is null on some rows;
-    spans cycle through None, [], one span and several (with a null text
-    and a null media_ref)."""
+    """Row ``i`` of the table, spans in dict form: each nullable column is
+    null on some rows; spans cycle through None, [] (next to it), one span,
+    several (with a null text and a null media_ref) and a PDF page's."""
     text = _TEXTS[i % len(_TEXTS)]
     spans = [
         None,
@@ -29,7 +38,8 @@ def _article(i: int) -> dict:
         [{**_SPAN, "text": text, "offset": i}],
         [_SPAN, {"kind": "img", "text": None, "media_ref": text, "offset": 3},
          {"kind": "markup", "text": text, "media_ref": None, "offset": 9}],
-    ][i % 4]
+        _PDF_SPANS,
+    ][i % 5]
     row = {
         "doc_id": f"doc-{i}-{text}",
         "spans": spans,
@@ -47,6 +57,30 @@ def _document(i: int) -> dict:
     return {"doc_id": article["doc_id"], "uri": article["title"], "spans": article["spans"]}
 
 
+def _written(row: dict) -> dict:
+    """``row`` as the engine hands it to the writer: spans as the
+    ``SpanColumns`` the codecs fill."""
+    if row["spans"] is None:
+        return row
+    cols = SpanColumns()
+    for s in row["spans"]:
+        cols.append(s["kind"], s["text"], s["media_ref"], s["offset"])
+    return {**row, "spans": cols}
+
+
+def _assert_batches(batches, rows, arrow):
+    """Each batch is valid and equals pyarrow's own row builder on the
+    dict form of its rows."""
+    start = 0
+    for batch in batches:
+        want = pa.RecordBatch.from_pylist(rows[start : start + batch.num_rows], schema=arrow)
+        batch.validate(full=True)
+        assert batch.schema == arrow
+        assert batch.equals(want), (batch.to_pylist(), want.to_pylist())
+        start += batch.num_rows
+    assert start == len(rows)
+
+
 @pytest.mark.parametrize(
     "schema, make", [(ARTICLES_SCHEMA, _article), (DOCUMENTS_SCHEMA, _document)], ids=["articles", "documents"]
 )
@@ -57,17 +91,28 @@ def test_writer_matches_pyarrow_builder(schema, make):
     EMIT_MAX_BYTES), then ends on a short tail."""
     arrow = to_arrow_schema(schema)
     sizes = [1] * (EMIT_MAX_ROWS + 3) + [EMIT_MAX_BYTES] + [1] * 5
-    rows = [(make(i), n) for i, n in enumerate(sizes)]
-    batches = list(emit_frames(iter(rows), arrow))
+    rows = [make(i) for i in range(len(sizes))]
+    batches = list(emit_frames(((_written(r), n) for r, n in zip(rows, sizes)), arrow))
     assert [b.num_rows for b in batches] == [EMIT_MAX_ROWS, 4, 5]
-    start = 0
-    for batch in batches:
-        want = pa.RecordBatch.from_pylist([r for r, _ in rows[start : start + batch.num_rows]], schema=arrow)
-        batch.validate(full=True)
-        assert batch.schema == arrow
-        assert batch.equals(want), (batch.to_pylist(), want.to_pylist())
-        start += batch.num_rows
-    assert start == len(rows)
+    _assert_batches(batches, rows, arrow)
+
+
+def test_writer_on_codec_columns():
+    """The span columns each codec fills (the input codec over non-ASCII
+    and astral text and media, the PDF branch with its character offsets,
+    the output walk over an article) write as their dict form does."""
+    html = f'<p>naïve 日本 𝄞 😀</p><img src="𠜎.png"><video src=v.mp4>{_PAGE}'
+    pdf = corpus._spans(_PDF)
+    assert [s.as_row() for s in pdf] == _PDF_SPANS
+    assert list(pdf.offset) != list(range(len(pdf)))
+    article = extract.extract_one("a", html, None, Options())["spans"]
+    assert article is not None and len(article) > 3
+    arrow = to_arrow_schema(DOCUMENTS_SCHEMA)
+    docs = [("html", corpus._spans(html)), ("pdf", pdf), ("article", article), ("none", None), ("zero", SpanColumns())]
+    written = [{"doc_id": d, "uri": None, "spans": cols} for d, cols in docs]
+    rows = [{**r, "spans": None if r["spans"] is None else [s.as_row() for s in r["spans"]]} for r in written]
+    assert any(any(not s["text"].isascii() for s in r["spans"] or []) for r in rows)
+    _assert_batches(list(emit_frames(((r, 1) for r in written), arrow)), rows, arrow)
 
 
 def _warc(pages: list[str]) -> bytes:

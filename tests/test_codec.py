@@ -403,4 +403,4 @@ def test_media_before_html_root_matches_event_level():
     _assert_media_subseq(html)
     spans = [(s.kind, s.media_ref) for s in html_to_spans(html) if s.kind != "markup"]
     assert spans == [("img", "b>c.png")]
-    assert parse_html(html).child_nodes == []  # root cleanup, both engines
+    assert not parse_html(html).child_nodes  # root cleanup, both engines

@@ -1,5 +1,7 @@
 """DOM-layer unit tests, mirroring the reference's domparser_test.go."""
 
+import pytest
+
 from go_readability_spark.kernel import dom
 from go_readability_spark.kernel.dom import (
     ELEMENT_NODE,
@@ -324,3 +326,133 @@ def test_inner_html_empty_localname_element_serializes_children():
     d = parse_html("<div><a:>hello <b>world</b></a:></div>")
     div = d.get_elements_by_tag_name("div")[0]
     assert div.get_inner_html() == "hello <b>world</b>"
+
+
+# -- lean nodes: the shared empty node list and copy-on-write -------------
+
+_LINKS = ("parent_node", "previous_sibling", "next_sibling", "previous_element_sibling", "next_element_sibling")
+
+
+def _link_set(nodes: dict) -> dict:
+    """Every link and child list of every named node, by name."""
+    name = {id(n): k for k, n in nodes.items()}
+
+    def ref(n):
+        return None if n is None else name[id(n)]
+
+    return {
+        k: tuple(ref(getattr(n, a)) for a in _LINKS)
+        + (tuple(map(ref, n.child_nodes)), tuple(map(ref, n.children)))
+        for k, n in nodes.items()
+    }
+
+
+def _append_under_leaf():
+    p, t, b = new_element("p"), dom.new_text(), new_element("b")
+    p.append_child(t)
+    p.append_child(b)
+    return {"p": p, "t": t, "b": b}, {
+        "p": (None, None, None, None, None, ("t", "b"), ("b",)),
+        "t": ("p", None, "b", None, None, (), ()),
+        "b": ("p", "t", None, None, None, (), ()),
+    }
+
+
+def _replace_text_with_element():
+    p, t1, t2, t3, em = new_element("p"), dom.new_text(), dom.new_text(), dom.new_text(), new_element("em")
+    for t in (t1, t2, t3):
+        p.append_child(t)
+    p.replace_child(em, t2)
+    return {"p": p, "t1": t1, "t2": t2, "t3": t3, "em": em}, {
+        "p": (None, None, None, None, None, ("t1", "em", "t3"), ("em",)),
+        "t1": ("p", None, "em", None, None, (), ()),
+        "em": ("p", "t1", "t3", None, None, (), ()),
+        "t3": ("p", "em", None, None, None, (), ()),
+        "t2": (None, None, None, None, None, (), ()),
+    }
+
+
+def _set_attribute_on_bare_element():
+    e = new_element("img")
+    e.set_attribute("src", "a.png")
+    e.set_attribute("alt", "x")
+    assert e.attributes == [["src", "a.png"], ["alt", "x"]]
+    assert new_element("img").attributes == ()
+    return {"e": e}, {"e": (None, None, None, None, None, (), ())}
+
+
+def _clone_leaves():
+    t = dom.create_text_node("a & b")
+    bare = new_element("br")
+    attrs = new_element("img")
+    attrs.set_attribute("src", "a.png")
+    copies = [dom.clone_deep(n) for n in (t, bare, attrs)]
+    assert copies[0].get_text_content() == "a & b"
+    assert copies[1].attributes == () and copies[1].tag_name == "BR"
+    assert copies[2].attributes == [["src", "a.png"]]
+    assert copies[2].attributes is not attrs.attributes
+    assert copies[2].attributes[0] is not attrs.attributes[0]
+    return dict(zip(("t", "bare", "attrs"), copies)), {
+        k: (None, None, None, None, None, (), ()) for k in ("t", "bare", "attrs")
+    }
+
+
+def _set_text_content_on_element():
+    div, b, t = new_element("div"), new_element("b"), dom.new_text()
+    div.append_child(b)
+    div.append_child(t)
+    div.set_text_content("fresh")
+    (fresh,) = div.child_nodes
+    assert fresh.get_text_content() == "fresh"
+    # the replaced children lose their parent but keep their sibling links
+    return {"div": div, "b": b, "t": t, "fresh": fresh}, {
+        "div": (None, None, None, None, None, ("fresh",), ()),
+        "fresh": ("div", None, None, None, None, (), ()),
+        "b": (None, None, "t", None, None, (), ()),
+        "t": (None, "b", None, None, None, (), ()),
+    }
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_append_under_leaf, _replace_text_with_element, _set_attribute_on_bare_element,
+     _clone_leaves, _set_text_content_on_element],
+)
+def test_mutators_copy_on_write(case):
+    """Nodes start with the one shared empty tuple for child_nodes,
+    children and attributes; each inserting mutator gives the node its own
+    list, and the links come out as written."""
+    nodes, want = case()
+    assert _link_set(nodes) == want
+    for n in nodes.values():
+        for lst in (n.child_nodes, n.children, n.attributes):
+            assert lst is dom._EMPTY or type(lst) is list
+    assert dom._EMPTY == ()
+
+
+def test_release_unlinks_a_tree():
+    doc = parse_html(BASE_TEST_CASE, "http://x/")
+    nodes, todo = [], [doc]
+    while todo:
+        n = todo.pop()
+        nodes.append(n)
+        todo.extend(n.child_nodes)
+    dom.release(doc)
+    assert doc.body is None and doc.head is None and doc.document_element is None
+    assert len(nodes) > 10
+    for n in nodes:
+        assert all(getattr(n, a) is None for a in _LINKS)
+        assert n.child_nodes is dom._EMPTY and n.children is dom._EMPTY
+
+
+def test_tag_name_table_is_bounded(monkeypatch):
+    """A worker parses page after page: the interned tag-name table stops at
+    its bound, and names past the bound come out the same."""
+    monkeypatch.setattr(dom, "_TAG_NAMES", {})
+    n = 100_000
+    doc = parse_html("".join(f"<ns:Tag{i}/>" for i in range(n)), "")
+    assert len(dom._TAG_NAMES) == dom._TAG_NAMES_MAX
+    assert [(e.local_name, e.tag_name) for e in doc.children] == [(f"tag{i}", f"TAG{i}") for i in range(n)]
+    assert doc.get_inner_html() == "".join(f"<tag{i}></tag{i}>" for i in range(n))
+    assert parse_html("<ns:Tag7/>", "").children[0].tag_name == "TAG7"
+    assert len(dom._TAG_NAMES) == dom._TAG_NAMES_MAX

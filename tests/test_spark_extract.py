@@ -300,6 +300,110 @@ def test_source_is_parsed_once(monkeypatch, html, off, on):
             assert result.html_content not in seen, prescreen
 
 
+# the first grab strips the unlikely-candidate sidebar and keeps too little
+# text, so the grab retries on a clone of the page
+RETRY_PAGE = f'<html><body><div class="sidebar"><p>{L}</p><p>{L}</p></div><p>short</p></body></html>'
+# paragraphs straight under <body>: the top candidate is BODY, so the grab
+# falls back to a fresh DIV holding the whole body
+BODY_FALLBACK_PAGE = f"<html><body><p>{L}</p><p>{L}</p></body></html>"
+
+
+def _row_fields(row):
+    spans = row["spans"]
+    return {**row, "spans": None if spans is None else [s.as_tuple() for s in spans]}
+
+
+@pytest.mark.parametrize(
+    "html",
+    [p.values[0] for p in STATUS_TABLE] + [RETRY_PAGE, BODY_FALLBACK_PAGE],
+    ids=[p.id for p in STATUS_TABLE] + ["retry", "body-fallback"],
+)
+def test_release_never_touches_the_returned_article(monkeypatch, html):
+    """parse_document releases the document and the attempts it drops,
+    never the article it returns: every row field equals the row built
+    with release patched to a no-op, and the article is detached."""
+    from go_readability_spark.kernel import readability
+    from go_readability_spark.spark import extract
+
+    for prescreen in (False, True):
+        for options in STATUS_OPTIONS:
+            released = _row_fields(extract_one("d", html, None, options, prescreen))
+            _, article, _ = parse_document(html or "", DEFAULT_URI, options, prescreen)
+            assert article is None or article.parent_node is None
+            with monkeypatch.context() as m:
+                m.setattr(readability, "release", lambda root: None)
+                m.setattr(extract, "release", lambda root: None)
+                kept = _row_fields(extract_one("d", html, None, options, prescreen))
+            assert released == kept, (prescreen, options)
+
+
+def test_retry_and_fallback_pages_take_their_paths(monkeypatch):
+    """RETRY_PAGE retries its grab on a page clone; BODY_FALLBACK_PAGE
+    extracts in one grab."""
+    from go_readability_spark.kernel import dom, readability
+
+    clones = []
+    monkeypatch.setattr(readability, "clone_deep", lambda root: clones.append(root) or dom.clone_deep(root))
+    assert parse_document(RETRY_PAGE, DEFAULT_URI, Options())[2] == "ok"
+    assert clones
+    clones.clear()
+    assert parse_document(BODY_FALLBACK_PAGE, DEFAULT_URI, Options())[2] == "ok"
+    assert not clones
+
+
+def _big_article() -> str:
+    """A ≥ 200 KB readerable article page with the boilerplate cleanup
+    removes (nav, comments, share links) and data tables."""
+    nav = "".join(f'<li><a href="/n{i}">Section {i}</a></li>' for i in range(40))
+    body = []
+    for i in range(440):
+        body.append(f"<p>Paragraph {i} of the story, {L}with <a href='/r{i}'>a link</a>.</p>")
+        if i % 40 == 0:
+            rows = "".join(f"<tr><td>{i}</td><td>{j}</td><td>cell {j}</td></tr>" for j in range(10))
+            body.append(f"<table><tr><th>a</th><th>b</th><th>c</th></tr>{rows}</table>")
+    comments = "".join(f'<div class="comment">Comment {i}: nice</div>' for i in range(30))
+    return (
+        f"<html><head><title>Big</title></head><body><nav><ul>{nav}</ul></nav>"
+        f'<article>{"".join(body)}</article><div id="comments">{comments}</div>'
+        '<div class="share"><a href="/s">Share</a></div></body></html>'
+    )
+
+
+def _link_farm() -> str:
+    return "<html><body>" + "".join(
+        f'<ul><li><a href="/p{i}">link {i}</a></li><li><a href="/q{i}">other {i}</a></li></ul>'
+        for i in range(2500)
+    ) + "</body></html>"
+
+
+@pytest.mark.parametrize("make, status", [(_big_article, "ok"), (_link_farm, "not_readerable")])
+def test_extract_one_frees_its_dom_without_the_gc(make, status):
+    """With the cyclic GC off, one extract_one call leaves under 1.5 MB
+    traced: the document, the dropped attempts and the article are
+    released by refcounting as soon as the row is built, not left as
+    cyclic garbage for a collection (2.6 and 10 MB of it on these pages
+    when nothing is released)."""
+    import gc
+    import tracemalloc
+
+    html = make()
+    assert len(html) >= 200_000
+    extract_one("warm", html, None, Options(), True)  # fill module caches
+    gc.collect()
+    gc.disable()
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        row = extract_one("d", html, None, Options(), True)
+        assert row["status"] == status
+        del row
+        left = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+        gc.enable()
+    assert left < 1_500_000, left
+
+
 def test_prescreen_gates_through_readerable(spark, synth_pages, pages_to_documents):
     """The reference's check-before-parse workflow through the Spark
     surface: with prescreen=True, every document the kernel's

@@ -14,6 +14,11 @@ Reuses the strongest invariants in the suite, at open-ended volume:
   and ``parse_document(prescreen=True)`` gives the two-step status --
   ``not_readerable`` exactly when the standalone check is false, else the
   ``prescreen=False`` status;
+* release never touches the returned article
+  (``_assert_release_keeps_article``): the soup as a page and wrapped in
+  an article page extracts, prescreen off and on, to the same
+  ``extract_one`` row with ``dom.release`` real or a no-op, and the
+  article ``parse_document`` returns has no parent;
 * one walk per article (``_assert_one_walk``): the soup, wrapped in an
   article page, that ``parse_document`` extracts has
   ``dom_to_spans(article)`` equal to the reparse of its serialized form,
@@ -49,16 +54,23 @@ from go_readability_spark.codec.spans import (  # noqa: E402
     dom_to_spans,
     html_fragment_to_normalized_spans,
 )
+from go_readability_spark.kernel import readability  # noqa: E402
 from go_readability_spark.kernel.dom import (  # noqa: E402
     CDATA_CONTENT_ELEMENTS,
     ELEMENT_NODE,
     parse_html,
+    release,
 )
+from go_readability_spark.kernel.options import Options  # noqa: E402
 from go_readability_spark.kernel.readability import parse_document  # noqa: E402
 from go_readability_spark.kernel.readerable import (  # noqa: E402
     is_probably_readerable,
     scan_readerable,
 )
+from go_readability_spark.spark import extract  # noqa: E402
+from go_readability_spark.spark.extract import extract_one  # noqa: E402
+
+_OPTIONS = Options(classes_to_preserve=["page", "caption"])
 
 
 def _load(name: str, path: str):
@@ -207,6 +219,34 @@ def _assert_one_walk(s: str) -> bool:
     return True
 
 
+def _noop_release(root) -> None:
+    pass
+
+
+def _extract(page: str, prescreen: bool) -> dict:
+    row = extract_one("d", page, _URIS[0], _OPTIONS, prescreen)
+    spans = row["spans"]
+    return {**row, "spans": None if spans is None else [x.as_tuple() for x in spans]}
+
+
+def _assert_release_keeps_article(s: str) -> None:
+    """``s`` as a page and wrapped in an article page: the document and the
+    dropped grab attempts ``parse_document`` releases never reach the
+    article it returns, so every ``extract_one`` field equals the one
+    built with ``release`` a no-op, and the article is detached."""
+    for page in (s, f"<html><body><article><p>{_FILL}</p>{s}</article></body></html>"):
+        for prescreen in (False, True):
+            article = parse_document(page, _URIS[0], _OPTIONS, prescreen)[1]
+            assert article is None or article.parent_node is None, "article attached"
+            released = _extract(page, prescreen)
+            readability.release = extract.release = _noop_release
+            try:
+                kept = _extract(page, prescreen)
+            finally:
+                readability.release = extract.release = release
+            assert released == kept, f"released {released} != kept {kept}"
+
+
 def main() -> int:
     seconds = float(sys.argv[1]) if len(sys.argv) > 1 else 600.0
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260818
@@ -256,7 +296,9 @@ def main() -> int:
             s = s[:i] + rng.choice("<>\"'=&;!-/ ") + s[i:]
         if rng.random() < 0.12:
             s = _wrap(rng, s) + (rng.choice(FRAGS) if rng.random() < 0.5 else "")
-        for check in (fs._assert_equivalent, tc._assert_media_subseq, _assert_one_dom, _assert_one_walk):
+        checks = (fs._assert_equivalent, tc._assert_media_subseq, _assert_one_dom, _assert_one_walk,
+                  _assert_release_keeps_article)
+        for check in checks:
             try:
                 if check(s) is True and check is _assert_one_walk:
                     residuals += 1
