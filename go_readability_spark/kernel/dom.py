@@ -599,14 +599,20 @@ class Node:
         else:
             self._inner_html = html
 
-    def adopt_children_from(self, frag: "Node") -> None:
-        """Replace this element's children with ``frag``'s (the
-        set_inner_html adoption step, reusable for pre-parsed fragments)."""
+    def adopt_children_from(self, src: "Node") -> None:
+        """Replace this element's children with ``src``'s, leaving ``src``
+        empty (the set_inner_html adoption step, and the one-step move of
+        a whole child list).  The moved nodes keep their sibling links,
+        so the result equals moving them one at a time with
+        ``append_child``, in O(n) instead of the O(n²) of n front
+        removals."""
         self._mark_text_dirty()
+        src._mark_text_dirty()
         for c in reversed(self.child_nodes):
             c.parent_node = None
-        self.child_nodes = frag.child_nodes
-        self.children = frag.children
+        self.child_nodes = src.child_nodes
+        self.children = src.children
+        src.child_nodes = src.children = _EMPTY
         for c in self.child_nodes:
             c.parent_node = self
 

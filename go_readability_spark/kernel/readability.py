@@ -3,8 +3,8 @@
 From-scratch re-derivation of the reference pipeline (readability.go) over
 the quirk-faithful DOM in ``dom.py``.  This module is deliberately
 Spark-free: one ``Readability(html, uri).parse()`` call handles exactly one
-document and runs *inside* a vectorized pandas/Arrow UDF batch; all
-cross-document dataflow lives in ``go_readability_spark.operators``.
+document and runs *inside* a ``mapInArrow`` batch; all cross-document
+dataflow lives in ``go_readability_spark.spark``.
 
 Every method cites the reference lines whose observable behavior it
 reproduces so parity can be audited.  Magic constants are ported verbatim,
@@ -237,8 +237,7 @@ class Readability:
                     link.parent_node.replace_child(text, link)
                 else:
                     container = new_element("span")
-                    while link.first_child() is not None:
-                        container.append_child(link.first_child())
+                    container.adopt_children_from(link)
                     link.parent_node.replace_child(container, link)
             elif ",%20" in href:
                 parts = [to_abs(piece) for piece in href.split(",%20")]
@@ -709,8 +708,7 @@ class Readability:
                 # Fall back to the whole body (readability.go:1049-1062).
                 top_candidate = new_element("DIV")
                 needed_to_create_top_candidate = True
-                while page.first_child() is not None:
-                    top_candidate.append_child(page.first_child())
+                top_candidate.adopt_children_from(page)
                 page.append_child(top_candidate)
                 self._initialize_node(top_candidate)
             else:
@@ -838,8 +836,7 @@ class Readability:
                 div = new_element("DIV")
                 div.set_attribute("id", "readability-page-1")
                 div.set_attribute("class", "page")
-                while article_content.first_child() is not None:
-                    div.append_child(article_content.first_child())
+                div.adopt_children_from(article_content)
                 article_content.append_child(div)
 
             parse_successful = True

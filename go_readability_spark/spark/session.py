@@ -4,9 +4,13 @@ limits of the engine's document operators.
 Tuned for the extraction workload (SURVEY.md §4.2): AQE on (runtime
 coalescing + skew splitting), Arrow on with batches capped by rows and by
 bytes (``ensure_arrow_limits``) so a mega-document ends its batch, and
-dynamic partition overwrite so per-bucket re-runs are idempotent.  On the
-way out, extraction and every ingest source cut and build their output
-Arrow batches with ``emit_frames``.
+dynamic partition overwrite so per-bucket re-runs are idempotent.
+
+The engine's one Arrow boundary: every Python operator (extraction, the
+ingest sources and the textops folds) reads its input columns with
+``to_pylist`` or ``numbers`` and builds its output batches with
+``record_batch``; extraction and ingest cut their rows with
+``emit_frames``.
 """
 
 from __future__ import annotations
@@ -14,8 +18,9 @@ from __future__ import annotations
 import os
 from array import array
 from itertools import accumulate, chain
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import SparkSession
 
@@ -55,35 +60,57 @@ def emit_frames(rows: Iterable[tuple[dict, int]], schema: pa.Schema) -> Iterator
         out.append(row)
         size += n
         if len(out) >= EMIT_MAX_ROWS or size >= EMIT_MAX_BYTES:
-            yield _record_batch(out, schema)
+            yield record_batch([[row[f.name] for row in out] for f in schema], schema)
             out, size = [], 0
     if out:
-        yield _record_batch(out, schema)
+        yield record_batch([[row[f.name] for row in out] for f in schema], schema)
 
 
-def _record_batch(rows: list[dict], schema: pa.Schema) -> pa.RecordBatch:
-    """``rows`` as one batch of ``schema``, built from Arrow buffers:
-    ``pa.array``, ``RecordBatch.from_pylist`` / ``from_pydict`` and
-    ``Table.from_*`` import pandas on first use (pyarrow's array-like
-    probe), which costs an extraction or ingest worker ~39 MB of RSS."""
-    columns = [_array(f.type, [row[f.name] for row in rows]) for f in schema]
-    return pa.RecordBatch.from_arrays(columns, schema=schema)
+def record_batch(columns: Sequence, schema: pa.Schema) -> pa.RecordBatch:
+    """One column per field of ``schema`` → one batch, built from Arrow
+    buffers: ``pa.array``, ``RecordBatch.from_pylist`` / ``from_pydict``
+    and ``Table.from_pydict`` / ``from_pylist`` import pandas on first use
+    (pyarrow's array-like probe), which costs a worker ~39 MB of RSS.  A
+    column is a list of Python values, a numpy array, or an input
+    ``pa.Array`` that passes through unchanged."""
+    arrays = [_array(f.type, c) for f, c in zip(schema, columns, strict=True)]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _array(typ: pa.DataType, values: list) -> pa.Array:
-    """Python values (None for null) → an Arrow array of ``typ``: utf8,
-    int32, or a list of structs whose value is a columns object (one
-    attribute per struct field, each a list, as ``codec.spans.SpanColumns``
-    holds a document's spans), so no per-item object is read.  Offsets and
-    ints are native int32 arrays, which is Arrow's little-endian layout on
-    the hosts Spark runs on."""
+def numbers(arr: pa.Array, dtype: type) -> np.ndarray:
+    """The values of a fixed-width Arrow array as a numpy view of its data
+    buffer (a null slot reads as whatever its buffer holds).
+    ``Array.to_numpy()`` and ``pa.array(ndarray)`` import pandas;
+    ``np.frombuffer`` does not."""
+    return np.frombuffer(arr.buffers()[1], dtype)[arr.offset : arr.offset + len(arr)]
+
+
+# array / numpy type codes of the fixed-width layouts
+_NUMERIC = {pa.int32(): "i", pa.int64(): "q", pa.float64(): "d"}
+
+
+def _array(typ: pa.DataType, values) -> pa.Array:
+    """One column → an Arrow array of ``typ``.  A list of Python values
+    (None for null) writes as utf8, int32, int64, double, or a list of
+    structs whose value is a columns object (one attribute per struct
+    field, each a list, as ``codec.spans.SpanColumns`` holds a document's
+    spans), so no per-item object is read; a numpy array writes as a
+    fixed-width column without nulls.  Offsets and numbers are native
+    arrays, which is Arrow's little-endian layout on the hosts Spark runs
+    on."""
+    if isinstance(values, pa.Array):
+        return values
     n = len(values)
+    code = _NUMERIC.get(typ)
+    if isinstance(values, np.ndarray):
+        return pa.Array.from_buffers(typ, n, [None, pa.py_buffer(np.ascontiguousarray(values, code))])
     valid = _validity(values)
+    if code is not None:
+        data = array(code, [0 if v is None else v for v in values])
+        return pa.Array.from_buffers(typ, n, [valid, pa.py_buffer(data)])
     if pa.types.is_string(typ):
         data = [b"" if v is None else v.encode() for v in values]
         return pa.Array.from_buffers(typ, n, [valid, _offsets(map(len, data)), pa.py_buffer(b"".join(data))])
-    if pa.types.is_int32(typ):
-        return pa.Array.from_buffers(typ, n, [valid, pa.py_buffer(array("i", [v or 0 for v in values]))])
     if pa.types.is_list(typ) and pa.types.is_struct(typ.value_type):
         cols = [v for v in values if v is not None]
         struct = typ.value_type

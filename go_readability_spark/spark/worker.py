@@ -8,11 +8,10 @@ is imported inside a Spark task: ``spark/extract.py`` and
 unpickles the first extraction or ingest function it runs (cloudpickle
 pickles a module-level function by reference, also when a closure names
 it, and unpickling it imports its module).  By then pyspark, pyarrow and
-the kernel are imported; pandas is not (extraction and ingest never
-import it).  A closure pickled by value that names no engine global (the
-textops folds) imports neither, so a worker that only ever runs such
-closures stays unprepared.  Imported anywhere else (the driver, a test
-process) it changes nothing.
+the kernel are imported; pandas is not (no module of the package imports
+it).  The textops folds import their own modules and ``spark.session``,
+not this one, so a worker that only ever runs folds stays unprepared.
+Imported anywhere else (the driver, a test process) it changes nothing.
 
 - **Zip directory re-reads.**  Before each task,
   ``pyspark.worker_util.setup_spark_files`` calls

@@ -14,8 +14,15 @@ Spark-first design notes (10^12-doc scale):
 
 from __future__ import annotations
 
+import hashlib
+from collections import Counter
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..spark.session import record_batch
 from ._persist import scratch_persist, spread_small
 
 SHINGLE_K = 3          # words per shingle
@@ -685,8 +692,8 @@ def simhash_docs(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash): {SIMHASH_BITS}-bit SimHash over word tokens
     (per-word hash = first {SIMHASH_HEX_CHARS} md5 hex chars → BIGINT) —
     map-side only, no shuffle; the per-doc bit fold is vectorized in numpy
-    inside ``mapInPandas`` (the per-ROW fold rule from the LSH signature
-    stage).
+    inside ``mapInArrow`` (``_simhash_batches``; the per-ROW fold rule from
+    the LSH signature stage).
 
     The pure-Catalyst alternative needs {SIMHASH_BITS} separate
     ``aggregate`` HOF columns (one interpreted pass over the word-hash
@@ -701,51 +708,48 @@ def simhash_docs(documents: DataFrame) -> DataFrame:
     Python's ``str.split(' ')`` and Spark/DuckDB ``split`` agree on
     leading/trailing/adjacent separators (all keep empty tokens);
     NULL text folds to fingerprint 0 on both engines."""
-    import numpy as np  # vectorized bit fold; baked into the image
-    from pyspark.sql import types as T
-
-    shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
-    pows = np.uint64(1) << shifts
-    hexc = SIMHASH_HEX_CHARS
-
-    def fold(batches):
-        import hashlib
-        from collections import Counter
-
-        # Token→hash memo shared across the task's Arrow batches.  Bounded:
-        # a web-corpus partition has heavy-tailed vocabulary, and an
-        # unbounded per-task dict (× 32 concurrent workers) is an OOM risk
-        # at real scale; clearing keeps ~all the hit rate (Zipf head).
-        cache: dict = {}
-        cache_cap = 1 << 20
-        for pdf in batches:
-            if len(cache) > cache_cap:
-                cache.clear()
-            fps = np.zeros(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf["text"].values):
-                if text is None:
-                    continue  # NULL text → all-bit sums NULL → fp 0 (expr parity)
-                counts = Counter(text.split(" "))
-                hs = np.empty(len(counts), dtype=np.uint64)
-                wt = np.empty(len(counts), dtype=np.int64)
-                for k, (tok, cnt) in enumerate(counts.items()):
-                    v = cache.get(tok)
-                    if v is None:
-                        v = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:hexc], 16)
-                        cache[tok] = v
-                    hs[k] = v
-                    wt[k] = cnt
-                ones = wt @ ((hs[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-                signs = 2 * ones - int(wt.sum())  # integer ±1 sum per bit
-                fps[i] = int(((signs > 0).astype(np.uint64) * pows).sum())
-            yield pdf[["doc_id"]].assign(simhash=fps)
-
     out_schema = T.StructType(
         [documents.schema["doc_id"], T.StructField("simhash", T.LongType())]
     )
-    return spread_small(documents).select("doc_id", "text").mapInPandas(
-        fold, out_schema
+    return spread_small(documents).select("doc_id", "text").mapInArrow(
+        _simhash_batches, out_schema
     )
+
+
+_SHIFTS = np.arange(SIMHASH_BITS, dtype=np.uint64)
+_POWS = np.uint64(1) << _SHIFTS
+# Token→hash memo bound: a web-corpus partition has heavy-tailed
+# vocabulary, and an unbounded per-task dict (× 32 concurrent workers) is
+# an OOM risk at real scale; clearing keeps ~all the hit rate (Zipf head).
+_SIMHASH_CACHE_CAP = 1 << 20
+
+
+def _simhash_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """(doc_id, text) batches → (doc_id, simhash) batches, row for row."""
+    cache: dict = {}  # shared across the task's Arrow batches
+    for batch in batches:
+        if len(cache) > _SIMHASH_CACHE_CAP:
+            cache.clear()
+        texts = batch.column("text").to_pylist()
+        fps = np.zeros(len(texts), dtype=np.int64)
+        for i, text in enumerate(texts):
+            if text is None:
+                continue  # NULL text → all-bit sums NULL → fp 0 (oracle parity)
+            counts = Counter(text.split(" "))
+            hs = np.empty(len(counts), dtype=np.uint64)
+            wt = np.empty(len(counts), dtype=np.int64)
+            for k, (tok, cnt) in enumerate(counts.items()):
+                v = cache.get(tok)
+                if v is None:
+                    v = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:SIMHASH_HEX_CHARS], 16)
+                    cache[tok] = v
+                hs[k] = v
+                wt[k] = cnt
+            ones = wt @ ((hs[:, None] >> _SHIFTS) & np.uint64(1)).astype(np.int64)
+            signs = 2 * ones - int(wt.sum())  # integer ±1 sum per bit
+            fps[i] = int(((signs > 0).astype(np.uint64) * _POWS).sum())
+        schema = pa.schema([batch.schema.field("doc_id"), pa.field("simhash", pa.int64())])
+        yield record_batch([batch.column("doc_id"), fps], schema)
 
 
 def _simhash_duck_fp_cte() -> str:

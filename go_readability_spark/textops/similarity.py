@@ -28,8 +28,14 @@ sequential left fold in BOTH engines, so oracle values match bit-for-bit
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..spark.session import numbers, record_batch
 from ._persist import scratch_persist
 
 N_QUERIES = 8       # vec_id < N_QUERIES form the query set
@@ -212,12 +218,13 @@ FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
 # Janino codegen of the 1k-literal tree; r3 collapsed it to a sign-mask
 # expression fold (16 bigint literals, plans in ms) — 1.78 s, now
 # execution-bound because HOF lambdas are interpreted; r4 vectorizes the
-# identical fold in numpy inside mapInPandas — 0.61 s, bit-identical.
+# identical fold in numpy inside a map fold — 0.61 s, bit-identical.
 def lsh_signatures(
     embeddings: DataFrame, n_planes: int = EMB_PLANES, keep_embedding: bool = False
 ) -> DataFrame:
     """(vec_id, sig[, embedding]): n_planes-bit random-hyperplane signature
-    — map-side, no shuffle, vectorized in numpy inside ``mapInPandas``.
+    — map-side, no shuffle, vectorized in numpy inside ``mapInArrow``
+    (``_signature_batches``).
 
     Spark HOF lambdas are interpreted, never codegen'd (CLAUDE.md), so the
     r3 sign-mask expression fold (_sig_expr_spark) was execution-bound:
@@ -234,41 +241,51 @@ def lsh_signatures(
     downstream of the band shuffle (the bucket-local verify) — cheaper at
     every scale than a fetch-back join keyed per candidate PAIR, and never
     a broadcast of the full corpus."""
-    import numpy as np
-    import pandas as pd
+    schema = "vec_id long, sig long"
+    if keep_embedding:
+        schema += ", embedding array<float>"
+    vectors = embeddings.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("embedding").cast("array<float>").alias("embedding"),
+    )
+    return vectors.mapInArrow(_signature_batches(n_planes, keep_embedding), schema)
 
+
+def _signature_batches(n_planes: int, keep_embedding: bool):
+    """The (vec_id, embedding) → (vec_id, sig[, embedding]) batch fold."""
     planes = np.array(_hyperplanes(n_planes), dtype=np.float64)  # (P, D)
     n_p, dim = planes.shape
-    weights = (1 << np.arange(n_p, dtype=np.int64)).astype(np.int64)
+    weights = 1 << np.arange(n_p, dtype=np.int64)
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                out = {"vec_id": pdf["vec_id"], "sig": []}
-                if keep_embedding:
-                    out["embedding"] = pdf["embedding"]
-                yield pd.DataFrame(out)
-                continue
-            e = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in pdf["embedding"]]
-            ).astype(np.float64)
+    def signature_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            emb = batch.column("embedding")
+            e = _vectors(emb, dim)
             acc = np.zeros((len(e), n_p), dtype=np.float64)
             for i in range(dim):
                 # one sequential double add per (row, plane): ±1·x is an
                 # exact sign flip, so this IS the oracle's left fold
                 acc += e[:, i : i + 1] * planes[:, i]
             sig = (acc >= 0.0).astype(np.int64) @ weights
-            out = {"vec_id": pdf["vec_id"], "sig": sig}
+            fields = [pa.field("vec_id", pa.int64()), pa.field("sig", pa.int64())]
+            columns = [batch.column("vec_id"), sig]
             if keep_embedding:
-                out["embedding"] = pdf["embedding"]
-            yield pd.DataFrame(out)
+                fields.append(batch.schema.field("embedding"))
+                columns.append(emb)
+            yield record_batch(columns, pa.schema(fields))
 
-    schema = "vec_id long, sig long"
-    if keep_embedding:
-        schema += ", embedding array<float>"
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        batches, schema=schema
-    )
+    return signature_batch
+
+
+def _vectors(col: pa.Array, dim: int) -> np.ndarray:
+    """A ``list<float>`` column of ``dim``-long vectors → a (rows, dim)
+    float64 matrix, read from the values buffer (float32 → float64 before
+    any arithmetic)."""
+    lengths = np.diff(numbers(col.offsets, np.int32))
+    flat = col.flatten()
+    if col.null_count or flat.null_count or (lengths != dim).any():
+        raise ValueError(f"embedding vectors must be non-null, of {dim} non-null floats")
+    return numbers(flat, np.float32).astype(np.float64).reshape(-1, dim)
 
 
 def _banded(
@@ -381,7 +398,7 @@ def embedding_near_dup_pairs(
     Plan shape (r4 rework, same-window warm A/B 3.1 s → 0.95 s at sf0.1,
     output exactly equal 262/262 rows): the vector RIDES the banded frame
     through the single bucket shuffle and candidate pairs are generated
-    AND verified bucket-locally in one ``applyInPandas`` — pairs never
+    AND verified bucket-locally in one ``applyInArrow`` — pairs never
     exist as distributed rows until they survive the threshold.  The old
     shape (band self-join → distinct 465k pairs → two per-pair vector
     fetch-back joins → interpreted HOF fold per pair) shipped each
@@ -394,9 +411,6 @@ def embedding_near_dup_pairs(
     numpy fold accumulates dimension-at-a-time like the oracle's
     sequential list_reduce (one IEEE add per step — never np.dot, whose
     pairwise summation flips rounding near 0)."""
-    import numpy as np
-    import pandas as pd
-
     if n_vectors is None:
         params = {"band_bits": EMB_BAND_BITS, "n_bands": EMB_BANDS}
     else:
@@ -417,45 +431,38 @@ def embedding_near_dup_pairs(
         n_bands=params["n_bands"],
         keep_embedding=True,
     )
-    dim = EMB_DIM
     # keep every pair that could ROUND to >= threshold; the exact filter
     # happens after the JVM-side round below
     guard = threshold - 1e-6
-    # bound per-chunk temporaries: the balance invariant caps buckets at
-    # _BALANCE_HEADROOM·TARGET_BUCKET_ROWS rows (~8.4M pairs worst case);
-    # 1M-pair chunks keep the per-dim gather temporaries at ~8 MB
-    # (_pair_chunk is a test seam: tiny values force the multi-chunk path)
-    chunk = _pair_chunk
+    return (
+        banded.groupBy("band_idx", "band_val")
+        .applyInArrow(_bucket_verifier(guard, _pair_chunk), schema="vec_a long, vec_b long, raw double")
+        .withColumn("cosine", F.round(F.col("raw"), 6))
+        .filter(F.col("cosine") >= threshold)
+        .select("vec_a", "vec_b", "cosine")
+        .distinct()  # a pair agreeing on 2+ bands verifies identically in each
+        .orderBy("vec_a", "vec_b")
+    )
 
-    def pair_index_chunks(m: int):
-        """(i<j) index pairs in row-major order, yielded in ~chunk-sized
-        blocks WITHOUT ever materializing all m(m-1)/2 indices (triu on a
-        degenerate 10^5-row bucket would allocate the full pair set
-        before any chunking could help)."""
-        ia_parts: list = []
-        ib_parts: list = []
-        count = 0
-        for i in range(m - 1):
-            ia_parts.append(np.full(m - 1 - i, i, dtype=np.int64))
-            ib_parts.append(np.arange(i + 1, m, dtype=np.int64))
-            count += m - 1 - i
-            if count >= chunk:
-                yield np.concatenate(ia_parts), np.concatenate(ib_parts)
-                ia_parts, ib_parts, count = [], [], 0
-        if count:
-            yield np.concatenate(ia_parts), np.concatenate(ib_parts)
 
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series([], dtype="int64"),
-                "vec_b": pd.Series([], dtype="int64"),
-                "raw": pd.Series([], dtype="float64"),
-            }
-        )
-        m = len(pdf)
+_PAIRS_ARROW = pa.schema([("vec_a", pa.int64()), ("vec_b", pa.int64()), ("raw", pa.float64())])
+
+
+def _bucket_verifier(guard: float, chunk: int):
+    """One band bucket's (vec_id, embedding, ...) batches → its (vec_a,
+    vec_b, raw) pairs with vec_a < vec_b and raw cosine >= ``guard``.
+    ``chunk`` bounds the pairs folded at once: the balance invariant caps
+    buckets at _BALANCE_HEADROOM·TARGET_BUCKET_ROWS rows (~8.4M pairs
+    worst case); 1M-pair chunks keep the per-dim gather temporaries at
+    ~8 MB (``_pair_chunk`` is a test seam: tiny values force the
+    multi-chunk path).  The iterator form needs its type hints:
+    ``applyInArrow`` infers it from them."""
+
+    def verify(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        table = pa.Table.from_batches(list(batches))
+        m = table.num_rows
         if m < 2:
-            return empty
+            return
         if m > _BUCKET_VERIFY_CAP:
             raise ValueError(
                 f"LSH band bucket holds {m} vectors (> {_BUCKET_VERIFY_CAP}): "
@@ -463,39 +470,43 @@ def embedding_near_dup_pairs(
                 "test-scale bands — pass n_vectors so derive_lsh_params picks "
                 "wider bands (with the balance invariant), or use ivf_topk"
             )
-        pdf = pdf.sort_values("vec_id")  # row-major (i<j) ⇒ vec_a < vec_b
-        vid = pdf["vec_id"].to_numpy()
-        e = np.stack(
-            [np.asarray(v, dtype=np.float32) for v in pdf["embedding"]]
-        ).astype(np.float64)
+        # row-major (i<j) over ascending vec_id ⇒ vec_a < vec_b
+        table = table.take(pc.sort_indices(table, [("vec_id", "ascending")])).combine_chunks()
+        vid = numbers(table.column("vec_id").chunk(0), np.int64)
+        e = _vectors(table.column("embedding").chunk(0), EMB_DIM)
         nacc = np.zeros(m, dtype=np.float64)
-        for d in range(dim):  # oracle's sequential norm fold
+        for d in range(EMB_DIM):  # oracle's sequential norm fold
             nacc += e[:, d] * e[:, d]
         norm = np.sqrt(nacc)
-        outs = []
-        for ca, cb in pair_index_chunks(m):
+        for ca, cb in _pair_index_chunks(m, chunk):
             acc = np.zeros(len(ca), dtype=np.float64)
-            for d in range(dim):  # oracle's sequential dot fold
+            for d in range(EMB_DIM):  # oracle's sequential dot fold
                 acc += e[ca, d] * e[cb, d]
             raw = acc / (norm[ca] * norm[cb])
             keep = raw >= guard
             if keep.any():
-                outs.append(
-                    pd.DataFrame(
-                        {"vec_a": vid[ca[keep]], "vec_b": vid[cb[keep]], "raw": raw[keep]}
-                    )
-                )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+                yield record_batch([vid[ca[keep]], vid[cb[keep]], raw[keep]], _PAIRS_ARROW)
 
-    return (
-        banded.groupBy("band_idx", "band_val")
-        .applyInPandas(verify, schema="vec_a long, vec_b long, raw double")
-        .withColumn("cosine", F.round(F.col("raw"), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
-        .distinct()  # a pair agreeing on 2+ bands verifies identically in each
-        .orderBy("vec_a", "vec_b")
-    )
+    return verify
+
+
+def _pair_index_chunks(m: int, chunk: int):
+    """(i<j) index pairs in row-major order, yielded in ~chunk-sized
+    blocks WITHOUT ever materializing all m(m-1)/2 indices (triu on a
+    degenerate 10^5-row bucket would allocate the full pair set before
+    any chunking could help)."""
+    ia_parts: list = []
+    ib_parts: list = []
+    count = 0
+    for i in range(m - 1):
+        ia_parts.append(np.full(m - 1 - i, i, dtype=np.int64))
+        ib_parts.append(np.arange(i + 1, m, dtype=np.int64))
+        count += m - 1 - i
+        if count >= chunk:
+            yield np.concatenate(ia_parts), np.concatenate(ib_parts)
+            ia_parts, ib_parts, count = [], [], 0
+    if count:
+        yield np.concatenate(ia_parts), np.concatenate(ib_parts)
 
 
 def _emb_pairs_cte_body(threshold: float = NEAR_DUP_THRESHOLD) -> str:

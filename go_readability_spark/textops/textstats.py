@@ -1,14 +1,21 @@
 """Text analysis operators: token counting, quality scoring, language ID,
 document fingerprinting (corpus-hygiene stages of a training-data pipeline).
 
-All pure Catalyst expressions — whole-stage-codegen'd, shuffle only at the
-final aggregation; at 100 TB these are scan-bound map-side ops.
+Pure Catalyst expressions — whole-stage-codegen'd, shuffle only at the
+final aggregation; at 100 TB these are scan-bound map-side ops — except the
+doc-local repetition fold, one ``mapInArrow`` pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from collections import Counter
+from typing import Iterator
 
+import pyarrow as pa
+from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from ..spark.session import record_batch
 from ._persist import scratch_persist, spread_small
 from .dedup import WS_RX
 
@@ -264,162 +271,74 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
     no float rounding exists to drift between engines.
 
     Scale shape: every signal is DOC-LOCAL (gram counts never cross
-    documents), so the whole operator is one ``mapInPandas`` pass with
-    Counter folds per row — zero shuffle, scan-bound at 100 TB.  The
-    declarative alternative (explode 2-grams and 5-grams, two
-    groupBy(doc_id, gram) aggregations, WindowGroupLimit top-1, two
-    join-backs) moves every distinct gram string through an exchange even
-    though the groups are doc-local; A/B at sf0.1 (5k docs, local[32]):
-    0.64 s vs 1.8–2.0 s warm, 3.1 s vs 7.6 s plan-cold, output exactly
-    equal.  Exactness is engine-independent: integer counts and floor
-    division only, Python's ``min(key=(-cnt, gram))`` tie-break equals the
-    SQL ``ORDER BY cnt DESC, g ASC`` row_number because UTF-8 binary
-    order (Spark/DuckDB string comparison) preserves code-point order
-    (Python ``str`` comparison).
+    documents), so the whole operator is one ``mapInArrow`` pass with
+    Counter folds per row (``_repetition_batches``) — zero shuffle,
+    scan-bound at 100 TB.  The declarative alternative (explode 2-grams
+    and 5-grams, two groupBy(doc_id, gram) aggregations, WindowGroupLimit
+    top-1, two join-backs) moves every distinct gram string through an
+    exchange even though the groups are doc-local; A/B at sf0.1 (5k docs,
+    local[32]): 0.64 s vs 1.8–2.0 s warm, 3.1 s vs 7.6 s plan-cold, output
+    exactly equal (the DuckDB oracle is that formulation).  Exactness is
+    engine-independent: integer counts and floor division only, Python's
+    ``min(key=(-cnt, gram))`` tie-break equals the SQL ``ORDER BY cnt
+    DESC, g ASC`` row_number because UTF-8 binary order (Spark/DuckDB
+    string comparison) preserves code-point order (Python ``str``
+    comparison).
     """
-    from collections import Counter
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def fold(batches):
-        for pdf in batches:
-            n_words_c, dup_w, top2_c, dup5_c = [], [], [], []
-            for text in pdf["text"].values:
-                if text is None:
-                    # declarative parity: size(split(NULL)) is NULL, so every
-                    # derived column is NULL (x div NULL = NULL)
-                    n_words_c.append(None)
-                    dup_w.append(None)
-                    top2_c.append(None)
-                    dup5_c.append(None)
-                    continue
-                words = text.split(" ")
-                n = len(words)
-                nc = len(text)
-                nd = len(set(words))
-                top2 = 0
-                if n >= 2:
-                    c2 = Counter(" ".join(words[i : i + 2]) for i in range(n - 1))
-                    g, cnt = min(c2.items(), key=lambda kv: (-kv[1], kv[0]))
-                    top2 = cnt * len(g)
-                dup5 = 0
-                if n >= 5:
-                    c5 = Counter(" ".join(words[i : i + 5]) for i in range(n - 4))
-                    dup5 = sum(cnt * len(g) for g, cnt in c5.items() if cnt > 1)
-                n_words_c.append(n)
-                dup_w.append((10000 * (n - nd)) // n)
-                # empty text: Spark `x div 0` is NULL, never a crash
-                top2_c.append((10000 * top2) // nc if nc else None)
-                dup5_c.append((10000 * dup5) // nc if nc else None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_words": n_words_c,
-                    "dup_word_bp": dup_w,
-                    "top_2gram_bp": top2_c,
-                    "dup_5gram_bp": dup5_c,
-                }
-            )
-
-    # dtypes pinned to the declarative formulation's output (n_words is the
-    # 32-bit size(); the bp columns are 10000L*… div → BIGINT) so the driver's
-    # schema gate sees the same frame either way.
-    schema = T.StructType(
-        [
-            documents.schema["doc_id"],
-            T.StructField("n_words", T.IntegerType()),
-            T.StructField("dup_word_bp", T.LongType()),
-            T.StructField("top_2gram_bp", T.LongType()),
-            T.StructField("dup_5gram_bp", T.LongType()),
-        ]
-    )
+    schema = T.StructType([documents.schema["doc_id"], *_REPETITION_FIELDS])
     return (
         spread_small(documents)
         .select("doc_id", "text")
-        .mapInPandas(fold, schema)
+        .mapInArrow(_repetition_batches, schema)
         .orderBy("doc_id")
     )
 
 
-def _repetition_signals_declarative(documents: DataFrame) -> DataFrame:
-    """The pure-Catalyst twin of ``repetition_signals`` (kept as the
-    cross-checked reference formulation; see the A/B note there)."""
-    base = documents.select(
-        "doc_id",
-        F.length("text").alias("n_chars_m"),
-        F.split(F.col("text"), " ").alias("w"),
-    ).select(
-        "doc_id",
-        "n_chars_m",
-        F.size("w").alias("n_words"),
-        F.size(F.array_distinct("w")).alias("n_distinct"),
-        "w",
-    )
-    # CASE WHEN guards the expression ITSELF: an upstream filter does not
-    # guarantee evaluation order under optimizer rewrites, and
-    # sequence(0, negative) counts DOWN into slice() crashes (CLAUDE.md;
-    # same pattern as dedup._shingles_col)
-    grams2 = base.filter(F.size("w") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(w) >= 2 THEN"
-                " transform(sequence(0, size(w) - 2), i -> concat_ws(' ', slice(w, i + 1, 2)))"
-                " ELSE array() END"
-            )
-        ).alias("g"),
-    )
-    top2 = (
-        grams2.groupBy("doc_id", "g")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(F.desc("cnt"), F.asc("g"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("doc_id", (F.col("cnt") * F.length("g")).alias("top2_chars"))
-    )
-    grams5 = base.filter(F.size("w") >= 5).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(w) >= 5 THEN"
-                " transform(sequence(0, size(w) - 5), i -> concat_ws(' ', slice(w, i + 1, 5)))"
-                " ELSE array() END"
-            )
-        ).alias("g"),
-    )
-    dup5 = (
-        grams5.groupBy("doc_id", "g")
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("cnt") * F.length("g")).alias("dup5_chars"))
-    )
+# n_words is the 32-bit size(); the bp columns are 10000L*… div → BIGINT
+_REPETITION_FIELDS = [
+    T.StructField("n_words", T.IntegerType()),
+    T.StructField("dup_word_bp", T.LongType()),
+    T.StructField("top_2gram_bp", T.LongType()),
+    T.StructField("dup_5gram_bp", T.LongType()),
+]
+_REPETITION_ARROW = [pa.field(f.name, to_arrow_type(f.dataType)) for f in _REPETITION_FIELDS]
+
+
+def _repetition_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """(doc_id, text) batches → (doc_id, n_words, dup_word_bp,
+    top_2gram_bp, dup_5gram_bp) batches, row for row."""
+    for batch in batches:
+        cols: list[list] = [[], [], [], []]
+        for text in batch.column("text").to_pylist():
+            for col, v in zip(cols, _repetition_row(text)):
+                col.append(v)
+        schema = pa.schema([batch.schema.field("doc_id"), *_REPETITION_ARROW])
+        yield record_batch([batch.column("doc_id"), *cols], schema)
+
+
+def _repetition_row(text: str | None) -> tuple:
+    if text is None:
+        # the oracle's semantics: size(split(NULL)) is NULL, so every
+        # derived column is NULL (x div NULL = NULL)
+        return None, None, None, None
+    words = text.split(" ")
+    n = len(words)
+    nc = len(text)
+    top2 = 0
+    if n >= 2:
+        c2 = Counter(" ".join(words[i : i + 2]) for i in range(n - 1))
+        g, cnt = min(c2.items(), key=lambda kv: (-kv[1], kv[0]))
+        top2 = cnt * len(g)
+    dup5 = 0
+    if n >= 5:
+        c5 = Counter(" ".join(words[i : i + 5]) for i in range(n - 4))
+        dup5 = sum(cnt * len(g) for g, cnt in c5.items() if cnt > 1)
+    # empty text: `x div 0` is NULL, never a crash
     return (
-        base.join(top2, "doc_id", "left")
-        .join(dup5, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_words",
-            # bigint literal: int32 would overflow past ~214k repeated words
-            F.expr("(10000L * (n_words - n_distinct)) div n_words").alias("dup_word_bp"),
-            # empty text: DuckDB `x // 0` is NULL, but ANSI Spark `div 0`
-            # throws — the CASE guard expresses the oracle's semantics
-            # (the mapInPandas fold emits None for the same rows)
-            F.expr(
-                "CASE WHEN n_chars_m = 0 THEN CAST(NULL AS BIGINT)"
-                " ELSE (10000 * coalesce(top2_chars, 0)) div n_chars_m END"
-            ).alias("top_2gram_bp"),
-            F.expr(
-                "CASE WHEN n_chars_m = 0 THEN CAST(NULL AS BIGINT)"
-                " ELSE (10000 * coalesce(dup5_chars, 0)) div n_chars_m END"
-            ).alias("dup_5gram_bp"),
-        )
-        .orderBy("doc_id")
+        n,
+        (10000 * (n - len(set(words)))) // n,
+        (10000 * top2) // nc if nc else None,
+        (10000 * dup5) // nc if nc else None,
     )
 
 

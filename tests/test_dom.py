@@ -456,3 +456,57 @@ def test_tag_name_table_is_bounded(monkeypatch):
     assert doc.get_inner_html() == "".join(f"<tag{i}></tag{i}>" for i in range(n))
     assert parse_html("<ns:Tag7/>", "").children[0].tag_name == "TAG7"
     assert len(dom._TAG_NAMES) == dom._TAG_NAMES_MAX
+
+
+def _moved(adopt: bool) -> dict:
+    """A body of mixed text and element children, moved under a new div
+    by ``adopt_children_from`` or by one ``append_child`` per child."""
+    body = new_element("body")
+    kids = [dom.create_text_node("t1"), new_element("p"), dom.create_text_node("t2"), new_element("b"),
+            new_element("i"), dom.create_text_node("t3")]
+    for k in kids:
+        body.append_child(k)
+    assert body.get_text_content() == "t1t2t3"  # a clean text memo
+    div = new_element("div")
+    if adopt:
+        div.adopt_children_from(body)
+    else:
+        while body.first_child() is not None:
+            div.append_child(body.first_child())
+    return {"body": body, "div": div, **{f"k{i}": k for i, k in enumerate(kids)}}
+
+
+def test_adopt_children_from_equals_one_at_a_time_moves():
+    """Moving a whole child list in one step leaves every sibling and
+    element-sibling link as one append_child per child does, empties the
+    source (the shared empty tuple, no alias of the moved lists) and
+    drops its text memo."""
+    adopted, appended = _moved(True), _moved(False)
+    assert _link_set(adopted) == _link_set(appended)
+    body, div = adopted["body"], adopted["div"]
+    assert body.child_nodes is dom._EMPTY and body.children is dom._EMPTY
+    assert body.get_text_content() == ""
+    assert div.get_text_content() == "t1t2t3"
+    assert [c.local_name for c in div.children] == ["p", "b", "i"]
+
+
+def test_body_fallback_moves_children_in_one_step(monkeypatch):
+    """A page with no scorable candidate falls back to wrapping the whole
+    body: its 20k children move in one step, with no remove_child each
+    (each one shifted the rest of the body's lists, O(n²) in all), and the
+    parse stays well under a second per 20k paragraphs."""
+    import time
+
+    from go_readability_spark.kernel.options import Options
+    from go_readability_spark.kernel.readability import parse_document
+
+    calls = []
+    remove_child = dom.Node.remove_child
+    monkeypatch.setattr(dom.Node, "remove_child", lambda self, c: calls.append(c) or remove_child(self, c))
+    n = 20_000
+    t0 = time.perf_counter()
+    res, article, status = parse_document("<body>" + "<p>a</p>" * n + "</body>", "http://x.ex/", Options())
+    assert time.perf_counter() - t0 < 3.0
+    assert status == "ok"
+    assert len(article.get_elements_by_tag_name("p")) == n
+    assert len(calls) < 10

@@ -6,9 +6,11 @@ load-bearing properties so a refactor can't silently regress them:
 - no accidental cross products: only queries that deliberately pair a
   tiny broadcast side (query vectors, centroid tables) may contain a
   nested-loop/cartesian join;
-- no row-at-a-time Python: BatchEvalPython (per-row UDF) must never
-  appear — the only Python surfaces are Arrow-batched mapInArrow
-  (extraction, ingest) and mapInPandas (the textops folds);
+- no row-at-a-time Python and no pandas: BatchEvalPython (per-row UDF)
+  and the pandas operators (MapInPandas, FlatMapGroupsInPandas) must
+  never appear — the only Python surfaces are Arrow-batched mapInArrow
+  (extraction, ingest, the textops map folds) and applyInArrow (the
+  embedding bucket verify);
 - filters on the base-table scans reach parquet (PushedFilters) for the
   representative pushdown queries.
 """
@@ -69,6 +71,7 @@ def test_no_accidental_cross_product_or_row_udf(spark, name):
     e = _entry()
     plan = _plan(_all_queries(e)[name](spark, SF_DIR))
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
+    assert "InPandas" not in plan, f"{name}: pandas-converted Python operator"
     if name not in CROSS_OK:
         assert "CartesianProduct" not in plan, f"{name}: cartesian product"
         assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"

@@ -511,32 +511,47 @@ def test_repetition_signals_hand_computed(spark):
     assert (r2.dup_word_bp, r2.dup_5gram_bp) == (0, 0)
 
 
-def test_repetition_signals_matches_declarative_twin(spark):
-    """The mapInPandas fold must stay exactly equal to the retained
-    pure-Catalyst formulation (same schema, same rows) — including on
-    tie-heavy and empty-ish inputs where the top-2gram lexicographic
-    tie-break and the <2-word guards bite."""
+def test_repetition_signals_matches_oracle_on_edge_inputs(spark):
+    """The mapInArrow fold equals the DuckDB oracle (the declarative
+    formulation: explode, group, window top-1, join back) row for row on
+    tie-heavy and empty-ish inputs, where the top-2gram lexicographic
+    tie-break and the <2-word guards bite, and keeps its pinned schema."""
+    from pyspark.sql import types as T
+
     from go_readability_spark.textops.textstats import (
-        _repetition_signals_declarative,
         repetition_signals,
+        repetition_signals_oracle_sql,
     )
 
-    docs = spark.createDataFrame(
+    rows = [
+        (1, "b a b a"),          # 2-gram tie: 'a b' vs 'b a' → lexicographic
+        (2, "solo"),             # no 2-grams at all
+        (3, "x x x x x x x x"),  # maximal repetition, dup 5-grams
+        (4, "é ü é ü é"),        # non-ASCII tie-break path
+        (5, "a  b"),             # empty token from adjacent separators
+        (6, ""),                 # empty text: div-by-0 → NULL bp columns
+        (7, None),               # NULL text: all-NULL row, no crash
+    ]
+    fast = repetition_signals(spark.createDataFrame(rows, "doc_id long, text string"))
+    assert fast.schema == T.StructType(
         [
-            (1, "b a b a"),          # 2-gram tie: 'a b' vs 'b a' → lexicographic
-            (2, "solo"),             # no 2-grams at all
-            (3, "x x x x x x x x"),  # maximal repetition, dup 5-grams
-            (4, "é ü é ü é"),        # non-ASCII tie-break path
-            (5, "a  b"),             # empty token from adjacent separators
-            (6, ""),                 # empty text: div-by-0 → NULL bp columns
-            (7, None),               # NULL text: all-NULL row, no crash
-        ],
-        "doc_id long, text string",
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("n_words", T.IntegerType()),
+            T.StructField("dup_word_bp", T.LongType()),
+            T.StructField("top_2gram_bp", T.LongType()),
+            T.StructField("dup_5gram_bp", T.LongType()),
+        ]
     )
-    fast = repetition_signals(docs)
-    slow = _repetition_signals_declarative(docs)
-    assert fast.schema == slow.schema
-    assert [tuple(r) for r in fast.collect()] == [tuple(r) for r in slow.collect()]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        want = con.sql(repetition_signals_oracle_sql()).fetchall()
+    finally:
+        con.close()
+    got = [tuple(r) for r in fast.collect()]
+    assert got == want
+    assert got[5] == (6, 1, 0, None, None) and got[6] == (7, None, None, None, None)
 
 
 def test_asof_carry_forward_semantics(spark):
